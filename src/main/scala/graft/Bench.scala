@@ -1,26 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Targeted re-measure mode (dev): a comma-separated id list limits
-    // the run to those queries — the clean-window protocol for
-    // adjudicating single-query movers without paying the full corpus.
-    // The driver never sets this; the official bench always runs all.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def loadAvg: Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-    val loadStart = loadAvg
+  private[graft] type Query = (SparkSession, String) => DataFrame
+
+  /** Every timed pass per query, in sorted query order, plus the ids of
+    * the queries that threw. A query that fails in any pass (warm-up
+    * included) carries no timing: a failure is never a fast measurement.
+    */
+  private[graft] def measure(spark: SparkSession, sfDir: String,
+      queries: Map[String, Query]): (Seq[(String, Seq[Double])], Seq[String]) = {
     // Full-evaluation semantics: a bare count() lets Catalyst prune the
     // computation under measurement — projection-only queries collapse
     // to a parquet row count (the regex/hash work never runs), and
@@ -28,96 +17,105 @@ object Bench {
     // unique-keyed aggregates) are eliminated outright. The noop sink
     // consumes every column of every row, so each timing is the cost of
     // actually producing the query's output.
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    def run(fn: Query): Unit =
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     // Session hygiene between measurements. `clearCache()` drops
     // DataFrame cache entries but NOT the RDD blocks pinned by
     // `localCheckpoint` inside iterative operators (BPE's merge loop,
-    // distributed connected components): across a 93-query single-JVM
-    // run those blocks accumulate, squeeze the unified memory region,
-    // and push later shuffle-heavy queries into spill — the round-6
-    // bench-of-record contamination. Unpersisting via the context's
-    // persistent-RDD registry returns the storage memory after every
-    // measurement, so each query starts from the same clean session.
+    // distributed connected components): across a single-JVM run those
+    // blocks accumulate, squeeze the unified memory region, and push
+    // later shuffle-heavy queries into spill. Unpersisting via the
+    // context's persistent-RDD registry returns the storage memory after
+    // every measurement, so each query starts from the same clean
+    // session.
     def clean(): Unit = {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
     }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    def timed(name: String, fn: Query): Option[Double] = {
+      val t0 = System.nanoTime()
+      val ok = try { run(fn); true } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        false
+      }
+      val dt = (System.nanoTime() - t0) / 1e9
+      clean()
+      if (ok) Some(dt) else None
+    }
+    // min of two measured passes per query: the container shares its
+    // host, and hypervisor-level contention (invisible from inside the
+    // VM) has been observed to inflate whole runs ~2×; the minimum of
+    // two post-warmup passes estimates the uncontended cost. Two passes
+    // disagreeing by >2× mean one of them caught a contention spike — a
+    // third pass arbitrates, and the min over all passes stands.
+    def passes(name: String, fn: Query): Option[Seq[Double]] = for {
+      a <- timed(name, fn)
+      b <- timed(name, fn)
+      all <- if (math.max(a, b) > 2 * math.min(a, b))
+          timed(name, fn).map(c => Seq(a, b, c))
+        else Some(Seq(a, b))
+    } yield all
+    val selected = queries.toSeq.sortBy(_._1)
     // Steady-state methodology: run every query once AT THE MEASURED SF
     // first, so whole-stage-codegen compilation, JIT, and — crucially —
     // the AQE-dependent physical shapes (which differ between SFs as
     // broadcast/coalesce decisions change with data size) are charged
     // to warmup, not to whichever measured query first touches them.
     // Queries are then timed in deterministic (sorted) order.
-    selected.foreach { case (_, fn) =>
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
-      clean()
+    val warmed = selected.filter { case (name, fn) => timed(name, fn).isDefined }
+    val measured = warmed.flatMap { case (name, fn) =>
+      passes(name, fn).map(name -> _)
     }
-    // min of two measured passes per query: the container shares its
-    // host, and hypervisor-level contention (invisible from inside the
-    // VM) has been observed to inflate whole runs ~2×; the minimum of
-    // two post-warmup passes estimates the uncontended cost. The full
-    // clean() runs after every pass, so each timing is a full
-    // self-contained execution against a fresh session.
-    def timed(fn: (org.apache.spark.sql.SparkSession, String)
-        => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
-      clean()
-      dt
-    }
-    val measured = selected.map { case (name, fn) =>
-      val times = (1 to 2).map(_ => timed(fn))
-      // outlier re-run: two passes disagreeing by >2x mean one of them
-      // caught a host-contention spike — a third pass arbitrates, and
-      // the min over all passes stands as the uncontended estimate
-      val all =
-        if (times.max > 2 * times.min) times :+ timed(fn) else times
-      (name, all)
-    }
+    val ok = measured.map(_._1).toSet
+    (measured, selected.map(_._1).filterNot(ok))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // Targeted re-measure mode (dev): a comma-separated id list limits
+    // the run to those queries — the clean-window protocol for
+    // adjudicating single-query movers without paying the full corpus.
+    // The official bench never sets this and always runs all.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val spark = Sessions.local(cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    def loadAvg: Double =
+      java.lang.management.ManagementFactory.getOperatingSystemMXBean
+        .getSystemLoadAverage
+    val loadStart = loadAvg
+    val (measured, failed) = measure(spark, sfDir,
+      SparkEntry.queries.filter { case (name, _) => only.forall(_(name)) })
     val results = measured.map { case (name, all) => name -> all.min }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // a BENCH_ONLY run renames the stdout metric and carries the
     // subset size, so a captured line from a targeted re-measure can
-    // never be mistaken for a full-run total (the sidecar's `subset`
-    // flag alone didn't protect stdout captures); the official driver
-    // run never sets the filter, so its stdout schema is unchanged
+    // never be mistaken for a full-run total
     val metric = if (only.isDefined) "subset_total" else "total"
     val subsetMark =
       if (only.isDefined) s""","subset":true,"n_queries":${results.length}"""
       else ""
     val json =
       s"""{"metric":"$metric","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$subsetMark}"""
-    // stdout contract (measurement-reporting fix, round 17): the full
-    // per-query line above grew past the driver's stdout capture tail
-    // (276 queries ≈ 12 KB vs a ~2.2 KB window), so rounds 15 and 16
-    // came back `parsed: null` and PERF empty. The LAST stdout line is
-    // now a compact total-only JSON that always fits any tail capture;
-    // the historical full line is still printed immediately before it
-    // for consumers that read the whole pipe, and the complete
-    // per-query map lives in the sidecar. Methodology and timings are
-    // unchanged — only what is printed.
+    // The full per-query line (~12 KB at 276 queries) outgrows a tail
+    // capture of stdout, so the LAST stdout line is this compact one;
+    // the complete per-query map lives in the sidecar.
     val jsonCompact =
       s"""{"metric":"$metric","value":$total,"unit":"sec",""" +
-        s""""n_queries":${results.length},"cpus":$cpus,"sf":"$sfDir"}"""
-    // The sidecar file is the durable copy — round 6's official
-    // artifact was a truncated stdout capture, so the full parsed line
-    // must survive independently of the pipe. The sidecar additionally
-    // carries the run metadata cross-round tooling needs to tell a
-    // contended single run from a regression (the round-12 208 s
-    // sidecar vs 175 s min-of-2 ambiguity): protocol name, passes per
-    // query, EVERY pass's timing (not just the min), per-pass totals,
-    // and the host load average at start/end. Schema documented in
-    // PLANS.md ("Bench sidecar schema"). The default name is
-    // cpus-suffixed so a low-core scaling run cannot clobber the
-    // 32-core artifact (round 16's 8-core verification run overwrote
-    // the baseline-shaped BENCH_LOCAL.json).
+        s""""n_queries":${results.length},"n_failed":${failed.length},""" +
+        s""""failed":$failedJson,"cpus":$cpus,"sf":"$sfDir"}"""
+    // The sidecar file is the durable copy of the run, independent of
+    // the pipe, with the metadata needed to tell a contended single run
+    // from a regression: protocol name, EVERY pass's timing (not just
+    // the min), per-pass totals, failures, and the host load average at
+    // start/end. Schema documented in PLANS.md ("Bench sidecar
+    // schema"). The default name is cpus-suffixed so a low-core scaling
+    // run cannot clobber the full-core artifact.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"BENCH_LOCAL_c$cpus.json")
     val runsJson = measured.map { case (k, all) =>
@@ -133,6 +131,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""sf":"$sfDir","protocol":"warmup+min-of-2(+arbitration)",""" +
         s""""cpus":$cpus,"n_queries":${results.length},""" +
+        s""""n_failed":${failed.length},"failed":$failedJson,""" +
         s""""subset":${only.isDefined},""" +
         s""""pass_totals":[${passTotals.mkString(",")}],""" +
         s""""loadavg_start":$loadStart,"loadavg_end":$loadAvg,""" +
@@ -140,6 +139,7 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (sidecar + "\n").getBytes("UTF-8"))
     println(json)
+    println(jsonCompact)
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for queries (args, or a
   * representative set) at sf0.001 — the plan-shape review loop
@@ -7,11 +6,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool mirroring the driver's t1 smoke: run SparkEntry.entry and
   * assert rows > 0. Usage: sbt "runMain graft.Smoke"
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

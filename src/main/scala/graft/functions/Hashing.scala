@@ -56,16 +56,6 @@ object Hashing {
     (29L, 113L), (31L, 127L), (37L, 139L), (41L, 151L),
     (43L, 163L), (47L, 179L), (53L, 191L), (59L, 211L))
 
-  /** Deterministic permutation parameters for an ARBITRARY count — the
-    * scale MinHash config needs more than the 16 literal
-    * [[MinhashSeeds]] (which stay as the corpus tuning, baked into the
-    * oracle SQL). Any a ≢ 0 (mod p) is a valid universal-hash
-    * multiplier; primality is unnecessary, and a, b ≪ p keeps a·h + b
-    * far from Long overflow.
-    */
-  def minhashSeeds(nPerms: Int): Seq[(Long, Long)] =
-    (0 until nPerms).map(j => (2L * j + 3L, 6L * j + 17L))
-
   /** SimHash width (bits). 32 keeps the per-doc aggregate at 32 sums and
     * the value in a BIGINT-safe range in both engines.
     */

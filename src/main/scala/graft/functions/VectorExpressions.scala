@@ -302,7 +302,7 @@ case class MilliVector(child: Expression) extends UnaryExpression {
   * q_d = floor(1000·m_d/√(Σm²)), in one codegen projection — the
   * fused form of the `aggregate` (ssq fold) + `transform` (normalize)
   * higher-order tower that dominated q_anisotropy's wall time (both
-  * HOFs are CodegenFallback; PLANS.md's DevTiming decomposition).
+  * HOFs are CodegenFallback, which breaks whole-stage codegen).
   * NULL on an all-zero milli vector — exactly the callers'
   * `filter(ssq > 0)` exclusion, folded into the expression's
   * nullability. Bit-identical math (the double tree

@@ -1230,9 +1230,9 @@ object MultimodalOps {
   def phashCensus(docs: DataFrame, maxHamming: Int): DataFrame =
     phashCensusOf(imageDHash(mediaBinary(docs)).toDF(), maxHamming)
 
-  /** [[phashCensus]] over an already-computed dHash relation —
-    * factored so the MediaScale probe runs the census on replicated
-    * blob sets (same statistics stage, shared code).
+  /** [[phashCensus]] over an already-computed dHash relation — every
+    * dHash source (raw blobs, decoded JPEG pixels) shares this one
+    * statistics stage.
     */
   def phashCensusOf(hashes: DataFrame, maxHamming: Int): DataFrame = {
     val cls = hashes

@@ -1807,8 +1807,10 @@ object RelationalQueries {
 
   /** `maxDf` is a corpus-relative dial (the SemDeDup-nCentroids
     * discipline): at k× the master, the cap must scale by k or every
-    * discriminative gram saturates — ScaleProbe holds the ratio fixed
-    * and pins the blow-up closed form.
+    * discriminative gram saturates. With the ratio held fixed, a
+    * customer table copied k× under new keys resolves exactly k× the
+    * probes, each to its base entity (the lowest key of its name class)
+    * at distance 1.
     */
   def fuzzyResolve(cust: DataFrame,
                    maxDf: Long = FuzzyMaxDf): DataFrame = {

@@ -288,9 +288,9 @@ object SimilarityOps {
     *    ≈ 0.89 over 4 bands; at cos 0.9, recall ≈ 0.75.
     *  - RANDOM pairs (cos ≈ 0, p ≈ ½) collide per band at ~2⁻ᵇ: the
     *    candidate count on unclustered data is ~B·n²·2⁻ᵇ — widening
-    *    bands 4→8 bits cuts the quadratic term 16× (measured in
-    *    ScaleProbe), which is the dial that keeps bucket joins
-    *    tractable as n grows; b is chosen so n²·2⁻ᵇ fits the cluster.
+    *    bands 4→8 bits cuts the quadratic term 2⁴ = 16×, which is the
+    *    dial that keeps bucket joins tractable as n grows; b is chosen
+    *    so n²·2⁻ᵇ fits the cluster.
     * The corpus tuning (4-bit bands) exists because the test corpus's
     * "near-dups" sit near cos 0.5, where 8-bit bands would have ~4%
     * recall — at production thresholds the scale config dominates.
@@ -311,11 +311,10 @@ object SimilarityOps {
   /** Scale-adaptive sign-LSH band width (VERDICT r14 item 1): the
     * SMALLEST width b dividing nPlanes with n ≤ [[BandOccupancyCap]]·2ᵇ.
     * Narrow bands maximize recall (band match prob pᵇ falls with b), so
-    * the rule widens only when the occupancy cap forces it — exactly
-    * when the VectorScale probe measured fixed-4-bit banding going
-    * near-all-pairs (230,473 ppm candidates at 32× sf0.1, one bucket
-    * pinning cores >12 min) while 8-bit carried the same corpus in
-    * 15–23 s at 9,099 ppm. Deterministic in (n, nPlanes) alone, so the
+    * the rule widens only when the occupancy cap forces it: past
+    * n = cap·2ᵇ a b-bit band's expected bucket holds more than cap
+    * vectors, and its random-collision candidates grow as n²·2⁻ᵇ
+    * instead of linearly in n. Deterministic in (n, nPlanes) alone, so the
     * DuckDB oracle mirrors it as a CASE over count(*) and both engines
     * pick the same width by construction. At the test corpus sizes
     * (500 / 500 / 2000 vectors) the rule selects 4 bits — the
@@ -831,17 +830,6 @@ object SimilarityOps {
     * out. Two Exchanges total: the (cluster, partial) aggregation and
     * a single-row global step.
     */
-  /** The (vec_id, cluster) assignment relation under a trained
-    * codebook — the projection every IVF consumer starts from,
-    * exposed for the scale probes ([[graft.VectorScale]]) and any
-    * caller that wants the raw assignment without a downstream
-    * rollup. Pure per-row codegen kernel, zero shuffles.
-    */
-  def clusterAssignments(emb: DataFrame,
-                         cents: Array[Array[Long]]): DataFrame =
-    emb.select(col("vec_id"),
-      assignCluster(col("embedding"), cents).as("cluster"))
-
   def clusterMix(emb: DataFrame, cents: Array[Array[Long]],
                  nCentroids: Int): DataFrame = {
     val counts = emb
@@ -1495,7 +1483,7 @@ object SimilarityOps {
     * Scale shape: the V12 pair bound (Σ|cluster|², dialed by
     * nCentroids); the histogram itself is bounded by the distinct
     * k-occurrence values ≤ max N_k — census-sized, no global sort.
-    * Closed-form invariant (ScaleProbe): Σ k_occ · n_vecs = N · k
+    * Closed-form invariant: Σ k_occ · n_vecs = N · k
     * exactly (every vector emits exactly k directed edges when its
     * cluster has > k members).
     */
@@ -1560,8 +1548,8 @@ object SimilarityOps {
     * Scale shape: the V12 pair bound (Σ|cluster|², dialed by
     * nCentroids) to build edges; the reciprocity self-join touches the
     * N·k-bounded edge relation only (equi-join on (d1, d2), never
-    * all-pairs); the histogram is ≤ k+1 rows. Closed-form invariant
-    * (ScaleProbe): Σ n_recip · n_vecs is EVEN — every reciprocal pair
+    * all-pairs); the histogram is ≤ k+1 rows. Closed-form invariant:
+    * Σ n_recip · n_vecs is EVEN — every reciprocal pair
     * is counted once from each endpoint.
     */
   def knnReciprocityCensus(emb: DataFrame, cents: Array[Array[Long]],
@@ -3079,8 +3067,7 @@ object SimilarityOps {
     // self-cos mass, AND the vector count — every vector contributes
     // every dim (fixed-length arrays), so any dim's row count IS the
     // label's n, and no second scan of the quantization pipeline is
-    // needed (the first integration re-derived it three times —
-    // PlanProbe-caught, 1.96 s → one-scan shape)
+    // needed
     val dimCen = rows.groupBy("label", "dim")
       .agg(sum("qd").as("s_d"),
         sum(col("qd") * col("qd")).as("self_d"),

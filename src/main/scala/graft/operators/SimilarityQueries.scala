@@ -290,8 +290,8 @@ object SimilarityQueries {
     * expected bucket occupancy n/2ᵇ stays under
     * [[SimilarityOps.BandOccupancyCap]], so the candidate join's
     * quadratic term is capped at every corpus size instead of pinned to
-    * the 4-bit tuning the 32× VectorScale probe measured as
-    * near-all-pairs. The corpus count is ONE aggregate collected as a
+    * the 4-bit tuning, whose buckets outgrow the cap past 16,384
+    * vectors. The corpus count is ONE aggregate collected as a
     * scalar for plan selection (the AQE shape: statistics → physical
     * dial), memoized per dir ([[embCount]]) so repeated invocations
     * never re-pay the counting scan, not a data collect; the DuckDB

@@ -737,8 +737,7 @@ object TextOps {
     * shingle-set size `n` fused into the same aggregation — over
     * pre-hashed shingles (`h0` = 60-bit md5 hash per shingle). `seeds`
     * selects the permutation count: the default 16 literal pairs are
-    * the corpus tuning baked into the oracle SQL; the scale config
-    * generates as many as it needs ([[Hashing.minhashSeeds]]).
+    * the corpus tuning baked into the oracle SQL.
     */
   def minhashSignature(hashed: DataFrame,
       seeds: Seq[(Long, Long)] = Hashing.MinhashSeeds): DataFrame = {
@@ -765,8 +764,9 @@ object TextOps {
     *    J = 0.3 background collapses to 0.1% (30× fewer junk
     *    candidates). Doubling r is the dial that crushes the
     *    quadratic B·n²·E[J_bg^r] candidate term as n grows; B rises to
-    *    hold recall at the threshold. ScaleProbe measures the exact
-    *    replica-candidate identity for this config.
+    *    hold recall at the threshold. Band keys depend on shingle
+    *    content only, so a k× replicated corpus yields every 1×
+    *    candidate pair between each pair of replicas.
     */
   val ScaleMinhashBands = 16
   val ScaleMinhashRows = 8
@@ -3348,7 +3348,7 @@ object TextOps {
     * before its (t1, t2) Exchange (≤ C(V,2) groups total). Replication
     * invariance: corpus ×k scales co, df, and N by k each, so lift is
     * EXACTLY invariant — "more data" does not manufacture collocation
-    * signal (probed in ScaleProbe).
+    * signal.
     */
   def coocLift(docs: DataFrame, topV: Int): DataFrame = {
     val occ = parallelized(docs).select(col("doc_id"),

@@ -29,7 +29,7 @@ import graft.operators.TextOps
   * parallelism across rounds but the SIZE of what each round reads.
   * Training depends only on pair-frequency RATIOS — replicating the
   * corpus k× scales every count by exactly k and changes no decision
-  * (`graft.ScaleProbe`'s bpe_merge_invariance pins this) — which is
+  * — which is
   * precisely the argument that a uniform sample preserves the learned
   * merges: it scales expected counts by the sampling rate. [[save]]
   * therefore takes `samplePct`, selecting documents by the same

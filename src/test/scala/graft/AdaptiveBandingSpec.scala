@@ -4,13 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{SimilarityOps, SimilarityQueries}
 
-/** Scale-adaptive sign-LSH banding (VERDICT r14 item 1): the selection
-  * rule is pinned at its boundaries, the query surface is pinned
-  * bit-for-bit to the historical 4-bit output at test-corpus sizes, and
-  * the wide path (the width the rule switches to past the occupancy
-  * cap) is pinned to the replication closed form the VectorScale probe
-  * measures — so the production q_embed_lsh path is the measured-at-32×
-  * path, not a separate constant.
+/** Scale-adaptive sign-LSH banding: the selection rule is pinned at its
+  * boundaries, the query surface is pinned bit-for-bit to the 4-bit
+  * output at test-corpus sizes, and the wide path (the width the rule
+  * switches to past the occupancy cap) is pinned to the replication
+  * closed form — so the production q_embed_lsh path past the cap is
+  * the same code path, not a separate constant.
   */
 class AdaptiveBandingSpec extends SparkSpec {
 
@@ -22,7 +21,7 @@ class AdaptiveBandingSpec extends SparkSpec {
     assert(adaptiveBandBits(2000L, 16) === 4)  // sf0.1
     assert(adaptiveBandBits(16384L, 16) === 4) // boundary: 1024·2^4
     assert(adaptiveBandBits(16385L, 16) === 8) // first widening
-    assert(adaptiveBandBits(64000L, 16) === 8) // the 32× probe corpus
+    assert(adaptiveBandBits(64000L, 16) === 8) // sf0.1 replicated 32×
     assert(adaptiveBandBits(262144L, 16) === 8) // boundary: 1024·2^8
     assert(adaptiveBandBits(262145L, 16) === 16)
     assert(adaptiveBandBits(Long.MaxValue, 16) === 16)

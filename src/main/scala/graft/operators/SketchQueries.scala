@@ -803,15 +803,19 @@ object SketchQueries {
       pairs: Seq[(String, DataFrame, DataFrame)]): DataFrame =
     jcSketchEstimates(jcHashes(pairs)).orderBy("pair")
 
+  /** One row per distinct `(pair, side, h)`: the key hashes of each
+    * pair's fact side `a` and dimension side `b`. The trailing DISTINCT
+    * is load-bearing — [[joinCardCensus]] counts a hash as in the exact
+    * intersection when its `(pair, h)` group holds exactly 2 rows, which
+    * is only sound while no `(pair, side, h)` repeats. [[joinCardCensus]]
+    * materializes this relation once for the exact intersection and the
+    * sketch stages; [[joinCardServing]] derives it once, uncached.
+    */
   private def jcHashes(
       pairs: Seq[(String, DataFrame, DataFrame)]): DataFrame = {
     def leg(p: String, side: String, df: DataFrame) =
       df.select(lit(p).as("pair"), lit(side).as("side"),
         md5Long(concat(lit("jc:"), col("k").cast("string"))).as("h"))
-    // consumers re-derive this relation; a cache was measured NEUTRAL
-    // at sf0.1 (the cost sits in the exact-intersection join and the
-    // sketch windows, not the hash scans), so the plan stays
-    // cache-free — the deployment form drops the exact audit anyway
     pairs.map { case (p, a, b) =>
       leg(p, "a", a).unionByName(leg(p, "b", b))
     }.reduce(_ unionByName _).distinct()

@@ -1,14 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 import graft.AdsbSchema
+import graft.functions.Sbs1Parse
 
-/** SBS-1 ("BaseStation") line parser as a pure Catalyst expression pipeline.
-  *
-  * Reproduces the reference ingest semantics (dump1090-postgres.py:92-131)
-  * without a UDF, so Catalyst can prune / push through the projection:
+/** SBS-1 ("BaseStation") line parser: one generator,
+  * [[graft.functions.Sbs1Parse]], over the raw line column, then the
+  * `parsed_time` stamp. It reproduces the reference ingest semantics
+  * (dump1090-postgres.py:92-131):
   *
   *   - strip a trailing `\r` per record             (py:100)
   *   - split on `,`; DROP any record != 22 fields   (py:101-102)
@@ -23,8 +24,8 @@ import graft.AdsbSchema
   *   - `parsed_time` = processing-time stamp appended as the 23rd column
   *     (py:103,206-207); injectable for deterministic tests.
   *
-  * Everything is built from `org.apache.spark.sql.functions` so the whole
-  * parse stays inside WholeStageCodegen on the scan projection.
+  * The kernel scans each line once and runs exactly once per line, inside
+  * whole-stage codegen, on the live stream and the archive path alike.
   */
 object Sbs1 {
 
@@ -47,43 +48,9 @@ object Sbs1 {
     "MSG,7,496,742,51106E,27929,2011/03/06,07:57:36.523,2011/03/06,07:57:37.054,,3775,,,,,,,,,,0",
     "MSG,8,496,194,405F4E,27884,2010/02/19,17:58:13.244,2010/02/19,17:58:13.368,,,,,,,,,,,,0")
 
-  /** PG `integer` text coercion accepts only optionally-signed digit runs
-    * (with surrounding whitespace); `288.6` fails — unlike Spark's lax cast.
-    */
-  private val pgIntRe = "^\\s*[+-]?\\d+\\s*$"
-
-  private def emptyToNull(c: Column): Column =
-    when(c === "", lit(null)).otherwise(c)
-
-  /** Typed value for one SBS-1 field + whether PG would accept it.
-    * try_cast/try_to_date (null on failure, even under ANSI mode) model the
-    * PG error: a *non-null* input whose typed value comes back null means
-    * PG would have raised, so the row is dropped.
-    */
-  private def typed(name: String, c: Column): (Column, Column) = {
-    val intCols   = Set("transmission_type", "altitude", "ground_speed",
-                        "track", "alert", "emergency", "spi", "is_on_ground")
-    val floatCols = Set("lat", "lon", "vertical_rate")
-    val dateCols  = Set("generated_date", "logged_date")
-    name match {
-      case n if intCols(n) =>
-        // the rlike gate rejects what PG integer rejects ('288.6'); the
-        // try_cast additionally nulls out-of-range values (PG would error)
-        val v = when(c.rlike(pgIntRe), c.try_cast("int"))
-        (v.as(n), c.isNull || v.isNotNull)
-      case n if floatCols(n) =>
-        val v = c.try_cast("float")
-        (v.as(n), c.isNull || v.isNotNull)
-      case n if dateCols(n) =>
-        val v = try_to_date(c, "yyyy/MM/dd")
-        (v.as(n), c.isNull || v.isNotNull)
-      case n => (c.as(n), lit(true))
-    }
-  }
-
   /** Batch re-ingest of archived SBS-1 logs: line files (plain or
     * compressed — Spark's text source decodes .gz etc. transparently)
-    * through the exact same parse projection as the live stream. A
+    * through the same parse kernel as the live stream. A
     * directory of daily archives becomes the fact table in one call;
     * at scale, point this at the partitioned log store and write the
     * result with `partitionBy(ingest_date)` like the streaming sink.
@@ -94,40 +61,19 @@ object Sbs1 {
 
   /** Parse a DataFrame of raw SBS-1 lines (`rawCol`: StringType) into the
     * canonical 23-column ADS-B frame, dropping invalid records exactly as
-    * the reference does.
+    * the reference does. The input columns ride along past the kernel so
+    * `parsedTime` may reference one (e.g. a per-record event time in
+    * tests/streams); the final projection drops them.
     *
     * @param parsedTime processing-time stamp; defaults to
     *                   `current_timestamp()` (per-micro-batch semantics,
     *                   matching the reference's per-recv-batch stamp).
     */
   def parse(raw: DataFrame, rawCol: String = "value",
-            parsedTime: Column = current_timestamp()): DataFrame = {
-    // split with limit -1 keeps trailing empty fields (MSG,1 ends in ",,,")
-    val parts = split(regexp_replace(col(rawCol), "\r$", ""), ",", -1)
-    // input columns ride along so `parsedTime` may reference one (e.g. a
-    // per-record event time in tests/streams); the final projection
-    // drops them
-    val withParts = raw.select(col("*"), parts.as("p"))
-
-    // functions.get (not apply) — null on out-of-bounds instead of the
-    // ANSI-mode INVALID_ARRAY_INDEX error for short (non-22-field) records
-    val fields = AdsbSchema.sbs1Fields.zipWithIndex.map { case (n, i) =>
-      typed(n, emptyToNull(get(col("p"), lit(i))))
-    }
-    val cols   = fields.map(_._1)
-    val casts  = fields.map(_._2)
-
-    val arityOk = size(col("p")) === lit(22)
-    val notNullOk = Seq("transmission_type", "hex_ident", "generated_date",
-                        "generated_time")
-      .map(n => emptyToNull(get(col("p"),
-        lit(AdsbSchema.sbs1Fields.indexOf(n)))).isNotNull)
-      .reduce(_ && _)
-    val valid = casts.foldLeft(arityOk && notNullOk)(_ && _)
-
-    withParts
-      .select((cols :+ parsedTime.as("parsed_time")) :+ valid.as("__valid"): _*)
-      .filter(col("__valid"))
-      .drop("__valid")
-  }
+            parsedTime: Column = current_timestamp()): DataFrame =
+    raw.select(col("*"), GraftSqlBridge.column(Sbs1Parse(
+        GraftSqlBridge.expression(col(rawCol)),
+        raw.sparkSession.conf.get("spark.sql.session.timeZone"))))
+      .select(AdsbSchema.sbs1Fields.map(col) :+
+        parsedTime.as("parsed_time"): _*)
 }

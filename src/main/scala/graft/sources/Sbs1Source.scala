@@ -9,6 +9,7 @@ import java.{util => ju}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
@@ -42,7 +43,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * recv buffers are impossible by construction — BufferedReader yields
   * whole lines, fixing reference quirk §2.9.2); offsets are cumulative
   * line counts; `commit` trims everything at or below the committed
-  * offset. Like the built-in socket source this buffers on the driver
+  * offset. The reader publishes each read burst of whole lines at once.
+  *
+  * Partitioning invariant: a micro-batch `[start, end)` is planned as
+  * `min(end - start, defaultParallelism)` contiguous input partitions in
+  * offset order; partition i holds lines `[start + ⌊len·i/n⌋, start +
+  * ⌊len·(i+1)/n⌋)`, so every offset is read exactly once and parse plus
+  * the dedup map side run on every core (`defaultParallelism` of the
+  * session that starts the query — no option). Dedup correctness does not
+  * depend on the split: the PK dedup is a shuffle on the key columns.
+  *
+  * Like the built-in socket source this buffers on the driver
   * and is NOT fault-tolerant across query restarts (a TCP broadcast is
   * not replayable — the reference has the identical limitation): use
   * [[graft.streaming.Ingest.backfill]] over archived logs when replay
@@ -61,9 +72,12 @@ class Sbs1SourceProvider extends TableProvider with DataSourceRegister {
 }
 
 object Sbs1Source {
+  /** Lines the reader publishes at most at once (~25 ms at 40k lines/s). */
+  private[sources] val MaxBurst = 1024
+
   /** Raw line, exactly like the built-in socket source: parse with
     * [[Sbs1.parse]] downstream (keeps the source composable and the
-    * parse projection inside codegen).
+    * parse kernel inside codegen).
     */
   val Schema: StructType = StructType(Seq(StructField("value", StringType)))
 }
@@ -88,7 +102,8 @@ class Sbs1Table(options: CaseInsensitiveStringMap)
             options.get("host"),
             options.getInt("port", 30003),
             options.getInt("connectAttemptLimit", 10),
-            options.getLong("connectAttemptDelayMs", 5000L))
+            options.getLong("connectAttemptDelayMs", 5000L),
+            SparkSession.active.sparkContext.defaultParallelism)
       }
     }
 }
@@ -99,7 +114,8 @@ case class Sbs1Offset(count: Long) extends Offset {
 }
 
 class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
-                           attemptDelayMs: Long) extends MicroBatchStream {
+                           attemptDelayMs: Long, parallelism: Int)
+  extends MicroBatchStream {
 
   private val stopped = new AtomicBoolean(false)
   // lines received but not yet committed; `base` = offset of buffer(0)
@@ -124,11 +140,22 @@ class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
           attempts = 0 // successful dial resets the budget (py:196-198)
           val in = new BufferedReader(new InputStreamReader(
             s.getInputStream, StandardCharsets.UTF_8))
-          var line = in.readLine()
-          while (line != null && !stopped.get()) {
-            Sbs1MicroBatchStream.this.synchronized { buffer += line }
-            line = in.readLine()
+          // lines that arrived together are published together: one lock
+          // per read burst, and `latestOffset` never cuts into a burst
+          val burst = ArrayBuffer.empty[String]
+          def publish(): Unit = {
+            Sbs1MicroBatchStream.this.synchronized { buffer ++= burst }
+            burst.clear()
           }
+          try {
+            var line = in.readLine()
+            while (line != null && !stopped.get()) {
+              burst += line
+              if (!in.ready() || burst.length >= Sbs1Source.MaxBurst)
+                publish()
+              line = in.readLine()
+            }
+          } finally publish() // a read error keeps the lines already read
           s.close() // EOF: peer closed; fall through to re-dial (py:220-237)
         } catch {
           case e: java.io.IOException => lastError = e // dial/read error
@@ -167,6 +194,9 @@ class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
   override def deserializeOffset(json: String): Offset =
     Sbs1Offset(json.toLong)
 
+  /** `min(lines, parallelism)` contiguous partitions in offset order (the
+    * partitioning invariant in [[Sbs1SourceProvider]]'s Scaladoc).
+    */
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
     checkFailure()
@@ -175,8 +205,11 @@ class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
     val lines = synchronized {
       buffer.slice((s - base).toInt, (e - base).toInt).toArray
     }
-    if (lines.isEmpty) Array.empty
-    else Array(Sbs1InputPartition(lines))
+    val n = math.min(lines.length, parallelism)
+    Array.tabulate[InputPartition](n) { i =>
+      val (from, until) = (lines.length * i / n, lines.length * (i + 1) / n)
+      Sbs1InputPartition(s + from, lines.slice(from, until))
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -198,7 +231,9 @@ class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
   }
 }
 
-case class Sbs1InputPartition(lines: Array[String]) extends InputPartition
+/** Lines `[start, start + lines.length)` of the stream. */
+case class Sbs1InputPartition(start: Long, lines: Array[String])
+  extends InputPartition
 
 object Sbs1ReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =

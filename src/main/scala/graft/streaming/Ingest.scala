@@ -9,34 +9,36 @@ import graft.sources.Sbs1
 /** Structured Streaming ingest: the reference's entire Python hot loop
   * (dump1090-postgres.py:160-244) re-expressed as a declarative stream.
   *
-  *   socket source → SBS-1 parse projection → watermarked dedup →
+  *   sbs1 source → SBS-1 parse kernel → watermarked dedup →
   *   date-partitioned Parquet sink
   *
   * Mapping to the reference, piece by piece (SURVEY.md §2.1/§2.7):
-  *  - S1/S2: `format("socket")` delivers newline-delimited UTF-8 lines —
-  *    including correct handling of records torn across recv() buffers,
-  *    which the reference drops (§2.9.2).
-  *  - S4/T1: `current_timestamp()` inside the parse projection stamps
-  *    each micro-batch once — same granularity semantics as the
-  *    reference's one `datetime.now()` per recv batch.
+  *  - S1/S2: the custom `sbs1` source ([[graft.sources.Sbs1SourceProvider]])
+  *    delivers newline-delimited UTF-8 lines — including correct handling
+  *    of records torn across recv() buffers, which the reference drops
+  *    (§2.9.2).
+  *  - S4/T1: `current_timestamp()` beside the parse kernel stamps each
+  *    micro-batch once — same granularity semantics as the reference's
+  *    one `datetime.now()` per recv batch.
   *  - T5: the PK `(transmission_type, parsed_time, hex_ident)` becomes
   *    `dropDuplicates` on those columns; the watermark bounds the dedup
   *    state store (the reference instead crashes on PK violation, §2.9.3).
   *  - S7: the sink is append-only columnar Parquet partitioned by ingest
   *    date — the BRIN-index time-pruning intent (create_schema.sql:141)
   *    becomes partition pruning + row-group min/max skipping. A JDBC
-  *    parity sink is one `foreachBatch(_.write.jdbc(...))` away and
-  *    deliberately not defaulted (no PG in this environment).
+  *    parity sink is [[startJdbc]]; a bucketed catalog sink is
+  *    [[startBucketed]].
   *  - T6: the reference's dial-retry policy (10 attempts × 5 s,
-  *    Dockerfile:17-18) lives in [[runSupervised]] — the socket source
-  *    fails the query on disconnect; the supervisor restarts it. The
-  *    checkpoint + idempotent parquet sink make restarts exactly-once.
+  *    Dockerfile:17-18) lives inside the `sbs1` source: it re-dials
+  *    across peer disconnects while the query keeps running, and fails
+  *    the query once the budget is exhausted. [[runSupervised]] applies
+  *    the same policy to whole-query restarts.
   *
-  * Scale: ingest is embarrassingly parallel until the dedup (a shuffle
-  * on the PK columns, state partitioned the same way); the sink writes
-  * one file per partition per batch. At 100 TB/day you would bump
-  * shuffle partitions + compact small files periodically — both config,
-  * not code changes.
+  * Parallelism: the source splits each micro-batch into one contiguous
+  * input partition per core, so parse and the dedup map side run on
+  * every core; the dedup is then one shuffle on the PK columns (state
+  * partitioned the same way), and the sink writes one file per shuffle
+  * partition per batch and date.
   */
 object Ingest {
 
@@ -53,10 +55,9 @@ object Ingest {
       dedupWatermark: String = "10 minutes")
 
   /** The unbounded parsed stream (23-column ADS-B frame), read through
-    * the custom DSv2 source ([[Sbs1SourceProvider]]) so the reference's
-    * dial-retry policy lives *inside* the source — a peer disconnect
-    * no longer fails the query. (The built-in `socket` source remains a
-    * drop-in: `format("socket")` + [[runSupervised]].)
+    * the custom DSv2 source ([[graft.sources.Sbs1SourceProvider]]) so the
+    * reference's dial-retry policy lives *inside* the source — a peer
+    * disconnect does not fail the query.
     */
   def stream(spark: SparkSession, cfg: Config): DataFrame =
     Sbs1.parse(

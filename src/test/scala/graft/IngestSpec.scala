@@ -59,6 +59,52 @@ class IngestSpec extends SparkSpec {
     }
   }
 
+  test("a duplicate PK pair that straddles an input-partition boundary " +
+      "lands once in the sink") {
+    // 8 lines in one burst form one micro-batch; on local[4] the source
+    // plans it as 4 partitions of 2 lines (Sbs1SourceSpec), so the pair at
+    // offsets 0 and 7 is parsed in partitions 0 and 3
+    val dup = Sbs1.sampleLines(7)
+    val fillers = (1 to 6).map(i => dup.replace("4CA2D6", f"F0$i%04d"))
+    val lines = dup +: fillers :+ dup
+    val server = new ServerSocket(0)
+    @volatile var done = false
+    val serverThread = new Thread(() => {
+      val sock = server.accept()
+      val out = new PrintWriter(sock.getOutputStream)
+      out.print(lines.map(_ + "\n").mkString)
+      out.flush()
+      while (!done) Thread.sleep(50)
+      sock.close()
+    })
+    serverThread.setDaemon(true)
+    serverThread.start()
+
+    val sink = Files.createTempDirectory("graft-sink-straddle").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-straddle").toString
+    val q = Ingest.start(spark, Ingest.Config(host = "localhost",
+      port = server.getLocalPort, sinkDir = sink, checkpointDir = ckpt))
+    try {
+      def sinkCount(): Long =
+        try spark.read.parquet(sink).count()
+        catch { case _: Exception => -1L }
+      val deadline = System.currentTimeMillis() + 90000
+      while (sinkCount() < 7 && System.currentTimeMillis() < deadline)
+        Thread.sleep(500)
+      q.processAllAvailable()
+      val rows = spark.read.parquet(sink)
+      assert(rows.select("parsed_time").distinct().count() === 1,
+        "the burst must land as one micro-batch")
+      assert(rows.count() === 7, "7 distinct PKs among the 8 lines")
+      assert(rows.filter(rows("hex_ident") === "4CA2D6").count() === 1,
+        "the straddling duplicate lands exactly once")
+    } finally {
+      done = true
+      q.stop()
+      server.close()
+    }
+  }
+
   /** At 100 TB the default in-memory state store is the first thing to
     * fall over; the dedup pipeline must run unchanged on the RocksDB
     * provider (spill-to-disk state, the production choice).

@@ -277,4 +277,36 @@ class PlanShapeSpec extends SparkSpec {
       s"the one shuffle must be on cluster:\n$p")
     assert(!p.contains("Join"), s"no join anywhere in the plan:\n$p")
   }
+
+  /** The SBS-1 parse kernel runs once per line: one `sbs1_parse`
+    * generator, no `split(` left for Catalyst to inline into a pushed
+    * filter and every field projection.
+    */
+  private def assertOneKernel(name: String, optimized: String): Unit = {
+    assert("sbs1_parse\\(".r.findAllIn(optimized).length === 1,
+      s"$name must evaluate the parse kernel exactly once:\n$optimized")
+    assert(!optimized.contains("split("),
+      s"$name must not split the line:\n$optimized")
+  }
+
+  test("Sbs1.readArchive: one parse kernel, no split, in codegen") {
+    val archive = java.nio.file.Files.createTempDirectory("sbs1-plan")
+    java.nio.file.Files.writeString(archive.resolve("day.sbs"),
+      graft.sources.Sbs1.sampleLines.mkString("", "\n", "\n"))
+    val df = graft.sources.Sbs1.readArchive(spark, archive.toString)
+    assertOneKernel("readArchive", df.queryExecution.optimizedPlan.toString)
+    val p = plan(df)
+    assert("\\*\\(\\d+\\) Generate sbs1_parse".r.findFirstIn(p).isDefined,
+      s"the kernel must run inside whole-stage codegen:\n$p")
+  }
+
+  test("Ingest.stream: one parse kernel, no split") {
+    val df = graft.streaming.Ingest.stream(spark, graft.streaming.Ingest
+      .Config(host = "localhost", port = 1, sinkDir = "", checkpointDir = ""))
+    // a streaming plan cannot be planned as a batch: optimize the
+    // analyzed plan directly
+    val optimized = spark.asInstanceOf[org.apache.spark.sql.classic
+      .SparkSession].sessionState.optimizer.execute(df.queryExecution.analyzed)
+    assertOneKernel("Ingest.stream", optimized.toString)
+  }
 }

@@ -3,7 +3,12 @@ package graft
 import java.io.PrintWriter
 import java.net.ServerSocket
 
-import graft.sources.Sbs1
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.sources.{Sbs1, Sbs1InputPartition, Sbs1Offset, Sbs1Source,
+  Sbs1SourceProvider}
 
 /** The property the custom DSv2 source exists for: the query SURVIVES a
   * peer disconnect (the built-in socket source would fail it) and keeps
@@ -90,5 +95,50 @@ class Sbs1SourceSpec extends SparkSpec {
         s"failure should name the exhausted dial budget: ${messages(ex)}")
       assert(!q.isActive)
     } finally if (q.isActive) q.stop()
+  }
+
+  test("a batch of N lines plans min(N, 4) contiguous partitions that " +
+      "cover the offset range once, in order") {
+    assert(spark.sparkContext.defaultParallelism === 4)
+    val lines = (0 until 10).map(i => s"line-$i")
+    val server = new ServerSocket(0)
+    @volatile var done = false
+    val t = new Thread(() => {
+      val s = server.accept()
+      val out = new PrintWriter(s.getOutputStream)
+      out.print(lines.map(_ + "\n").mkString)
+      out.flush()
+      while (!done) Thread.sleep(50)
+      s.close()
+    })
+    t.setDaemon(true)
+    t.start()
+    val stream = new Sbs1SourceProvider()
+      .getTable(Sbs1Source.Schema, Array.empty, Map(
+        "host" -> "localhost", "port" -> server.getLocalPort.toString).asJava)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .toMicroBatchStream("unused")
+    try {
+      val deadline = System.currentTimeMillis() + 30000
+      while (stream.latestOffset() != Sbs1Offset(10) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(stream.latestOffset() === Sbs1Offset(10))
+      for ((s, e) <- Seq((0, 1), (0, 3), (2, 6), (3, 10), (0, 10), (5, 5))) {
+        val parts = stream.planInputPartitions(Sbs1Offset(s), Sbs1Offset(e))
+          .map(_.asInstanceOf[Sbs1InputPartition])
+        assert(parts.length === math.min(e - s, 4), s"[$s, $e)")
+        assert(parts.forall(_.lines.nonEmpty), s"[$s, $e): no empty split")
+        assert(parts.map(_.start).toSeq ===
+          parts.map(_.lines.length).scanLeft(s.toLong)(_ + _).init.toSeq,
+          s"[$s, $e): contiguous, in offset order")
+        assert(parts.flatMap(_.lines).toSeq === lines.slice(s, e),
+          s"[$s, $e): every line exactly once, in order")
+      }
+    } finally {
+      done = true
+      stream.stop()
+      server.close()
+    }
   }
 }

@@ -28,9 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why a custom source (SURVEY.md §7.3, the one deferred item): Spark's
   * built-in `socket` source FAILS THE QUERY when the peer disconnects,
-  * pushing the reference's reconnect policy (dump1090-postgres.py:181-198,
+  * so the reference's reconnect policy (dump1090-postgres.py:181-198,
   * :220-237 — N dial attempts × fixed delay, budget reset on success)
-  * out to a driver-side supervisor ([[graft.streaming.Ingest.runSupervised]]).
+  * would need a driver-side supervisor restarting whole queries.
   * This source embeds that policy: a reader thread re-dials across
   * disconnects and the query keeps running — micro-batches just come up
   * empty while the dial loop backs off. When the dial budget is

@@ -2,77 +2,45 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
 import graft.sources.FingerprintStore
 
-/** Streaming corpus admission — the incremental ingestion loop of a
-  * growing training corpus, composed from this engine's own parts:
-  * each micro-batch of incoming documents is audited against the
-  * persisted winnowing-fingerprint store
-  * ([[FingerprintStore.auditIncoming]]); near-duplicates of already-
-  * admitted documents are quarantined (with the stored doc they
-  * matched), fresh documents are appended to the corpus sink AND their
-  * fingerprints appended to the store — so a document admitted in batch
-  * N rejects its copies in batch N+1.
+/** Streaming corpus admission: the incremental ingestion loop of a
+  * growing training corpus, run by the [[Admission]] loop (its
+  * at-least-once contract holds here). Each micro-batch of
+  * (doc_id, text) rows is deduplicated exactly in-batch, then audited
+  * against the persisted winnowing-fingerprint store
+  * ([[FingerprintStore.auditIncoming]]); near-duplicates of stored
+  * documents are quarantined with the stored doc they matched best,
+  * fresh documents go to the corpus sink and their fingerprints to the
+  * store, so a document admitted in batch N rejects its copies in
+  * batch N+1.
   *
-  * Semantics and scale:
-  *  - the audit never shuffles the store (bucketed fingerprint join;
-  *    only the micro-batch's fingerprints are hashed in);
-  *  - the store append preserves the bucket layout (per-append bucket
-  *    files hash consistently), so audits stay Exchange-free as the
-  *    corpus grows; periodic per-bucket compaction is the same
-  *    [[Maintenance.compactPartition]] story as the ingest sink;
-  *  - exact duplicates WITHIN one micro-batch collapse via content-hash
-  *    dedup before the audit (first doc_id wins); near-dup pairs that
-  *    arrive together in one batch are both fresh w.r.t. the store and
-  *    both admitted — the batch boundary is the consistency unit, which
-  *    is the standard admission-pipeline contract (a stricter
-  *    in-batch near-dup pass would insert [[TextOps.minhashLshPairs]]
-  *    on the batch here);
-  *  - `foreachBatch` is AT-LEAST-ONCE: a crash between the three sink
-  *    writes replays the whole batch on restart. Every write is made
-  *    idempotent so the replay converges to the original outcome:
-  *    corpus and quarantine rows land in batch-id-keyed partition
-  *    directories written with OVERWRITE (a replay replaces, never
-  *    duplicates); the store append can duplicate (doc_id, fingerprint)
-  *    rows, but [[FingerprintStore.auditIncoming]] deduplicates the
-  *    store and excludes self-pairs, so a replayed batch — whose own
-  *    fingerprints may already be stored — re-derives exactly its
-  *    original admission decisions.
+  * Scale: the audit never shuffles the store (bucketed fingerprint
+  * join; only the batch's fingerprints are hashed in), and the append
+  * keeps the bucket layout, so audits stay Exchange-free as the corpus
+  * grows; compaction is [[Maintenance.compactPartition]]'s. A replayed
+  * append can duplicate (doc_id, fingerprint) rows, which the audit
+  * drops on read.
   */
 object CorpusAdmission {
 
   /** One micro-batch through the admission decision. Returns
     * (admitted, quarantined) — admitted rows are the batch schema;
-    * quarantined rows add (stored_doc, ratio_micro).
+    * quarantined rows add (stored_doc, shared_fps, ratio_micro).
     */
   def admitBatch(spark: SparkSession, batch: DataFrame, storeTable: String,
                  k: Int, w: Int, maxDf: Long,
                  ratioMicroMin: Long): (DataFrame, DataFrame) = {
-    // in-batch exact dedup: one row per content hash (min doc_id wins)
-    val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy(sha2(col("text").cast("binary"), 256))
-      .orderBy(col("doc_id"))
-    val distinctBatch = batch
-      .withColumn("__rn", row_number().over(w1))
-      .filter(col("__rn") === 1).drop("__rn")
+    val distinctBatch = Admission.distinctTexts(batch)
     val matches = FingerprintStore.auditIncoming(spark, storeTable,
       distinctBatch, k, w, maxDf, ratioMicroMin)
-    // strongest match per incoming doc (max overlap, stored_doc tiebreak)
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("new_doc"))
-      .orderBy(col("ratio_micro").desc, col("stored_doc"))
-    val best = matches.withColumn("__rn", row_number().over(w2))
-      .filter(col("__rn") === 1).drop("__rn")
-    val quarantined = distinctBatch
-      .join(best, distinctBatch("doc_id") === best("new_doc"))
-      .drop("new_doc")
-    val admitted = distinctBatch
-      .join(best.select(col("new_doc")),
-        distinctBatch("doc_id") === col("new_doc"), "left_anti")
-    (admitted, quarantined)
+    // max overlap, stored_doc tiebreak
+    val best = Admission.strongest(matches, col("new_doc"),
+      col("ratio_micro").desc, col("stored_doc"))
+    Admission.verdict(distinctBatch, "doc_id", best, "new_doc")
   }
 
   /** Append the fingerprints of newly admitted docs to the bucketed
@@ -89,34 +57,28 @@ object CorpusAdmission {
       .bucketBy(nBuckets, "fingerprint").sortBy("fingerprint")
       .saveAsTable(storeTable)
 
+  /** The gate as an [[Admission]]: corpus and quarantine sinks, then
+    * the fingerprint append.
+    */
+  private[graft] def admission(storeTable: String, corpusDir: String,
+                               quarantineDir: String, k: Int, w: Int,
+                               maxDf: Long, ratioMicroMin: Long,
+                               nBuckets: Int = 8): Admission =
+    Admission(Some(corpusDir), quarantineDir,
+      admitBatch(_, _, storeTable, k, w, maxDf, ratioMicroMin),
+      (_, _, admitted) =>
+        appendToStore(admitted, storeTable, k, w, nBuckets))
+
   /** The streaming admission query: docs stream → per-batch audit →
     * corpus sink + quarantine sink + store append. `nBuckets` must
     * match the spec the store was saved with (a mismatched bucket
-    * count makes every append fail and wedges the stream).
-    *
-    * Corpus/quarantine rows go to `batch_id=<id>` partition directories
-    * in OVERWRITE mode — the replay-idempotence half of the at-least-
-    * once contract documented on the object (readers of the sink roots
-    * see `batch_id` as an ordinary partition column).
+    * count makes every append fail and wedges the stream). Every read
+    * and write runs on the batch's own session, not `spark`.
     */
   def start(spark: SparkSession, docs: DataFrame, storeTable: String,
             corpusDir: String, quarantineDir: String,
             checkpointDir: String, k: Int, w: Int, maxDf: Long,
             ratioMicroMin: Long, nBuckets: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (admitted, quarantined) = admitBatch(spark, batch, storeTable,
-          k, w, maxDf, ratioMicroMin)
-        val keep = admitted.cache() // consumed twice: sink + store append
-        try {
-          keep.write.mode("overwrite")
-            .parquet(s"$corpusDir/batch_id=$batchId")
-          quarantined.write.mode("overwrite")
-            .parquet(s"$quarantineDir/batch_id=$batchId")
-          appendToStore(keep, storeTable, k, w, nBuckets)
-        } finally keep.unpersist()
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    admission(storeTable, corpusDir, quarantineDir, k, w, maxDf,
+      ratioMicroMin, nBuckets).start(docs, checkpointDir)
 }

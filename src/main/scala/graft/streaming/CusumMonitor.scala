@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** T14: streaming volume-level CUSUM monitor — the stateful twin of
   * R38's offline changepoint census and the LEVEL complement to T9's
@@ -84,16 +84,12 @@ object CusumMonitor {
   def start(spark: SparkSession, events: DataFrame, monitorDir: String,
             checkpointDir: String, mu0: Long, slack: Long,
             threshold: Long): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Empty batches are folded as n=0, NOT skipped: a rate collapse
-        // to zero is the strongest possible down-shift evidence and
-        // must advance s_neg. Replay convergence is guaranteed by the
-        // per-batch_id overwrite, not by an emptiness guard.
-        processBatch(spark, batch, monitorDir, batchId, mu0, slack,
-          threshold)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(events, checkpointDir) { (batch, batchId) =>
+      // Empty batches are folded as n=0, NOT skipped: a rate collapse
+      // to zero is the strongest possible down-shift evidence and
+      // must advance s_neg. Replay convergence is guaranteed by the
+      // per-batch_id overwrite, not by an emptiness guard.
+      processBatch(spark, batch, monitorDir, batchId, mu0, slack,
+        threshold)
+    }
 }

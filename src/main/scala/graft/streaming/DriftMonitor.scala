@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
 
@@ -62,15 +62,11 @@ object DriftMonitor {
   def start(spark: SparkSession, docs: DataFrame, refPath: String,
             monitorDir: String, checkpointDir: String,
             barMicro: Long): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batchKs(spark, batch, refPath, barMicro)
-            .write.mode("overwrite")
-            .parquet(s"$monitorDir/batch_id=$batchId")
-        }
+    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        batchKs(spark, batch, refPath, barMicro)
+          .write.mode("overwrite")
+          .parquet(s"$monitorDir/batch_id=$batchId")
       }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    }
 }

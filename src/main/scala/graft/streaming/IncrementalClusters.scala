@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Hashing.micro
 import graft.operators.TextOps
@@ -112,12 +112,8 @@ object IncrementalClusters {
   def start(spark: SparkSession, docs: DataFrame, fpTable: String,
             compTable: String, checkpointDir: String, k: Int, w: Int,
             ratioMicroMin: Long, nBuckets: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(spark, batch, fpTable, compTable, k, w,
-          ratioMicroMin, nBuckets)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(docs, checkpointDir) { (batch, _) =>
+      processBatch(spark, batch, fpTable, compTable, k, w,
+        ratioMicroMin, nBuckets)
+    }
 }

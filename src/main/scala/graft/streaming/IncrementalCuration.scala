@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
 import graft.sources.{DocStatsStore, FingerprintStore, PairStore,
@@ -65,11 +65,10 @@ import graft.sources.{DocStatsStore, FingerprintStore, PairStore,
   * grain is the common case and is auditable from the store's own df
   * census.
   *
-  * At-least-once: admission decisions replay deterministically
-  * (CorpusAdmission's contract), sinks are batch-id OVERWRITE,
-  * fingerprint/shingle appends dedup on read, and
-  * [[PairStore.append]] is replay-idempotent — so a crash anywhere in
-  * the five writes converges on redelivery.
+  * Steps 1–3 are one [[Admission]] run, so its at-least-once contract
+  * holds: sinks are batch-id OVERWRITE, fingerprint/shingle appends
+  * dedup on read, and [[PairStore.append]] is replay-idempotent — a
+  * crash anywhere in the five writes converges on redelivery.
   */
 object IncrementalCuration {
 
@@ -112,79 +111,58 @@ object IncrementalCuration {
   def runIncrement(spark: SparkSession, batch: DataFrame, batchId: Long,
                    base: String, corpusDir: String, quarantineDir: String,
                    cfg: Config = Config()): (Long, Long) = {
-    // SESSION CONSISTENCY: under foreachBatch `batch` is bound to the
-    // stream's CLONE session while `spark` is the caller's. Every read
-    // and write of this increment runs on the batch's OWN session —
-    // mixing them loses the write→read coherence Spark guarantees
-    // within one session (a saveAsTable append invalidates the WRITING
-    // session's relation cache; a refreshTable on the other session
-    // raced this and batch N+1's pair derivation read a pre-append
-    // snapshot — measured: the in-batch near-dup pair was never found).
-    val sp = batch.sparkSession
-    // the clone's relation cache may still pin batch N-1's listing of
-    // tables a different driver session wrote between increments
-    Seq(fpTable(base), s"${base}_sh", s"${base}_sizes", s"${base}_pairs",
-        s"${base}_components", s"${base}_docstats")
-      .filter(sp.catalog.tableExists)
-      .foreach(sp.catalog.refreshTable)
-    val (admitted0, quarantined0) = CorpusAdmission.admitBatch(sp,
-      batch, fpTable(base), cfg.k, cfg.w, cfg.winnowMaxDf,
-      cfg.ratioMicroMin)
-    // T30 stage: the eval-decontamination gate on the near-dup
-    // survivors. The eval index is STATIC, so this stage is
-    // order/replay-invariant by construction (TextOps.evalGatePairs);
-    // quarantine rows reuse the (stored_doc, ratio_micro) shape with
-    // the strongest contaminated eval doc as the match.
-    val (admitted, quarantined) = cfg.evalFpTable match {
-      case None => (admitted0, quarantined0)
-      case Some(t) =>
-        val flagged = graft.sources.FingerprintStore.auditAgainstEval(
-          sp, t, admitted0.select("doc_id", "text"), cfg.k, cfg.w,
-          cfg.evalMaxDf, cfg.evalRatioMicroMin)
-        val w2 = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("new_doc"))
-          .orderBy(col("ratio_micro").desc, col("eval_doc"))
-        val best = flagged
-          .withColumn("__rn", row_number().over(w2))
-          .filter(col("__rn") === 1).drop("__rn")
-          .select(col("new_doc"), col("eval_doc").as("stored_doc"),
-            col("shared_fps"), col("ratio_micro"))
-        val quarEval = admitted0
-          .join(best, admitted0("doc_id") === best("new_doc"))
-          .drop("new_doc")
-        val keepEval = admitted0.join(
-          best.select("new_doc"),
-          admitted0("doc_id") === col("new_doc"), "left_anti")
-        (keepEval, quarantined0.unionByName(quarEval))
-    }
-    // PIN the admission decision by truncating lineage, not by cache():
-    // the fingerprint append below is a catalog-table write, and the
-    // CacheManager RECACHES (re-evaluates) any cached plan referencing
-    // the written table — a cached `admitted` would silently re-decide
-    // against the grown store mid-increment (measured: the sink got the
-    // whole batch while the shingle store got the post-append verdicts).
-    // localCheckpoint makes the decision a materialized fact the later
-    // writes cannot perturb — decisions are made when the doc arrives.
-    val keep = admitted.localCheckpoint(eager = true)
-    val quar = quarantined.localCheckpoint(eager = true)
-    keep.write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
-    quar.write.mode("overwrite")
-      .parquet(s"$quarantineDir/batch_id=$batchId")
-    CorpusAdmission.appendToStore(keep, fpTable(base), cfg.k, cfg.w,
-      cfg.nBuckets)
-    val docs = keep.select("doc_id", "text")
-    ShingleStore.append(docs, cfg.n, base, cfg.nBuckets)
-    // T32: per-doc stats persisted at admission — the serving
-    // surfaces below never re-scan text
-    DocStatsStore.append(keep.select("doc_id", "source", "text"), base,
-      cfg.nBuckets)
-    val newPairs = ShingleStore.incrementalPairs(sp, base, docs,
-      cfg.n, cfg.maxDf, cfg.jacMicroMin)
-    if (sp.catalog.tableExists(s"${base}_pairs"))
-      PairStore.append(sp, newPairs, base, cfg.nBuckets)
-    else PairStore.save(newPairs, base, cfg.nBuckets)
+    val (keep, quar) = admission(base, corpusDir, quarantineDir, cfg)
+      .run(batch, batchId)
     (keep.count(), quar.count())
   }
+
+  /** Steps 1–3 as an [[Admission]]. */
+  private def admission(base: String, corpusDir: String,
+                        quarantineDir: String, cfg: Config): Admission =
+    Admission(Some(corpusDir), quarantineDir, (sp, batch) => {
+      // the clone's relation cache may still pin batch N-1's listing of
+      // tables a different driver session wrote between increments
+      Seq(fpTable(base), s"${base}_sh", s"${base}_sizes", s"${base}_pairs",
+          s"${base}_components", s"${base}_docstats")
+        .filter(sp.catalog.tableExists)
+        .foreach(sp.catalog.refreshTable)
+      val (admitted0, quarantined0) = CorpusAdmission.admitBatch(sp,
+        batch, fpTable(base), cfg.k, cfg.w, cfg.winnowMaxDf,
+        cfg.ratioMicroMin)
+      // T30 stage: the eval-decontamination gate on the near-dup
+      // survivors. The eval index is STATIC, so this stage is
+      // order/replay-invariant by construction (TextOps.evalGatePairs);
+      // quarantine rows reuse the (stored_doc, shared_fps, ratio_micro)
+      // shape with the strongest contaminated eval doc as the match.
+      cfg.evalFpTable match {
+        case None => (admitted0, quarantined0)
+        case Some(t) =>
+          val flagged = FingerprintStore.auditAgainstEval(sp, t,
+            admitted0.select("doc_id", "text"), cfg.k, cfg.w,
+            cfg.evalMaxDf, cfg.evalRatioMicroMin)
+          val best = Admission.strongest(flagged, col("new_doc"),
+              col("ratio_micro").desc, col("eval_doc"))
+            .select(col("new_doc"), col("eval_doc").as("stored_doc"),
+              col("shared_fps"), col("ratio_micro"))
+          val (keepEval, quarEval) =
+            Admission.verdict(admitted0, "doc_id", best, "new_doc")
+          (keepEval, quarantined0.unionByName(quarEval))
+      }
+    }, (sp, _, keep) => {
+      CorpusAdmission.appendToStore(keep, fpTable(base), cfg.k, cfg.w,
+        cfg.nBuckets)
+      val docs = keep.select("doc_id", "text")
+      ShingleStore.append(docs, cfg.n, base, cfg.nBuckets)
+      // T32: per-doc stats persisted at admission — the serving
+      // surfaces below never re-scan text
+      DocStatsStore.append(keep.select("doc_id", "source", "text"), base,
+        cfg.nBuckets)
+      val newPairs = ShingleStore.incrementalPairs(sp, base, docs,
+        cfg.n, cfg.maxDf, cfg.jacMicroMin)
+      if (sp.catalog.tableExists(s"${base}_pairs"))
+        PairStore.append(sp, newPairs, base, cfg.nBuckets)
+      else PairStore.save(newPairs, base, cfg.nBuckets)
+    })
 
   /** The cumulative admitted corpus (the sink read back; `batch_id`
     * rides as an ordinary partition column and is dropped so serving
@@ -216,20 +194,9 @@ object IncrementalCuration {
   def card(spark: SparkSession, base: String): DataFrame =
     TextOps.corpusCardFrom(DocStatsStore.load(spark, base))
 
-  /** The streaming form: every micro-batch is one increment. Same
-    * foreachBatch at-least-once story as [[CorpusAdmission.start]] —
-    * each write inside [[runIncrement]] is individually
-    * replay-convergent.
-    */
+  /** The streaming form: every micro-batch is one increment. */
   def start(spark: SparkSession, docs: DataFrame, base: String,
             corpusDir: String, quarantineDir: String,
             checkpointDir: String, cfg: Config = Config()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runIncrement(spark, batch, batchId, base, corpusDir,
-          quarantineDir, cfg): Unit
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    admission(base, corpusDir, quarantineDir, cfg).start(docs, checkpointDir)
 }

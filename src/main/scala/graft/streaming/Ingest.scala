@@ -31,8 +31,7 @@ import graft.sources.Sbs1
   *  - T6: the reference's dial-retry policy (10 attempts × 5 s,
   *    Dockerfile:17-18) lives inside the `sbs1` source: it re-dials
   *    across peer disconnects while the query keeps running, and fails
-  *    the query once the budget is exhausted. [[runSupervised]] applies
-  *    the same policy to whole-query restarts.
+  *    the query once the budget is exhausted.
   *
   * Parallelism: the source splits each micro-batch into one contiguous
   * input partition per core, so parse and the dedup map side run on
@@ -118,14 +117,10 @@ object Ingest {
     */
   def startBucketed(spark: SparkSession, cfg: Config, table: String,
                     nBuckets: Int = 8): StreamingQuery =
-    deduped(stream(spark, cfg), cfg.dedupWatermark)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        graft.sources.AdsbStore.append(df, table, nBuckets)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(deduped(stream(spark, cfg), cfg.dedupWatermark),
+        cfg.checkpointDir) { (df, _) =>
+      graft.sources.AdsbStore.append(df, table, nBuckets)
+    }
 
   /** JDBC parity sink (S7): the reference's row-at-a-time PostgreSQL
     * INSERT loop becomes one batched, partition-parallel JDBC append
@@ -139,14 +134,10 @@ object Ingest {
                 table: String,
                 props: java.util.Properties = new java.util.Properties())
   : StreamingQuery =
-    deduped(stream(spark, cfg), cfg.dedupWatermark)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        writeJdbcBatch(df, url, table, props)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(deduped(stream(spark, cfg), cfg.dedupWatermark),
+        cfg.checkpointDir) { (df, _) =>
+      writeJdbcBatch(df, url, table, props)
+    }
 
   /** One micro-batch → JDBC append. JDBC has no TIMESTAMP_NTZ / the
     * reference column is timestamptz, so parsed_time goes back to LTZ.
@@ -178,66 +169,5 @@ object Ingest {
     // append-only firehose: batched inserts, no generated-key fetch
     p.setProperty("reWriteBatchedInserts", "true")
     p
-  }
-
-  /** Reference retry policy (dump1090-postgres.py:181-198, :220-237):
-    * re-dial up to `connectAttemptLimit` times with a fixed delay; a
-    * successful (re)connection resets the budget. Returns when the
-    * attempt budget is exhausted — the reference `sys.exit()`s there.
-    *
-    * `start()` is non-blocking and always "succeeds" even against an
-    * unreachable feed (the failure surfaces later in awaitTermination),
-    * so the budget must NOT reset on start() returning: only evidence
-    * that the feed actually worked — a completed micro-batch that
-    * ingested rows — counts as the reference's "successful connection".
-    * Otherwise a persistently-down feed would oscillate 0→1→0 and
-    * retry forever.
-    */
-  def runSupervised(spark: SparkSession, cfg: Config): Unit = {
-    import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    var attempts = 0
-    var stoppedGracefully = false
-    while (!stoppedGracefully && attempts < cfg.connectAttemptLimit) {
-      // rows-ingested evidence via a listener, which observes EVERY
-      // progress update — `recentProgress` is a bounded ring (~100
-      // entries), so a feed that ingested rows and then idled through
-      // 100+ empty micro-batches before failing would read as
-      // never-progressed and spuriously burn the attempt budget
-      val progressed = new AtomicBoolean(false)
-      val qid = new AtomicReference[java.util.UUID]()
-      val listener = new StreamingQueryListener {
-        override def onQueryStarted(
-            e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: StreamingQueryListener.QueryProgressEvent): Unit =
-          if (e.progress.id == qid.get && e.progress.numInputRows > 0)
-            progressed.set(true)
-        override def onQueryTerminated(
-            e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      }
-      spark.streams.addListener(listener)
-      try {
-        val q = start(spark, cfg)
-        qid.set(q.id)
-        try {
-          q.awaitTermination() // throws on source error
-          stoppedGracefully = true // explicit q.stop(): do not restart
-        } catch {
-          case e: Exception =>
-            // belt-and-braces: covers a final progress event still in
-            // flight on the (async) listener bus at failure time
-            if (q.recentProgress.exists(_.numInputRows > 0))
-              progressed.set(true)
-            throw e
-        }
-      } catch {
-        case _: Exception =>
-          attempts = if (progressed.get) 1 else attempts + 1
-          Thread.sleep(cfg.connectAttemptDelayMs)
-      } finally {
-        spark.streams.removeListener(listener)
-      }
-    }
   }
 }

@@ -2,37 +2,28 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.PhashStore
 
-/** T10: streaming MEDIA admission — [[CorpusAdmission]]'s loop for
-  * image payloads, gated on the perceptual hash instead of text
-  * fingerprints: each micro-batch of incoming documents (whose even
-  * doc_ids carry the corpus's BMP payloads) is audited against the
-  * persisted [[PhashStore]] class census; an image within Hamming
-  * `maxHamming` of a stored class is quarantined with the class it
-  * matched (hash, exemplar, population), fresh images are admitted and
-  * their classes MERGED into the store — an image admitted in batch N
-  * rejects its re-encodes in batch N+1.
+/** T10: streaming MEDIA admission — the [[Admission]] loop (its
+  * at-least-once contract holds here) for image payloads, gated on the
+  * perceptual hash instead of text fingerprints: each micro-batch of
+  * incoming documents (whose even doc_ids carry the corpus's BMP
+  * payloads) is audited against the persisted [[PhashStore]] class
+  * census; an image within Hamming `maxHamming` of a stored class is
+  * quarantined with the class it matched (hash, exemplar, population),
+  * fresh images are admitted (doc_id only) and their classes MERGED
+  * into the store — an image admitted in batch N rejects its re-encodes
+  * in batch N+1.
   *
-  * Same at-least-once idempotence contract as [[CorpusAdmission]]:
-  * admitted/quarantined rows land in batch-id-keyed OVERWRITE
-  * partition directories, and VERDICTS converge under replay — a
-  * replayed batch's own classes are already in the store, so matches
-  * whose stored exemplar sits IN the current batch are excluded (the
-  * self-exclusion rule [[graft.sources.FingerprintStore]] applies at
-  * doc level, lifted to class level: a class this batch created must
-  * not quarantine the batch that created it). One honest caveat,
-  * documented rather than hidden: class POPULATION COUNTS in the
-  * store are at-least-once upper bounds — a replayed merge re-adds
-  * its batch's counts (verdicts never read absolute counts, only
-  * class existence, so convergence is unaffected).
-  *
-  * In-batch duplicates: two copies of one image arriving together are
-  * both fresh w.r.t. the store and both admitted (the batch boundary
-  * is the consistency unit — the [[CorpusAdmission]] contract); their
-  * class enters the census with n = 2.
+  * Replay: a replayed batch's own classes are already in the store, so
+  * matches whose stored exemplar sits in the current batch are excluded
+  * (a class this batch created must not quarantine the batch that
+  * created it). Class POPULATION COUNTS are at-least-once upper bounds —
+  * a replayed merge re-adds its batch's counts; verdicts read class
+  * existence only. Two copies of one image in one batch are both
+  * admitted; their class enters the census with n = 2.
   */
 object MediaAdmission {
 
@@ -50,43 +41,32 @@ object MediaAdmission {
         maxHamming)
       .join(bmpIds.select(col("doc_id").as("exemplar")),
         Seq("exemplar"), "left_anti")
-    // strongest match per image: lowest hamming, then largest stored
-    // class, then exemplar id — deterministic
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id")
-      .orderBy(col("hamming"), col("n_stored").desc, col("exemplar"))
-    val best = matches.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val quarantined = best
+    // lowest hamming, then largest stored class, then exemplar id
+    val best = Admission.strongest(matches, col("doc_id"), col("hamming"),
+      col("n_stored").desc, col("exemplar"))
     val admitted = bmpIds.join(best.select("doc_id"), Seq("doc_id"),
       "left_anti")
-    (admitted, quarantined)
+    (admitted, best)
   }
 
+  /** The gate as an [[Admission]]: admitted and quarantine sinks, then
+    * the admitted images' classes merged into the store.
+    */
+  private[graft] def admission(storeTable: String, admittedDir: String,
+                               quarantineDir: String,
+                               maxHamming: Int): Admission =
+    Admission(Some(admittedDir), quarantineDir,
+      admitBatch(_, _, storeTable, maxHamming),
+      (session, batch, admitted) => PhashStore.mergeAdmitted(session,
+        batch.join(admitted, Seq("doc_id"), "left_semi"), storeTable))
+
   /** The streaming gate: docs stream → per-batch phash audit →
-    * admitted/quarantine sinks + store merge.
+    * admitted/quarantine sinks + store merge. Every read and write runs
+    * on the batch's own session, not `spark`.
     */
   def start(spark: SparkSession, docs: DataFrame, storeTable: String,
             admittedDir: String, quarantineDir: String,
             checkpointDir: String, maxHamming: Int): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.cache()
-        try {
-          val (admitted, quarantined) =
-            admitBatch(spark, b, storeTable, maxHamming)
-          val keep = admitted.cache()
-          try {
-            keep.write.mode("overwrite")
-              .parquet(s"$admittedDir/batch_id=$batchId")
-            quarantined.write.mode("overwrite")
-              .parquet(s"$quarantineDir/batch_id=$batchId")
-            val freshDocs = b.join(keep, Seq("doc_id"), "left_semi")
-            PhashStore.mergeAdmitted(spark, freshDocs, storeTable)
-          } finally keep.unpersist()
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    admission(storeTable, admittedDir, quarantineDir, maxHamming)
+      .start(docs, checkpointDir)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
 
@@ -79,12 +79,8 @@ object StreamingCalibration {
             checkpointDir: String, minTok: Long, maxTok: Long,
             ttrMinMicro: Long, topMaxMicro: Long,
             minStops: Long): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, storeDir, batchId, minTok, maxTok,
-          ttrMinMicro, topMaxMicro, minStops)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
+      processBatch(spark, batch, storeDir, batchId, minTok, maxTok,
+        ttrMinMicro, topMaxMicro, minStops)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Hashing
 import graft.functions.Hashing.md5Long
@@ -105,11 +105,7 @@ object StreamingCms {
 
   def start(spark: SparkSession, events: DataFrame, storeDir: String,
             checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, storeDir, batchId)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(events, checkpointDir) { (batch, batchId) =>
+      processBatch(spark, batch, storeDir, batchId)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.RelationalQueries
 
@@ -84,11 +84,7 @@ object StreamingFunnel {
 
   def start(spark: SparkSession, events: DataFrame, storeDir: String,
             checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, storeDir, batchId)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(events, checkpointDir) { (batch, batchId) =>
+      processBatch(spark, batch, storeDir, batchId)
+    }
 }

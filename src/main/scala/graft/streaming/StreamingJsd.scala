@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
 
@@ -80,11 +80,7 @@ object StreamingJsd {
 
   def start(spark: SparkSession, docs: DataFrame, storeDir: String,
             checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, storeDir, batchId)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
+      processBatch(spark, batch, storeDir, batchId)
+    }
 }

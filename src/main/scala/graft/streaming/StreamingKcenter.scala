@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Hashing.micro
 import graft.functions.vector.cosineSim
@@ -146,11 +146,7 @@ object StreamingKcenter {
 
   def start(spark: SparkSession, vecs: DataFrame, storeDir: String,
             checkpointDir: String, k: Int, tau0: Long): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, storeDir, batchId, k, tau0)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(vecs, checkpointDir) { (batch, batchId) =>
+      processBatch(spark, batch, storeDir, batchId, k, tau0)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.SketchQueries
 
@@ -66,11 +66,7 @@ object StreamingKmv {
 
   def start(spark: SparkSession, docs: DataFrame, storeDir: String,
             checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, storeDir, batchId)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
+      processBatch(spark, batch, storeDir, batchId)
+    }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.SketchQueries
 import graft.sources.QuantileStore
@@ -41,11 +41,7 @@ object StreamingQuantiles {
 
   def start(spark: SparkSession, events: DataFrame, table: String,
             checkpointDir: String, nBuckets: Int = 8): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(spark, batch, table, nBuckets)
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    MicroBatches.start(events, checkpointDir) { (batch, _) =>
+      processBatch(spark, batch, table, nBuckets)
+    }
 }

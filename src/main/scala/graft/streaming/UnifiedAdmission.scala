@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.{FingerprintStore, GramStore, VectorStore,
   WordGramStore}
@@ -52,13 +52,11 @@ import graft.sources.{FingerprintStore, GramStore, VectorStore,
   * vector partitions ever shuffle or scan; only the micro-batch is
   * hashed/assigned into each store's layout.
   *
-  * At-least-once replay: corpus and quarantine rows land in
-  * batch-id-keyed OVERWRITE directories; the fingerprint and gram
-  * audits deduplicate their stores and exclude self-pairs; the vector
-  * audit excludes self vec_ids; a replayed VectorStore.append can
-  * leave duplicate physical rows — clear them with
-  * [[VectorAdmission.dedupStore]] in the same quiesced maintenance
-  * window as compaction, exactly the single-signal contracts.
+  * Run by the [[Admission]] loop, whose at-least-once contract holds
+  * here: every audit excludes a document's match with itself, and a
+  * replayed VectorStore.append can leave duplicate physical rows —
+  * clear them with [[VectorAdmission.dedupStore]] in the same quiesced
+  * maintenance window as compaction.
   */
 object UnifiedAdmission {
 
@@ -177,14 +175,7 @@ object UnifiedAdmission {
                  evalGramTable: Option[String] = None,
                  evalFpTable: Option[String] = None)
       : (DataFrame, DataFrame) = {
-    // in-batch exact dedup: one row per content hash (min doc_id wins),
-    // the CorpusAdmission discipline
-    val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy(sha2(col("text").cast("binary"), 256))
-      .orderBy(col("doc_id"))
-    val distinctBatch = batch
-      .withColumn("__rn", row_number().over(w1))
-      .filter(col("__rn") === 1).drop("__rn")
+    val distinctBatch = Admission.distinctTexts(batch)
     val signals = signalMatches(spark, distinctBatch, fpTable, gramTable,
       vecPath, cfg, evalGramTable, evalFpTable)
     val admitted = distinctBatch.join(
@@ -192,12 +183,37 @@ object UnifiedAdmission {
     (admitted, signals)
   }
 
+  /** The gate as an [[Admission]]: corpus and quarantine sinks, then
+    * the fingerprint, gram and vector appends of one pinned admitted
+    * set, the vector append's drift handed to `onDrift`.
+    */
+  private[graft] def admission(fpTable: String, gramTable: String,
+                               vecPath: String, corpusDir: String,
+                               quarantineDir: String, cfg: Config,
+                               nBuckets: Int = 8,
+                               onDrift: VectorStore.Drift => Unit = _ => (),
+                               evalGramTable: Option[String] = None,
+                               evalFpTable: Option[String] = None)
+  : Admission =
+    Admission(Some(corpusDir), quarantineDir,
+      admitBatch(_, _, fpTable, gramTable, vecPath, cfg, evalGramTable,
+        evalFpTable),
+      (session, _, admitted) => if (!admitted.isEmpty) {
+        val texts = admitted.select("doc_id", "text")
+        CorpusAdmission.appendToStore(texts, fpTable, cfg.winnowK,
+          cfg.winnowW, nBuckets)
+        GramStore.append(texts, cfg.gramK, gramTable, nBuckets)
+        onDrift(VectorStore.append(session, vecPath,
+          admitted.select(col("doc_id").as("vec_id"), col("embedding"))))
+      })
+
   /** The streaming gate: (doc_id, text, embedding) stream → per-batch
-    * three-signal audit → corpus sink + unified quarantine sink +
-    * three store appends. `nBuckets` must match what the fingerprint
-    * and gram stores were saved with; each appending batch's vector
-    * drift is surfaced through `onDrift` (re-clustering itself belongs
-    * in a quiesced maintenance window).
+    * audit → corpus sink + unified quarantine sink + three store
+    * appends. `nBuckets` must match what the fingerprint and gram
+    * stores were saved with; each appending batch's vector drift is
+    * surfaced through `onDrift` (re-clustering itself belongs in a
+    * quiesced maintenance window). Every read and write runs on the
+    * batch's own session, not `spark`.
     */
   def start(spark: SparkSession, docs: DataFrame, fpTable: String,
             gramTable: String, vecPath: String, corpusDir: String,
@@ -206,27 +222,7 @@ object UnifiedAdmission {
             onDrift: VectorStore.Drift => Unit = _ => (),
             evalGramTable: Option[String] = None,
             evalFpTable: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (admitted, quarantined) = admitBatch(spark, batch, fpTable,
-          gramTable, vecPath, cfg, evalGramTable, evalFpTable)
-        val keep = admitted.cache() // four consumers: sink + 3 appends
-        try {
-          keep.write.mode("overwrite")
-            .parquet(s"$corpusDir/batch_id=$batchId")
-          quarantined.write.mode("overwrite")
-            .parquet(s"$quarantineDir/batch_id=$batchId")
-          if (!keep.isEmpty) {
-            CorpusAdmission.appendToStore(keep.select("doc_id", "text"),
-              fpTable, cfg.winnowK, cfg.winnowW, nBuckets)
-            GramStore.append(keep.select("doc_id", "text"), cfg.gramK,
-              gramTable, nBuckets)
-            onDrift(VectorStore.append(spark, vecPath,
-              keep.select(col("doc_id").as("vec_id"), col("embedding"))))
-          }
-        } finally keep.unpersist()
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    admission(fpTable, gramTable, vecPath, corpusDir, quarantineDir, cfg,
+      nBuckets, onDrift, evalGramTable, evalFpTable)
+      .start(docs, checkpointDir)
 }

@@ -2,40 +2,34 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Hashing.micro
 import graft.functions.KmeansAssign.kmeansAssign
 import graft.functions.vector.cosineSim
 import graft.sources.VectorStore
 
-/** Streaming ANN admission — [[CorpusAdmission]]'s pattern composed
-  * with the persisted IVF index: each micro-batch of incoming
-  * embeddings is audited against the [[VectorStore]]; near-duplicates
-  * of already-stored vectors (cosine ≥ threshold) are quarantined with
-  * the stored vector they matched, fresh vectors are appended to their
-  * cluster partition through [[VectorStore.append]] — so a vector
-  * admitted in batch N rejects its copies in batch N+1, and every
-  * append reports the drift signal that gates re-clustering.
+/** Streaming ANN admission: the [[Admission]] loop (its at-least-once
+  * contract holds here) over the persisted IVF index. Each micro-batch
+  * of (vec_id, embedding) rows is audited against the [[VectorStore]];
+  * near-duplicates of stored vectors (cosine ≥ threshold) are
+  * quarantined with the stored vector they matched best, fresh vectors
+  * are appended to their cluster partition through
+  * [[VectorStore.append]], so a vector admitted in batch N rejects its
+  * copies in batch N+1, and every append reports the drift signal that
+  * gates re-clustering. There is no corpus sink: the store is the
+  * corpus.
   *
-  * Semantics and scale:
   *  - the audit compares each incoming vector ONLY against its own
   *    cluster's stored vectors (an nProbe = 1 check — the admission
   *    throughput/recall dial; a stricter audit would fan each vector
   *    out to its top-P clusters): the batch's distinct clusters are a
   *    bounded driver list (≤ nCentroids), so the store scan PRUNES
   *    non-probed cluster partitions and the tiny batch broadcasts;
-  *  - duplicate vec_ids WITHIN one micro-batch collapse first (min
-  *    payload wins); near-dup pairs arriving together are both fresh
-  *    w.r.t. the store and both admitted — the batch boundary is the
-  *    consistency unit, same contract as [[CorpusAdmission]];
-  *  - `foreachBatch` is AT-LEAST-ONCE: quarantine rows land in
-  *    batch-id-keyed overwrite directories and the audit excludes
-  *    vec_id self-pairs, so a replayed batch re-derives its original
-  *    decisions; the store append itself can leave duplicate physical
-  *    rows for an admitted vec_id after a crash replay — run
-  *    [[dedupStore]] in the same quiesced maintenance window as
-  *    re-clustering/compaction to drop them.
+  *  - duplicate vec_ids within one micro-batch collapse first;
+  *  - a replayed append can leave duplicate physical rows for an
+  *    admitted vec_id: run [[dedupStore]] in the same quiesced
+  *    maintenance window as re-clustering/compaction to drop them.
   */
 object VectorAdmission {
 
@@ -60,48 +54,37 @@ object VectorAdmission {
       .select(col("new_vec"),
         col("vec_id").as("stored_vec"),
         micro(cosineSim(col("embedding"), col("ne"))).as("cos_micro"))
-    // strongest stored match per incoming vector (max cosine, min
-    // stored_vec tiebreak — struct ordering is lexicographic)
-    val best = scoredPairs
-      .groupBy("new_vec")
-      .agg(max(struct(col("cos_micro"), (-col("stored_vec")).as("neg")))
-        .as("m"))
-      .select(col("new_vec"), col("m.cos_micro").as("cos_micro"),
-        (-col("m.neg")).as("stored_vec"))
-      .filter(col("cos_micro") >= cosMicroMin)
-    val quarantined = b
-      .join(best, b("vec_id") === best("new_vec"))
-      .select(b("vec_id"), col("embedding"), col("stored_vec"),
-        col("cos_micro"))
-    val fresh = b.join(best.select("new_vec"),
-      b("vec_id") === col("new_vec"), "left_anti")
-    (fresh, quarantined)
+    // max cosine, min stored_vec tiebreak
+    val best = Admission.strongest(
+      scoredPairs.filter(col("cos_micro") >= cosMicroMin), col("new_vec"),
+      col("cos_micro").desc, col("stored_vec"))
+    Admission.verdict(b, "vec_id", best, "new_vec")
   }
+
+  /** The gate as an [[Admission]]: quarantine sink, then the store
+    * append with the batch's [[VectorStore.Drift]] handed to `onDrift`.
+    */
+  private[graft] def admission(path: String, quarantineDir: String,
+                               cosMicroMin: Long,
+                               onDrift: VectorStore.Drift => Unit = _ => ())
+  : Admission =
+    Admission(None, quarantineDir, auditBatch(_, path, _, cosMicroMin),
+      (session, _, fresh) =>
+        if (!fresh.isEmpty) onDrift(VectorStore.append(session, path, fresh)))
 
   /** The streaming admission query: embeddings stream → per-batch
     * audit → quarantine sink (batch-id-keyed, overwrite) + store append
     * with the batch's [[VectorStore.Drift]] handed to `onDrift` (the
     * hook a deployment wires to its re-cluster trigger; retraining
     * itself belongs in a quiesced maintenance window, not mid-stream).
+    * Every read and write runs on the batch's own session, not `spark`.
     */
   def start(spark: SparkSession, vecs: DataFrame, path: String,
             quarantineDir: String, checkpointDir: String,
             cosMicroMin: Long,
             onDrift: VectorStore.Drift => Unit = _ => ()): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (fresh, quarantined) = auditBatch(spark, path, batch,
-          cosMicroMin)
-        quarantined.write.mode("overwrite")
-          .parquet(s"$quarantineDir/batch_id=$batchId")
-        val keep = fresh.cache() // two passes: drift score + append
-        try {
-          if (!keep.isEmpty) onDrift(VectorStore.append(spark, path, keep))
-        } finally keep.unpersist()
-      }
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    admission(path, quarantineDir, cosMicroMin, onDrift)
+      .start(vecs, checkpointDir)
 
   /** Drop duplicate physical rows a crash-replayed append may have
     * left (same vec_id in the same cluster partition) — the vector

@@ -250,4 +250,61 @@ class UnifiedAdmissionSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $gramTable")
     }
   }
+
+  test("one decision per batch: the corpus sink and all three stores " +
+    "receive the same admitted set") {
+    // An in-batch near-duplicate pair is fresh w.r.t. the stores when
+    // the batch is decided, so both are admitted. Once the first store
+    // append lands, the pair matches each other in that store: a
+    // decision re-evaluated after that append would drop both from the
+    // later appends. Every write of the batch must see the one decision.
+    val fpTable = "uni_fp_pin"
+    val gramTable = "uni_gram_pin"
+    val vecPath = Files.createTempDirectory("graft-uni-vecp").toString
+    VectorStore.save(Tables.embeddings(spark, AdmissionFixtures.sf),
+      vecPath, 10)
+    val orthVec = AdmissionFixtures.orthogonal(spark, vecPath)
+    val seed = Seq((1L, "seed document about structured streaming micro " +
+      "batches checkpoint recovery and exactly once sinks in spark " +
+      "engines with watermarked stateful aggregation everywhere"))
+      .toDF("doc_id", "text")
+    FingerprintStore.save(seed, cfg.winnowK, cfg.winnowW, 80, 10, fpTable)
+    GramStore.save(seed, cfg.gramK, gramTable)
+    val ta = "alpha " + (0 until 8).map(i =>
+      s"segment$i aviation telemetry parsing rollout").mkString(" ")
+    val nearTa = ta.zipWithIndex.map { case (c, i) =>
+      if (i % 25 == 24) 'q' else c }.mkString
+    val tc = "charlie completely unrelated text about winnowing and " +
+      "shingles plus locality sensitive hashing for deduplication work"
+    val corpusDir = Files.createTempDirectory("graft-uni-pin").toString
+    val quarDir = Files.createTempDirectory("graft-uni-pinq").toString
+    val ckpt = Files.createTempDirectory("graft-uni-pinc").toString
+    val batchIds = Set(9300L, 9301L, 9302L)
+    try {
+      val ms = MemoryStream[(Long, String, Array[Float])](spark)
+      val q = UnifiedAdmission.start(spark,
+        ms.toDF().toDF("doc_id", "text", "embedding"),
+        fpTable, gramTable, vecPath, corpusDir, quarDir, ckpt, cfg)
+      try {
+        ms.addData((9300L, ta, orthVec(0)), (9301L, nearTa, orthVec(1)),
+          (9302L, tc, orthVec(2)))
+        q.processAllAvailable()
+      } finally q.stop()
+
+      def ids(df: org.apache.spark.sql.DataFrame, c: String): Set[Long] =
+        df.select(c).distinct().collect().map(_.getLong(0)).toSet
+          .intersect(batchIds)
+      val corpus = ids(spark.read.parquet(corpusDir), "doc_id")
+      assert(corpus === batchIds, "the pair is fresh at decision time")
+      assert(ids(FingerprintStore.load(spark, fpTable), "doc_id") === corpus,
+        "fingerprint store")
+      assert(ids(GramStore.load(spark, gramTable), "doc_id") === corpus,
+        "gram store")
+      assert(ids(spark.read.parquet(vecPath), "vec_id") === corpus,
+        "vector store")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $fpTable")
+      spark.sql(s"DROP TABLE IF EXISTS $gramTable")
+    }
+  }
 }

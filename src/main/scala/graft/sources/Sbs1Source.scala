@@ -8,6 +8,7 @@ import java.{util => ju}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -34,9 +35,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * This source embeds that policy: a reader thread re-dials across
   * disconnects and the query keeps running — micro-batches just come up
   * empty while the dial loop backs off. When the dial budget is
-  * exhausted the source FAILS the query (rethrown from the next
-  * `latestOffset`/`planInputPartitions`), mirroring the reference's
-  * `sys.exit` at that point — never a silently dead feed.
+  * exhausted, or any other error ends the reader thread (an out-of-range
+  * port, a negative dial delay), the source FAILS the query (rethrown
+  * from the next `latestOffset`/`planInputPartitions`), mirroring the
+  * reference's `sys.exit` at that point — never a silently dead feed.
   *
   * Shape mirrors Spark's own TextSocketMicroBatchStream: the driver-side
   * thread accumulates newline-delimited records (torn records across
@@ -122,15 +124,24 @@ class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
   private val buffer = ArrayBuffer.empty[String]
   private var base = 0L
   @volatile private var socket: Socket = _
-  // set exactly once, when the dial budget is exhausted: the reference
-  // sys.exit()s here (dump1090-postgres.py:193-195); a streaming query
-  // must instead FAIL so the driver-side restart/exit policy can engage
-  // — a silently dead feed producing empty micro-batches forever is the
-  // worst outcome
+  // set exactly once, when the reader thread ends without being stopped
+  // (dial budget exhausted, or any other error escaping the dial/read
+  // loop): the reference sys.exit()s here (dump1090-postgres.py:193-195);
+  // a streaming query must instead FAIL so the driver-side restart/exit
+  // policy can engage — a silently dead feed producing empty
+  // micro-batches forever is the worst outcome
   @volatile private var terminalFailure: Throwable = _
 
   private val reader = new Thread(s"sbs1-reader-$host:$port") {
-    override def run(): Unit = {
+    override def run(): Unit =
+      try dialLoop()
+      catch {
+        case NonFatal(e) if !stopped.get() =>
+          terminalFailure = new java.io.IOException(
+            s"sbs1 $host:$port reader failed", e)
+      }
+
+    private def dialLoop(): Unit = {
       var attempts = 0
       var lastError: Throwable = null
       while (!stopped.get() && attempts < attemptLimit) {

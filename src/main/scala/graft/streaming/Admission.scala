@@ -62,8 +62,8 @@ final case class Admission(
     val (admitted, quarantined) = decide(session, batch)
     val keep = admitted.localCheckpoint(eager = true)
     val quar = quarantined.localCheckpoint(eager = true)
-    corpusDir.foreach(Admission.sink(keep, _, batchId))
-    Admission.sink(quar, quarantineDir, batchId)
+    corpusDir.foreach(BatchStore.overwrite(keep, _, batchId))
+    BatchStore.overwrite(quar, quarantineDir, batchId)
     append(session, batch, keep)
     (keep, quar)
   }
@@ -104,7 +104,4 @@ object Admission {
       batch(key) === col(matchKey), "left_anti")
     (admitted, quarantined)
   }
-
-  private def sink(rows: DataFrame, dir: String, batchId: Long): Unit =
-    rows.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
 }

@@ -22,10 +22,8 @@ import graft.operators.TextOps
   *  - the KS core is [[TextOps.ksBetweenCensuses]] — integer
   *    numerators, one division, so the monitor emits the same number
   *    the offline X44 audit would compute for that batch;
-  *  - `foreachBatch` is at-least-once: monitor rows land in
-  *    batch-id-keyed partition directories with OVERWRITE (the
-  *    [[CorpusAdmission]] idempotence discipline) — a replayed batch
-  *    rewrites its own row and converges;
+  *  - each batch's row reads no predecessor, so a replay converges by
+  *    [[BatchStore.overwrite]] of its own partition alone;
   *  - the monitor only OBSERVES (no quarantine side effect): wiring
   *    the alarm into [[UnifiedAdmission]]'s gate is deployment
   *    policy, deliberately not baked in here.
@@ -64,9 +62,8 @@ object DriftMonitor {
             barMicro: Long): StreamingQuery =
     MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
       if (!batch.isEmpty) {
-        batchKs(spark, batch, refPath, barMicro)
-          .write.mode("overwrite")
-          .parquet(s"$monitorDir/batch_id=$batchId")
+        BatchStore.overwrite(batchKs(spark, batch, refPath, barMicro),
+          monitorDir, batchId)
       }
     }
 }

@@ -50,8 +50,7 @@ object Ingest {
       connectAttemptLimit: Int =
         sys.env.getOrElse("CONNECT_ATTEMPT_LIMIT", "10").toInt,
       connectAttemptDelayMs: Long =
-        (sys.env.getOrElse("CONNECT_ATTEMPT_DELAY", "5.0").toDouble * 1000).toLong,
-      dedupWatermark: String = "10 minutes")
+        (sys.env.getOrElse("CONNECT_ATTEMPT_DELAY", "5.0").toDouble * 1000).toLong)
 
   /** The unbounded parsed stream (23-column ADS-B frame), read through
     * the custom DSv2 source ([[graft.sources.Sbs1SourceProvider]]) so the
@@ -67,23 +66,17 @@ object Ingest {
         .load())
 
   /** PK-intent dedup with bounded state. `parsed_time` is processing
-    * time (monotone per micro-batch), so the watermark only ever evicts
-    * state that can no longer collide.
+    * time (monotone per micro-batch), so the ten-minute watermark only
+    * ever evicts state that can no longer collide.
     */
-  def deduped(parsed: DataFrame, watermark: String): DataFrame =
-    parsed.withWatermark("parsed_time", watermark)
+  def deduped(parsed: DataFrame): DataFrame =
+    parsed.withWatermark("parsed_time", "10 minutes")
       .dropDuplicates("transmission_type", "parsed_time", "hex_ident")
 
   /** Start the ingest query (non-blocking). */
   def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    deduped(stream(spark, cfg), cfg.dedupWatermark)
-      .withColumn("ingest_date", to_date(col("parsed_time")))
-      .writeStream.format("parquet")
-      .option("path", cfg.sinkDir)
-      .option("checkpointLocation", cfg.checkpointDir)
-      .partitionBy("ingest_date")
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
+    sink(deduped(stream(spark, cfg)), cfg,
+      Trigger.ProcessingTime("1 second"))
 
   /** Archive backfill: stream SBS-1 line files (plain or compressed)
     * through the same parse/dedup/sink pipeline with an AvailableNow
@@ -94,14 +87,18 @@ object Ingest {
     */
   def backfill(spark: SparkSession, archiveDir: String,
                cfg: Config): StreamingQuery =
-    deduped(Sbs1.parse(spark.readStream.text(archiveDir)),
-        cfg.dedupWatermark)
-      .withColumn("ingest_date", to_date(col("parsed_time")))
+    sink(deduped(Sbs1.parse(spark.readStream.text(archiveDir))), cfg,
+      Trigger.AvailableNow())
+
+  /** The date-partitioned parquet sink of [[start]] and [[backfill]]. */
+  private def sink(rows: DataFrame, cfg: Config,
+                   trigger: Trigger): StreamingQuery =
+    rows.withColumn("ingest_date", to_date(col("parsed_time")))
       .writeStream.format("parquet")
       .option("path", cfg.sinkDir)
       .option("checkpointLocation", cfg.checkpointDir)
       .partitionBy("ingest_date")
-      .trigger(Trigger.AvailableNow())
+      .trigger(trigger)
       .start()
 
   /** Bucketed analytical sink — the third S7 sink shape beside the
@@ -117,9 +114,8 @@ object Ingest {
     */
   def startBucketed(spark: SparkSession, cfg: Config, table: String,
                     nBuckets: Int = 8): StreamingQuery =
-    MicroBatches.start(deduped(stream(spark, cfg), cfg.dedupWatermark),
-        cfg.checkpointDir) { (df, _) =>
-      graft.sources.AdsbStore.append(df, table, nBuckets)
+    MicroBatches.start(deduped(stream(spark, cfg)), cfg.checkpointDir) {
+      (df, _) => graft.sources.AdsbStore.append(df, table, nBuckets)
     }
 
   /** JDBC parity sink (S7): the reference's row-at-a-time PostgreSQL
@@ -134,9 +130,8 @@ object Ingest {
                 table: String,
                 props: java.util.Properties = new java.util.Properties())
   : StreamingQuery =
-    MicroBatches.start(deduped(stream(spark, cfg), cfg.dedupWatermark),
-        cfg.checkpointDir) { (df, _) =>
-      writeJdbcBatch(df, url, table, props)
+    MicroBatches.start(deduped(stream(spark, cfg)), cfg.checkpointDir) {
+      (df, _) => writeJdbcBatch(df, url, table, props)
     }
 
   /** One micro-batch → JDBC append. JDBC has no TIMESTAMP_NTZ / the

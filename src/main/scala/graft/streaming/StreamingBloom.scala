@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.SketchQueries
 
@@ -17,14 +18,6 @@ import graft.operators.SketchQueries
   * change state, so the merged filter is BIT-IDENTICAL to the batch
   * filter over the concatenated stream (spec-pinned, the T13/T17
   * protocol).
-  *
-  * Replay convergence (at-least-once foreachBatch): state rides the
-  * T15/T17 discipline — each batch reads the filter of the latest
-  * batch_id STRICTLY BELOW its own and overwrites its own partition;
-  * a replayed batch re-reads the same predecessor and rewrites an
-  * identical partition (spec-pinned fixed point). With OR idempotence
-  * this would converge even under a laxer scheme; the shared
-  * discipline keeps the store layout uniform across the family.
   *
   * State bound: ≤ BloomBits/32 = 32 counter words per batch partition
   * REGARDLESS of stream length — the mergeable-summary property. The
@@ -42,32 +35,21 @@ object StreamingBloom {
     docs.select(col("doc_id"),
       sha2(col("text").cast("binary"), 256).as("key"))
 
+  private val State = StructType.fromDDL("w BIGINT, word BIGINT")
+
   /** One micro-batch of (doc_id, text) rows. */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(SketchQueries.bloomWordsOf(keyed(batch).select("key")))
-      .groupBy("w").agg(bit_or(col("word")).as("word"))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long)].toDF("w", "word")
-  }
-
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("w", "word"), Some(batchId))
-      .getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(SketchQueries.bloomWordsOf(keyed(batch).select("key")))
+        .groupBy("w").agg(bit_or(col("word")).as("word"))
+    }
 
   /** The serving read: the current filter (latest batch partition) as
     * (w, word) rows; empty when the store has no batches yet.
     */
   def words(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("w", "word"))
-      .getOrElse(emptyState(spark)).orderBy("w")
+    BatchStore.current(spark, storeDir, State).orderBy("w")
 
   /** Membership claims for a (doc_id, text) frame against the current
     * filter — the [[SketchQueries.bloomProbe]] kernel over a ≤ 32-row

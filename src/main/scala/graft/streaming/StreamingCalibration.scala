@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
 
@@ -28,46 +29,29 @@ import graft.operators.TextOps
   *    calibration BIT-FOR-BIT over the concatenated stream
   *    UNCONDITIONALLY (spec-pinned).
   *
-  * Replay convergence: the T15/T17/T25 read-predecessor/overwrite-own
-  * discipline (spec-pinned fixed point).
-  *
   * State bound: ≤ distinct score values (micro-quantized, heavily
   * collided) — far smaller than the corpus; serving is census
   * arithmetic into 10 rows.
   */
 object StreamingCalibration {
 
+  private val State = StructType.fromDDL("v BIGINT, cnt BIGINT, n_pass BIGINT")
+
   /** One micro-batch of (doc_id, text, ...) rows. */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    storeDir: String, batchId: Long, minTok: Long,
                    maxTok: Long, ttrMinMicro: Long, topMaxMicro: Long,
-                   minStops: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(TextOps.scoreCensus(batch, minTok, maxTok,
-        ttrMinMicro, topMaxMicro, minStops))
-      .groupBy("v")
-      .agg(sum("cnt").as("cnt"), sum("n_pass").as("n_pass"))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Long)].toDF("v", "cnt", "n_pass")
-  }
-
-  /** The census of the latest batch strictly BEFORE `batchId` (empty
-    * when none) — the read that makes replays converge.
-    */
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("v", "cnt", "n_pass"),
-      Some(batchId)).getOrElse(emptyState(spark))
+                   minStops: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(TextOps.scoreCensus(batch, minTok, maxTok,
+          ttrMinMicro, topMaxMicro, minStops))
+        .groupBy("v")
+        .agg(sum("cnt").as("cnt"), sum("n_pass").as("n_pass"))
+    }
 
   /** The stored (v, cnt, n_pass) census (latest batch). */
   def census(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("v", "cnt", "n_pass"))
-      .getOrElse(emptyState(spark))
+    BatchStore.current(spark, storeDir, State)
 
   /** The serving read: the calibration table over the accumulated
     * census — X76's own rollup (same columns as q_score_calibration).

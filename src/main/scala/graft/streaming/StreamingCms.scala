@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Hashing
 import graft.functions.Hashing.md5Long
@@ -18,12 +19,8 @@ import graft.operators.SketchQueries.{Depth, Width}
   * batch sketch over the concatenated stream (spec-pinned, the T13
   * protocol), not merely within the CMS error bound.
   *
-  * Replay convergence (at-least-once foreachBatch): cell-wise sum is
-  * NOT idempotent, so state rides the [[CusumMonitor]]/T15 discipline
-  * — each batch reads the sketch of the latest batch_id STRICTLY
-  * BELOW its own and overwrites its own batch_id partition; a
-  * replayed batch re-reads the same predecessor and rewrites an
-  * identical partition (spec-pinned fixed point).
+  * Cell-wise sum is NOT idempotent: replays converge only through
+  * [[BatchStore.fold]].
   *
   * State bound: ≤ d·w counter rows per batch partition REGARDLESS of
   * stream length or key cardinality — the mergeable-summary property
@@ -50,35 +47,21 @@ object StreamingCms {
     }.reduce(_ unionByName _)
   }
 
+  private val State = StructType.fromDDL("j INT, bucket BIGINT, c BIGINT")
+
   /** One micro-batch of events-shaped rows (anything with user_id). */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(counters(batch))
-      .groupBy("j", "bucket").agg(sum("c").as("c"))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Long)].toDF("j", "bucket", "c")
-  }
-
-  /** The sketch of the latest batch strictly BEFORE `batchId` (empty
-    * when none) — the read that makes replays converge.
-    */
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("j", "bucket", "c"),
-      Some(batchId)).getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(counters(batch))
+        .groupBy("j", "bucket").agg(sum("c").as("c"))
+    }
 
   /** The serving read: the current sketch (latest batch partition) as
     * (j, bucket, c) rows; empty when the store has no batches yet.
     */
   def sketch(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("j", "bucket", "c"))
-      .getOrElse(emptyState(spark)).orderBy("j", "bucket")
+    BatchStore.current(spark, storeDir, State).orderBy("j", "bucket")
 
   /** Point estimate for a set of keys against the current sketch —
     * min over the d rows of each key's bucket counters (missing

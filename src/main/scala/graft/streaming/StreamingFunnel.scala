@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.RelationalQueries
 
@@ -31,9 +32,6 @@ import graft.operators.RelationalQueries
   * batch BIT-FOR-BIT unconditionally, including the reordering case
   * (spec-pinned: a step-2 event arriving before its step-1 event).
   *
-  * Replay convergence: the T15/T17/T22 read-predecessor/overwrite-own
-  * discipline; set union makes the rewrite a fixed point.
-  *
   * State bound: distinct funnel-step events — the conversion log's
   * own cardinality (three event types, not the full stream); a
   * deployment retires users whose windows closed beyond dispute via
@@ -42,35 +40,24 @@ import graft.operators.RelationalQueries
   */
 object StreamingFunnel {
 
+  private val State =
+    StructType.fromDDL("user_id BIGINT, event_type STRING, ts TIMESTAMP")
+
   /** One micro-batch of events-shaped rows (user_id, event_type, ts). */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(batch
-        .filter(col("event_type")
-          .isin(RelationalQueries.FunnelSteps: _*))
-        .select(col("user_id"), col("event_type"), col("ts"))
-        .distinct())
-      .distinct()
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, String, java.sql.Timestamp)]
-      .toDF("user_id", "event_type", "ts")
-  }
-
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("user_id", "event_type", "ts"),
-      Some(batchId)).getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(batch
+          .filter(col("event_type")
+            .isin(RelationalQueries.FunnelSteps: _*))
+          .select(col("user_id"), col("event_type"), col("ts"))
+          .distinct())
+        .distinct()
+    }
 
   /** The stored distinct funnel-step event relation (latest batch). */
   def stepEvents(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("user_id", "event_type", "ts"))
-      .getOrElse(emptyState(spark))
+    BatchStore.current(spark, storeDir, State)
 
   /** The serving read: R4's funnel rollup (same columns as q_funnel). */
   def funnel(spark: SparkSession, storeDir: String): DataFrame =

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{SketchQueries, TextOps}
 
@@ -20,18 +21,15 @@ import graft.operators.{SketchQueries, TextOps}
   * cannot provide (a token that is light in every batch but heavy
   * across them never tops any single batch).
   *
-  * Replay convergence (at-least-once foreachBatch): MG merge is NOT
-  * idempotent (re-merging the same summary double-counts), so state
-  * rides the [[CusumMonitor]] discipline — each batch reads the
-  * summary of the latest batch_id STRICTLY BELOW its own and
-  * overwrites its own batch_id partition; a replayed batch re-reads
-  * the same predecessor and rewrites an identical partition
-  * (spec-pinned fixed point).
+  * MG merge is NOT idempotent (re-merging the same summary
+  * double-counts): replays converge only through [[BatchStore.fold]].
   *
   * State bound: ≤ k counter rows per batch partition REGARDLESS of
   * stream length or vocabulary — the mergeable-summary property.
   */
 object StreamingHeavyHitters {
+
+  private val State = StructType.fromDDL("token STRING, c BIGINT")
 
   /** One micro-batch of documents-shaped rows (doc_id, text). */
   def processBatch(spark: SparkSession, batch: DataFrame,
@@ -41,40 +39,22 @@ object StreamingHeavyHitters {
       .groupBy("token").agg(count(lit(1)).as("c"))
       .withColumn("bucket", lit(0L))
     val bsum = SketchQueries.mgStep(bcen, col("bucket"))
-    val prev = loadState(spark, storeDir, batchId)
-    val merged = SketchQueries.mgStep(
-      prev.unionByName(bsum.select("bucket", "token", "c"))
-        .groupBy("bucket", "token").agg(sum("c").as("c")),
-      col("bucket"))
-    merged.select(col("token"), col("c"))
-      .write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  /** The latest summary strictly BEFORE `batchId` (empty when none) —
-    * the read that makes replays converge. Directory probed through
-    * the Hadoop FileSystem API (works on HDFS/S3 paths, the
-    * CusumMonitor fix).
-    */
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame = {
-    import spark.implicits._
-    BatchStore.latest(spark, storeDir, Seq("token", "c"), Some(batchId))
-      .map(_.select(lit(0L).as("bucket"), col("token"), col("c")))
-      .getOrElse(Seq.empty[(Long, String, Long)]
-        .toDF("bucket", "token", "c"))
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      SketchQueries.mgStep(
+        prev.withColumn("bucket", lit(0L))
+          .unionByName(bsum.select("bucket", "token", "c"))
+          .groupBy("bucket", "token").agg(sum("c").as("c")),
+        col("bucket"))
+    }
   }
 
   /** The serving read: the current summary (latest batch partition),
     * heaviest counters first; an empty (token, c) frame when the store
-    * has no batch partitions yet (same probe as [[loadState]]).
+    * has no batch partitions yet.
     */
-  def summary(spark: SparkSession, storeDir: String): DataFrame = {
-    import spark.implicits._
-    BatchStore.latest(spark, storeDir, Seq("token", "c"))
-      .getOrElse(Seq.empty[(String, Long)].toDF("token", "c"))
+  def summary(spark: SparkSession, storeDir: String): DataFrame =
+    BatchStore.current(spark, storeDir, State)
       .orderBy(col("c").desc, col("token"))
-  }
 
   def start(spark: SparkSession, docs: DataFrame, storeDir: String,
             checkpointDir: String): StreamingQuery =

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.SketchQueries
 import graft.operators.SketchQueries.HllM
@@ -22,12 +23,6 @@ import graft.operators.SketchQueries.HllM
   * every mergeable summary in SURVEY §2.10 now has an incremental
   * store.
   *
-  * Replay convergence (at-least-once foreachBatch): the T15/T17
-  * discipline — read the latest batch_id strictly below your own,
-  * overwrite your own partition; replays rewrite identical
-  * partitions (spec-pinned fixed point); max-idempotence makes this
-  * doubly safe.
-  *
   * State bound: ≤ m register rows per batch partition REGARDLESS of
   * stream length or key cardinality. [[estimate]] applies the
   * standard raw-HLL + linear-counting small-range correction over
@@ -36,30 +31,19 @@ import graft.operators.SketchQueries.HllM
   */
 object StreamingHll {
 
+  private val State = StructType.fromDDL("bucket BIGINT, rho BIGINT")
+
   /** One micro-batch of (user_id) rows. */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(SketchQueries.hllRegistersOf(batch))
-      .groupBy("bucket").agg(max("rho").as("rho"))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long)].toDF("bucket", "rho")
-  }
-
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("bucket", "rho"), Some(batchId))
-      .getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(SketchQueries.hllRegistersOf(batch))
+        .groupBy("bucket").agg(max("rho").as("rho"))
+    }
 
   /** The serving read: the current register file as (bucket, rho). */
   def registers(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("bucket", "rho"))
-      .getOrElse(emptyState(spark)).orderBy("bucket")
+    BatchStore.current(spark, storeDir, State).orderBy("bucket")
 
   /** The distinct-count estimate off the current registers: raw HLL
     * (alpha·m²/Σ2^(−rho), absent buckets reading rho = 0) with the

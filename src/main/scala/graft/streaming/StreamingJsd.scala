@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
 
@@ -27,12 +28,8 @@ import graft.operators.TextOps
   *    store ≡ batch JSD bit-for-bit UNCONDITIONALLY — no analogue of
   *    PSI's fixed-reference-grid caveat (spec-pinned).
   *
-  * Replay convergence (at-least-once foreachBatch): integer sums are
-  * not idempotent, so state rides the T15/T17/T22 discipline — each
-  * batch reads the census of the latest batch_id STRICTLY BELOW its
-  * own and overwrites its own partition; a replayed batch re-reads
-  * the same predecessor and rewrites an identical partition
-  * (spec-pinned fixed point).
+  * Integer sums are not idempotent: replays converge only through
+  * [[BatchStore.fold]].
   *
   * State bound: the accumulated census is vocabulary-sized
   * (sources × distinct terms — Heaps-bounded, the X37 measurement),
@@ -41,33 +38,19 @@ import graft.operators.TextOps
   */
 object StreamingJsd {
 
+  private val State = StructType.fromDDL("source STRING, t STRING, cnt BIGINT")
+
   /** One micro-batch of (doc_id, text, source) rows. */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(TextOps.sourceTermCensus(batch))
-      .groupBy("source", "t").agg(sum("cnt").as("cnt"))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String, Long)].toDF("source", "t", "cnt")
-  }
-
-  /** The census of the latest batch strictly BEFORE `batchId` (empty
-    * when none) — the read that makes replays converge.
-    */
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("source", "t", "cnt"),
-      Some(batchId)).getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(TextOps.sourceTermCensus(batch))
+        .groupBy("source", "t").agg(sum("cnt").as("cnt"))
+    }
 
   /** The stored (source, t, cnt) census (latest batch). */
   def census(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("source", "t", "cnt"))
-      .getOrElse(emptyState(spark))
+    BatchStore.current(spark, storeDir, State)
 
   /** The serving read: pairwise JSD over the accumulated census —
     * X52's own rollup (same columns as q_jsd: source_a, source_b,

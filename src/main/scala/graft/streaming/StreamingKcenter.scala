@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Hashing.micro
 import graft.functions.vector.cosineSim
@@ -28,10 +29,8 @@ import graft.functions.vector.cosineSim
   * micro-batch; all distances are integer micro-cosines off the same
   * kernel as V39; thinning scans centers in their insertion order
   * (cid order). Given the predecessor state and the batch content the
-  * output is a pure function — which is also the replay story: state
-  * rides the T14/T15 discipline (read the latest batch_id strictly
-  * below own, overwrite own partition; a replayed batch re-reads the
-  * same predecessor and rewrites an identical partition).
+  * output is a pure function, so a replay through [[BatchStore.fold]]
+  * rewrites an identical partition.
   *
   * Scale shape: per batch, ONE distributed scan per admission round
   * computes each point's min-dissimilarity to the ≤ k broadcast
@@ -42,65 +41,70 @@ import graft.functions.vector.cosineSim
   */
 object StreamingKcenter {
 
+  private val State =
+    StructType.fromDDL("cid BIGINT, embedding ARRAY<FLOAT>, tau BIGINT")
+
   /** One batch of (vec_id, embedding) rows. `tau0` is the initial
     * micro-dissimilarity threshold; `k` the center budget.
     */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    storeDir: String, batchId: Long, k: Int,
-                   tau0: Long): Unit = {
-    var (centers, tau) = loadState(spark, storeDir, batchId, tau0)
+                   tau0: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      val rows = prev.orderBy("cid").collect()
+      var centers = rows.map(r =>
+        (r.getLong(0), r.getSeq[Float](1).toArray)).toVector
+      var tau = if (rows.isEmpty) tau0 else rows.head.getLong(2)
 
-    def minDis(cols: Seq[Array[Float]]): Column = {
-      val ds = cols.map(e =>
-        lit(1000000L) - micro(cosineSim(col("embedding"),
-          typedlit(e.toSeq))))
-      if (ds.isEmpty) lit(Long.MaxValue)
-      else if (ds.size == 1) ds.head else least(ds: _*)
-    }
-
-    def thin(cs: Vector[(Long, Array[Float])], t: Long)
-    : Vector[(Long, Array[Float])] =
-      cs.foldLeft(Vector.empty[(Long, Array[Float])]) { (kept, c) =>
-        val covered = kept.exists { kc =>
-          val d = 1000000L - cosMicroLocal(c._2, kc._2)
-          d <= t
-        }
-        if (covered) kept else kept :+ c
+      def minDis(cols: Seq[Array[Float]]): Column = {
+        val ds = cols.map(e =>
+          lit(1000000L) - micro(cosineSim(col("embedding"),
+            typedlit(e.toSeq))))
+        if (ds.isEmpty) lit(Long.MaxValue)
+        else if (ds.size == 1) ds.head else least(ds: _*)
       }
 
-    // admission rounds: collect at most k+1 points farther than tau
-    // from every current center (vec_id order), fold them in locally,
-    // double + thin on overflow, repeat until no far points remain
-    var done = false
-    while (!done) {
-      val far = batch
-        .filter(!col("vec_id").isInCollection(centers.map(_._1)))
-        .withColumn("__d", minDis(centers.map(_._2)))
-        .filter(col("__d") > tau)
-        .orderBy("vec_id").limit(k + 1)
-        .select("vec_id", "embedding").collect()
-      if (far.isEmpty) done = true
-      else {
-        far.foreach { r =>
-          val v = r.getSeq[Float](1).toArray
-          val d = if (centers.isEmpty) Long.MaxValue
-            else centers.map(c =>
-              1000000L - cosMicroLocal(v, c._2)).min
-          if (d > tau) centers = centers :+ ((r.getLong(0), v))
-          while (centers.size > k) {
-            tau = tau * 2
-            centers = thin(centers, tau)
+      def thin(cs: Vector[(Long, Array[Float])], t: Long)
+      : Vector[(Long, Array[Float])] =
+        cs.foldLeft(Vector.empty[(Long, Array[Float])]) { (kept, c) =>
+          val covered = kept.exists { kc =>
+            val d = 1000000L - cosMicroLocal(c._2, kc._2)
+            d <= t
+          }
+          if (covered) kept else kept :+ c
+        }
+
+      // admission rounds: collect at most k+1 points farther than tau
+      // from every current center (vec_id order), fold them in locally,
+      // double + thin on overflow, repeat until no far points remain
+      var done = false
+      while (!done) {
+        val far = batch
+          .filter(!col("vec_id").isInCollection(centers.map(_._1)))
+          .withColumn("__d", minDis(centers.map(_._2)))
+          .filter(col("__d") > tau)
+          .orderBy("vec_id").limit(k + 1)
+          .select("vec_id", "embedding").collect()
+        if (far.isEmpty) done = true
+        else {
+          far.foreach { r =>
+            val v = r.getSeq[Float](1).toArray
+            val d = if (centers.isEmpty) Long.MaxValue
+              else centers.map(c =>
+                1000000L - cosMicroLocal(v, c._2)).min
+            if (d > tau) centers = centers :+ ((r.getLong(0), v))
+            while (centers.size > k) {
+              tau = tau * 2
+              centers = thin(centers, tau)
+            }
           }
         }
       }
-    }
 
-    import spark.implicits._
-    centers.map { case (cid, e) => (cid, e.toSeq, tau) }
-      .toDF("cid", "embedding", "tau")
-      .write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
+      import spark.implicits._
+      centers.map { case (cid, e) => (cid, e.toSeq, tau) }
+        .toDF("cid", "embedding", "tau")
+    }
 
   /** Driver-side micro cosine — the same expression tree as the
     * kernel (dot / (|a|·|b|), doubles from float inputs, floored).
@@ -120,29 +124,12 @@ object StreamingKcenter {
       .toLong
   }
 
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long, tau0: Long)
-  : (Vector[(Long, Array[Float])], Long) =
-    BatchStore.latest(spark, storeDir, Seq("cid", "embedding", "tau"),
-      Some(batchId)) match {
-      case None => (Vector.empty, tau0)
-      case Some(state) =>
-        val rows = state.orderBy("cid").collect()
-        val cs = rows.map(r =>
-          (r.getLong(0), r.getSeq[Float](1).toArray)).toVector
-        val t = if (rows.isEmpty) tau0 else rows.head.getLong(2)
-        (cs, t)
-    }
-
   /** The serving read: current centers + threshold; an empty
     * (cid, tau) frame when the store has no batch partitions yet.
     */
-  def centers(spark: SparkSession, storeDir: String): DataFrame = {
-    import spark.implicits._
-    BatchStore.latest(spark, storeDir, Seq("cid", "tau"))
-      .getOrElse(Seq.empty[(Long, Long)].toDF("cid", "tau"))
-      .orderBy("cid")
-  }
+  def centers(spark: SparkSession, storeDir: String): DataFrame =
+    BatchStore.current(spark, storeDir, State)
+      .select("cid", "tau").orderBy("cid")
 
   def start(spark: SparkSession, vecs: DataFrame, storeDir: String,
             checkpointDir: String, k: Int, tau0: Long): StreamingQuery =

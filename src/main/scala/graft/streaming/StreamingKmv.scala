@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.SketchQueries
 
@@ -16,13 +17,7 @@ import graft.operators.SketchQueries
   * concatenated stream (spec-pinned), and the serving estimates match
   * [[SketchQueries.kmvCensus]]'s (source, est) columns exactly.
   *
-  * Replay convergence (at-least-once foreachBatch): the T15/T17
-  * discipline — each batch reads the state of the latest batch_id
-  * STRICTLY BELOW its own and overwrites its own partition; a
-  * replayed batch re-reads the same predecessor and rewrites an
-  * identical partition (spec-pinned fixed point). Like T18's OR,
-  * bottom-k union is idempotent, so the discipline is belt-and-braces
-  * here rather than load-bearing.
+  * Like T18's OR, bottom-k union is idempotent.
   *
   * State bound: ≤ k = 64 hash rows per source per batch partition
   * REGARDLESS of stream length (Beyer et al., SIGMOD 2007) — the
@@ -32,30 +27,19 @@ import graft.operators.SketchQueries
   */
 object StreamingKmv {
 
+  private val State = StructType.fromDDL("source STRING, h BIGINT")
+
   /** One micro-batch of (doc_id, text, source) rows. */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = SketchQueries.kmvBottomK(
-      loadState(spark, storeDir, batchId)
-        .unionByName(SketchQueries.kmvHashes(batch)))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long)].toDF("source", "h")
-  }
-
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("source", "h"), Some(batchId))
-      .getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      SketchQueries.kmvBottomK(
+        prev.unionByName(SketchQueries.kmvHashes(batch)))
+    }
 
   /** The serving read: the current bottom-k state as (source, h). */
   def state(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("source", "h"))
-      .getOrElse(emptyState(spark)).orderBy("source", "h")
+    BatchStore.current(spark, storeDir, State).orderBy("source", "h")
 
   /** Per-source distinct-count estimates off the current state —
     * exact below k, the (k−1)·2⁶⁰/kth estimator at k, matching the

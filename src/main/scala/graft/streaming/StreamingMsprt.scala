@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.RelationalQueries
 
@@ -30,58 +31,36 @@ import graft.operators.RelationalQueries
   *    always-valid running max. Store ≡ batch q_msprt bit-for-bit
   *    UNCONDITIONALLY (spec-pinned).
   *
-  * Replay convergence (at-least-once foreachBatch): integer sums are
-  * not idempotent, so state rides the T15/T17/T22 discipline — each
-  * batch reads the census of the latest batch_id STRICTLY BELOW its
-  * own and overwrites its own partition; a replayed batch re-reads
-  * the same predecessor and rewrites an identical partition
-  * (spec-pinned fixed point).
+  * Integer sums are not idempotent: replays converge only through
+  * [[BatchStore.fold]].
   *
   * State bound: ≤ event_types × days × 8 columns regardless of
   * stream length — calendar-sized, the smallest state in the family.
   */
 object StreamingMsprt {
 
+  private val State = StructType.fromDDL(
+    "event_type STRING, day DATE, dn_a BIGINT, dn_b BIGINT, " +
+      "dsum_a BIGINT, dsum_b BIGINT, dss_a BIGINT, dss_b BIGINT")
+
   /** One micro-batch of events rows (event_id, user_id, event_type,
     * ts, value).
     */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(RelationalQueries.msprtDailyCensus(batch))
-      .groupBy("event_type", "day")
-      .agg(sum("dn_a").as("dn_a"), sum("dn_b").as("dn_b"),
-        sum("dsum_a").as("dsum_a"), sum("dsum_b").as("dsum_b"),
-        sum("dss_a").as("dss_a"), sum("dss_b").as("dss_b"))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, java.sql.Date, Long, Long, Long, Long, Long,
-        Long)]
-      .toDF("event_type", "day", "dn_a", "dn_b", "dsum_a", "dsum_b",
-        "dss_a", "dss_b")
-  }
-
-  /** The census of the latest batch strictly BEFORE `batchId` (empty
-    * when none) — the read that makes replays converge.
-    */
-  private val StateCols = Seq("event_type", "day", "dn_a", "dn_b",
-    "dsum_a", "dsum_b", "dss_a", "dss_b")
-
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, StateCols, Some(batchId))
-      .getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(RelationalQueries.msprtDailyCensus(batch))
+        .groupBy("event_type", "day")
+        .agg(sum("dn_a").as("dn_a"), sum("dn_b").as("dn_b"),
+          sum("dsum_a").as("dsum_a"), sum("dsum_b").as("dsum_b"),
+          sum("dss_a").as("dss_a"), sum("dss_b").as("dss_b"))
+    }
 
   /** The stored (event_type, day, six-integer) daily census (latest
     * batch).
     */
   def dailyCensus(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, StateCols)
-      .getOrElse(emptyState(spark))
+    BatchStore.current(spark, storeDir, State)
 
   /** The serving read: the always-valid sequential readout over the
     * accumulated census — R69's own rollup (same columns as q_msprt:

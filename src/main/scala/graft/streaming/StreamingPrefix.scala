@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
 
@@ -22,11 +23,8 @@ import graft.operators.TextOps
   * BIT-IDENTICAL to [[TextOps.prefixDupCensus]] over the concatenated
   * stream (spec-pinned), rank-free columns included.
   *
-  * Replay convergence (at-least-once foreachBatch): sums are not
-  * idempotent, so state rides the T15/T17 read-predecessor /
-  * overwrite-own discipline — a replayed batch re-reads the same
-  * predecessor partition and rewrites an identical own partition
-  * (fixed point spec-pinned).
+  * Sums are not idempotent: replays converge only through
+  * [[BatchStore.fold]].
   *
   * State bound: one row per (opener class, source) seen — bounded by
   * DISTINCT openers, not documents (the whole point: template floods
@@ -40,36 +38,21 @@ object StreamingPrefix {
       .groupBy("pk", "source")
       .agg(count(lit(1)).as("n"), min("doc_id").as("min_doc"))
 
+  private val State =
+    StructType.fromDDL("pk BIGINT, source STRING, n BIGINT, min_doc BIGINT")
+
   /** One micro-batch of documents-shaped rows. */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(partial(batch))
-      .groupBy("pk", "source")
-      .agg(sum("n").as("n"), min("min_doc").as("min_doc"))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, String, Long, Long)]
-      .toDF("pk", "source", "n", "min_doc")
-  }
-
-  /** The state of the latest batch strictly BEFORE `batchId` (empty
-    * when none) — the read that makes replays converge.
-    */
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir,
-      Seq("pk", "source", "n", "min_doc"), Some(batchId))
-      .getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(partial(batch))
+        .groupBy("pk", "source")
+        .agg(sum("n").as("n"), min("min_doc").as("min_doc"))
+    }
 
   /** Current state (latest batch partition); empty when unwritten. */
   def state(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("pk", "source", "n", "min_doc"))
-      .getOrElse(emptyState(spark))
+    BatchStore.current(spark, storeDir, State)
 
   /** The serving census off the store — the EXACT batch-census shape
     * (pk, n_docs, n_sources, exemplar over classes with ≥ 2 docs), so

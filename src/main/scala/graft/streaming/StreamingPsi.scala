@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
 
@@ -33,12 +34,8 @@ import graft.operators.TextOps
   *    so store ≡ batch PSI bit-for-bit whenever the batch query would
   *    pick the same edges (spec-pinned).
   *
-  * Replay convergence (at-least-once foreachBatch): integer sums are
-  * not idempotent, so state rides the T15/T17 discipline — each batch
-  * reads the census of the latest batch_id STRICTLY BELOW its own and
-  * overwrites its own partition; a replayed batch re-reads the same
-  * predecessor and rewrites an identical partition (spec-pinned fixed
-  * point).
+  * Integer sums are not idempotent: replays converge only through
+  * [[BatchStore.fold]].
   *
   * State bound: ≤ sources × 10 census rows per batch partition
   * REGARDLESS of stream length — smaller than any sketch in the
@@ -61,34 +58,21 @@ object StreamingPsi {
   def referenceEdges(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.parquet(edgesDir(storeDir))
 
+  private val State =
+    StructType.fromDDL("source STRING, bucket BIGINT, n_b BIGINT")
+
   /** One micro-batch of (doc_id, text, source) rows. */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(TextOps.sourceBuckets(batch,
-        referenceEdges(spark, storeDir)))
-      .groupBy("source", "bucket").agg(sum("n_b").as("n_b"))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long, Long)].toDF("source", "bucket", "n_b")
-  }
-
-  /** The census of the latest batch strictly BEFORE `batchId` (empty
-    * when none) — the read that makes replays converge.
-    */
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("source", "bucket", "n_b"),
-      Some(batchId)).getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(TextOps.sourceBuckets(batch,
+          referenceEdges(spark, storeDir)))
+        .groupBy("source", "bucket").agg(sum("n_b").as("n_b"))
+    }
 
   /** The stored (source, bucket, n_b) census (latest batch). */
   def buckets(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("source", "bucket", "n_b"))
-      .getOrElse(emptyState(spark))
+    BatchStore.current(spark, storeDir, State)
 
   /** The serving read: per-source PSI against the fixed reference —
     * X51's own rollup over the accumulated census (same columns as

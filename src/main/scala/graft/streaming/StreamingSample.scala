@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
 
@@ -19,13 +20,8 @@ import graft.operators.TextOps
   * weighted reservoir algorithm — the batch query and the store are
   * the same estimator at two cadences.
   *
-  * Replay convergence (at-least-once foreachBatch): the T15/T17
-  * discipline — each batch reads the state of the latest batch_id
-  * STRICTLY BELOW its own and overwrites its own partition; a replayed
-  * batch re-reads the same predecessor and rewrites an identical
-  * partition (spec-pinned fixed point). Top-n union is idempotent
-  * (re-adding a row already in the reservoir changes nothing), so the
-  * discipline is belt-and-braces here, as in T18/T19.
+  * Top-n union is idempotent (re-adding a row already in the reservoir
+  * changes nothing), as in T18/T19.
   *
   * State bound: ≤ n sample rows per batch partition REGARDLESS of
   * stream length — the fixed-size by-mass sample a 100 TB pipeline
@@ -33,6 +29,9 @@ import graft.operators.TextOps
   * without ever re-scanning history.
   */
 object StreamingSample {
+
+  private val State = StructType.fromDDL(
+    "rank BIGINT, doc_id BIGINT, source STRING, toks BIGINT, key_micro BIGINT")
 
   /** One micro-batch of (doc_id, text, source) rows. The union is
     * deduplicated on doc_id before the top-n re-take: A-ES keys are
@@ -47,40 +46,21 @@ object StreamingSample {
     */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    storeDir: String, batchId: Long, n: Int): Unit = {
-    val merged = TextOps.aesTopN(
-      loadState(spark, storeDir, batchId)
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      TextOps.aesTopN(prev.drop("rank")
         .unionByName(TextOps.aesKeys(batch))
         .dropDuplicates("doc_id"), n)
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
+    }
     // the replay fixed point needs only the immediate predecessor
     BatchStore.pruneBefore(spark, storeDir, batchId - 1)
   }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, String, Long, Long)]
-      .toDF("doc_id", "source", "toks", "key_micro")
-  }
-
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir,
-      Seq("doc_id", "source", "toks", "key_micro"), Some(batchId))
-      .getOrElse(emptyState(spark))
 
   /** The serving read: the current reservoir, rank order — the same
     * (rank, doc_id, source, toks, key_micro) shape as the batch
     * sample.
     */
-  def sample(spark: SparkSession, storeDir: String): DataFrame = {
-    import spark.implicits._
-    BatchStore.latest(spark, storeDir,
-      Seq("rank", "doc_id", "source", "toks", "key_micro"))
-      .getOrElse(Seq.empty[(Long, Long, String, Long, Long)]
-        .toDF("rank", "doc_id", "source", "toks", "key_micro"))
-      .orderBy("rank")
-  }
+  def sample(spark: SparkSession, storeDir: String): DataFrame =
+    BatchStore.current(spark, storeDir, State).orderBy("rank")
 
   def start(spark: SparkSession, docs: DataFrame, storeDir: String,
             checkpointDir: String, n: Int): StreamingQuery =

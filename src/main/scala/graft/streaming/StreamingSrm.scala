@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.RelationalQueries
 
@@ -25,13 +26,6 @@ import graft.operators.RelationalQueries
   * statistics stage ([[RelationalQueries.srmFromUsers]] — shared
   * code), so store ≡ batch BIT-FOR-BIT unconditionally (spec-pinned).
   *
-  * Replay convergence (at-least-once foreachBatch): the T15/T17/T22
-  * discipline — each batch reads the state of the latest batch_id
-  * STRICTLY BELOW its own and overwrites its own partition; a replayed
-  * batch re-reads the same predecessor and (distinct union being
-  * idempotent) rewrites an identical partition (spec-pinned fixed
-  * point).
-  *
   * State bound: the exposure relation is distinct-users ×
   * their event types — the same cardinality every experiment
   * platform's assignment table carries (exposure logging IS this
@@ -47,37 +41,22 @@ import graft.operators.RelationalQueries
   */
 object StreamingSrm {
 
+  private val State = StructType.fromDDL("event_type STRING, user_id BIGINT")
+
   /** One micro-batch of events-shaped rows (event_type, user_id). */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(batch.select(col("event_type"), col("user_id"))
-        .distinct())
-      .distinct()
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long)].toDF("event_type", "user_id")
-  }
-
-  /** The exposure relation of the latest batch strictly BEFORE
-    * `batchId` (empty when none) — the read that makes replays
-    * converge.
-    */
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("event_type", "user_id"),
-      Some(batchId)).getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(batch.select(col("event_type"), col("user_id"))
+          .distinct())
+        .distinct()
+    }
 
   /** The stored distinct (event_type, user_id) exposure relation
     * (latest batch).
     */
   def users(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("event_type", "user_id"))
-      .getOrElse(emptyState(spark))
+    BatchStore.current(spark, storeDir, State)
 
   /** The serving read: the SRM check over the accumulated exposure
     * relation — R66's own rollup (same columns as q_srm: event_type,

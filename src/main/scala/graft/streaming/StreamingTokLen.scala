@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
 
@@ -22,39 +23,28 @@ import graft.operators.TextOps
   * BIT-IDENTICAL to the batch census over the concatenated stream
   * (spec-pinned).
   *
-  * Replay convergence (at-least-once foreachBatch): sums are not
-  * idempotent, so state rides the T15/T17/T23 read-predecessor /
-  * overwrite-own discipline (fixed point spec-pinned).
+  * Sums are not idempotent: replays converge only through
+  * [[BatchStore.fold]].
   *
   * State bound: one row per (source, distinct token length) —
   * ≤ sources × max-token-length rows regardless of stream length.
   */
 object StreamingTokLen {
 
+  private val State =
+    StructType.fromDDL("source STRING, len BIGINT, cnt BIGINT")
+
   /** One micro-batch of documents-shaped rows. */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
-    val merged = loadState(spark, storeDir, batchId)
-      .unionByName(TextOps.tokenLenPartial(batch))
-      .groupBy("source", "len").agg(sum("cnt").as("cnt"))
-    merged.write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
-
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long, Long)].toDF("source", "len", "cnt")
-  }
-
-  private def loadState(spark: SparkSession, storeDir: String,
-                        batchId: Long): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("source", "len", "cnt"),
-      Some(batchId)).getOrElse(emptyState(spark))
+                   storeDir: String, batchId: Long): Unit =
+    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+      prev.unionByName(TextOps.tokenLenPartial(batch))
+        .groupBy("source", "len").agg(sum("cnt").as("cnt"))
+    }
 
   /** Current census state (latest batch partition). */
   def state(spark: SparkSession, storeDir: String): DataFrame =
-    BatchStore.latest(spark, storeDir, Seq("source", "len", "cnt"))
-      .getOrElse(emptyState(spark))
+    BatchStore.current(spark, storeDir, State)
 
   /** The serving census off the store — the EXACT batch shape via the
     * shared statistics stage, so store ≡ [[TextOps.tokenLenCensus]]

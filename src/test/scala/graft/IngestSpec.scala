@@ -4,6 +4,8 @@ import java.io.PrintWriter
 import java.net.ServerSocket
 import java.nio.file.Files
 
+import org.apache.spark.sql.streaming.StreamingQueryException
+
 import graft.sources.Sbs1
 import graft.streaming.Ingest
 
@@ -105,6 +107,20 @@ class IngestSpec extends SparkSpec {
     }
   }
 
+  test("an unusable port fails the query instead of leaving a dead feed") {
+    // `new Socket` rejects port 70000 with IllegalArgumentException, not an
+    // IOException: the reader thread must still fail the query
+    val sink = Files.createTempDirectory("graft-sink-dead").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-dead").toString
+    val q = Ingest.start(spark, Ingest.Config(host = "localhost",
+      port = 70000, sinkDir = sink, checkpointDir = ckpt))
+    try {
+      val e = intercept[StreamingQueryException](q.awaitTermination(30000))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[IllegalArgumentException]), e.toString)
+    } finally q.stop()
+  }
+
   /** At 100 TB the default in-memory state store is the first thing to
     * fall over; the dedup pipeline must run unchanged on the RocksDB
     * provider (spill-to-disk state, the production choice).
@@ -117,7 +133,7 @@ class IngestSpec extends SparkSpec {
     val parsed = sources.Sbs1.parse(ms.toDF())
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-bstore-ckpt").toString
-    val q = streaming.Ingest.deduped(parsed, "10 minutes")
+    val q = streaming.Ingest.deduped(parsed)
       .writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -154,7 +170,7 @@ class IngestSpec extends SparkSpec {
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[String](spark)
     val parsed = sources.Sbs1.parse(ms.toDF())
-    val q = streaming.Ingest.deduped(parsed, "10 minutes")
+    val q = streaming.Ingest.deduped(parsed)
       .writeStream.format("memory").queryName("rocksdb_dedup")
       .outputMode("append").start()
     try {

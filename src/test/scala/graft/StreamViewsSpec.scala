@@ -234,7 +234,13 @@ class StreamViewsSpec extends SparkSpec {
         q.processAllAvailable()
         ms.addData((posLine("BBB222"), Timestamp.valueOf("2024-01-01 10:01:00")))
         q.processAllAvailable()
-        val sum = mon.summaries.find(_.name == "monitored_q")
+        // progress events reach the listener on Spark's asynchronous
+        // listener bus, possibly after processAllAvailable returns
+        def monitored = mon.summaries.find(_.name == "monitored_q")
+        val deadline = System.currentTimeMillis() + 30000
+        while (!monitored.exists(_.totalRows >= 2L) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(50)
+        val sum = monitored
         assert(sum.isDefined, s"got ${mon.summaries}")
         assert(sum.get.totalRows === 2L)
         assert(sum.get.batches >= 2L)

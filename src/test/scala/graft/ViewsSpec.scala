@@ -101,12 +101,16 @@ class ViewsSpec extends SparkSpec {
         "SELECT DISTINCT callsign FROM flights WHERE hex_ident = 'AAA'")
         .collect().map(_.getString(0)).toSeq
       assert(out === Seq("FDX1"))
-      // view output ≡ the DataFrame formulation on the same data
-      val viaSql = s2.sql("SELECT * FROM flights").collect()
-        .map(_.toSeq.toString).sorted
-      val viaDf = Views.flights(spark.table("adsb_messages_t")).collect()
-        .map(_.toSeq.toString).sorted
-      assert(viaSql.toSeq === viaDf.toSeq)
+      // each view's output ≡ the DataFrame formulation on the same data
+      val fact = spark.table("adsb_messages_t")
+      Seq("callsigns" -> Views.callsigns(fact),
+          "locations" -> Views.locations(fact),
+          "flights" -> Views.flights(fact)).foreach { case (view, viaDf) =>
+        val viaSql = s2.sql(s"SELECT * FROM $view")
+        assert(viaSql.columns.toSeq === viaDf.columns.toSeq, view)
+        assert(viaSql.collect().map(_.toSeq.toString).sorted.toSeq ===
+          viaDf.collect().map(_.toSeq.toString).sorted.toSeq, view)
+      }
     } finally {
       spark.sql("DROP VIEW IF EXISTS flights")
       spark.sql("DROP VIEW IF EXISTS locations")

@@ -19,30 +19,19 @@ object Bench {
     // actually producing the query's output.
     def run(fn: Query): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // Session hygiene between measurements. `clearCache()` drops
-    // DataFrame cache entries but NOT the RDD blocks pinned by
-    // `localCheckpoint` inside iterative operators (BPE's merge loop,
-    // distributed connected components): across a single-JVM run those
-    // blocks accumulate, squeeze the unified memory region, and push
-    // later shuffle-heavy queries into spill. Unpersisting via the
-    // context's persistent-RDD registry returns the storage memory after
-    // every measurement, so each query starts from the same clean
-    // session.
-    def clean(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
-    def timed(name: String, fn: Query): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok = try { run(fn); true } catch { case NonFatal(e) =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        false
+    // Each pass is one query scope: what the query pinned is released
+    // after the clock stops, so every query starts from the same clean
+    // session and the release is never timed.
+    def timed(name: String, fn: Query): Option[Double] =
+      graft.operators.Materialize.scoped {
+        val t0 = System.nanoTime()
+        val ok = try { run(fn); true } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
+        val dt = (System.nanoTime() - t0) / 1e9
+        if (ok) Some(dt) else None
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      clean()
-      if (ok) Some(dt) else None
-    }
     // min of two measured passes per query: the container shares its
     // host, and hypervisor-level contention (invisible from inside the
     // VM) has been observed to inflate whole runs ~2×; the minimum of

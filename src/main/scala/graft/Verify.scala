@@ -1,9 +1,35 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`scripts/check_oracle.py`).
+  * Exits non-zero when any query fails.
+  */
 object Verify {
+
+  /** Write each query's result to `outDir/<name>`, in sorted order, each
+    * as one query scope. A query's old output is deleted before it runs,
+    * so a query that throws leaves no parquet for the compare to grade.
+    * Returns the names of the queries that threw.
+    */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, Bench.Query]): Seq[String] =
+    queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val out = new Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(out, true)
+      try {
+        operators.Materialize.scoped(fn(spark, sfDir).coalesce(1)
+          .write.mode("overwrite").parquet(out.toString))
+        None
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -16,15 +42,7 @@ object Verify {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    selected(SparkEntry.queries).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // operator-scoped caches must not leak into the next query
-      spark.catalog.clearCache()
-    }
+    val failed = dump(spark, sfDir, outDir, selected(SparkEntry.queries))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -41,5 +59,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.length} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

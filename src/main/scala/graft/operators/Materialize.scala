@@ -1,39 +1,95 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 
-/** Eager materialization for intra-query shared relations.
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** The one module that pins and unpins shared relations.
   *
-  * A `.cache()`d relation with several downstream consumers is lazy:
-  * when the scheduler submits independent consumer stages concurrently,
-  * each cache-miss recomputes the shared subtree (the cache fills per
-  * partition, racily — the round-16 stage profile showed the winnow
-  * kernel and the md5 shingle pass re-running in up to six concurrent
-  * stages of one query), and every consumer re-carries the full logical
-  * subtree through analysis/optimization. `localCheckpoint(eager=true)`
-  * materializes the relation exactly once, up front, and replaces the
-  * subtree with the materialized rows: measured 4-5x on the dedup audit
-  * family at sf0.1 (OPTIMIZATION_r16.md §shared-relations).
+  * Two forms of pin:
+  *  - [[shared]]: an eager `localCheckpoint`. The relation is computed
+  *    exactly once, up front, and every consumer reads the materialized
+  *    rows instead of re-carrying (and, under concurrent consumer stages,
+  *    racily re-running) the shared subtree. Its blocks live in the
+  *    context's persistent RDDs. Lineage is truncated, so losing an
+  *    executor fails the query instead of recomputing; every site pins a
+  *    candidate- or census-bounded intermediate. A pinned plan does not
+  *    change when a table it read is written, which is why an admission
+  *    decision pins this way before its store appends.
+  *  - [[cached]]: a lazy, `CacheManager`-registered `cache()`. It fills
+  *    on first use and keeps its lineage, so a released relation
+  *    recomputes instead of failing. Use it where a site has a measured
+  *    or correctness reason for a lazy pin. The entry is keyed by plan,
+  *    so pinning an already-pinned plan is a no-op (the re-pin of a
+  *    session-memoized relation), and a write to a catalog table the
+  *    plan reads makes Spark re-evaluate it.
   *
-  * Trade-off (deliberate, documented): localCheckpoint truncates
-  * lineage, so losing an executor mid-query fails the query instead of
-  * recomputing the lost partitions — acceptable for bounded intra-query
-  * intermediates (every site here is candidate- or census-bounded); a
-  * deployment wanting lineage-free fault tolerance for a multi-hour
-  * query swaps in reliable `checkpoint()` to cluster storage — one
-  * word, same plan shape. Storage level is MEMORY_AND_DISK, the same
-  * class as the `.cache()` it replaces, and the blocks are dropped by
-  * the same session hygiene (`getPersistentRDDs ... unpersist`) the
-  * bench already runs between measurements.
+  * One lifetime rule: a pin lasts until the end of the enclosing
+  * [[scoped]] block and is released there. There are two such
+  * boundaries: one query run in `Bench`/`Verify`, and one micro-batch in
+  * `graft.streaming.MicroBatches.start`. Release happens only at those
+  * boundaries, so a function may return a pinned frame to its caller.
+  * A scope releases only the pins made under it, on its own thread or
+  * on the [[concurrently]] pool threads it spawned; a pin made outside
+  * any scope (an operator called directly) is not recorded, so nothing
+  * holds it strongly and the `ContextCleaner` reclaims it as before.
   */
 object Materialize {
-  def shared(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+  def shared(df: DataFrame): DataFrame = {
+    val pinned = df.localCheckpoint(eager = true)
+    val rdd = pinned.asInstanceOf[classic.Dataset[_]].queryExecution
+      .logical.asInstanceOf[LogicalRDD].rdd
+    record(() => rdd.unpersist(blocking = true))
+    pinned
+  }
+
+  def cached(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.cache()
+      record(() => df.unpersist(blocking = true))
+    }
+    df
+  }
+
+  /** Run `body` as one scope and release every pin it made, after
+    * `body` returns or throws. Scopes nest; the inner one releases only
+    * its own pins.
+    */
+  def scoped[A](body: => A): A = {
+    val id = ids.incrementAndGet()
+    val outer = scope.get
+    open.put(id, new ConcurrentLinkedQueue[() => Unit]())
+    scope.set(Some(id))
+    try body
+    finally {
+      scope.set(outer)
+      open.remove(id).forEach(release => release())
+    }
+  }
+
+  // The scope id is inherited by every thread the scope's thread starts,
+  // the [[concurrently]] pool included; a thread that outlives its scope
+  // finds the id closed and pins unscoped.
+  private val scope = new InheritableThreadLocal[Option[Long]] {
+    override def initialValue(): Option[Long] = None
+  }
+  private val open =
+    new ConcurrentHashMap[Long, ConcurrentLinkedQueue[() => Unit]]()
+  private val ids = new AtomicLong()
+
+  // A pin recorded while its scope is releasing is either released or
+  // left unreferenced, i.e. unscoped.
+  private def record(release: () => Unit): Unit =
+    scope.get.flatMap(id => Option(open.get(id))).foreach(_.add(release))
 
   /** Pin an explosion-prone equi-join input at session parallelism on
     * the join key. AQE's partition coalescing is BYTE-based: it sees
     * the tiny pre-join shuffle bytes, not the quadratic join fan-out
-    * behind them, and collapses the join stage to 1-3 tasks (measured
-    * r16: contaminationFrom's overlap join ran 5.9 CPU-seconds on 3
+    * behind them, and collapses the join stage to 1-3 tasks (measured:
+    * contaminationFrom's overlap join ran 5.9 CPU-seconds on 3
     * tasks at sf0.1 — the whole query serialized on one explosion
     * stage). A repartition with an EXPLICIT partition count is exempt
     * from AQE coalescing, so the fan-out keeps at least one task per

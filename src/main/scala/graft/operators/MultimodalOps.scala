@@ -570,7 +570,7 @@ object MultimodalOps {
     val perWin = fr.select(col("doc_id"), col("window_idx"),
       col("n_samples"),
       (col("sum_abs") < lit(LowMeanAbs) * col("n_samples")).as("is_low"))
-      .cache()
+      .transform(Materialize.cached)
     val agg = perWin.groupBy("doc_id").agg(
       count(lit(1)).as("n_windows"),
       sum("n_samples").as("n_samples"),
@@ -1238,7 +1238,7 @@ object MultimodalOps {
     val cls = hashes
       .groupBy("dhash")
       .agg(count(lit(1)).as("n"), min("doc_id").as("exemplar"))
-      .cache()
+      .transform(Materialize.cached)
     val near = Banding.bandedCandidates(cls, "dhash",
         (0 until 4).map(k =>
           shiftright(col("dhash"), 7 * k).bitwiseAND(lit(127L))),
@@ -1279,7 +1279,7 @@ object MultimodalOps {
         col("byte_len"))
       .groupBy("format", "sha")
       .agg(count(lit(1)).as("c"), max("byte_len").as("len"))
-      .cache()
+      .transform(Materialize.cached)
     def census(g: RelationalGroupedDataset) = g.agg(
       sum("c").as("n_blobs"),
       count(lit(1)).as("n_distinct_blobs"),

@@ -31,10 +31,14 @@ object MultimodalQueries {
     // own call sites below.
     Tables.documents(spark, dir)
 
-  /** The JPEG decode queries ARE kernel-bound (full entropy decode +
-    * IDCT per blob: r16 stage profile 1.6 CPU-s on one task; r17
-    * paired family window: parallelized 1.9x on q_jpeg_decode, 1.3x on
-    * q_jpeg_phash) — the one place the extra exchange provably pays.
+  /** The codec decode queries ARE kernel-bound, the one place the extra
+    * exchange provably pays. JPEG (full entropy decode + IDCT per blob;
+    * one task ran 1.6 CPU-s unparallelized): paired family window,
+    * parallelized 1.9x on q_jpeg_decode, 1.3x on q_jpeg_phash. PNG
+    * (inflate + unfilter per blob): q_png_decode at sf0.1 on 4 cores, 10
+    * alternating pairs in one session, median wall 0.54 s vs 0.69 s
+    * without (faster in 10 of 10) for 0.50 vs 0.41 executor CPU-s;
+    * fresh-JVM Bench runs (warm-up + min of 2) split 2-2 over 4 pairs.
     */
   private def docsForCodec(spark: SparkSession, dir: String): DataFrame =
     TextOps.parallelized(Tables.documents(spark, dir))

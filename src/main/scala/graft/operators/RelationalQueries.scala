@@ -1660,7 +1660,7 @@ object RelationalQueries {
     // probe) — one corpus scan + one partial-agg Exchange total
     val cen = ev.withColumn("v_int", floor(col("value")))
       .groupBy("event_type", "v_int").agg(count(lit(1)).as("cnt"))
-      .cache()
+      .transform(Materialize.cached)
     val cum = cen.withColumn("cum",
       sum("cnt").over(Window.partitionBy("event_type").orderBy("v_int")))
     val n = cen.groupBy("event_type").agg(sum("cnt").as("n"))
@@ -1921,7 +1921,7 @@ object RelationalQueries {
       .orderBy(col("ts").desc, col("event_id").desc)
     val daily = e2.withColumn("rn", row_number().over(wd))
       .filter(col("rn") === 1).select("user_id", "day", "cents")
-      .cache()
+      .transform(Materialize.cached)
     val span = e2.agg(min("day").as("d0"), max("day").as("d1"))
     val days = span
       .select(explode(sequence(col("d0"), col("d1"))).as("day"))
@@ -3848,7 +3848,7 @@ object RelationalQueries {
       .groupBy("bucket_lo_micro")
       .agg(count(lit(1)).as("n_users"), sum("t").as("n_events"),
         max("fano_micro").as("bucket_max"))
-      .localCheckpoint() // bucket-cardinality rows; two consumers
+      .transform(Materialize.shared) // bucket-cardinality rows; two consumers
     val tot = census.agg(sum("n_users").as("n_users_total"),
       max("bucket_max").as("fano_max_micro"))
     census
@@ -3923,7 +3923,8 @@ object RelationalQueries {
   def hillCensus(ev: DataFrame, kMax: Long): DataFrame = {
     // the user census feeds two consumers (the total and the top cut)
     // — cache the reduced relation so events are scanned once
-    val per = ev.groupBy("user_id").agg(count(lit(1)).as("x")).cache()
+    val per = ev.groupBy("user_id").agg(count(lit(1)).as("x"))
+      .transform(Materialize.cached)
     val nt = per.agg(count(lit(1)).as("n_users"))
     // the top-(kMax+1) cut is a bounded TakeOrdered (kMax is static),
     // NOT a global-sort window over the whole user relation; the rank
@@ -3934,7 +3935,7 @@ object RelationalQueries {
       .select(col("x"), row_number().over(w).cast("long").as("rn"))
       .crossJoin(broadcast(nt))
       .withColumn("k", least(lit(kMax), col("n_users") - 1L))
-      .localCheckpoint()
+      .transform(Materialize.shared)
     val thr = rk.filter(col("rn") === col("k") + 1L)
       .select(col("x").as("xk1"), col("k"), col("n_users"))
     val sums = rk.filter(col("rn") <= col("k"))

@@ -190,7 +190,7 @@ object SimilarityOps {
     val b = mv.select(col("vec_id"), col("i").as("j"), col("v").as("w"))
     val c = mv.join(b, Seq("vec_id"))
       .groupBy("i", "j").agg(sum(col("v") * col("w")).as("c"))
-      .localCheckpoint()
+      .transform(Materialize.shared)
     var x = c.select(col("i")).distinct()
       .select(col("i"), lit(1000L).as("x"))
     (1 to rounds).foreach { _ =>
@@ -201,7 +201,7 @@ object SimilarityOps {
         .select(col("i"),
           expr("CASE WHEN y < 0 THEN -((abs(y) * 1000) div m)" +
             " ELSE (abs(y) * 1000) div m END").cast("long").as("x"))
-        .localCheckpoint()
+        .transform(Materialize.shared)
     }
     x.select(col("i").as("dim"), col("x"))
   }
@@ -472,24 +472,11 @@ object SimilarityOps {
     */
   def kmeansCodebook(emb: DataFrame, nCentroids: Int,
                      rounds: Int): Array[Array[Long]] = {
-    val vm = emb.select(col("vec_id"), col("embedding"),
-        milliVec(col("embedding")).as("vm"))
-      .cache()
-    try kmeansCodebookOn(vm, nCentroids, rounds)
-    finally vm.unpersist()
-  }
-
-  /** [[kmeansCodebook]]'s training loop over an ALREADY-MATERIALIZED
-    * `(vec_id, embedding, vm)` relation — no cache()/unpersist() of its
-    * own. This is the trainer concurrent sweeps must use: Spark's
-    * CacheManager keys entries by canonicalized logical plan, so two
-    * threads training DIFFERENT codebook sizes over the SAME slice plan
-    * would share one cache entry and the first to finish would
-    * unpersist it out from under the others mid-k-means (the round-16
-    * ADVICE race). The caller owns materialization and its lifetime.
-    */
-  def kmeansCodebookOn(vm: DataFrame, nCentroids: Int,
-                       rounds: Int): Array[Array[Long]] = {
+    // eager, not cache(): concurrent callers (PQ subspaces, recall-curve
+    // budgets) train over identical slice plans, and a plan-keyed cache
+    // entry would be shared between them
+    val vm = Materialize.shared(emb.select(col("vec_id"), col("embedding"),
+        milliVec(col("embedding")).as("vm")))
     val seedRows = vm
       .withColumn("h", graft.functions.Hashing.md5Long(
         concat(lit("km:"), col("vec_id").cast("string"))))
@@ -594,7 +581,7 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("cluster"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .cache()
+      .transform(Materialize.cached)
     // probe ranking per query: Q × nCentroids, same integer score math
     // as assignment — one bounded collect of the query embeddings
     val qvm = emb.filter(col("vec_id") < queryMax)
@@ -679,7 +666,7 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("cluster"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .cache()
+      .transform(Materialize.cached)
     // bounded driver state: sampleQ ids, then sampleQ query embeddings
     val qset = qids.collect().map(_.getLong(0)).toSeq
     val qvm = emb.filter(col("vec_id").isin(qset: _*))
@@ -761,7 +748,7 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("cluster"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .cache()
+      .transform(Materialize.cached)
     val qvm = emb.filter(col("vec_id") < queryMax)
       .select(col("vec_id"), milliVec(col("embedding")).as("vm"))
       .collect()
@@ -783,7 +770,7 @@ object SimilarityOps {
     val cand = scored.join(broadcast(prank), Seq("query_id", "cluster"))
       .crossJoin(broadcast(np))
       .filter(col("prank") <= col("nprobe"))
-      .cache()
+      .transform(Materialize.cached)
     val visited = cand.groupBy("query_id", "nprobe")
       .agg(count(lit(1)).as("visited"))
     val truth = topk(scored, Seq("query_id"))
@@ -793,9 +780,8 @@ object SimilarityOps {
       .groupBy("query_id", "nprobe").agg(count(lit(1)).as("hits"))
     val nCorpus = emb.agg(count(lit(1)).as("n_corpus"))
     // The curve is bounded (queries × nProbes rows): materialize it
-    // eagerly so BOTH corpus-sized caches (scored, cand) can be
-    // released HERE instead of accumulating executor storage across a
-    // bench run — the pqServe resid.unpersist() discipline.
+    // eagerly, so the returned plan reads only the curve and not the
+    // corpus-sized pins (scored, cand).
     val curve = queries.select("query_id").crossJoin(broadcast(np))
       .join(visited, Seq("query_id", "nprobe"), "left")
       .join(hits, Seq("query_id", "nprobe"), "left")
@@ -806,9 +792,7 @@ object SimilarityOps {
         expr("(1000000 * visited) div (n_corpus - 1)")
           .as("visited_ppm"),
         col("hits"), micro(col("hits") / lit(k)).as("recall_micro"))
-      .localCheckpoint(eager = true)
-    cand.unpersist()
-    scored.unpersist()
+      .transform(Materialize.shared)
     curve
   }
 
@@ -1028,7 +1012,7 @@ object SimilarityOps {
   def kmeansCodebookMilli(vmDf: DataFrame, nCentroids: Int,
                           rounds: Int): Array[Array[Long]] = {
     import graft.functions.KmeansAssignMilli.kmeansAssignMilli
-    val vm = vmDf.cache()
+    val vm = vmDf.transform(Materialize.cached)
     val seedRows = vm
       .withColumn("h", graft.functions.Hashing.md5Long(
         concat(lit("km:"), col("vec_id").cast("string"))))
@@ -1052,7 +1036,6 @@ object SimilarityOps {
       cents = next
       r += 1
     }
-    vm.unpersist()
     cents
   }
 
@@ -1096,10 +1079,9 @@ object SimilarityOps {
       .withColumn("rm", zip_with(col("vm"),
         element_at(centsLit, col("cluster").cast("int") + 1),
         (a, b) => a - b))
-      .cache()
-    // materialize the cache BEFORE the concurrent subspace trainings:
-    // a lazy cache would race and rebuild resid once per thread
-    resid.count()
+      // eager BEFORE the concurrent subspace trainings: a lazy cache
+      // would race and rebuild resid once per thread
+      .transform(Materialize.shared)
     val books = Materialize.concurrently(0 until nSub) { j =>
       kmeansCodebookMilli(
         resid.select(col("vec_id"),
@@ -1121,19 +1103,12 @@ object SimilarityOps {
         pqAdcColumn(pqLuts(rq, books, subLen)))
     }.reduce(coalesce(_, _))
     // materialize the probed-row codes eagerly (they are tiny — id,
-    // cluster, nSub codes) so resid's corpus-sized cache can be released
-    // HERE instead of leaking into the session until LRU eviction; the
-    // returned plan reads only the checkpointed codes relation (Bench's
-    // persistent-RDD sweep reclaims the checkpoint blocks per query, the
-    // bpeTrainLoop precedent). `eager = true` only spells out the no-arg
-    // default, but eager materialization itself is load-bearing: the
-    // codes must materialize from resid's cache BEFORE resid.unpersist()
-    // below, or the corpus-sized resid would silently recompute uncached.
+    // cluster, nSub codes): the returned plan reads only the codes, not
+    // the corpus-sized resid
     val probedCodes = resid.filter(col("vec_id") =!= queryId)
       .filter(col("cluster").isin(probed.map(_.toLong): _*))
       .select(col("vec_id") +: col("cluster") +: codes: _*)
-      .localCheckpoint(eager = true)
-    resid.unpersist()
+      .transform(Materialize.shared)
     probedCodes
       .withColumn("adc", adc)
       .select("vec_id", "cluster", "adc")
@@ -1290,24 +1265,12 @@ object SimilarityOps {
   def pqRecallCurve(emb: DataFrame, nCentsList: Seq[Int], nSub: Int,
                     subLen: Int, queryMax: Long, k: Int): DataFrame = {
     // ONE materialized copy of the vectors feeds everything: the truth
-    // pass, every training job, the encodes and the query collects.
-    // Budget points used to call pqCodebooks -> kmeansCodebook, whose
-    // internal cache() is plan-keyed — concurrent budgets trained over
-    // the IDENTICAL per-subspace slice plan shared one CacheManager
-    // entry, and the first budget to finish unpersisted it out from
-    // under the rest mid-k-means (round-16 ADVICE race). Training on
-    // projections of an eager localCheckpoint has no cache entry to
-    // race on, and the vectors are scanned from parquet exactly once.
+    // pass, every training job, the encodes and the query collects, so
+    // the vectors are scanned from parquet exactly once.
     val embM = Materialize.shared(emb.select(col("vec_id"),
       col("embedding")))
-    def subVm(j: Int): DataFrame = embM
-      .select(col("vec_id"),
-        slice(col("embedding"), j * subLen + 1, subLen).as("embedding"))
-      .select(col("vec_id"), col("embedding"),
-        milliVec(col("embedding")).as("vm"))
     // eagerly materialized: the budget points consume it CONCURRENTLY
-    // — a lazy cache would race and recompute the truth scan per
-    // thread (Materialize.shared)
+    // — a lazy cache would race and recompute the truth scan per thread
     val truth = pqTruth(embM, queryMax, k).transform(Materialize.shared)
     val queries = embM.filter(col("vec_id") < queryMax)
       .select(col("vec_id").as("query_id"))
@@ -1317,7 +1280,9 @@ object SimilarityOps {
       yield (nc, j)
     val trained = trainings.zip(
       Materialize.concurrently(trainings) { case (nc, j) =>
-        kmeansCodebookOn(subVm(j), nc, KmRounds)
+        kmeansCodebook(embM.select(col("vec_id"),
+          slice(col("embedding"), j * subLen + 1, subLen).as("embedding")),
+          nc, KmRounds)
       }).toMap
     // the remaining per-budget work (query collect + lazy plan build)
     // still overlaps the tail of other budgets' jobs
@@ -1582,7 +1547,7 @@ object SimilarityOps {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= kNN)
       .select(col("d1"), col("d2"))
-      .cache()
+      .transform(Materialize.cached)
     val rec = edges
       .join(edges.select(col("d2").as("d1"), col("d1").as("d2")),
         Seq("d1", "d2"))
@@ -1659,7 +1624,7 @@ object SimilarityOps {
       .filter(col("rk") <= kNN)
       .select(col("d1"),
         greatest(lit(1000000L) - col("cos_micro"), lit(1L)).as("dis"))
-      .cache()
+      .transform(Materialize.cached)
     val prof = edges.groupBy("d1")
       .agg(count(lit(1)).as("k_x"), max("dis").as("dk"))
     val lid = edges.join(prof, Seq("d1"))
@@ -1735,7 +1700,7 @@ object SimilarityOps {
                queryMax: Long, m: Int, beamW: Int, rounds: Int, k: Int,
                nSeeds: Int): DataFrame =
     graphAnnFrom(embs,
-      knnGraphEdges(embs, cents, m).localCheckpoint(),
+      knnGraphEdges(embs, cents, m).transform(Materialize.shared),
       queryMax, beamW, rounds, k, nSeeds)
 
   /** The (vec_id, c1, c2, embedding) relation edge construction reads
@@ -1807,7 +1772,7 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .localCheckpoint()
+      .transform(Materialize.shared)
     val seeds = embs.select(col("vec_id"))
       .withColumn("h", graft.functions.Hashing.md5Long(
         concat(lit("km:"), col("vec_id").cast("string"))))
@@ -1827,7 +1792,8 @@ object SimilarityOps {
         .select(col("b.query_id").as("query_id"),
           col("g.d2").as("vec_id"))
         .filter(col("vec_id") =!= col("query_id"))
-      visited = visited.union(frontier).distinct().localCheckpoint()
+      visited = visited.union(frontier).distinct()
+        .transform(Materialize.shared)
       beam = visited.join(qscore, Seq("query_id", "vec_id"))
         .withColumn("rn", row_number().over(wQ))
         .filter(col("rn") <= beamW)
@@ -1872,7 +1838,7 @@ object SimilarityOps {
                     queryMax: Long, m: Int, beams: Seq[Int],
                     rounds: Int, k: Int, nSeeds: Int): DataFrame =
     graphAnnSweepFrom(embs,
-      knnGraphEdges(embs, cents, m).localCheckpoint(),
+      knnGraphEdges(embs, cents, m).transform(Materialize.shared),
       queryMax, beams, rounds, k, nSeeds)
 
   /** V46 beam sweep over a PREBUILT edge relation — the store-backed
@@ -1888,7 +1854,7 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .localCheckpoint()
+      .transform(Materialize.shared)
     val seeds = embs.select(col("vec_id"))
       .withColumn("h", graft.functions.Hashing.md5Long(
         concat(lit("km:"), col("vec_id").cast("string"))))
@@ -1900,10 +1866,10 @@ object SimilarityOps {
       .withColumn("rn", row_number().over(wQ))
       .filter(col("rn") === 1)
       .select("query_id", "vec_id")
-      .localCheckpoint()
+      .transform(Materialize.shared)
     val truth = qscore.withColumn("rn", row_number().over(wQ))
       .filter(col("rn") <= k).select("query_id", "vec_id")
-      .localCheckpoint()
+      .transform(Materialize.shared)
     // beam widths are independent over the same checkpointed inputs —
     // overlap their round-checkpoint chains (§2.6)
     val perBeam = Materialize.concurrently(beams) { bw =>
@@ -1915,7 +1881,8 @@ object SimilarityOps {
           .select(col("b.query_id").as("query_id"),
             col("g.d2").as("vec_id"))
           .filter(col("vec_id") =!= col("query_id"))
-        visited = visited.union(frontier).distinct().localCheckpoint()
+        visited = visited.union(frontier).distinct()
+        .transform(Materialize.shared)
         beam = visited.join(qscore, Seq("query_id", "vec_id"))
           .withColumn("rn", row_number().over(wQ))
           .filter(col("rn") <= bw)
@@ -2516,7 +2483,7 @@ object SimilarityOps {
         micro(cosineSim(col("e1"), col("e2"))).as("cos_micro"))
       .filter(col("cos_micro") >= epsCosMin)
       .select("d1", "d2")
-      .localCheckpoint()
+      .transform(Materialize.shared)
     val deg = pairs.select(col("d1").as("v"), col("d2").as("u"))
       .unionAll(pairs.select(col("d2").as("v"), col("d1").as("u")))
     val degCount = deg.groupBy("v").agg(count(lit(1)).as("n_neighbors"))
@@ -2682,7 +2649,8 @@ object SimilarityOps {
       .select(col("query_id"), col("vec_id"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"),
         micro(cosineSim(col("codes"), col("qc"))).as("sq_micro"))
-      .cache() // two consumers: the SQ ranking and the exact truth
+      // two consumers: the SQ ranking and the exact truth
+      .transform(Materialize.cached)
     def topk(order: Column) = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id")).orderBy(order, col("vec_id"))
@@ -2737,18 +2705,18 @@ object SimilarityOps {
       .select(col("vec_id"), col("embedding"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cosq"))
       .orderBy(col("cosq").desc, col("vec_id")).limit(poolK)
-      .cache()
+      .transform(Materialize.cached)
     val sims = pool.select(col("vec_id").as("u"), col("embedding").as("eu"))
       .join(pool.select(col("vec_id").as("v"), col("embedding").as("ev")),
         col("u") =!= col("v"))
       .select(col("u"), col("v"),
         micro(cosineSim(col("eu"), col("ev"))).as("s"))
-      .cache()
+      .transform(Materialize.cached)
     var selected = pool
       .orderBy(col("cosq").desc, col("vec_id")).limit(1)
       .select(col("vec_id"), lit(1L).as("rank"), col("cosq"),
         lit(0L).as("msim"), col("cosq").as("score_micro"))
-      .localCheckpoint()
+      .transform(Materialize.shared)
     (2 to k).foreach { t =>
       val selIds = selected.select("vec_id")
       val msim = sims
@@ -2759,7 +2727,7 @@ object SimilarityOps {
         .select(col("vec_id"), lit(t.toLong).as("rank"), col("cosq"),
           col("msim"), (col("cosq") - col("msim")).as("score_micro"))
         .orderBy(col("score_micro").desc, col("vec_id")).limit(1)
-      selected = selected.unionByName(pick).localCheckpoint()
+      selected = selected.unionByName(pick).transform(Materialize.shared)
     }
     selected
   }
@@ -2895,7 +2863,8 @@ object SimilarityOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("label"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .cache() // two consumers: pre-filter truth + unfiltered ranking
+      // two consumers: pre-filter truth + unfiltered ranking
+      .transform(Materialize.cached)
     def topk(df: DataFrame) = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id"))
@@ -2947,7 +2916,8 @@ object SimilarityOps {
       .select(col("query_id"), col("q_label"), col("vec_id"),
         col("label"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .cache() // two consumers: best-relevant and the rank count
+      // two consumers: best-relevant and the rank count
+      .transform(Materialize.cached)
     val best = scored.filter(col("label") === col("q_label"))
       .groupBy("query_id")
       .agg(max(struct(col("cos_micro"), (-col("vec_id")).as("nv")))
@@ -3007,7 +2977,8 @@ object SimilarityOps {
     val topk = scored.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)
       .select("query_id", "vec_id", "dim")
-      .cache() // truth (full dim) joins against every truncation
+      // truth (full dim) joins against every truncation
+      .transform(Materialize.cached)
     val truth = topk.filter(col("dim") === dims.max.toLong)
       .select("query_id", "vec_id")
     val hits = topk.join(truth, Seq("query_id", "vec_id"))
@@ -3072,7 +3043,7 @@ object SimilarityOps {
       .agg(sum("qd").as("s_d"),
         sum(col("qd") * col("qd")).as("self_d"),
         count(lit(1)).as("cnt"))
-      .cache()
+      .transform(Materialize.cached)
     val lab = dimCen.groupBy("label")
       .agg(sum(expr("CAST(floor(CAST(s_d AS DOUBLE) * " +
           "CAST(s_d AS DOUBLE)) AS BIGINT)")).as("snorm2"),

@@ -1222,11 +1222,11 @@ object SketchQueries {
   def heavyHittersCensus(docs: DataFrame): DataFrame = {
     // three consumers (shard summaries, truth join, total) — cache the
     // vocab-bounded census so the corpus scans once (the minhash `sh`
-    // discipline; Verify/Bench clearCache between queries)
+    // discipline)
     val census = docs
       .select(explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))
-      .cache()
+      .transform(Materialize.cached)
     val sharded = census
       .withColumn("bucket", md5Long(col("token")) % MgBuckets)
     val merged = (0 until MgLevels).foldLeft(

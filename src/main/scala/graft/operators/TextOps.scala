@@ -506,12 +506,13 @@ object TextOps {
     // shuffle/join key is 8 bytes instead of a ~30-byte string
     // (collisions at 2^-60 are negligible and the oracle mirrors the
     // same hash, so any would affect both sides identically).
-    // cache(), NOT Materialize.shared: this subtree is reachable from
-    // the session-memoized PairRelations DataFrame, which must stay
-    // recomputable after an external unpersist — a truncated-lineage
+    // cached, NOT shared: this subtree is reachable from the
+    // session-memoized PairRelations DataFrame, which must stay
+    // recomputable after its pins are released — a truncated-lineage
     // checkpoint here would die on the memo's second use.
     val sh = shingleSet(docs, n)
-      .select(col("doc_id"), md5Long(col("sh")).as("h")).cache()
+      .select(col("doc_id"), md5Long(col("sh")).as("h"))
+      .transform(Materialize.cached)
     ngramPairStatsFrom(sh, maxDf)
   }
 
@@ -1070,10 +1071,11 @@ object TextOps {
       explode(tokens(col("text"))).as("t"))
     // tf rows are distinct (doc, term) pairs, so df folds out of tf —
     // tokens are exploded and hashed exactly once
-    // cache, not an eager checkpoint: the two consumers share one
-    // action, so exchange reuse already computes tf once — the eager
-    // materialization job would be pure overhead here (r16 measured)
-    val tf = toks.groupBy("doc_id", "t").agg(count(lit(1)).as("tf")).cache()
+    // cached, not shared: the two consumers share one action, so
+    // exchange reuse already computes tf once — the eager
+    // materialization job measured as pure overhead here
+    val tf = toks.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
+      .transform(Materialize.cached)
     val df = tf.groupBy("t").agg(count(lit(1)).as("df"))
     val n = docs.select(count(lit(1)).as("n_docs"))
     val scored = tf.join(df, "t").crossJoin(broadcast(n))
@@ -1214,7 +1216,7 @@ object TextOps {
     */
   def clusterDepthCensus(pairs: DataFrame,
                          maxDepth: Int = 8): DataFrame =
-    clusterDepthFrom(connectedComponents(pairs).localCheckpoint(),
+    clusterDepthFrom(connectedComponents(pairs).transform(Materialize.shared),
       pairs, maxDepth)
 
   /** D28 over a PRECOMPUTED component relation — the store-backed
@@ -1226,9 +1228,9 @@ object TextOps {
                        maxDepth: Int = 8): DataFrame = {
     val edges = pairs.select(col("d1").as("a"), col("d2").as("b"))
       .unionAll(pairs.select(col("d2").as("a"), col("d1").as("b")))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize.shared)
     var frontier = cc.select(col("component").as("doc_id")).distinct()
-      .withColumn("depth", lit(0L)).localCheckpoint()
+      .withColumn("depth", lit(0L)).transform(Materialize.shared)
     var dist = frontier
     var d = 1
     var advancing = true
@@ -1242,9 +1244,9 @@ object TextOps {
         .select(col("b").as("doc_id")).distinct()
         .join(dist.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .withColumn("depth", lit(d.toLong))
-        .localCheckpoint()
+        .transform(Materialize.shared)
       advancing = nxt.count() > 0
-      if (advancing) dist = dist.unionByName(nxt).localCheckpoint()
+      if (advancing) dist = dist.unionByName(nxt).transform(Materialize.shared)
       frontier = nxt
       d += 1
     }
@@ -1260,21 +1262,20 @@ object TextOps {
   def connectedComponents(pairs: DataFrame,
                           driverMaxPairs: Long = 1L << 22): DataFrame = {
     val spark = pairs.sparkSession
-    // cache(), DELIBERATELY not Materialize.shared: (1) the count()
-    // materializes the cache before the single downstream consumer, so
-    // the racy-concurrent-fill problem Materialize.shared exists for
-    // does not arise here; (2) this cache is reachable from streaming
-    // foreachBatch loops (IncrementalClusters/IncrementalCuration) that
-    // APPEND to the catalog tables the pair relation reads and re-read
-    // them next batch from the PARENT session — enrolling the plan in
-    // the shared CacheManager lets the clone-session write's
-    // refreshByPath refresh the parent-cached file index in place
-    // (r16 adjudication: swapping this for an eager localCheckpoint
-    // made every post-append store read serve the stale EMPTY listing
-    // and IncrementalClustersSpec failed store≡batch; processBatch now
-    // also refreshes explicitly, but the cache stays the belt to that
-    // suspender).
-    val edgesDf = pairs.select(col("d1"), col("d2")).cache()
+    // cached, DELIBERATELY not shared: (1) the count() fills the pin
+    // before the single downstream consumer, so the racy concurrent
+    // fill that `shared` exists for does not arise here; (2) this pin is
+    // reachable from streaming foreachBatch loops
+    // (IncrementalClusters/IncrementalCuration) that APPEND to the
+    // catalog tables the pair relation reads — enrolling the plan in the
+    // shared CacheManager lets the clone-session write's refreshByPath
+    // refresh the cached file index in place (measured: an eager
+    // checkpoint here made every post-append store read serve the stale
+    // EMPTY listing and IncrementalClustersSpec failed store≡batch;
+    // processBatch also refreshes explicitly, and the cached pin stays
+    // as the second guard).
+    val edgesDf = pairs.select(col("d1"), col("d2"))
+      .transform(Materialize.cached)
     val n = edgesDf.count()
     if (n <= driverMaxPairs) {
       // The candidate-pair graph is orders of magnitude smaller than the
@@ -1340,9 +1341,9 @@ object TextOps {
       pairs: DataFrame, maxRounds: Int): (DataFrame, Int) = {
     val edges = pairs.select(col("d1").as("a"), col("d2").as("b"))
       .unionAll(pairs.select(col("d2").as("a"), col("d1").as("b")))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize.shared)
     var labels = edges.select(col("a").as("doc_id")).distinct()
-      .withColumn("component", col("doc_id")).localCheckpoint()
+      .withColumn("component", col("doc_id")).transform(Materialize.shared)
     var rounds = 0
     var changed = 1L
     while (changed > 0) {
@@ -1358,7 +1359,7 @@ object TextOps {
         .select(col("doc_id"), col("component").as("old"),
           least(col("component"),
             coalesce(col("nbr_min"), col("component"))).as("component"))
-        .localCheckpoint()
+        .transform(Materialize.shared)
       // pointer jumping: component ids are node ids of the same
       // component, so the node adopts its label's JUST-stepped label —
       // known label distance doubles every round
@@ -1369,7 +1370,7 @@ object TextOps {
         .select(col("doc_id"), col("old"),
           least(col("component"),
             coalesce(col("comp_label"), col("component"))).as("component"))
-      val updated = jumped.localCheckpoint()
+      val updated = jumped.transform(Materialize.shared)
       changed = updated.filter(col("component") =!= col("old")).count()
       labels = updated.select("doc_id", "component")
       rounds += 1
@@ -1956,13 +1957,14 @@ object TextOps {
   def contamination(docs: DataFrame, trainPct: Int, valPct: Int,
                     k: Int, w: Int, maxDf: Long,
                     ratioMicroMin: Long): DataFrame = {
-    // cache(), measured BETTER than an eager checkpoint here (r16: the
-    // winnow relation is corpus-wide — checkpointing it as object rows
-    // cost more than the consumers save; the dedup-audit family, whose
-    // shared relations are candidate-bounded, goes the other way);
-    // pinKey keys the fan-out join at session parallelism
+    // cached, measured BETTER than shared here: the winnow relation is
+    // corpus-wide — checkpointing it as object rows cost more than the
+    // consumers save (the dedup-audit family, whose shared relations
+    // are candidate-bounded, goes the other way); pinKey keys the
+    // fan-out join at session parallelism
     contaminationFrom(
-      winnowedSplit(docs, k, w, trainPct, valPct).cache(),
+      winnowedSplit(docs, k, w, trainPct, valPct)
+        .transform(Materialize.cached),
       maxDf, ratioMicroMin, pinKey = true)
   }
 
@@ -2134,7 +2136,8 @@ object TextOps {
   def decontaminate(docs: DataFrame, trainPct: Int, valPct: Int,
                     k: Int, w: Int, maxDf: Long,
                     ratioMicroMin: Long): DataFrame = {
-    val fs = winnowedSplit(docs, k, w, trainPct, valPct).cache()
+    val fs = winnowedSplit(docs, k, w, trainPct, valPct)
+      .transform(Materialize.cached)
     val dropped = contaminationFrom(fs, maxDf, ratioMicroMin)
       .select(col("train_doc").as("doc_id")).distinct()
       .withColumn("dropped", lit(1L))
@@ -2480,7 +2483,7 @@ object TextOps {
     */
   private[graft] def bpeTrainLoop(docs: DataFrame, merges: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
-    var vocab = bpeVocab(docs).localCheckpoint()
+    var vocab = bpeVocab(docs).transform(Materialize.shared)
     val learned = Seq.newBuilder[(Int, String, String, String, Long)]
     for (step <- 1 to merges) {
       val best = bpePairCounts(vocab)
@@ -2491,7 +2494,7 @@ object TextOps {
       val lhs = best(0).getString(0)
       val rhs = best(0).getString(1)
       learned += ((step, lhs, rhs, lhs + rhs, best(0).getLong(2)))
-      vocab = bpeMergeApplied(vocab, lhs, rhs).localCheckpoint()
+      vocab = bpeMergeApplied(vocab, lhs, rhs).transform(Materialize.shared)
     }
     (learned.result(), vocab)
   }
@@ -3435,12 +3438,10 @@ object TextOps {
     val scen = lengthCensus(docs).transform(Materialize.shared)
     // the bucket census (≤ sources × 10 rows) is consumed FOUR times
     // by the rollup (srcTotals, refBucket, nAll, the terms join);
-    // uncached, each consumer re-runs the edge derivation INCLUDING
-    // its broadcast job — the r13 factoring moved nAll from a
-    // one-stage agg over the cached length census onto this chain and
-    // cost q_psi ~0.9 s of pure job overhead (the r14 mover
-    // adjudication); caching the tiny census restores one-execution
-    // semantics for the whole chain
+    // unpinned, each consumer re-runs the edge derivation INCLUDING
+    // its broadcast job (measured ~0.9 s of pure job overhead on
+    // q_psi); pinning the tiny census restores one-execution semantics
+    // for the whole chain
     psiFromBuckets(sourceBucketsFromCensus(scen,
       lengthDecileEdgesFromCensus(scen)).transform(Materialize.shared))
   }

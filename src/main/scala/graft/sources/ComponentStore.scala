@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.operators.TextOps
+import graft.operators.{Materialize, TextOps}
 
 /** Persisted connected-component store — the incremental half of the
   * D7 dedup clustering: a catalog table of (doc_id, component) where
@@ -88,7 +88,7 @@ object ComponentStore {
       .unionByName(newSingles)
       // eager materialization BEFORE the overwrite truncates the
       // source table the lineage reads (the PhashStore contract)
-      .localCheckpoint(eager = true)
+      .transform(Materialize.shared)
     merged.write.mode("overwrite")
       .bucketBy(nBuckets, "component").sortBy("component")
       .saveAsTable(table)

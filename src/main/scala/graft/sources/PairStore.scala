@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing.md5Long
-import graft.operators.TextOps
+import graft.operators.{Materialize, TextOps}
 
 /** Persisted near-dup pair + component store — the BATCH half of the
   * dedup-cluster serving story (the [[ComponentStore]] maintains the
@@ -118,7 +118,7 @@ object PairStore {
         pairs(spark, base).select("d1", "d2"), Seq("d1", "d2"),
         "left_anti")
       .select(newPairs.columns.head, newPairs.columns.tail: _*)
-      .localCheckpoint(eager = true)
+      .transform(Materialize.shared)
     fresh.write.mode("append")
       .bucketBy(nBuckets, "d1").sortBy("d1", "d2")
       .saveAsTable(pairsTable(base))
@@ -141,7 +141,7 @@ object PairStore {
       .unionByName(comps.select("doc_id", "component"))
       // eager materialization BEFORE the overwrite truncates the
       // source table the lineage reads (the PhashStore contract)
-      .localCheckpoint(eager = true)
+      .transform(Materialize.shared)
     merged.write.mode("overwrite")
       .bucketBy(nBuckets, "component").sortBy("component")
       .saveAsTable(componentsTable(base))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.MultimodalOps
+import graft.operators.{Materialize, MultimodalOps}
 
 /** Persisted perceptual-hash (dHash) class store — the M7 census as a
   * serving relation: one row per DISTINCT image hash with its
@@ -84,7 +84,7 @@ object PhashStore {
       .agg(sum("n").as("n"), min("exemplar").as("exemplar"))
       // eager = true spells out the no-arg default; the point is the
       // materialization happens BEFORE the overwrite truncates its source
-      .localCheckpoint(eager = true)
+      .transform(Materialize.shared)
     merged.write.mode("overwrite")
       .bucketBy(nBuckets, "dhash").sortBy("dhash")
       .saveAsTable(table)

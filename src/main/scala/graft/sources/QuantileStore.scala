@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.SketchQueries
+import graft.operators.{Materialize, SketchQueries}
 
 /** Persisted mergeable quantile sketch — the X64 bottom-k sample as a
   * serving relation: per event_type, the k rows with the smallest
@@ -41,7 +41,7 @@ object QuantileStore {
             nBuckets: Int = 8): Unit = {
     val merged = SketchQueries
       .qsBottomK(load(spark, table).unionByName(batchSample).distinct())
-      .localCheckpoint(eager = true)
+      .transform(Materialize.shared)
     save(merged, table, nBuckets)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing.{md5Long, micro}
-import graft.operators.TextOps
+import graft.operators.{Materialize, TextOps}
 
 /** Persisted per-document word n-gram shingle relation — the store the
   * INCREMENTAL D2 pipeline reads instead of re-scanning the historical
@@ -82,7 +82,7 @@ object ShingleStore {
              nBuckets: Int = 8): Unit = {
     val sh = hashedShingles(newDocs, n)
       // one shard scan feeds both writes
-      .localCheckpoint(eager = true)
+      .transform(Materialize.shared)
     sh.select(col("h"), col("doc_id"))
       .write.mode("append")
       .bucketBy(nBuckets, "h").sortBy("h").saveAsTable(shTable(base))

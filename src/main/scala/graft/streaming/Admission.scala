@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.Materialize
+
 /** The admission loop every streaming admission gate runs
   * ([[CorpusAdmission]], [[VectorAdmission]], [[MediaAdmission]],
   * [[UnifiedAdmission]], [[IncrementalCuration]]). A gate supplies its
@@ -18,12 +20,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     store listing from before the previous batch's append;
   *  2. `decide(session, batch)` audits the batch against the stores;
   *  3. admitted and quarantined rows are pinned with
-  *     `localCheckpoint(eager = true)` before any write, so every write
-  *     of the batch sees one decision. `cache()` does not pin: a write
-  *     to a catalog table makes the CacheManager recache, that is
-  *     re-evaluate, every cached plan that reads the table, and the
-  *     decision would be re-made against the grown store between two
-  *     appends;
+  *     [[graft.operators.Materialize.shared]] (an eager checkpoint)
+  *     before any write, so every write of the batch sees one decision.
+  *     A `cached` pin would not hold: a write to a catalog table makes
+  *     the CacheManager recache, that is re-evaluate, every cached plan
+  *     that reads the table, and the decision would be re-made against
+  *     the grown store between two appends. The pins last until the end
+  *     of the micro-batch ([[MicroBatches.start]]);
   *  4. admitted rows overwrite `corpusDir/batch_id=<id>` (when the gate
   *     has a corpus sink), quarantined rows overwrite
   *     `quarantineDir/batch_id=<id>`; readers of the sink roots see
@@ -60,8 +63,8 @@ final case class Admission(
   def run(batch: DataFrame, batchId: Long): (DataFrame, DataFrame) = {
     val session = batch.sparkSession
     val (admitted, quarantined) = decide(session, batch)
-    val keep = admitted.localCheckpoint(eager = true)
-    val quar = quarantined.localCheckpoint(eager = true)
+    val keep = Materialize.shared(admitted)
+    val quar = Materialize.shared(quarantined)
     corpusDir.foreach(BatchStore.overwrite(keep, _, batchId))
     BatchStore.overwrite(quar, quarantineDir, batchId)
     append(session, batch, keep)

@@ -73,9 +73,9 @@ object CorpusAdmission {
     * corpus sink + quarantine sink + store append. `nBuckets` must
     * match the spec the store was saved with (a mismatched bucket
     * count makes every append fail and wedges the stream). Every read
-    * and write runs on the batch's own session, not `spark`.
+    * and write runs on the batch's own session.
     */
-  def start(spark: SparkSession, docs: DataFrame, storeTable: String,
+  def start(docs: DataFrame, storeTable: String,
             corpusDir: String, quarantineDir: String,
             checkpointDir: String, k: Int, w: Int, maxDf: Long,
             ratioMicroMin: Long, nBuckets: Int = 8): StreamingQuery =

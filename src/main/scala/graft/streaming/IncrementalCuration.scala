@@ -108,7 +108,7 @@ object IncrementalCuration {
     * untouched. Returns (nAdmitted, nQuarantined) for the caller's
     * monitoring.
     */
-  def runIncrement(spark: SparkSession, batch: DataFrame, batchId: Long,
+  def runIncrement(batch: DataFrame, batchId: Long,
                    base: String, corpusDir: String, quarantineDir: String,
                    cfg: Config = Config()): (Long, Long) = {
     val (keep, quar) = admission(base, corpusDir, quarantineDir, cfg)
@@ -195,7 +195,7 @@ object IncrementalCuration {
     TextOps.corpusCardFrom(DocStatsStore.load(spark, base))
 
   /** The streaming form: every micro-batch is one increment. */
-  def start(spark: SparkSession, docs: DataFrame, base: String,
+  def start(docs: DataFrame, base: String,
             corpusDir: String, quarantineDir: String,
             checkpointDir: String, cfg: Config = Config()): StreamingQuery =
     admission(base, corpusDir, quarantineDir, cfg).start(docs, checkpointDir)

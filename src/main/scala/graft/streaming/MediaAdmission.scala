@@ -62,9 +62,9 @@ object MediaAdmission {
 
   /** The streaming gate: docs stream → per-batch phash audit →
     * admitted/quarantine sinks + store merge. Every read and write runs
-    * on the batch's own session, not `spark`.
+    * on the batch's own session.
     */
-  def start(spark: SparkSession, docs: DataFrame, storeTable: String,
+  def start(docs: DataFrame, storeTable: String,
             admittedDir: String, quarantineDir: String,
             checkpointDir: String, maxHamming: Int): StreamingQuery =
     admission(storeTable, admittedDir, quarantineDir, maxHamming)

@@ -3,9 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.Materialize
+
 /** The one `foreachBatch` runner. Every micro-batch operator of this
   * package starts through [[start]], so the checkpoint wiring and the
-  * trigger cadence (processing time, one second) are decided here once.
+  * trigger cadence (processing time, one second) are decided here once,
+  * and so is the lifetime of what a batch pins: each micro-batch is one
+  * [[Materialize.scoped]] scope, so every pin `f` makes is released when
+  * the batch ends.
   * [[Ingest.start]] and [[Ingest.backfill]] are file-sink queries, not
   * `foreachBatch` operators, and set their own triggers.
   */
@@ -20,7 +25,9 @@ object MicroBatches {
            (f: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => f(batch, batchId) }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        Materialize.scoped(f(batch, batchId))
+      }
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
 }

@@ -213,9 +213,9 @@ object UnifiedAdmission {
     * stores were saved with; each appending batch's vector drift is
     * surfaced through `onDrift` (re-clustering itself belongs in a
     * quiesced maintenance window). Every read and write runs on the
-    * batch's own session, not `spark`.
+    * batch's own session.
     */
-  def start(spark: SparkSession, docs: DataFrame, fpTable: String,
+  def start(docs: DataFrame, fpTable: String,
             gramTable: String, vecPath: String, corpusDir: String,
             quarantineDir: String, checkpointDir: String, cfg: Config,
             nBuckets: Int = 8,

@@ -77,9 +77,9 @@ object VectorAdmission {
     * with the batch's [[VectorStore.Drift]] handed to `onDrift` (the
     * hook a deployment wires to its re-cluster trigger; retraining
     * itself belongs in a quiesced maintenance window, not mid-stream).
-    * Every read and write runs on the batch's own session, not `spark`.
+    * Every read and write runs on the batch's own session.
     */
-  def start(spark: SparkSession, vecs: DataFrame, path: String,
+  def start(vecs: DataFrame, path: String,
             quarantineDir: String, checkpointDir: String,
             cosMicroMin: Long,
             onDrift: VectorStore.Drift => Unit = _ => ()): StreamingQuery =

@@ -27,7 +27,7 @@ class CorpusAdmissionSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-adm-ckpt").toString
     try {
       val ms = MemoryStream[(Long, String)](spark)
-      val q = CorpusAdmission.start(spark, ms.toDF()
+      val q = CorpusAdmission.start(ms.toDF()
           .toDF("doc_id", "text"),
         store, corpusDir, quarantineDir, ckpt, k, w, maxDf, ratioMin)
       try {

@@ -49,7 +49,7 @@ class IncrementalPipelineSpec extends SparkSpec {
 
       IncrementalCuration.init(spark, base, cfg)
       order.zipWithIndex.foreach { case (s, bid) =>
-        IncrementalCuration.runIncrement(spark, shard(s), bid.toLong,
+        IncrementalCuration.runIncrement(shard(s), bid.toLong,
           base, corpusDir, quarDir, cfg)
       }
 
@@ -92,7 +92,7 @@ class IncrementalPipelineSpec extends SparkSpec {
         rowSet(spark.table(IncrementalCuration.fpTable(base))
           .dropDuplicates("doc_id", "fingerprint")),
         rowSet(graft.sources.DocStatsStore.load(spark, base)))
-      IncrementalCuration.runIncrement(spark, shard(order.last),
+      IncrementalCuration.runIncrement(shard(order.last),
         (order.size - 1).toLong, base, corpusDir, quarDir, cfg)
       val after = Seq(
         rowSet(PairStore.pairs(spark, base)),
@@ -146,7 +146,7 @@ class IncrementalPipelineSpec extends SparkSpec {
           org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.lit(2L)) === i.toLong)
       Seq(1, 0).zipWithIndex.foreach { case (s, bid) =>
-        IncrementalCuration.runIncrement(spark, shard(s), bid.toLong,
+        IncrementalCuration.runIncrement(shard(s), bid.toLong,
           base3, corpusDir, quarDir, cfg3)
       }
       val admitted = IncrementalCuration.corpus(spark, corpusDir)
@@ -201,7 +201,7 @@ class IncrementalPipelineSpec extends SparkSpec {
     try {
       IncrementalCuration.init(spark, base2, cfg)
       val ms = MemoryStream[(Long, String, String)](spark)
-      val q = IncrementalCuration.start(spark,
+      val q = IncrementalCuration.start(
         ms.toDF().toDF("doc_id", "source", "text"),
         base2, corpusDir, quarDir, ckpt, cfg)
       try {

@@ -38,7 +38,7 @@ class MediaAdmissionSpec extends SparkSpec {
     val quarantineDir = Files.createTempDirectory("graft-mquar").toString
     val ckpt = Files.createTempDirectory("graft-madm-ckpt").toString
     val ms = MemoryStream[(Long, String)](spark)
-    val q = MediaAdmission.start(spark, ms.toDF().toDF("doc_id", "text"),
+    val q = MediaAdmission.start(ms.toDF().toDF("doc_id", "text"),
       store, admittedDir, quarantineDir, ckpt, maxHamming = 3)
     try {
       // batch 0: 3842 = identical image to seeded 2 -> quarantine;

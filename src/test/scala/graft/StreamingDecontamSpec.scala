@@ -110,7 +110,7 @@ class StreamingDecontamSpec extends SparkSpec {
         cfg.winnowK, cfg.winnowW, 0, 0, evalTable)
 
       val ms = MemoryStream[(Long, String, Array[Float])](spark)
-      val q = UnifiedAdmission.start(spark,
+      val q = UnifiedAdmission.start(
         ms.toDF().toDF("doc_id", "text", "embedding"),
         fpTable, gramTable, vecPath, corpusDir, quarDir, ckpt, cfg,
         evalFpTable = Some(evalTable))

@@ -91,7 +91,7 @@ class UnifiedAdmissionSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-uni-ckpt").toString
     try {
       val ms = MemoryStream[(Long, String, Array[Float])](spark)
-      val q = UnifiedAdmission.start(spark,
+      val q = UnifiedAdmission.start(
         ms.toDF().toDF("doc_id", "text", "embedding"),
         fpTable, gramTable, vecPath, corpusDir, quarDir, ckpt, cfg)
       try {
@@ -282,7 +282,7 @@ class UnifiedAdmissionSpec extends SparkSpec {
     val batchIds = Set(9300L, 9301L, 9302L)
     try {
       val ms = MemoryStream[(Long, String, Array[Float])](spark)
-      val q = UnifiedAdmission.start(spark,
+      val q = UnifiedAdmission.start(
         ms.toDF().toDF("doc_id", "text", "embedding"),
         fpTable, gramTable, vecPath, corpusDir, quarDir, ckpt, cfg)
       try {

@@ -57,7 +57,7 @@ class VectorAdmissionSpec extends SparkSpec {
     val drifts = ArrayBuffer.empty[VectorStore.Drift]
 
     val ms = MemoryStream[(Long, Array[Float])](spark)
-    val q = VectorAdmission.start(spark,
+    val q = VectorAdmission.start(
       ms.toDF().toDF("vec_id", "embedding"), path, quarantineDir, ckpt,
       cosMicroMin = 900000L,
       onDrift = d => drifts.synchronized { drifts += d })

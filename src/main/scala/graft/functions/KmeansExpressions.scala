@@ -186,14 +186,17 @@ object KmeansAssign {
 }
 
 /** [[KmeansAssign]] over an ALREADY-MILLI integer vector
-  * (`array<bigint>`) — the residual-PQ path ([[graft.operators
-  * .SimilarityOps.pqResidualTopK]]) trains and encodes in the residual
-  * domain r = milli(v) − centroid, which is integer by construction;
-  * re-quantizing it through the float kernel would double-scale (and a
-  * float round-trip r/1000.0·1000.0 is not floor-stable at the
-  * boundaries). Same math contract minus the milli step: dot = exact
-  * long sum, score = floor(1e6 · dot / √ssq), ties toward the lower
-  * centroid id, all-zero centroids score [[KmeansAssign.ScoreEmpty]].
+  * (`array<bigint>`) — the k-means trainer's assignment step, which
+  * runs over milli vectors (a `milli_vec` projection gives the same
+  * cluster as the float kernel), and the residual-PQ path
+  * ([[graft.operators.SimilarityOps.pqResidualTopK]]), which trains and
+  * encodes in the residual domain r = milli(v) − centroid, integer by
+  * construction; re-quantizing it through the float kernel would
+  * double-scale (and a float round-trip r/1000.0·1000.0 is not
+  * floor-stable at the boundaries). Same math contract minus the milli
+  * step: dot = exact long sum, score = floor(1e6 · dot / √ssq), ties
+  * toward the lower centroid id, all-zero centroids score
+  * [[KmeansAssign.ScoreEmpty]].
   */
 case class KmeansAssignMilli(child: Expression,
                              cents: Array[Array[Long]])

@@ -1,7 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.AtomicLong
+import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -32,10 +31,12 @@ import org.apache.spark.storage.StorageLevel
   * boundaries: one query run in `Bench`/`Verify`, and one micro-batch in
   * `graft.streaming.MicroBatches.start`. Release happens only at those
   * boundaries, so a function may return a pinned frame to its caller.
-  * A scope releases only the pins made under it, on its own thread or
-  * on the [[concurrently]] pool threads it spawned; a pin made outside
-  * any scope (an operator called directly) is not recorded, so nothing
-  * holds it strongly and the `ContextCleaner` reclaims it as before.
+  * A scope covers the pins made on its own thread while it is open, and
+  * releases only those: a pin made on another thread, one the scope's
+  * thread started included, or outside any scope (an operator called
+  * directly) is not recorded, so nothing holds it strongly and the
+  * `ContextCleaner` reclaims it as before. Jobs run one at a time from
+  * the scope's thread; there is no driver-side pool.
   */
 object Materialize {
   def shared(df: DataFrame): DataFrame = {
@@ -59,31 +60,23 @@ object Materialize {
     * its own pins.
     */
   def scoped[A](body: => A): A = {
-    val id = ids.incrementAndGet()
     val outer = scope.get
-    open.put(id, new ConcurrentLinkedQueue[() => Unit]())
-    scope.set(Some(id))
+    val pins = mutable.ArrayBuffer.empty[() => Unit]
+    scope.set(Some(pins))
     try body
     finally {
       scope.set(outer)
-      open.remove(id).forEach(release => release())
+      pins.foreach(release => release())
     }
   }
 
-  // The scope id is inherited by every thread the scope's thread starts,
-  // the [[concurrently]] pool included; a thread that outlives its scope
-  // finds the id closed and pins unscoped.
-  private val scope = new InheritableThreadLocal[Option[Long]] {
-    override def initialValue(): Option[Long] = None
-  }
-  private val open =
-    new ConcurrentHashMap[Long, ConcurrentLinkedQueue[() => Unit]]()
-  private val ids = new AtomicLong()
+  // the release of every pin made on this thread under its open scope
+  private val scope =
+    ThreadLocal.withInitial[Option[mutable.ArrayBuffer[() => Unit]]](
+      () => None)
 
-  // A pin recorded while its scope is releasing is either released or
-  // left unreferenced, i.e. unscoped.
   private def record(release: () => Unit): Unit =
-    scope.get.flatMap(id => Option(open.get(id))).foreach(_.add(release))
+    scope.get.foreach(_ += release)
 
   /** Pin an explosion-prone equi-join input at session parallelism on
     * the join key. AQE's partition coalescing is BYTE-based: it sees
@@ -108,38 +101,4 @@ object Materialize {
       spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     df.repartition(n, org.apache.spark.sql.functions.col(key))
   }
-
-  /** Run independent driver-side build steps concurrently (guide §2.6,
-    * overlap independent jobs): Spark's scheduler runs many jobs at
-    * once — build loops like "train one k-means codebook per PQ
-    * subspace" or "run the beam sweep per width" were sequential only
-    * because the driver blocked on each step's collect/checkpoint
-    * before submitting the next. Results combine in INPUT order, so
-    * output is bit-identical to the sequential loop; only the job
-    * submission overlaps. A dedicated pool, not the global
-    * ForkJoinPool: the steps block on collect(), which would starve
-    * nested parallel collections sharing the common pool.
-    *
-    * The pool is CAPPED at [[MaxConcurrentJobs]] driver threads
-    * (guide §2.6: "2-3 jobs in flight is plenty" — the cap leaves
-    * headroom for short steps while bounding a future caller with a
-    * large list; excess items queue on the fixed pool). On failure the
-    * pool is shut down with `shutdownNow()` so losing futures are
-    * interrupted instead of running on in the background.
-    */
-  val MaxConcurrentJobs = 8
-
-  def concurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    if (xs.lengthCompare(2) < 0) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(xs.length, MaxConcurrentJobs))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          xs.map(x => scala.concurrent.Future(f(x)))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdownNow()
-    }
 }

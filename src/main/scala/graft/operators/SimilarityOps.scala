@@ -25,7 +25,11 @@ import graft.functions.vector.cosineSim
   *  - brute-force top-k is a single scan + TakeOrderedAndProject (no
   *    full sort, no shuffle of the data — only k rows per partition);
   *  - IVF probes restrict the scan to a cluster subset; the centroid
-  *    table (the "codebook") is tiny and broadcast, never shuffled.
+  *    table (the "codebook") is tiny and broadcast, never shuffled;
+  *  - a sweep axis (probe width, beam width, the books of one k-means
+  *    training) is a column of one plan, not a driver loop: every value
+  *    advances in the same job per round, and each value's rows are
+  *    bit-identical to a run at that value alone.
   */
 object SimilarityOps {
 
@@ -308,7 +312,7 @@ object SimilarityOps {
     */
   val BandOccupancyCap = 1024L
 
-  /** Scale-adaptive sign-LSH band width (VERDICT r14 item 1): the
+  /** Scale-adaptive sign-LSH band width: the
     * SMALLEST width b dividing nPlanes with n ≤ [[BandOccupancyCap]]·2ᵇ.
     * Narrow bands maximize recall (band match prob pᵇ falls with b), so
     * the rule widens only when the occupancy cap forces it: past
@@ -387,9 +391,7 @@ object SimilarityOps {
     * dequantize.
     */
   def quantizeInt8(emb: DataFrame): DataFrame =
-    // codes + absmax each ONE codegen kernel pass (the former
-    // aggregate/transform HOF pair was CodegenFallback) — identical
-    // integer output, V20 oracle unaffected
+    // codes + absmax each ONE codegen kernel pass
     emb.select(col("vec_id"),
         graft.functions.vector.absMaxComp(col("embedding")).as("amax"),
         posexplode(graft.functions.vector.int8Codes(col("embedding")))
@@ -417,10 +419,12 @@ object SimilarityOps {
     * the whole training trajectory — are bit-identical across engines,
     * partitionings, and retries. Milli (not micro) keeps every derived
     * integer (ssq ≤ dims·S²) exactly representable in doubles through
-    * the score division even at 100× this corpus. Since r15 a codegen
-    * projection ([[graft.functions.MilliVector]]) instead of the
-    * interpreted `transform` HOF — same integers, zero plan change
-    * beyond the CodegenFallback node disappearing.
+    * the score division even at 100× this corpus. One codegen
+    * projection ([[graft.functions.MilliVector]]); the float kernels
+    * ([[graft.functions.KmeansAssign]] and siblings) quantize by the
+    * same floor(v·1000) law inside their loop, so assigning `milliVec`
+    * output with [[graft.functions.KmeansAssignMilli]] gives the same
+    * cluster as assigning the floats.
     */
   private[graft] def milliVec(emb: Column): Column =
     graft.functions.vector.milliVec(emb)
@@ -452,56 +456,78 @@ object SimilarityOps {
     }
   }
 
-  /** Deterministic Lloyd training of the IVF codebook.
-    *
-    * Init: the `nCentroids` vectors ranked lowest by md5("km:"‖vec_id)
-    * — a data-independent pseudo-random draw both engines reproduce.
-    * Each round: assign every vector to its nearest centroid (zero-
-    * shuffle literal-codebook projection), then refresh each centroid as
-    * the per-dimension truncated INTEGER MEAN of its members (one
-    * partial-agg shuffle of (cluster, dim) pairs — cosine is scale-
-    * invariant, so the integer mean keeps the training trajectory exact
-    * while bounding every component by the milli input range; a raw SUM
-    * would grow with cluster size until the assignment kernel's
-    * ssq = Σc² overflowed Long at ~3M members). Java's long division
-    * and DuckDB's BIGINT `//` both truncate toward zero, so the mean —
-    * and the whole trajectory — stays bit-identical across engines.
-    * Empty clusters keep their previous centroid. Driver-coordinated
-    * like every iterative Spark algorithm; the collected state is only
-    * the nCentroids×dims mean table.
+  /** Deterministic Lloyd training of the IVF codebook: the one-book
+    * case of [[lloydBooks]] over the milli-quantized embedding.
     */
   def kmeansCodebook(emb: DataFrame, nCentroids: Int,
-                     rounds: Int): Array[Array[Long]] = {
-    // eager, not cache(): concurrent callers (PQ subspaces, recall-curve
-    // budgets) train over identical slice plans, and a plan-keyed cache
-    // entry would be shared between them
-    val vm = Materialize.shared(emb.select(col("vec_id"), col("embedding"),
-        milliVec(col("embedding")).as("vm")))
-    val seedRows = vm
-      .withColumn("h", graft.functions.Hashing.md5Long(
-        concat(lit("km:"), col("vec_id").cast("string"))))
-      .orderBy(col("h"), col("vec_id")).limit(nCentroids)
-      .select("h", "vec_id", "vm").collect()
-      .sortBy(r => (r.getLong(0), r.getLong(1)))
-    var cents = seedRows.map(_.getSeq[Long](2).toArray)
-    var r = 0
-    while (r < rounds) {
-      val sums = vm
-        .select(assignCluster(col("embedding"), cents).as("cluster"),
-          posexplode(col("vm")).as(Seq("i", "v")))
-        .groupBy("cluster", "i")
-        .agg(sum("v").as("s"), count(lit(1)).as("cnt"))
+                     rounds: Int): Array[Array[Long]] =
+    lloydBooks(emb.select(col("vec_id"), milliVec(col("embedding")).as("vm")),
+      Seq((col("vm"), nCentroids)), rounds).head
+
+  /** The one Lloyd trainer: trains every book in `books` — a slice
+    * expression over the `vm: array<bigint>` column of `vms` and its
+    * centroid count — side by side, one job per round.
+    *
+    * Init: each book's `nCents` seed rows are the vectors ranked lowest
+    * by md5("km:"‖vec_id) — a data-independent pseudo-random draw both
+    * engines reproduce, shared by every book, so one collect of the
+    * first max-`nCents` rows seeds them all (a book takes its own
+    * slice of its own prefix). Each round: assign every vector to its
+    * book's nearest centroid ([[graft.functions.KmeansAssignMilli]], a
+    * zero-shuffle kernel projection), then refresh each centroid as the
+    * per-dimension truncated INTEGER MEAN of its members (one
+    * partial-agg shuffle of (book, cluster, dim) keys — cosine is
+    * scale-invariant, so the integer mean keeps the trajectory exact
+    * while bounding every component by the milli input range; a raw
+    * SUM would grow with cluster size until the kernel's ssq = Σc²
+    * overflowed Long at ~3M members). Java's long division and DuckDB's
+    * BIGINT `//` both truncate toward zero, so the trajectory is
+    * bit-identical across engines. Empty clusters keep their previous
+    * centroid. A book's sums cover only its own (vector, dim) integers,
+    * so every book is bit-identical to training it alone; the collected
+    * state is only the books' centroid tables. The input is pinned
+    * (`vec_id`, `vm` only) for the seed collect and every round.
+    */
+  private def lloydBooks(vms: DataFrame, books: Seq[(Column, Int)],
+                         rounds: Int): Seq[Array[Array[Long]]] =
+    if (books.isEmpty) Seq.empty
+    else {
+      import graft.functions.KmeansAssignMilli.kmeansAssignMilli
+      val vm = Materialize.shared(vms.select("vec_id", "vm"))
+      val seedRows = vm
+        .withColumn("h", graft.functions.Hashing.md5Long(
+          concat(lit("km:"), col("vec_id").cast("string"))))
+        .orderBy(col("h"), col("vec_id")).limit(books.map(_._2).max)
+        .select(col("h") +: col("vec_id") +: books.map(_._1): _*)
         .collect()
-      val next = cents.map(_.clone()) // empty clusters keep previous
-      sums.foreach { row =>
-        next(row.getLong(0).toInt)(row.getInt(1)) =
-          row.getLong(2) / row.getLong(3)
+        .sortBy(r => (r.getLong(0), r.getLong(1)))
+      var cents = books.indices.map { b =>
+        seedRows.take(books(b)._2).map(_.getSeq[Long](b + 2).toArray)
       }
-      cents = next
-      r += 1
+      var r = 0
+      while (r < rounds) {
+        val assigned = books.indices.map { b =>
+          struct(lit(b).as("book"),
+            kmeansAssignMilli(books(b)._1, cents(b)).as("cluster"),
+            books(b)._1.as("x"))
+        }
+        val sums = vm.select(explode(array(assigned: _*)).as("p"))
+          .select(col("p.book").as("book"), col("p.cluster").as("cluster"),
+            posexplode(col("p.x")).as(Seq("i", "v")))
+          .groupBy("book", "cluster", "i")
+          .agg(sum("v").as("s"), count(lit(1)).as("cnt"))
+          .collect()
+        // empty clusters keep their previous centroid
+        val next = cents.map(_.map(_.clone()))
+        sums.foreach { row =>
+          next(row.getInt(0))(row.getLong(1).toInt)(row.getInt(2)) =
+            row.getLong(3) / row.getLong(4)
+        }
+        cents = next
+        r += 1
+      }
+      cents
     }
-    cents
-  }
 
   /** IVF ANN under an explicit integer codebook: every vector assigned
     * by the zero-shuffle literal-codebook projection, the query probed
@@ -561,19 +587,41 @@ object SimilarityOps {
     *
     * Scale shape: recall evaluation is always over a SAMPLED query set,
     * so the scored relation is |corpus| × Q — the same broadcast-query
-    * projection as [[SimilarityQueries.qAnnBatch]], cached once for the
-    * truth and candidate passes. Probe ranks are a Q × nCentroids
-    * driver table (the same [[probeClusters]] math, one bounded
-    * collect), broadcast back; every ranking is a per-(query, nProbe)
-    * window over candidates only.
+    * projection as [[SimilarityQueries.qAnnBatch]], read by the
+    * [[probeGrid]] every recall curve shares; every ranking is a
+    * per-(query, nProbe) window over candidates only.
     */
   def annRecall(emb: DataFrame, queryMax: Long,
                 cents: Array[Array[Long]], nProbes: Seq[Int],
                 k: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val queries = emb.filter(col("vec_id") < queryMax)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    probeGrid(emb, queries, cents, nProbes, k)._2
+      .select(col("query_id"), col("nprobe"), col("hits"),
+        micro(col("hits") / lit(k)).as("recall_micro"))
+  }
+
+  /** The IVF probe grid the recall curves share, with the probe width
+    * as a column: every (query, nprobe) of `queries` (`query_id`, `qe`)
+    * × `nProbes` in one plan, each width's top-k ranked only over its
+    * own candidates, so every row equals a per-width run.
+    *
+    * `scored` (corpus × queries, one cosine scan) is pinned `cached`
+    * for the truth and candidate passes. Probe ranks are a
+    * Q × nCentroids driver table (the [[probeClusters]] math, one
+    * bounded collect of the query embeddings), broadcast back.
+    * Returns the candidate relation (`scored` ⋈ probe ranks within
+    * each nprobe; `pinCand` pins it when a caller reads it twice) and
+    * the (`query_id`, `nprobe`, `hits`) grid, hits 0 where no top-k
+    * candidate is a true neighbor.
+    */
+  private def probeGrid(emb: DataFrame, queries: DataFrame,
+                        cents: Array[Array[Long]], nProbes: Seq[Int],
+                        k: Int,
+                        pinCand: DataFrame => DataFrame = identity)
+      : (DataFrame, DataFrame) = {
+    val spark = emb.sparkSession
+    import spark.implicits._
     val scored = emb
       .select(col("vec_id"), col("embedding"),
         assignCluster(col("embedding"), cents).as("cluster"))
@@ -582,10 +630,7 @@ object SimilarityOps {
       .select(col("query_id"), col("vec_id"), col("cluster"),
         micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
       .transform(Materialize.cached)
-    // probe ranking per query: Q × nCentroids, same integer score math
-    // as assignment — one bounded collect of the query embeddings
-    val qvm = emb.filter(col("vec_id") < queryMax)
-      .select(col("vec_id"), milliVec(col("embedding")).as("vm"))
+    val qvm = queries.select(col("query_id"), milliVec(col("qe")))
       .collect()
     val prank = qvm.toSeq.flatMap { r =>
       val vm = r.getSeq[Long](1).toArray
@@ -602,19 +647,18 @@ object SimilarityOps {
       df.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") <= k).drop("__rn")
     }
+    val cand = scored.join(broadcast(prank), Seq("query_id", "cluster"))
+      .crossJoin(broadcast(np))
+      .filter(col("prank") <= col("nprobe"))
+      .transform(pinCand)
     val truth = topk(scored, Seq("query_id")).select("query_id", "vec_id")
-    val ann = topk(
-      scored.join(broadcast(prank), Seq("query_id", "cluster"))
-        .crossJoin(broadcast(np))
-        .filter(col("prank") <= col("nprobe")),
-      Seq("query_id", "nprobe"))
-    val hits = ann.join(truth, Seq("query_id", "vec_id"))
+    val hits = topk(cand, Seq("query_id", "nprobe"))
+      .join(truth, Seq("query_id", "vec_id"))
       .groupBy("query_id", "nprobe").agg(count(lit(1)).as("hits"))
-    queries.select("query_id").crossJoin(broadcast(np))
+    val grid = queries.select("query_id").crossJoin(broadcast(np))
       .join(hits, Seq("query_id", "nprobe"), "left")
-      .select(col("query_id"), col("nprobe"),
-        coalesce(col("hits"), lit(0L)).as("hits"),
-        micro(coalesce(col("hits"), lit(0L)) / lit(k)).as("recall_micro"))
+      .withColumn("hits", coalesce(col("hits"), lit(0L)))
+    (cand, grid)
   }
 
   /** V52: sampled-truth IVF recall audit — the 100 TB protocol for
@@ -643,15 +687,12 @@ object SimilarityOps {
     * Scale shape: the scored relation is |corpus| × Q with Q =
     * sampleQ REGARDLESS of corpus size (vs annRecall's corpus-
     * dependent prefix) — the sample is a bounded TakeOrdered on the
-    * hash rank, broadcast into the one corpus scan; probe ranks ride
-    * the same bounded driver table as annRecall; output is
-    * |nProbes| rows.
+    * hash rank, broadcast into the one corpus scan of the same
+    * [[probeGrid]] as annRecall; output is |nProbes| rows.
     */
   def annRecallSampled(emb: DataFrame, sampleQ: Int,
                        cents: Array[Array[Long]], nProbes: Seq[Int],
                        k: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val qids = emb.select(col("vec_id"),
         graft.functions.Hashing.md5Long(
           concat(lit("rs:"), col("vec_id").cast("string"))).as("h"))
@@ -659,47 +700,7 @@ object SimilarityOps {
       .select("vec_id")
     val queries = emb.join(broadcast(qids), "vec_id")
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val scored = emb
-      .select(col("vec_id"), col("embedding"),
-        assignCluster(col("embedding"), cents).as("cluster"))
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cluster"),
-        micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .transform(Materialize.cached)
-    // bounded driver state: sampleQ ids, then sampleQ query embeddings
-    val qset = qids.collect().map(_.getLong(0)).toSeq
-    val qvm = emb.filter(col("vec_id").isin(qset: _*))
-      .select(col("vec_id"), milliVec(col("embedding")).as("vm"))
-      .collect()
-    val prank = qvm.toSeq.flatMap { r =>
-      val vm = r.getSeq[Long](1).toArray
-      cents.indices.sortBy(j => (-centScoreLocal(vm, cents(j)), j))
-        .zipWithIndex.map { case (j, rank) =>
-          (r.getLong(0), j.toLong, (rank + 1).toLong)
-        }
-    }.toDF("query_id", "cluster", "prank")
-    val np = nProbes.map(_.toLong).toDF("nprobe")
-    def topk(df: DataFrame, parts: Seq[String]) = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(parts.map(col): _*)
-        .orderBy(col("cos_micro").desc, col("vec_id"))
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k).drop("__rn")
-    }
-    val truth = topk(scored, Seq("query_id"))
-      .select("query_id", "vec_id")
-    val ann = topk(
-      scored.join(broadcast(prank), Seq("query_id", "cluster"))
-        .crossJoin(broadcast(np))
-        .filter(col("prank") <= col("nprobe")),
-      Seq("query_id", "nprobe"))
-    val hits = ann.join(truth, Seq("query_id", "vec_id"))
-      .groupBy("query_id", "nprobe").agg(count(lit(1)).as("hits"))
-    val pooled = queries.select("query_id").crossJoin(broadcast(np))
-      .join(hits, Seq("query_id", "nprobe"), "left")
-      .select(col("nprobe"),
-        coalesce(col("hits"), lit(0L)).as("hits"))
+    val pooled = probeGrid(emb, queries, cents, nProbes, k)._2
       .groupBy("nprobe")
       .agg(count(lit(1)).as("n_queries"), sum("hits").as("hits"))
       .select(col("nprobe"), col("n_queries"),
@@ -729,71 +730,31 @@ object SimilarityOps {
     * q_graph_ann's visited-count discipline). Together the two columns
     * are the knee plot that picks nProbe in production.
     *
-    * Scale shape: identical to [[annRecall]] (one scored corpus scan
-    * cached for truth + candidates; probe ranks a bounded broadcast);
-    * the visited census is one extra partial agg over the SAME
-    * candidate relation the top-k already reads.
+    * Scale shape: [[annRecall]]'s [[probeGrid]], with its candidate
+    * relation pinned `cached`: the visited census is one extra partial
+    * agg over the SAME candidate relation the top-k already reads.
     */
   def ivfCostCurve(emb: DataFrame, queryMax: Long,
                    cents: Array[Array[Long]], nProbes: Seq[Int],
                    k: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val queries = emb.filter(col("vec_id") < queryMax)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val scored = emb
-      .select(col("vec_id"), col("embedding"),
-        assignCluster(col("embedding"), cents).as("cluster"))
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cluster"),
-        micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .transform(Materialize.cached)
-    val qvm = emb.filter(col("vec_id") < queryMax)
-      .select(col("vec_id"), milliVec(col("embedding")).as("vm"))
-      .collect()
-    val prank = qvm.toSeq.flatMap { r =>
-      val vm = r.getSeq[Long](1).toArray
-      cents.indices.sortBy(j => (-centScoreLocal(vm, cents(j)), j))
-        .zipWithIndex.map { case (j, rank) =>
-          (r.getLong(0), j.toLong, (rank + 1).toLong)
-        }
-    }.toDF("query_id", "cluster", "prank")
-    val np = nProbes.map(_.toLong).toDF("nprobe")
-    def topk(df: DataFrame, parts: Seq[String]) = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(parts.map(col): _*)
-        .orderBy(col("cos_micro").desc, col("vec_id"))
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k).drop("__rn")
-    }
-    val cand = scored.join(broadcast(prank), Seq("query_id", "cluster"))
-      .crossJoin(broadcast(np))
-      .filter(col("prank") <= col("nprobe"))
-      .transform(Materialize.cached)
+    val (cand, grid) =
+      probeGrid(emb, queries, cents, nProbes, k, Materialize.cached)
     val visited = cand.groupBy("query_id", "nprobe")
       .agg(count(lit(1)).as("visited"))
-    val truth = topk(scored, Seq("query_id"))
-      .select("query_id", "vec_id")
-    val hits = topk(cand, Seq("query_id", "nprobe"))
-      .join(truth, Seq("query_id", "vec_id"))
-      .groupBy("query_id", "nprobe").agg(count(lit(1)).as("hits"))
     val nCorpus = emb.agg(count(lit(1)).as("n_corpus"))
     // The curve is bounded (queries × nProbes rows): materialize it
     // eagerly, so the returned plan reads only the curve and not the
     // corpus-sized pins (scored, cand).
-    val curve = queries.select("query_id").crossJoin(broadcast(np))
-      .join(visited, Seq("query_id", "nprobe"), "left")
-      .join(hits, Seq("query_id", "nprobe"), "left")
+    grid.join(visited, Seq("query_id", "nprobe"), "left")
       .crossJoin(broadcast(nCorpus))
       .withColumn("visited", coalesce(col("visited"), lit(0L)))
-      .withColumn("hits", coalesce(col("hits"), lit(0L)))
       .select(col("query_id"), col("nprobe"), col("visited"),
         expr("(1000000 * visited) div (n_corpus - 1)")
           .as("visited_ppm"),
         col("hits"), micro(col("hits") / lit(k)).as("recall_micro"))
       .transform(Materialize.shared)
-    curve
   }
 
   /** Embedding-space data mix: cluster the corpus with the trained
@@ -834,22 +795,21 @@ object SimilarityOps {
 
   /** Product-quantization codebooks (Jégou et al., TPAMI 2011): one
     * deterministic integer k-means codebook per contiguous `subLen`-dim
-    * subspace — the [[kmeansCodebook]] trainer applied to each slice,
+    * subspace — one [[lloydBooks]] training with one book per slice,
     * so the whole PQ trajectory inherits its exactness (md5 seeding,
-    * milli components, truncated-integer-mean refresh). The seed DRAW
-    * is vec_id-hash based and therefore shared by all subspaces; the
-    * seed VALUES differ per slice.
+    * milli components, truncated-integer-mean refresh) and every book
+    * equals [[kmeansCodebook]] over its own slice. The seed DRAW is
+    * vec_id-hash based and therefore shared by all subspaces; the seed
+    * VALUES differ per slice.
     */
   def pqCodebooks(emb: DataFrame, nSub: Int, subLen: Int, nCents: Int,
                   rounds: Int = KmRounds): Seq[Array[Array[Long]]] =
-    // subspace trainings are independent — overlap their collect-round
-    // jobs (Materialize.concurrently; each codebook's math and the
-    // output order are unchanged)
-    Materialize.concurrently(0 until nSub) { j =>
-      kmeansCodebook(emb.select(col("vec_id"),
-        slice(col("embedding"), j * subLen + 1, subLen).as("embedding")),
-        nCents, rounds)
-    }
+    lloydBooks(emb.select(col("vec_id"), milliVec(col("embedding")).as("vm")),
+      subspaces("vm", nSub, subLen).map((_, nCents)), rounds)
+
+  /** The `nSub` contiguous `subLen`-long slices of array column `c`. */
+  private def subspaces(c: String, nSub: Int, subLen: Int): Seq[Column] =
+    (0 until nSub).map(j => slice(col(c), j * subLen + 1, subLen))
 
   /** PQ encoding: each vector compressed to `nSub` sub-centroid ids —
     * for the production 4-bit-to-8-bit code widths this is the 64×-256×
@@ -1001,44 +961,6 @@ object SimilarityOps {
       .limit(k)
   }
 
-  /** [[kmeansCodebook]] over an ALREADY-MILLI vector column `vm`
-    * (`array<bigint>`) — the residual-domain trainer: residuals
-    * r = milli(v) − centroid are integer by construction, so the
-    * float path's milli step must not run again. Identical training
-    * discipline: md5-seeded init, truncated-integer-mean refresh,
-    * empty clusters keep their previous centroid, the collected state
-    * is only the nCentroids×dims mean table.
-    */
-  def kmeansCodebookMilli(vmDf: DataFrame, nCentroids: Int,
-                          rounds: Int): Array[Array[Long]] = {
-    import graft.functions.KmeansAssignMilli.kmeansAssignMilli
-    val vm = vmDf.transform(Materialize.cached)
-    val seedRows = vm
-      .withColumn("h", graft.functions.Hashing.md5Long(
-        concat(lit("km:"), col("vec_id").cast("string"))))
-      .orderBy(col("h"), col("vec_id")).limit(nCentroids)
-      .select("h", "vec_id", "vm").collect()
-      .sortBy(r => (r.getLong(0), r.getLong(1)))
-    var cents = seedRows.map(_.getSeq[Long](2).toArray)
-    var r = 0
-    while (r < rounds) {
-      val sums = vm
-        .select(kmeansAssignMilli(col("vm"), cents).as("cluster"),
-          posexplode(col("vm")).as(Seq("i", "v")))
-        .groupBy("cluster", "i")
-        .agg(sum("v").as("s"), count(lit(1)).as("cnt"))
-        .collect()
-      val next = cents.map(_.clone())
-      sums.foreach { row =>
-        next(row.getLong(0).toInt)(row.getInt(1)) =
-          row.getLong(2) / row.getLong(3)
-      }
-      cents = next
-      r += 1
-    }
-    cents
-  }
-
   /** V26: residual IVF-PQ (IVFADC, Jégou et al. §IV) — the actual
     * FAISS serving architecture, one step past V10's raw-vector PQ:
     * the coarse quantizer (IVF codebook) removes each vector's
@@ -1079,18 +1001,12 @@ object SimilarityOps {
       .withColumn("rm", zip_with(col("vm"),
         element_at(centsLit, col("cluster").cast("int") + 1),
         (a, b) => a - b))
-      // eager BEFORE the concurrent subspace trainings: a lazy cache
-      // would race and rebuild resid once per thread
       .transform(Materialize.shared)
-    val books = Materialize.concurrently(0 until nSub) { j =>
-      kmeansCodebookMilli(
-        resid.select(col("vec_id"),
-          slice(col("rm"), j * subLen + 1, subLen).as("vm")),
-        nCents, rounds)
-    }
-    val codes = books.zipWithIndex.map { case (b, j) =>
-      kmeansAssignMilli(slice(col("rm"), j * subLen + 1, subLen), b)
-        .as(s"code$j")
+    // residuals are integer by construction: train in the milli domain
+    val books = lloydBooks(resid.select(col("vec_id"), col("rm").as("vm")),
+      subspaces("vm", nSub, subLen).map((_, nCents)), rounds)
+    val codes = subspaces("rm", nSub, subLen).zip(books).zipWithIndex.map {
+      case ((x, b), j) => kmeansAssignMilli(x, b).as(s"code$j")
     }
     val probed = probeClusters(emb, cents, queryId, nProbe)
     val qm = emb.filter(col("vec_id") === queryId)
@@ -1241,9 +1157,8 @@ object SimilarityOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("dot").desc, col("vec_id"))
-    // the fused MilliDotProduct codegen kernel — same integers as the
-    // former aggregate(zip_with(milliVec, milliVec)) tower, which was
-    // CodegenFallback on the n×Q truth scan (VERDICT r14 item 2 class)
+    // the fused MilliDotProduct codegen kernel: one exact long dot per
+    // (query, vector) pair of the n×Q truth scan
     emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -1265,39 +1180,30 @@ object SimilarityOps {
   def pqRecallCurve(emb: DataFrame, nCentsList: Seq[Int], nSub: Int,
                     subLen: Int, queryMax: Long, k: Int): DataFrame = {
     // ONE materialized copy of the vectors feeds everything: the truth
-    // pass, every training job, the encodes and the query collects, so
+    // pass, the training, the encodes and the query collects, so
     // the vectors are scanned from parquet exactly once.
     val embM = Materialize.shared(emb.select(col("vec_id"),
       col("embedding")))
-    // eagerly materialized: the budget points consume it CONCURRENTLY
-    // — a lazy cache would race and recompute the truth scan per thread
     val truth = pqTruth(embM, queryMax, k).transform(Materialize.shared)
     val queries = embM.filter(col("vec_id") < queryMax)
       .select(col("vec_id").as("query_id"))
-    // every (budget, subspace) training is independent — ONE flat
-    // concurrently over the cross product (§2.6), no nested pools
-    val trainings = for (nc <- nCentsList; j <- 0 until nSub)
-      yield (nc, j)
-    val trained = trainings.zip(
-      Materialize.concurrently(trainings) { case (nc, j) =>
-        kmeansCodebook(embM.select(col("vec_id"),
-          slice(col("embedding"), j * subLen + 1, subLen).as("embedding")),
-          nc, KmRounds)
-      }).toMap
-    // the remaining per-budget work (query collect + lazy plan build)
-    // still overlaps the tail of other budgets' jobs
-    val perBudget = Materialize.concurrently(nCentsList) { nc =>
-      val books = (0 until nSub).map(j => trained((nc, j)))
-      val ann = pqAdcBatch(embM, books, subLen, queryMax, k)
-        .select("query_id", "vec_id")
-      val hits = ann.join(truth, Seq("query_id", "vec_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      queries
-        .join(hits, Seq("query_id"), "left")
-        .select(lit(nc.toLong).as("n_cents"), col("query_id"),
-          coalesce(col("hits"), lit(0L)).as("hits"),
-          micro(coalesce(col("hits"), lit(0L)) / lit(k))
-            .as("recall_micro"))
+    // every (budget, subspace) book in one training, budget-major
+    val trained = lloydBooks(
+      embM.select(col("vec_id"), milliVec(col("embedding")).as("vm")),
+      nCentsList.flatMap(nc => subspaces("vm", nSub, subLen).map((_, nc))),
+      KmRounds)
+    val perBudget = nCentsList.zip(trained.grouped(nSub).toSeq).map {
+      case (nc, books) =>
+        val ann = pqAdcBatch(embM, books, subLen, queryMax, k)
+          .select("query_id", "vec_id")
+        val hits = ann.join(truth, Seq("query_id", "vec_id"))
+          .groupBy("query_id").agg(count(lit(1)).as("hits"))
+        queries
+          .join(hits, Seq("query_id"), "left")
+          .select(lit(nc.toLong).as("n_cents"), col("query_id"),
+            coalesce(col("hits"), lit(0L)).as("hits"),
+            micro(coalesce(col("hits"), lit(0L)) / lit(k))
+              .as("recall_micro"))
     }
     perBudget.reduce(_ unionByName _)
   }
@@ -1757,63 +1663,14 @@ object SimilarityOps {
   /** V35 beam search over a PREBUILT edge relation — the store-backed
     * serving path: the graph was persisted once
     * ([[graft.sources.VectorStore.saveGraph]]) and every session
-    * reads it; only beam-sized relations move per round. Output ≡
-    * [[graphAnn]] under the same edges (spec-pinned).
+    * reads it; only beam-sized relations move per round. The one-width
+    * case of [[graphAnnSweepFrom]].
     */
   def graphAnnFrom(embs: DataFrame, edges: DataFrame, queryMax: Long,
                    beamW: Int, rounds: Int, k: Int,
-                   nSeeds: Int): DataFrame = {
-    val qs = embs.filter(col("vec_id") < queryMax)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    // query-vs-corpus scores: needed for brute-force truth anyway (the
-    // eval protocol); the beam reads its candidate scores off it — a
-    // deployment scores candidates on demand, bounded per round
-    val qscore = embs.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        micro(cosineSim(col("embedding"), col("qe"))).as("cos_micro"))
-      .transform(Materialize.shared)
-    val seeds = embs.select(col("vec_id"))
-      .withColumn("h", graft.functions.Hashing.md5Long(
-        concat(lit("km:"), col("vec_id").cast("string"))))
-      .orderBy("h", "vec_id").limit(nSeeds).select("vec_id")
-    val wQ = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos_micro").desc, col("vec_id"))
-    val entry = qscore.join(broadcast(seeds), Seq("vec_id"))
-      .withColumn("rn", row_number().over(wQ))
-      .filter(col("rn") === 1)
-      .select("query_id", "vec_id")
-    var visited = entry
-    var beam = entry
-    for (_ <- 1 to rounds) {
-      val frontier = beam.as("b")
-        .join(edges.as("g"), col("b.vec_id") === col("g.d1"))
-        .select(col("b.query_id").as("query_id"),
-          col("g.d2").as("vec_id"))
-        .filter(col("vec_id") =!= col("query_id"))
-      visited = visited.union(frontier).distinct()
-        .transform(Materialize.shared)
-      beam = visited.join(qscore, Seq("query_id", "vec_id"))
-        .withColumn("rn", row_number().over(wQ))
-        .filter(col("rn") <= beamW)
-        .select("query_id", "vec_id")
-    }
-    val ans = visited.join(qscore, Seq("query_id", "vec_id"))
-      .withColumn("rn", row_number().over(wQ))
-      .filter(col("rn") <= k)
-      .select("query_id", "vec_id")
-    val truth = qscore.withColumn("rn", row_number().over(wQ))
-      .filter(col("rn") <= k).select("query_id", "vec_id")
-    val hits = ans.join(truth, Seq("query_id", "vec_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-    visited.groupBy("query_id").agg(count(lit(1)).as("n_visited"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"), col("n_visited"),
-        coalesce(col("hits"), lit(0L)).as("hits"))
-      .withColumn("recall_micro", expr(s"(hits * 1000000) div $k"))
-      .orderBy("query_id")
-  }
+                   nSeeds: Int): DataFrame =
+    graphAnnSweepFrom(embs, edges, queryMax, Seq(beamW), rounds, k, nSeeds)
+      .drop("beam_w")
 
   /** V46: graph-ANN beam-width cost/recall curve — the serving-dial
     * table for the V35 graph index, completing the story V38's
@@ -1842,14 +1699,23 @@ object SimilarityOps {
       queryMax, beams, rounds, k, nSeeds)
 
   /** V46 beam sweep over a PREBUILT edge relation — the store-backed
-    * tuning path (the [[graphAnnFrom]] contract): the sweep costs
-    * Σ beams only, the index is read.
+    * tuning path: the index is read, not built. The beam width is a
+    * column: `visited` and `beam` carry (beam_w, query_id, vec_id), the
+    * beam re-rank partitions by (beam_w, query_id), and each round is
+    * one frontier job and one checkpoint for every width; a width's
+    * frontier expands only its own beam, so its rows equal a run at
+    * that width alone. One row per distinct width and query.
     */
   def graphAnnSweepFrom(embs: DataFrame, edges: DataFrame,
                         queryMax: Long, beams: Seq[Int], rounds: Int,
                         k: Int, nSeeds: Int): DataFrame = {
+    val spark = embs.sparkSession
+    import spark.implicits._
     val qs = embs.filter(col("vec_id") < queryMax)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    // query-vs-corpus scores: needed for brute-force truth anyway (the
+    // eval protocol); the beam reads its candidate scores off it — a
+    // deployment scores candidates on demand, bounded per round
     val qscore = embs.crossJoin(broadcast(qs))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -1859,49 +1725,46 @@ object SimilarityOps {
       .withColumn("h", graft.functions.Hashing.md5Long(
         concat(lit("km:"), col("vec_id").cast("string"))))
       .orderBy("h", "vec_id").limit(nSeeds).select("vec_id")
-    val wQ = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
+    def byCos(parts: String*) = org.apache.spark.sql.expressions.Window
+      .partitionBy(parts.map(col): _*)
       .orderBy(col("cos_micro").desc, col("vec_id"))
     val entry = qscore.join(broadcast(seeds), Seq("vec_id"))
-      .withColumn("rn", row_number().over(wQ))
+      .withColumn("rn", row_number().over(byCos("query_id")))
       .filter(col("rn") === 1)
       .select("query_id", "vec_id")
-      .transform(Materialize.shared)
-    val truth = qscore.withColumn("rn", row_number().over(wQ))
+    val truth = qscore.withColumn("rn", row_number().over(byCos("query_id")))
       .filter(col("rn") <= k).select("query_id", "vec_id")
-      .transform(Materialize.shared)
-    // beam widths are independent over the same checkpointed inputs —
-    // overlap their round-checkpoint chains (§2.6)
-    val perBeam = Materialize.concurrently(beams) { bw =>
-      var visited = entry
-      var beam = entry
-      for (_ <- 1 to rounds) {
-        val frontier = beam.as("b")
-          .join(edges.as("g"), col("b.vec_id") === col("g.d1"))
-          .select(col("b.query_id").as("query_id"),
-            col("g.d2").as("vec_id"))
-          .filter(col("vec_id") =!= col("query_id"))
-        visited = visited.union(frontier).distinct()
+    // (beam_w, query_id, vec_id) re-ranked within each width's query
+    def ranked(df: DataFrame) = df.join(qscore, Seq("query_id", "vec_id"))
+      .withColumn("rn", row_number().over(byCos("beam_w", "query_id")))
+    var visited = entry.crossJoin(broadcast(beams.distinct.map(_.toLong)
+        .toDF("beam_w")))
+      .select("beam_w", "query_id", "vec_id")
+    var beam = visited
+    for (_ <- 1 to rounds) {
+      val frontier = beam.as("b")
+        .join(edges.as("g"), col("b.vec_id") === col("g.d1"))
+        .select(col("b.beam_w").as("beam_w"),
+          col("b.query_id").as("query_id"), col("g.d2").as("vec_id"))
+        .filter(col("vec_id") =!= col("query_id"))
+      visited = visited.union(frontier).distinct()
         .transform(Materialize.shared)
-        beam = visited.join(qscore, Seq("query_id", "vec_id"))
-          .withColumn("rn", row_number().over(wQ))
-          .filter(col("rn") <= bw)
-          .select("query_id", "vec_id")
-      }
-      val ans = visited.join(qscore, Seq("query_id", "vec_id"))
-        .withColumn("rn", row_number().over(wQ))
-        .filter(col("rn") <= k)
-        .select("query_id", "vec_id")
-      val hits = ans.join(truth, Seq("query_id", "vec_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      visited.groupBy("query_id").agg(count(lit(1)).as("n_visited"))
-        .join(hits, Seq("query_id"), "left")
-        .select(lit(bw.toLong).as("beam_w"), col("query_id"),
-          col("n_visited"),
-          coalesce(col("hits"), lit(0L)).as("hits"))
-        .withColumn("recall_micro", expr(s"(hits * 1000000) div $k"))
+      // the literal bound lets Spark cut each window group to the
+      // widest beam before its shuffle
+      beam = ranked(visited)
+        .filter(col("rn") <= beams.max && col("rn") <= col("beam_w"))
+        .select("beam_w", "query_id", "vec_id")
     }
-    perBeam.reduce(_ unionByName _).orderBy("beam_w", "query_id")
+    val hits = ranked(visited)
+      .filter(col("rn") <= k)
+      .join(truth, Seq("query_id", "vec_id"))
+      .groupBy("beam_w", "query_id").agg(count(lit(1)).as("hits"))
+    visited.groupBy("beam_w", "query_id").agg(count(lit(1)).as("n_visited"))
+      .join(hits, Seq("beam_w", "query_id"), "left")
+      .select(col("beam_w"), col("query_id"), col("n_visited"),
+        coalesce(col("hits"), lit(0L)).as("hits"))
+      .withColumn("recall_micro", expr(s"(hits * 1000000) div $k"))
+      .orderBy("beam_w", "query_id")
   }
 
   /** V32's discount weight at rank i: floor(1e6 · ln 2 / ln(i+1)) —
@@ -2527,19 +2390,21 @@ object SimilarityOps {
     * blocking deployment makes — as an oracled census instead of a
     * rule of thumb.
     *
-    * Each k trains its own codebook through [[kmeansCodebook]] (the
-    * deterministic md5-seeded integer trainer), so the oracle replays
-    * every trajectory via chained CTEs — the q_pq_recall discipline.
+    * Each k is one book of a single [[lloydBooks]] training (the
+    * deterministic md5-seeded integer trainer; every book equals
+    * [[kmeansCodebook]] at its k), so the oracle replays every
+    * trajectory via chained CTEs — the q_pq_recall discipline.
     *
     * Scale shape: per k, ONE corpus scan through the compiled
     * assign/score kernels into a (cluster) partial agg; the curve is
-    * a ks.length-row union of 1-row rollups. Training cost is the
-    * documented per-k driver loop (bounded codebook tables).
+    * a ks.length-row union of 1-row rollups. Training is one job per
+    * round for every k (bounded codebook tables).
     */
   def kmeansElbow(emb: DataFrame, ks: Seq[Int], rounds: Int)
   : DataFrame =
-    ks.map { k =>
-      val cents = kmeansCodebook(emb, k, rounds)
+    ks.zip(lloydBooks(
+        emb.select(col("vec_id"), milliVec(col("embedding")).as("vm")),
+        ks.map((col("vm"), _)), rounds)).map { case (k, cents) =>
       emb.select(
         assignCluster(col("embedding"), cents).as("cluster"),
         graft.functions.KmeansScore.kmeansScore(col("embedding"), cents)
@@ -2564,8 +2429,7 @@ object SimilarityOps {
     * [[graft.functions.CosineSimilarity]] kernel as the raw floats.
     */
   def int8CodeVec(e: Column): Column =
-    // fused absmax fold + quantize transform (both were CodegenFallback
-    // HOFs) — one codegen pass, identical codes (VERDICT r14 item 2)
+    // fused absmax fold + quantize: one codegen pass
     graft.functions.vector.int8Codes(e).cast("array<float>")
 
   /** V53: per-vector SQ8 angular-fidelity census — the distortion
@@ -2589,10 +2453,9 @@ object SimilarityOps {
     * Scale shape: one zero-shuffle projection pass into ONE ≤6-row
     * bucket census Exchange — the worst-vector exemplar (the (fid,
     * vec_id) lexicographic min) rides the SAME aggregate as a
-    * struct-min, so the corpus is scanned exactly once (the r15
-    * cache-then-rejoin form scanned twice and leaked a cached frame
-    * per invocation — ADVICE r15). DuckDB has no composite-ordering
-    * min_by, so the oracle keeps its join formulation; both reduce to
+    * struct-min, so the corpus is scanned exactly once. DuckDB has no
+    * composite-ordering min_by, so the oracle keeps its join
+    * formulation; both reduce to
     * "min vec_id among the bucket's min-fid rows".
     */
   def sq8FidelityCensus(emb: DataFrame): DataFrame = {
@@ -3011,7 +2874,7 @@ object SimilarityOps {
     * rollups are EXACT integer aggregates; the corpus row is the
     * integer SUM of the label censuses (never a second scan). ‖S‖² is
     * per-dim floor((S_d)²) in milli² (S_d promoted to double before
-    * squaring — the ADVICE-r11 rule; exact to ~3·10⁶ vectors/label,
+    * squaring; exact to ~3·10⁶ vectors/label,
     * documented, DuckDB errors identically past it) summed as
     * INTEGERS, and the mean cosine is ONE micro-floored double tree
     * over (pairsum, n). Zero-norm rows are excluded before
@@ -3025,9 +2888,7 @@ object SimilarityOps {
     * identity IS the scale design.
     */
   def anisotropyCensus(emb: DataFrame): DataFrame = {
-    // the milli-quantize + ssq-fold + normalize tower fused into ONE
-    // codegen projection (VERDICT r14 item 2 — the former aggregate +
-    // transform HOFs were CodegenFallback and dominated wall time);
+    // milli-quantize + ssq-fold + normalize in ONE codegen projection;
     // null = the ssq > 0 exclusion, folded into the kernel
     val m = emb.select(col("label").cast("long").as("label"),
         graft.functions.vector.milliUnitVec(col("embedding")).as("q"))

@@ -31,7 +31,6 @@ class MaterializeSpec extends SparkSpec {
   test("each query run releases its pins: persistent RDDs and CacheManager " +
       "are back at baseline after every run, in Verify and in Bench") {
     // one query per operator family, each pinning through both forms
-    // or through the concurrently pool
     val picks = Seq("q_dedup_clusters", "q_pq_residual", "q_media_dedup",
       "q_hill", "q_heavy")
     spark.catalog.clearCache()
@@ -92,16 +91,8 @@ class MaterializeSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $store")
   }
 
-  test("a scope releases the pins of its concurrently threads, and only " +
-      "its own") {
+  test("a scope releases only the pins made on its own thread") {
     val base = rdds
-    Materialize.scoped {
-      Materialize.concurrently(Seq(10L, 20L, 30L)) { n =>
-        Materialize.shared(spark.range(n).toDF()).count()
-      }
-      assert((rdds -- base).size === 3)
-    }
-    assert((rdds -- base).isEmpty)
 
     // two overlapping scopes on two threads: B ends while A still reads
     val aPinned = new CountDownLatch(1)
@@ -117,6 +108,19 @@ class MaterializeSpec extends SparkSpec {
     bReleased.countDown()
     assert(Await.result(a, 2.minutes) === 4950L)
     assert((rdds -- base).isEmpty)
+
+    // a thread the scope starts does not inherit it: its pin is unscoped
+    var spawned: org.apache.spark.sql.DataFrame = null
+    Materialize.scoped {
+      val t = new Thread(() =>
+        spawned = Materialize.shared(spark.range(20).toDF("id")))
+      t.start()
+      t.join()
+    }
+    assert((rdds -- base).size === 1)
+    assert(spawned.as[Long].collect().sum === 190L)
+    (rdds -- base).foreach(id =>
+      spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
   }
 
   test("cached re-pins idempotently; an unscoped pin outlives any scope") {

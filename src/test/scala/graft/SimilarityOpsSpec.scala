@@ -419,6 +419,16 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(books.forall(_.forall(_.length === 16)))
     // books differ across subspaces (values, not just ids)
     assert(books.map(_.head.toSeq).distinct.length === 4)
+    // trained side by side, each book is still its own slice's codebook
+    books.zipWithIndex.foreach { case (book, j) =>
+      val alone = SimilarityOps.kmeansCodebook(e.select(
+        org.apache.spark.sql.functions.col("vec_id"),
+        org.apache.spark.sql.functions.slice(
+          org.apache.spark.sql.functions.col("embedding"), j * 16 + 1, 16)
+          .as("embedding")), 8, SimilarityOps.KmRounds)
+      assert(book.map(_.toSeq).toSeq === alone.map(_.toSeq).toSeq,
+        s"subspace $j")
+    }
     val codes = SimilarityOps.pqEncode(e, books, 16)
     assert(codes.columns.toSeq ===
       Seq("vec_id", "code0", "code1", "code2", "code3"))
@@ -1303,6 +1313,13 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(out.toSeq === Seq(
       (0L, 1L, 2L, 400000L, 2L, 1000000L),
       (0L, 2L, 5L, 1000000L, 2L, 1000000L)))
+    // its recall columns are annRecall's on the same inputs
+    val recall = SimilarityOps
+      .annRecall(e, queryMax = 1L, cents, Seq(1, 2), k = 2)
+      .orderBy("nprobe").collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("nprobe"),
+        r.getAs[Long]("hits"), r.getAs[Long]("recall_micro")))
+    assert(out.map(t => (t._1, t._2, t._5, t._6)).toSeq === recall.toSeq)
   }
 
   test("dbscan: core density, border adoption, cross-component " +

@@ -8,31 +8,53 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `graft.operators.Materialize` is the only module that pins or unpins
   * a relation: no other main source calls the Dataset/RDD persistence
-  * API or clears the session's caches behind its back.
+  * API or clears the session's caches behind its back. And no main
+  * source runs driver-side jobs on a thread pool: a sweep is a column
+  * of one plan, and a pin's scope is the thread that opened it.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val Forbidden = Seq(".cache()", ".persist(", "localCheckpoint(",
     "unpersist(", "clearCache", "getPersistentRDDs")
 
+  // a single dedicated `Thread` (the sbs1 reader) is not a pool
+  private val PoolTokens = Seq("Executors\\.", "ExecutionContext\\.from",
+    "Future\\(", "\\.par\\b").map(_.r)
+
+  private def mainSources(keep: Path => Boolean): List[Path] = {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && keep(p)).toList
+    finally walk.close()
+  }
+
+  // (file, 1-based line number, line) of every non-comment line
+  private def codeLines(files: List[Path]) = for {
+    f <- files
+    (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    t = line.trim
+    if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+  } yield (f, i + 1, line)
+
   test("no pin or unpin outside Materialize.scala (comment lines skipped)") {
-    val root = Paths.get("src/main/scala")
-    val files = {
-      val walk = Files.walk(root)
-      try walk.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "Materialize.scala")
-        .toList
-      finally walk.close()
-    }
+    val files =
+      mainSources(_.getFileName.toString != "Materialize.scala")
     assert(files.nonEmpty)
     val hits = for {
-      f: Path <- files
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      t = line.trim
-      if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      (f, n, line) <- codeLines(files)
       token <- Forbidden if line.contains(token)
-    } yield s"$f:${i + 1}: $token"
+    } yield s"$f:$n: $token"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("no driver thread pool in any main source, Materialize.scala " +
+      "included (comment lines skipped)") {
+    val files = mainSources(_ => true)
+    assert(files.exists(_.getFileName.toString == "Materialize.scala"))
+    val hits = for {
+      (f, n, line) <- codeLines(files)
+      token <- PoolTokens if token.findFirstIn(line).nonEmpty
+    } yield s"$f:$n: $token"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }

@@ -33,28 +33,27 @@ import graft.operators.Views
   * one file per bucket holds, and gives point lookups (`WHERE
   * hex_ident = ...`, the reference's track query README.md:241-247)
   * row-group min/max skipping inside the single bucket that can
-  * contain the key. `nBuckets` sizes like the other stores: one
-  * bucket's rows per executor sort budget — at 100 TB of positions,
-  * thousands of buckets.
+  * contain the key. A table this store creates has
+  * [[Bucketed.Buckets]] buckets; a deployment sizes one bucket's rows
+  * per executor sort budget — at 100 TB of positions, thousands of
+  * buckets — by creating the table with DDL, which every later write
+  * then follows.
   *
   * The streaming path lands here too: [[graft.streaming.Ingest]]'s
-  * micro-batches [[append]] into the same bucket layout (Spark rejects
-  * a mismatched bucket count), so the analytical views stay
-  * Exchange-free over a store that grows one batch at a time, and
-  * periodic per-bucket compaction is the
-  * [[graft.streaming.Maintenance.compactBucketed]] story unchanged.
+  * micro-batches [[append]] into the same bucket layout, so the
+  * analytical views stay Exchange-free over a store that grows one
+  * batch at a time, and periodic per-bucket compaction is
+  * [[Bucketed.compact]].
   */
 object AdsbStore {
 
-  def save(adsb: DataFrame, table: String, nBuckets: Int = 8): Unit =
-    adsb.write.mode("overwrite")
-      .bucketBy(nBuckets, "hex_ident").sortBy("hex_ident")
-      .saveAsTable(table)
+  private val layout = Bucketed.Layout("hex_ident", "hex_ident")
 
-  def append(batch: DataFrame, table: String, nBuckets: Int = 8): Unit =
-    batch.write.mode("append")
-      .bucketBy(nBuckets, "hex_ident").sortBy("hex_ident")
-      .saveAsTable(table)
+  def save(adsb: DataFrame, table: String): Unit =
+    Bucketed.write(adsb, table, layout, "overwrite")
+
+  def append(batch: DataFrame, table: String): Unit =
+    Bucketed.write(batch, table, layout, "append")
 
   /** The stored fact table, bucket metadata intact. */
   def load(spark: SparkSession, table: String): DataFrame =

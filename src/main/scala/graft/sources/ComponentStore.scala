@@ -43,20 +43,15 @@ object ComponentStore {
     StructField("doc_id", LongType, nullable = false),
     StructField("component", LongType, nullable = false)))
 
-  /** Create the table empty if it does not exist. */
-  def ensure(spark: SparkSession, table: String,
-             nBuckets: Int = 8): Unit =
-    if (!spark.catalog.tableExists(table))
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "component").sortBy("component")
-        .saveAsTable(table)
+  private val layout = Bucketed.Layout("component", "component")
 
-  // the bucketed saveAsTable stores the bucket column first; the
-  // select pins the logical (doc_id, component) order for consumers
+  /** Create the table empty if it does not exist. */
+  def ensure(spark: SparkSession, table: String): Unit =
+    Bucketed.ensure(spark, table, schema, layout)
+
+  /** The stored (doc_id, component) relation. */
   def load(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).select("doc_id", "component")
+    spark.table(table)
 
   /** Merge one micro-batch's verified near-dup `pairs` (d1, d2) and
     * its full doc-id set `docIds` into the store: touched components
@@ -64,8 +59,8 @@ object ComponentStore {
     * singletons (component = own id).
     */
   def mergeBatch(spark: SparkSession, table: String, pairs: DataFrame,
-                 docIds: DataFrame, nBuckets: Int = 8): Unit = {
-    ensure(spark, table, nBuckets)
+                 docIds: DataFrame): Unit = {
+    ensure(spark, table)
     val store = load(spark, table)
     val touched = pairs.select(col("d1").as("doc_id"))
       .union(pairs.select(col("d2").as("doc_id"))).distinct()
@@ -77,8 +72,10 @@ object ComponentStore {
       .union(affected.select(col("doc_id").as("d1"),
         col("component").as("d2")))
     val comps = TextOps.connectedComponents(edges)
-    val unaffected = store.select("doc_id", "component")
-      .join(touchedRoots, Seq("component"), "left_anti")
+    // a USING join leads with its key: restore (doc_id, component),
+    // the order the table keeps
+    val unaffected = store.join(touchedRoots, Seq("component"),
+      "left_anti").select("doc_id", "component")
     val newSingles = docIds.select(col("doc_id"))
       .join(comps.select("doc_id"), Seq("doc_id"), "left_anti")
       .join(store.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -89,8 +86,6 @@ object ComponentStore {
       // eager materialization BEFORE the overwrite truncates the
       // source table the lineage reads (the PhashStore contract)
       .transform(Materialize.shared)
-    merged.write.mode("overwrite")
-      .bucketBy(nBuckets, "component").sortBy("component")
-      .saveAsTable(table)
+    Bucketed.write(merged, table, layout, "overwrite")
   }
 }

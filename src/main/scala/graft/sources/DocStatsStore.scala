@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 import graft.operators.TextOps
 
@@ -24,42 +25,28 @@ object DocStatsStore {
 
   private def table(base: String) = s"${base}_docstats"
 
-  def ensure(spark: SparkSession, base: String,
-             nBuckets: Int = 8): Unit =
-    if (!spark.catalog.tableExists(table(base))) {
-      import org.apache.spark.sql.types.{LongType, StringType,
-        StructField, StructType}
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("doc_id", LongType, nullable = false),
-            StructField("source", StringType, nullable = true),
-            StructField("sha", StringType, nullable = true),
-            StructField("n_tokens", LongType, nullable = true),
-            StructField("quality_micro", LongType, nullable = true),
-            StructField("lang_pred", StringType, nullable = true))))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "doc_id").sortBy("doc_id")
-        .saveAsTable(table(base))
-    }
+  private val schema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("source", StringType, nullable = true),
+    StructField("sha", StringType, nullable = true),
+    StructField("n_tokens", LongType, nullable = true),
+    StructField("quality_micro", LongType, nullable = true),
+    StructField("lang_pred", StringType, nullable = true)))
+
+  private val layout = Bucketed.Layout("doc_id", "doc_id")
+
+  def ensure(spark: SparkSession, base: String): Unit =
+    Bucketed.ensure(spark, table(base), schema, layout)
 
   /** Append an admitted shard's stats — ONE text scan per shard, ever.
     */
-  def append(newDocs: DataFrame, base: String,
-             nBuckets: Int = 8): Unit =
-    TextOps.docStats(newDocs)
-      .write.mode("append")
-      .bucketBy(nBuckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(table(base))
+  def append(newDocs: DataFrame, base: String): Unit =
+    Bucketed.write(TextOps.docStats(newDocs), table(base), layout, "append")
 
   /** The stored relation, replay duplicates dropped (a doc's stats are
     * replay-invariant so duplicate rows are identical; dedup key =
-    * bucket key — Exchange-free), logical column order pinned (the
-    * ComponentStore.load gotcha).
+    * bucket key — Exchange-free).
     */
   def load(spark: SparkSession, base: String): DataFrame =
-    spark.table(table(base))
-      .select("doc_id", "source", "sha", "n_tokens", "quality_micro",
-        "lang_pred")
-      .dropDuplicates("doc_id")
+    spark.table(table(base)).dropDuplicates("doc_id")
 }

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 import graft.operators.TextOps
 
@@ -19,23 +21,29 @@ import graft.operators.TextOps
   * already hash-partitioned on the join key (same technique
   * StorageLayoutSpec proves for the flights band join).
   *
-  * Layout notes for scale: `nBuckets` is chosen so one bucket's rows fit
-  * an executor's shuffle-free sort (buckets are also the parallelism
-  * floor — 1024 at 100 TB); `sortBy(fingerprint)` makes the overlap
+  * Layout notes for scale: the bucket count is chosen so one bucket's
+  * rows fit an executor's shuffle-free sort (buckets are also the
+  * parallelism floor — 1024 at 100 TB, declared by creating the table
+  * with DDL; see [[Bucketed]]); `sortBy(fingerprint)` makes the overlap
   * join's sort a no-op on the scan side and enables row-group min/max
   * skipping on point fingerprint probes.
   */
 object FingerprintStore {
 
+  private val schema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("fingerprint", LongType, nullable = false),
+    StructField("split", StringType, nullable = true)))
+
+  private[graft] val layout = Bucketed.Layout("fingerprint", "fingerprint")
+
   /** Build the (doc_id, fingerprint, split) relation and save it
     * bucketed by fingerprint as catalog table `table`.
     */
   def save(docs: DataFrame, k: Int, w: Int, trainPct: Int, valPct: Int,
-           table: String, nBuckets: Int = 8): Unit =
-    TextOps.winnowedSplit(docs, k, w, trainPct, valPct)
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "fingerprint").sortBy("fingerprint")
-      .saveAsTable(table)
+           table: String): Unit =
+    Bucketed.write(TextOps.winnowedSplit(docs, k, w, trainPct, valPct),
+      table, layout, "overwrite")
 
   /** The stored relation, bucket metadata intact. */
   def load(spark: SparkSession, table: String): DataFrame =
@@ -45,21 +53,8 @@ object FingerprintStore {
     * for streaming loops that append from the first batch
     * ([[graft.streaming.IncrementalClusters]]).
     */
-  def ensure(spark: SparkSession, table: String,
-             nBuckets: Int = 8): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      import org.apache.spark.sql.types.{LongType, StringType,
-        StructField, StructType}
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("doc_id", LongType, nullable = false),
-            StructField("fingerprint", LongType, nullable = false),
-            StructField("split", StringType, nullable = true))))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "fingerprint").sortBy("fingerprint")
-        .saveAsTable(table)
-    }
+  def ensure(spark: SparkSession, table: String): Unit =
+    Bucketed.ensure(spark, table, schema, layout)
 
   /** Contamination audit against the persisted store: identical output
     * to [[TextOps.contamination]] on the same corpus/params (the spec

@@ -20,39 +20,35 @@ import graft.operators.TextOps
   * a single Exchange of the corpus side (StorageLayoutSpec pins it).
   *
   * `sortBy(h)` makes the self-join's sort a scan-side no-op and gives
-  * point probes row-group min/max skipping. `nBuckets` scales like the
-  * fingerprint store's: one bucket's rows per executor sort budget —
-  * but note the gram relation is ~chars-per-corpus rows, so at 100 TB
-  * the bucket count runs 10–100× the fingerprint store's.
+  * point probes row-group min/max skipping. The bucket count scales
+  * like the fingerprint store's: one bucket's rows per executor sort
+  * budget — but note the gram relation is ~chars-per-corpus rows, so at
+  * 100 TB the bucket count runs 10–100× the fingerprint store's (a
+  * deployment declares it in DDL; see [[Bucketed]]).
   */
 object GramStore {
+
+  private val layout = Bucketed.Layout("h", "h")
 
   /** Build the (h, doc_id, pos) relation ([[TextOps.gramFirstPositions]]
     * — per-doc-distinct grams with first positions, deduplicated inside
     * the kernel) and save it bucketed by `h` as catalog table `table`.
     */
-  def save(docs: DataFrame, k: Int, table: String,
-           nBuckets: Int = 8): Unit =
-    TextOps.gramFirstPositions(docs, k)
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "h").sortBy("h")
-      .saveAsTable(table)
+  def save(docs: DataFrame, k: Int, table: String): Unit =
+    Bucketed.write(TextOps.gramFirstPositions(docs, k), table, layout,
+      "overwrite")
 
   /** Incremental append — the growth path every admission loop needs:
-    * an admitted shard's grams land in the SAME bucket layout (Spark
-    * rejects a mismatched `nBuckets`), so later audits and span joins
-    * keep running Exchange-free over the grown store, and a document
-    * admitted in batch N is visible to batch N+1's audit. Mirrors
+    * an admitted shard's grams land in the table's own bucket layout,
+    * so later audits and span joins keep running Exchange-free over the
+    * grown store, and a document admitted in batch N is visible to
+    * batch N+1's audit. Mirrors
     * [[graft.streaming.CorpusAdmission.appendToStore]]'s fingerprint
-    * append; periodic per-bucket compaction is the same
-    * [[graft.streaming.Maintenance.compactBucketed]] story.
+    * append; periodic per-bucket compaction is [[Bucketed.compact]].
     */
-  def append(newDocs: DataFrame, k: Int, table: String,
-             nBuckets: Int = 8): Unit =
-    TextOps.gramFirstPositions(newDocs, k)
-      .write.mode("append")
-      .bucketBy(nBuckets, "h").sortBy("h")
-      .saveAsTable(table)
+  def append(newDocs: DataFrame, k: Int, table: String): Unit =
+    Bucketed.write(TextOps.gramFirstPositions(newDocs, k), table, layout,
+      "append")
 
   /** The stored relation, bucket metadata intact. */
   def load(spark: SparkSession, table: String): DataFrame =

@@ -45,21 +45,20 @@ object PairStore {
   private def pairsTable(base: String) = s"${base}_pairs"
   private def componentsTable(base: String) = s"${base}_components"
 
+  private val pairsLayout = Bucketed.Layout("d1", "d1", "d2")
+  private val componentsLayout = Bucketed.Layout("component", "component")
+
   /** Persist a verified pair relation (d1, d2, metadata...) and its
     * transitive closure. The component relation is derived here, at
     * write time — audits never pay it again.
     */
-  def save(pairs: DataFrame, base: String, nBuckets: Int = 8): Unit = {
+  def save(pairs: DataFrame, base: String): Unit = {
     val cols = pairs.columns
     require(cols.take(2).sameElements(Array("d1", "d2")),
       s"pair relation must lead with (d1, d2), got ${cols.toSeq}")
-    pairs.write.mode("overwrite")
-      .bucketBy(nBuckets, "d1").sortBy("d1", "d2")
-      .saveAsTable(pairsTable(base))
-    TextOps.connectedComponents(pairs)
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "component").sortBy("component")
-      .saveAsTable(componentsTable(base))
+    Bucketed.write(pairs, pairsTable(base), pairsLayout, "overwrite")
+    Bucketed.write(TextOps.connectedComponents(pairs),
+      componentsTable(base), componentsLayout, "overwrite")
   }
 
   /** Incremental append — the operations half of the 100 TB story
@@ -81,9 +80,9 @@ object PairStore {
     *
     * Equivalence (StorageLayoutSpec-pinned): for any split A ⊎ B of a
     * pair relation, save(A); append(B) ≡ save(A ∪ B) on BOTH tables —
-    * identical rows, identical bucket layout (the pairs append rides
-    * `mode("append")` against the unchanged catalog bucket spec; the
-    * components rewrite re-declares it).
+    * identical rows, identical bucket layout (the pairs append and the
+    * components rewrite both restate the table's catalog bucket spec,
+    * [[Bucketed.write]]).
     *
     * Retry safety (ADVICE r14): the two writes cannot be atomic, so
     * append is REPLAY-IDEMPOTENT instead — the streaming stores'
@@ -104,8 +103,8 @@ object PairStore {
     * buckets holding affected rows — the single-table overwrite keeps
     * the test-scale layout exact and the bucket metadata intact.
     */
-  def append(spark: SparkSession, newPairs: DataFrame, base: String,
-             nBuckets: Int = 8): Unit = {
+  def append(spark: SparkSession, newPairs: DataFrame,
+             base: String): Unit = {
     val storedCols = spark.table(pairsTable(base)).columns.toSet
     require(newPairs.columns.toSet == storedCols &&
         newPairs.columns.take(2).sameElements(Array("d1", "d2")),
@@ -119,9 +118,7 @@ object PairStore {
         "left_anti")
       .select(newPairs.columns.head, newPairs.columns.tail: _*)
       .transform(Materialize.shared)
-    fresh.write.mode("append")
-      .bucketBy(nBuckets, "d1").sortBy("d1", "d2")
-      .saveAsTable(pairsTable(base))
+    Bucketed.write(fresh, pairsTable(base), pairsLayout, "append")
     // component merge from the FULL newPairs (fixed point: a retry
     // whose pairs all deduped away still heals a lost merge)
     val store = components(spark, base)
@@ -135,49 +132,40 @@ object PairStore {
       .union(affected.select(col("doc_id").as("d1"),
         col("component").as("d2")))
     val comps = TextOps.connectedComponents(edges)
+    // a USING join leads with its key: restore (doc_id, component),
+    // the order the table keeps
     val unaffected = store.join(touchedRoots, Seq("component"),
-      "left_anti")
+      "left_anti").select("doc_id", "component")
     val merged = unaffected
       .unionByName(comps.select("doc_id", "component"))
       // eager materialization BEFORE the overwrite truncates the
       // source table the lineage reads (the PhashStore contract)
       .transform(Materialize.shared)
-    merged.write.mode("overwrite")
-      .bucketBy(nBuckets, "component").sortBy("component")
-      .saveAsTable(componentsTable(base))
+    Bucketed.write(merged, componentsTable(base), componentsLayout,
+      "overwrite")
   }
 
-  /** Compact the append-forever pairs table (VERDICT r14 item 7 —
-    * the [[graft.streaming.Maintenance.compactBucketed]] discipline
+  /** Compact the append-forever pairs table ([[Bucketed.compact]]
     * applied to this store): every [[append]] adds one file per
     * bucket it touches, and at daily cadence a year is ~365 files
     * per bucket on every audit's scan. The rewrite goes THROUGH the
-    * unchanged bucket spec (a bucketed scan is one partition per
+    * table's bucket spec (a bucketed scan is one partition per
     * bucket, so the output is exactly one file per bucket) and swaps
     * catalog names; the components table is a per-merge overwrite —
     * already file-bounded — so only the pairs table compacts. Same
-    * quiesce-first caveat as compactBucketed. Returns
+    * quiesce-first caveat as [[Bucketed.compact]]. Returns
     * (filesBefore, filesAfter).
     */
-  def compact(spark: SparkSession, base: String,
-              nBuckets: Int = 8): (Int, Int) =
-    graft.streaming.Maintenance.compactBucketed(spark,
-      pairsTable(base), nBuckets, "d1", Seq("d1", "d2"))
+  def compact(spark: SparkSession, base: String): (Int, Int) =
+    Bucketed.compact(spark, pairsTable(base))
 
-  // bucketed saveAsTable stores the bucket column first regardless of
-  // logical order; both loads pin the logical order with a select
-  // (the ComponentStore.load gotcha)
-
-  /** The stored pair relation, original column order. */
-  def pairs(spark: SparkSession, base: String): DataFrame = {
-    val t = spark.table(pairsTable(base))
-    val rest = t.columns.filterNot(c => c == "d1" || c == "d2")
-    t.select("d1", ("d2" +: rest.toSeq): _*)
-  }
+  /** The stored pair relation (d1, d2, metadata...). */
+  def pairs(spark: SparkSession, base: String): DataFrame =
+    spark.table(pairsTable(base))
 
   /** The stored component relation (doc_id, component). */
   def components(spark: SparkSession, base: String): DataFrame =
-    spark.table(componentsTable(base)).select("doc_id", "component")
+    spark.table(componentsTable(base))
 
   /** D27 purity audit over the stored closure — union-find read, not
     * re-run; only the star-Jaccard shingle joins execute per audit.

@@ -15,16 +15,17 @@ import graft.operators.{Materialize, MultimodalOps}
   */
 object PhashStore {
 
+  private val layout = Bucketed.Layout("dhash", "dhash")
+
   /** Decode every BMP in `docs`, collapse to the class census, save
     * bucketed by dhash as catalog table `table`.
     */
-  def save(docs: DataFrame, table: String, nBuckets: Int = 8): Unit =
-    MultimodalOps.imageDHash(MultimodalOps.mediaBinary(docs)).toDF()
-      .groupBy("dhash")
-      .agg(count(lit(1)).as("n"), min("doc_id").as("exemplar"))
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "dhash").sortBy("dhash")
-      .saveAsTable(table)
+  def save(docs: DataFrame, table: String): Unit =
+    Bucketed.write(
+      MultimodalOps.imageDHash(MultimodalOps.mediaBinary(docs)).toDF()
+        .groupBy("dhash")
+        .agg(count(lit(1)).as("n"), min("doc_id").as("exemplar")),
+      table, layout, "overwrite")
 
   def load(spark: SparkSession, table: String): DataFrame =
     spark.table(table)
@@ -74,7 +75,7 @@ object PhashStore {
     * half-overwritten source; a checkpoint cannot).
     */
   def mergeAdmitted(spark: SparkSession, admitted: DataFrame,
-                    table: String, nBuckets: Int = 8): Unit = {
+                    table: String): Unit = {
     val fresh = MultimodalOps.imageDHash(
       MultimodalOps.mediaBinary(admitted)).toDF()
       .groupBy("dhash")
@@ -85,8 +86,6 @@ object PhashStore {
       // eager = true spells out the no-arg default; the point is the
       // materialization happens BEFORE the overwrite truncates its source
       .transform(Materialize.shared)
-    merged.write.mode("overwrite")
-      .bucketBy(nBuckets, "dhash").sortBy("dhash")
-      .saveAsTable(table)
+    Bucketed.write(merged, table, layout, "overwrite")
   }
 }

@@ -19,17 +19,14 @@ import graft.operators.{Materialize, SketchQueries}
   */
 object QuantileStore {
 
-  /** Sample schema: (event_type, cents, h, event_id). */
-  def save(sample: DataFrame, table: String, nBuckets: Int = 8): Unit =
-    sample.write.mode("overwrite")
-      .bucketBy(nBuckets, "event_type").sortBy("h")
-      .saveAsTable(table)
+  private val layout = Bucketed.Layout("event_type", "h")
 
-  /** Bucketed `saveAsTable` reorders columns (bucket column first) —
-    * pin the logical order so positional reads stay stable.
-    */
+  /** Sample schema: (event_type, cents, h, event_id). */
+  def save(sample: DataFrame, table: String): Unit =
+    Bucketed.write(sample, table, layout, "overwrite")
+
   def load(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).select("event_type", "cents", "h", "event_id")
+    spark.table(table)
 
   /** Merge a micro-batch's sample: union, dedup (at-least-once replay
     * re-delivers identical rows — distinct makes the merge a fixed
@@ -37,12 +34,12 @@ object QuantileStore {
     * merged relation's lineage from the table it is about to
     * overwrite (the PhashStore ordering contract).
     */
-  def merge(spark: SparkSession, batchSample: DataFrame, table: String,
-            nBuckets: Int = 8): Unit = {
+  def merge(spark: SparkSession, batchSample: DataFrame,
+            table: String): Unit = {
     val merged = SketchQueries
       .qsBottomK(load(spark, table).unionByName(batchSample).distinct())
       .transform(Materialize.shared)
-    save(merged, table, nBuckets)
+    save(merged, table)
   }
 
   /** The serving read: type-1 quantile estimates off the stored

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.Hashing.{md5Long, micro}
 import graft.operators.{Materialize, TextOps}
@@ -43,6 +44,16 @@ object ShingleStore {
   private def shTable(base: String) = s"${base}_sh"
   private def sizeTable(base: String) = s"${base}_sizes"
 
+  private val shSchema = StructType(Seq(
+    StructField("h", LongType, nullable = false),
+    StructField("doc_id", LongType, nullable = false)))
+  private val sizeSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("n_shingles", LongType, nullable = false)))
+
+  private val shLayout = Bucketed.Layout("h", "h")
+  private val sizeLayout = Bucketed.Layout("doc_id", "doc_id")
+
   /** The hashed per-doc-distinct shingle relation of `docs` — the
     * exact relation [[TextOps.ngramJaccardPairs]] builds internally
     * (60-bit md5 of the space-joined n-gram, one row per distinct
@@ -55,41 +66,22 @@ object ShingleStore {
   /** Create both tables empty if missing — the streaming cold start
     * (the [[FingerprintStore.ensure]] contract).
     */
-  def ensure(spark: SparkSession, base: String, nBuckets: Int = 8): Unit = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    def empty(fields: Seq[StructField]) =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(fields))
-    if (!spark.catalog.tableExists(shTable(base)))
-      empty(Seq(StructField("h", LongType, nullable = false),
-          StructField("doc_id", LongType, nullable = false)))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "h").sortBy("h").saveAsTable(shTable(base))
-    if (!spark.catalog.tableExists(sizeTable(base)))
-      empty(Seq(StructField("doc_id", LongType, nullable = false),
-          StructField("n_shingles", LongType, nullable = false)))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "doc_id").sortBy("doc_id")
-        .saveAsTable(sizeTable(base))
+  def ensure(spark: SparkSession, base: String): Unit = {
+    Bucketed.ensure(spark, shTable(base), shSchema, shLayout)
+    Bucketed.ensure(spark, sizeTable(base), sizeSchema, sizeLayout)
   }
 
-  /** Append a shard's shingles + sizes in the stores' bucket layouts
-    * (Spark rejects a mismatched `nBuckets`). The shard is shingled
-    * ONCE here; history is never read.
+  /** Append a shard's shingles + sizes in the stores' bucket layouts.
+    * The shard is shingled ONCE here; history is never read.
     */
-  def append(newDocs: DataFrame, n: Int, base: String,
-             nBuckets: Int = 8): Unit = {
+  def append(newDocs: DataFrame, n: Int, base: String): Unit = {
     val sh = hashedShingles(newDocs, n)
       // one shard scan feeds both writes
       .transform(Materialize.shared)
-    sh.select(col("h"), col("doc_id"))
-      .write.mode("append")
-      .bucketBy(nBuckets, "h").sortBy("h").saveAsTable(shTable(base))
-    sh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-      .write.mode("append")
-      .bucketBy(nBuckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(sizeTable(base))
+    Bucketed.write(sh.select(col("h"), col("doc_id")), shTable(base),
+      shLayout, "append")
+    Bucketed.write(sh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles")),
+      sizeTable(base), sizeLayout, "append")
   }
 
   /** Compact both append-forever tables (the [[PairStore.compact]]
@@ -97,17 +89,14 @@ object ShingleStore {
     * and the daily-increment loop ([[graft.streaming.IncrementalCuration]])
     * appends every day — the measured growth term in the per-increment
     * wall is partly this file count (every df census and candidate
-    * join opens all of them). The rewrite goes through the unchanged
-    * bucket spec; same quiesce-first caveat as
-    * [[graft.streaming.Maintenance.compactBucketed]]. Returns
+    * join opens all of them). The rewrite goes through each table's
+    * own bucket spec; same quiesce-first caveat as
+    * [[Bucketed.compact]]. Returns
     * ((shFilesBefore, shFilesAfter), (sizeFilesBefore, sizeFilesAfter)).
     */
-  def compact(spark: SparkSession, base: String, nBuckets: Int = 8)
-  : ((Int, Int), (Int, Int)) =
-    (graft.streaming.Maintenance.compactBucketed(spark,
-      shTable(base), nBuckets, "h", Seq("h")),
-      graft.streaming.Maintenance.compactBucketed(spark,
-        sizeTable(base), nBuckets, "doc_id", Seq("doc_id")))
+  def compact(spark: SparkSession, base: String): ((Int, Int), (Int, Int)) =
+    (Bucketed.compact(spark, shTable(base)),
+      Bucketed.compact(spark, sizeTable(base)))
 
   /** The stored inverted index, replay duplicates dropped (dedup keys
     * ⊇ bucket key `h` — Exchange-free).

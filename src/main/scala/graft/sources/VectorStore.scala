@@ -402,24 +402,20 @@ object VectorStore {
     * pair stage again.
     */
   def saveGraph(spark: SparkSession, path: String, table: String,
-                m: Int, nBuckets: Int = 8): Unit = {
+                m: Int): Unit = {
     val meta = readMeta(spark, path)
     val assigned = spark.read.parquet(path)
       .select(col("vec_id"), col("cluster").as("c1"),
         graft.functions.KmeansSecondId.kmeansSecondId(col("embedding"),
           meta.cents).as("c2"),
         col("embedding"))
-    SimilarityOps.knnGraphEdgesFrom(assigned, m)
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "d1").sortBy("d1", "d2")
-      .saveAsTable(table)
+    Bucketed.write(SimilarityOps.knnGraphEdgesFrom(assigned, m), table,
+      Bucketed.Layout("d1", "d1", "d2"), "overwrite")
   }
 
-  /** The persisted edge relation (d1, d2) — logical order pinned
-    * (the bucketed-table column-order gotcha).
-    */
+  /** The persisted edge relation (d1, d2). */
   def graphEdges(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).select("d1", "d2")
+    spark.table(table)
 
   /** V35 beam search over the persisted graph — zero graph-
     * construction stages (spec-pinned: no assignment or runner-up

@@ -27,15 +27,15 @@ import graft.operators.TextOps
   */
 object WordGramStore {
 
+  private val layout = Bucketed.Layout("h", "h")
+
   /** Build the distinct train-split gram-hash set and save it bucketed
     * by `h` as catalog table `table`.
     */
   def save(docs: DataFrame, n: Int, trainPct: Int, valPct: Int,
-           table: String, nBuckets: Int = 8): Unit =
-    TextOps.trainGramSet(docs, n, trainPct, valPct)
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "h").sortBy("h")
-      .saveAsTable(table)
+           table: String): Unit =
+    Bucketed.write(TextOps.trainGramSet(docs, n, trainPct, valPct), table,
+      layout, "overwrite")
 
   /** Incremental growth: newly admitted TRAIN documents contribute
     * their grams in the same bucket layout, so the next audit sees
@@ -44,11 +44,9 @@ object WordGramStore {
     * bucket must never enter the train set.
     */
   def append(newDocs: DataFrame, n: Int, trainPct: Int, valPct: Int,
-             table: String, nBuckets: Int = 8): Unit =
-    TextOps.trainGramSet(newDocs, n, trainPct, valPct)
-      .write.mode("append")
-      .bucketBy(nBuckets, "h").sortBy("h")
-      .saveAsTable(table)
+             table: String): Unit =
+    Bucketed.write(TextOps.trainGramSet(newDocs, n, trainPct, valPct),
+      table, layout, "append")
 
   /** The stored set, replay duplicates dropped (Exchange-free — the
     * dedup key IS the bucket key).
@@ -62,12 +60,8 @@ object WordGramStore {
     * against it ([[overlapAgainst]], the streaming admission gate's
     * `eval_overlap` signal).
     */
-  def saveDocs(docs: DataFrame, n: Int, table: String,
-               nBuckets: Int = 8): Unit =
-    TextOps.gramSet(docs, n)
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "h").sortBy("h")
-      .saveAsTable(table)
+  def saveDocs(docs: DataFrame, n: Int, table: String): Unit =
+    Bucketed.write(TextOps.gramSet(docs, n), table, layout, "overwrite")
 
   /** Per-doc overlap of `docs` against the persisted protected set —
     * same membership-join scale shape as [[overlapAudit]]: the store

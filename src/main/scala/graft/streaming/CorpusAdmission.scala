@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
-import graft.sources.FingerprintStore
+import graft.sources.{Bucketed, FingerprintStore}
 
 /** Streaming corpus admission: the incremental ingestion loop of a
   * growing training corpus, run by the [[Admission]] loop (its
@@ -45,40 +45,35 @@ object CorpusAdmission {
 
   /** Append the fingerprints of newly admitted docs to the bucketed
     * store (split fixed to "train": admission feeds the training
-    * corpus; eval sets are curated, not streamed). `nBuckets` must
-    * match the spec the store was [[FingerprintStore.save]]d with —
-    * Spark rejects a mismatched append.
+    * corpus; eval sets are curated, not streamed), in the store
+    * table's own bucket spec.
     */
   def appendToStore(admitted: DataFrame, storeTable: String, k: Int,
-                    w: Int, nBuckets: Int = 8): Unit =
-    TextOps.winnowFingerprints(admitted.select("doc_id", "text"), k, w)
-      .withColumn("split", lit("train"))
-      .write.mode("append")
-      .bucketBy(nBuckets, "fingerprint").sortBy("fingerprint")
-      .saveAsTable(storeTable)
+                    w: Int): Unit =
+    Bucketed.write(
+      TextOps.winnowFingerprints(admitted.select("doc_id", "text"), k, w)
+        .withColumn("split", lit("train")),
+      storeTable, FingerprintStore.layout, "append")
 
   /** The gate as an [[Admission]]: corpus and quarantine sinks, then
     * the fingerprint append.
     */
   private[graft] def admission(storeTable: String, corpusDir: String,
                                quarantineDir: String, k: Int, w: Int,
-                               maxDf: Long, ratioMicroMin: Long,
-                               nBuckets: Int = 8): Admission =
+                               maxDf: Long,
+                               ratioMicroMin: Long): Admission =
     Admission(Some(corpusDir), quarantineDir,
       admitBatch(_, _, storeTable, k, w, maxDf, ratioMicroMin),
-      (_, _, admitted) =>
-        appendToStore(admitted, storeTable, k, w, nBuckets))
+      (_, _, admitted) => appendToStore(admitted, storeTable, k, w))
 
   /** The streaming admission query: docs stream → per-batch audit →
-    * corpus sink + quarantine sink + store append. `nBuckets` must
-    * match the spec the store was saved with (a mismatched bucket
-    * count makes every append fail and wedges the stream). Every read
-    * and write runs on the batch's own session.
+    * corpus sink + quarantine sink + store append. Every read and
+    * write runs on the batch's own session.
     */
   def start(docs: DataFrame, storeTable: String,
             corpusDir: String, quarantineDir: String,
             checkpointDir: String, k: Int, w: Int, maxDf: Long,
-            ratioMicroMin: Long, nBuckets: Int = 8): StreamingQuery =
+            ratioMicroMin: Long): StreamingQuery =
     admission(storeTable, corpusDir, quarantineDir, k, w, maxDf,
-      ratioMicroMin, nBuckets).start(docs, checkpointDir)
+      ratioMicroMin).start(docs, checkpointDir)
 }

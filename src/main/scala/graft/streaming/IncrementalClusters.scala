@@ -69,9 +69,9 @@ object IncrementalClusters {
     */
   def processBatch(spark: SparkSession, batch: DataFrame,
                    fpTable: String, compTable: String, k: Int, w: Int,
-                   ratioMicroMin: Long, nBuckets: Int = 8): Unit = {
+                   ratioMicroMin: Long): Unit = {
     val docs = batch.select("doc_id", "text")
-    FingerprintStore.ensure(spark, fpTable, nBuckets)
+    FingerprintStore.ensure(spark, fpTable)
     // the appends land through the micro-batch's CLONED session while
     // this read resolves through the parent session, whose relation
     // cache would otherwise serve the previous batch's file listing —
@@ -101,9 +101,8 @@ object IncrementalClusters {
       .filter(col("ratio_micro") >= ratioMicroMin)
       .select(col("stored_doc").as("d1"), col("new_doc").as("d2"))
     val pairs = inBatch.union(vsStore)
-    CorpusAdmission.appendToStore(docs, fpTable, k, w, nBuckets)
-    ComponentStore.mergeBatch(spark, compTable, pairs, batchIds,
-      nBuckets)
+    CorpusAdmission.appendToStore(docs, fpTable, k, w)
+    ComponentStore.mergeBatch(spark, compTable, pairs, batchIds)
   }
 
   /** The streaming query: docs stream → per-batch pair derivation →
@@ -111,9 +110,9 @@ object IncrementalClusters {
     */
   def start(spark: SparkSession, docs: DataFrame, fpTable: String,
             compTable: String, checkpointDir: String, k: Int, w: Int,
-            ratioMicroMin: Long, nBuckets: Int = 8): StreamingQuery =
+            ratioMicroMin: Long): StreamingQuery =
     MicroBatches.start(docs, checkpointDir) { (batch, _) =>
       processBatch(spark, batch, fpTable, compTable, k, w,
-        ratioMicroMin, nBuckets)
+        ratioMicroMin)
     }
 }

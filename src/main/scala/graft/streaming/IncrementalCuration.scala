@@ -82,7 +82,7 @@ object IncrementalCuration {
       k: Int = 8, w: Int = 4, winnowMaxDf: Long = 1000L,
       ratioMicroMin: Long = 500000L,
       n: Int = 5, maxDf: Long = 1000L, jacMicroMin: Long = 800000L,
-      qualityMicroMin: Long = 400000L, nBuckets: Int = 8,
+      qualityMicroMin: Long = 400000L,
       // T30 composed in: gate admitted docs against a PROTECTED eval
       // fingerprint index before anything persists (opt-in — eval sets
       // are curated per deployment). Decontam runs AFTER the near-dup
@@ -98,9 +98,9 @@ object IncrementalCuration {
     * schema carries the pair metadata, so it is defined by data).
     */
   def init(spark: SparkSession, base: String, cfg: Config = Config()): Unit = {
-    FingerprintStore.ensure(spark, fpTable(base), cfg.nBuckets)
-    ShingleStore.ensure(spark, base, cfg.nBuckets)
-    DocStatsStore.ensure(spark, base, cfg.nBuckets)
+    FingerprintStore.ensure(spark, fpTable(base))
+    ShingleStore.ensure(spark, base)
+    DocStatsStore.ensure(spark, base)
   }
 
   /** One daily increment (steps 1–3 above). `batch` must carry
@@ -149,19 +149,17 @@ object IncrementalCuration {
           (keepEval, quarantined0.unionByName(quarEval))
       }
     }, (sp, _, keep) => {
-      CorpusAdmission.appendToStore(keep, fpTable(base), cfg.k, cfg.w,
-        cfg.nBuckets)
+      CorpusAdmission.appendToStore(keep, fpTable(base), cfg.k, cfg.w)
       val docs = keep.select("doc_id", "text")
-      ShingleStore.append(docs, cfg.n, base, cfg.nBuckets)
+      ShingleStore.append(docs, cfg.n, base)
       // T32: per-doc stats persisted at admission — the serving
       // surfaces below never re-scan text
-      DocStatsStore.append(keep.select("doc_id", "source", "text"), base,
-        cfg.nBuckets)
+      DocStatsStore.append(keep.select("doc_id", "source", "text"), base)
       val newPairs = ShingleStore.incrementalPairs(sp, base, docs,
         cfg.n, cfg.maxDf, cfg.jacMicroMin)
       if (sp.catalog.tableExists(s"${base}_pairs"))
-        PairStore.append(sp, newPairs, base, cfg.nBuckets)
-      else PairStore.save(newPairs, base, cfg.nBuckets)
+        PairStore.append(sp, newPairs, base)
+      else PairStore.save(newPairs, base)
     })
 
   /** The cumulative admitted corpus (the sink read back; `batch_id`

@@ -107,15 +107,18 @@ object Ingest {
     * `bucketBy(hex_ident)` catalog layout, so the serving views (the
     * flights plan above all) stay EXCHANGE-FREE over a store that
     * grows one batch at a time. Dedup happens upstream of the sink
-    * (same as the parquet path); a crash-replayed batch re-appends
-    * identical rows, which the flights DISTINCT absorbs — and
-    * periodic per-bucket compaction is
-    * [[Maintenance.compactBucketed]] unchanged.
+    * (same as the parquet path), and periodic per-bucket compaction is
+    * [[graft.sources.Bucketed.compact]].
+    *
+    * NOT replay-safe: the sink is a plain append, so a crash-replayed
+    * batch appends its rows a second time to the raw table, and so to
+    * every `locations` read of it (only the `flights` DISTINCT hides
+    * them). ROADMAP direction 2 makes this sink exactly-once.
     */
-  def startBucketed(spark: SparkSession, cfg: Config, table: String,
-                    nBuckets: Int = 8): StreamingQuery =
+  def startBucketed(spark: SparkSession, cfg: Config,
+                    table: String): StreamingQuery =
     MicroBatches.start(deduped(stream(spark, cfg)), cfg.checkpointDir) {
-      (df, _) => graft.sources.AdsbStore.append(df, table, nBuckets)
+      (df, _) => graft.sources.AdsbStore.append(df, table)
     }
 
   /** JDBC parity sink (S7): the reference's row-at-a-time PostgreSQL

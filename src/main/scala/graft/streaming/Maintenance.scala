@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * few large files. Rewrite goes to a sibling directory and swaps in
   * via two renames — readers see either the old or the new layout,
   * never a partial one (rename is atomic per directory on HDFS-like
-  * stores).
+  * stores). A bucketed catalog table compacts through
+  * [[graft.sources.Bucketed.compact]] instead.
   */
 object Maintenance {
 
@@ -37,65 +38,5 @@ object Maintenance {
     }
     fs.delete(old, true)
     (before, parquetFiles(dir))
-  }
-
-  /** Compact a BUCKETED catalog table (e.g. the fingerprint store after
-    * many streaming appends, [[CorpusAdmission]]) — every append job
-    * adds its own file per bucket, and at 100 TB a thousand appends
-    * mean a thousand files per bucket on every audit's scan.
-    *
-    * A plain coalesce-rewrite would destroy the property the store
-    * exists for: bucket files carry their bucket id in the layout, and
-    * joins are only Exchange-free while rows live in the file their
-    * hash says. So compaction rewrites THROUGH the same bucket spec
-    * (one shuffle-free pass: the scan is already partitioned by the
-    * bucket key) into a fresh table, then swaps names in the catalog.
-    * Returns (filesBefore, filesAfter).
-    *
-    * NOT atomic for concurrent readers/writers: the swap is two catalog
-    * renames, and between them the table name resolves to nothing —
-    * a concurrent query (or a streaming append like
-    * [[CorpusAdmission]]'s) fails that one batch with
-    * TABLE_OR_VIEW_NOT_FOUND. QUIESCE FIRST: stop (or pause past) the
-    * admission stream, compact, then restart — the standard maintenance
-    * window every Hive-catalog rename swap needs. A failed batch is not
-    * data loss (the stream's checkpoint replays it, and the replay is
-    * idempotent per [[CorpusAdmission]]'s contract), but routine
-    * compaction should not rely on that.
-    */
-  def compactBucketed(spark: SparkSession, table: String, nBuckets: Int,
-                      bucketCol: String,
-                      sortCols: Seq[String] = Seq.empty): (Int, Int) = {
-    def fileCount(t: String): Int =
-      spark.table(t).inputFiles.length
-    val before = fileCount(table)
-    val tmp = s"${table}__compact_tmp"
-    val old = s"${table}__compact_old"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    // force the BUCKET-AWARE scan for the rewrite: with the default
-    // autoBucketedScan a plain scan (no join/agg to feed) falls back
-    // to size-based file splits, so two input splits holding the same
-    // bucket's rows re-emit two files per bucket — the rewrite would
-    // not bound the file count. Bucket-aware, the scan is exactly one
-    // partition per bucket and the write one file per occupied bucket.
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val autoWas = spark.conf.get(autoKey)
-    spark.conf.set(autoKey, "false")
-    try {
-      val writer = spark.table(table).write
-        .bucketBy(nBuckets, bucketCol, Nil: _*)
-      (if (sortCols.nonEmpty)
-         writer.sortBy(sortCols.head, sortCols.tail: _*)
-       else writer).saveAsTable(tmp)
-    } finally spark.conf.set(autoKey, autoWas)
-    spark.sql(s"ALTER TABLE $table RENAME TO $old")
-    try spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    catch {
-      case e: Throwable =>
-        spark.sql(s"ALTER TABLE $old RENAME TO $table") // restore
-        throw e
-    }
-    spark.sql(s"DROP TABLE $old")
-    (before, fileCount(table))
   }
 }

@@ -30,18 +30,18 @@ object StreamingQuantiles {
 
   /** One micro-batch: sample, then create-or-merge the store. */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   table: String, nBuckets: Int = 8): Unit = {
+                   table: String): Unit = {
     val sample = SketchQueries.qsSample(
       batch.select("event_id", "event_type", "value"))
     if (!spark.catalog.tableExists(table))
-      QuantileStore.save(sample, table, nBuckets)
+      QuantileStore.save(sample, table)
     else
-      QuantileStore.merge(spark, sample, table, nBuckets)
+      QuantileStore.merge(spark, sample, table)
   }
 
   def start(spark: SparkSession, events: DataFrame, table: String,
-            checkpointDir: String, nBuckets: Int = 8): StreamingQuery =
+            checkpointDir: String): StreamingQuery =
     MicroBatches.start(events, checkpointDir) { (batch, _) =>
-      processBatch(spark, batch, table, nBuckets)
+      processBatch(spark, batch, table)
     }
 }

@@ -190,7 +190,6 @@ object UnifiedAdmission {
   private[graft] def admission(fpTable: String, gramTable: String,
                                vecPath: String, corpusDir: String,
                                quarantineDir: String, cfg: Config,
-                               nBuckets: Int = 8,
                                onDrift: VectorStore.Drift => Unit = _ => (),
                                evalGramTable: Option[String] = None,
                                evalFpTable: Option[String] = None)
@@ -201,16 +200,15 @@ object UnifiedAdmission {
       (session, _, admitted) => if (!admitted.isEmpty) {
         val texts = admitted.select("doc_id", "text")
         CorpusAdmission.appendToStore(texts, fpTable, cfg.winnowK,
-          cfg.winnowW, nBuckets)
-        GramStore.append(texts, cfg.gramK, gramTable, nBuckets)
+          cfg.winnowW)
+        GramStore.append(texts, cfg.gramK, gramTable)
         onDrift(VectorStore.append(session, vecPath,
           admitted.select(col("doc_id").as("vec_id"), col("embedding"))))
       })
 
   /** The streaming gate: (doc_id, text, embedding) stream → per-batch
     * audit → corpus sink + unified quarantine sink + three store
-    * appends. `nBuckets` must match what the fingerprint and gram
-    * stores were saved with; each appending batch's vector drift is
+    * appends. Each appending batch's vector drift is
     * surfaced through `onDrift` (re-clustering itself belongs in a
     * quiesced maintenance window). Every read and write runs on the
     * batch's own session.
@@ -218,11 +216,10 @@ object UnifiedAdmission {
   def start(docs: DataFrame, fpTable: String,
             gramTable: String, vecPath: String, corpusDir: String,
             quarantineDir: String, checkpointDir: String, cfg: Config,
-            nBuckets: Int = 8,
             onDrift: VectorStore.Drift => Unit = _ => (),
             evalGramTable: Option[String] = None,
             evalFpTable: Option[String] = None): StreamingQuery =
     admission(fpTable, gramTable, vecPath, corpusDir, quarantineDir, cfg,
-      nBuckets, onDrift, evalGramTable, evalFpTable)
+      onDrift, evalGramTable, evalFpTable)
       .start(docs, checkpointDir)
 }

@@ -88,7 +88,7 @@ object VectorAdmission {
 
   /** Drop duplicate physical rows a crash-replayed append may have
     * left (same vec_id in the same cluster partition) — the vector
-    * store's analogue of [[Maintenance.compactBucketed]]'s quiesced
+    * store's analogue of [[graft.sources.Bucketed.compact]]'s quiesced
     * rewrite: per-cluster rewrite through a sibling dir + rename swap,
     * partition layout preserved. Returns (rowsBefore, rowsAfter).
     */

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * a relation: no other main source calls the Dataset/RDD persistence
   * API or clears the session's caches behind its back. And no main
   * source runs driver-side jobs on a thread pool: a sweep is a column
-  * of one plan, and a pin's scope is the thread that opened it.
+  * of one plan, and a pin's scope is the thread that opened it. And
+  * `graft.sources.Bucketed` is the only module that writes a bucketed
+  * catalog table.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -20,6 +22,8 @@ class SourceHygieneSpec extends AnyFunSuite {
   // a single dedicated `Thread` (the sbs1 reader) is not a pool
   private val PoolTokens = Seq("Executors\\.", "ExecutionContext\\.from",
     "Future\\(", "\\.par\\b").map(_.r)
+
+  private val TableWrites = Seq(".bucketBy(", "saveAsTable(")
 
   private def mainSources(keep: Path => Boolean): List[Path] = {
     val walk = Files.walk(Paths.get("src/main/scala"))
@@ -54,6 +58,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     val hits = for {
       (f, n, line) <- codeLines(files)
       token <- PoolTokens if token.findFirstIn(line).nonEmpty
+    } yield s"$f:$n: $token"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("no bucketBy or saveAsTable outside Bucketed.scala (comment " +
+      "lines skipped)") {
+    val files = mainSources(_.getFileName.toString != "Bucketed.scala")
+    assert(files.nonEmpty)
+    val hits = for {
+      (f, n, line) <- codeLines(files)
+      token <- TableWrites if line.contains(token)
     } yield s"$f:$n: $token"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }

@@ -151,8 +151,7 @@ class StorageLayoutSpec extends SparkSpec {
       def audit() = graft.sources.FingerprintStore.auditIncoming(
         spark, store, incoming, k, w, 1000L, 500000L)
       val beforeRows = audit().collect().map(_.toSeq).toSet
-      val (before, after) = graft.streaming.Maintenance.compactBucketed(
-        spark, store, 8, "fingerprint", Seq("fingerprint"))
+      val (before, after) = graft.sources.Bucketed.compact(spark, store)
       assert(after < before, s"compaction must shrink files: $before -> $after")
       // the rewritten table still carries the bucket spec: the store
       // side of the audit joins without a fingerprint Exchange
@@ -897,5 +896,81 @@ class StorageLayoutSpec extends SparkSpec {
     // file formats may relax nullability flags; names + types must hold
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       parsed.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+  }
+
+  private def numBuckets(table: String): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog
+      .getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .bucketSpec.map(_.numBuckets).getOrElse(0)
+
+  test("an existing table's bucket spec wins: GramStore appends into a " +
+      "4-bucket table, and compaction keeps 4 buckets") {
+    val dir = "/root/testdata/sf0.001"
+    val docs = graft.sources.Tables.documents(spark, dir)
+      .select("doc_id", "text")
+    val (k, t) = (32, "gram_store_b4")
+    // a deployment's own DDL-sized table, not the store's default count
+    graft.operators.TextOps.gramFirstPositions(
+        docs.filter(col("doc_id") < 200), k)
+      .write.mode("overwrite").bucketBy(4, "h").sortBy("h")
+      .saveAsTable(t)
+    try {
+      for (lo <- Seq(200L, 400L))
+        graft.sources.GramStore.append(
+          docs.filter(col("doc_id") >= lo && col("doc_id") < lo + 200), k, t)
+      assert(numBuckets(t) === 4)
+      val rows = spark.table(t).collect().map(_.toSeq)
+      assert(rows.length === graft.operators.TextOps.gramFirstPositions(
+        docs.filter(col("doc_id") < 600), k).count())
+      val (before, after) = graft.sources.Bucketed.compact(spark, t)
+      assert(numBuckets(t) === 4)
+      assert(after <= 4 && after < before,
+        s"compaction must bound files to the 4 buckets: $before -> $after")
+      assert(spark.table(t).collect().map(_.toSeq).sortBy(_.toString) ===
+        rows.sortBy(_.toString))
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}__compact_tmp")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}__compact_old")
+    }
+  }
+
+  test("a bucketed table keeps the frame's column order, bucket column " +
+      "not first, through save, merge rewrite and append") {
+    import graft.sources.{Bucketed, ComponentStore}
+    val (comp, t) = ("component_order", "bucket_order")
+    try {
+      val cols = Seq("doc_id", "component")
+      ComponentStore.ensure(spark, comp)
+      assert(spark.table(comp).columns.toSeq === cols)
+      ComponentStore.mergeBatch(spark, comp, Seq((2L, 3L)).toDF("d1", "d2"),
+        Seq(2L, 3L, 5L).toDF("doc_id"))
+      assert(spark.table(comp).columns.toSeq === cols)
+      ComponentStore.mergeBatch(spark, comp, Seq((3L, 5L)).toDF("d1", "d2"),
+        Seq(3L, 5L, 7L).toDF("doc_id"))
+      assert(spark.table(comp).columns.toSeq === cols)
+      assert(ComponentStore.load(spark, comp).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        Map(2L -> 2L, 3L -> 2L, 5L -> 2L, 7L -> 7L))
+
+      val layout = Bucketed.Layout("c", "c")
+      val frame = Seq((1L, "x", 10L, 1.5), (2L, "y", 20L, 2.5))
+        .toDF("a", "b", "c", "d")
+      Bucketed.write(frame, t, layout, "overwrite")
+      assert(spark.table(t).columns.toSeq === frame.columns.toSeq)
+      // an append in another column order lands by name
+      Bucketed.write(Seq((3L, "z", 30L, 3.5)).toDF("a", "b", "c", "d")
+        .select("d", "c", "b", "a"), t, layout, "append")
+      assert(spark.table(t).columns.toSeq === frame.columns.toSeq)
+      assert(spark.table(t).orderBy("a").collect().map(_.toSeq).toSeq ===
+        Seq(Seq(1L, "x", 10L, 1.5), Seq(2L, "y", 20L, 2.5),
+          Seq(3L, "z", 30L, 3.5)))
+      assert(numBuckets(t) === Bucketed.Buckets)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $comp")
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
   }
 }

@@ -1268,12 +1268,13 @@ object TextOps {
     // reachable from streaming foreachBatch loops
     // (IncrementalClusters/IncrementalCuration) that APPEND to the
     // catalog tables the pair relation reads — enrolling the plan in the
-    // shared CacheManager lets the clone-session write's refreshByPath
-    // refresh the cached file index in place (measured: an eager
-    // checkpoint here made every post-append store read serve the stale
-    // EMPTY listing and IncrementalClustersSpec failed store≡batch;
-    // processBatch also refreshes explicitly, and the cached pin stays
-    // as the second guard).
+    // shared CacheManager lets the write's refreshByPath refresh the
+    // cached file index in place (measured while the store read ran on
+    // the caller's session and the append on the batch's clone: an eager
+    // checkpoint here served the stale EMPTY listing and
+    // IncrementalClustersSpec failed store≡batch). Both loops now read
+    // and write on the batch's session; IncrementalCuration also
+    // refreshes its tables before each audit.
     val edgesDf = pairs.select(col("d1"), col("d2"))
       .transform(Materialize.cached)
     val n = edgesDf.count()

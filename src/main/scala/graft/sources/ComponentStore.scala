@@ -11,7 +11,8 @@ import graft.operators.{Materialize, TextOps}
   * `component` is the MINIMUM doc_id reachable in the near-dup pair
   * graph (the D7 label convention, so keepers are component == doc_id
   * rows), maintained across micro-batches by
-  * [[graft.streaming.IncrementalClusters]].
+  * [[graft.streaming.IncrementalClusters]] and across pair appends by
+  * [[PairStore.append]].
   *
   * Merge discipline (the [[PhashStore]] class-merge precedent, lifted
   * from bounded classes to an unbounded forest): a batch's new pairs
@@ -30,7 +31,8 @@ import graft.operators.{Materialize, TextOps}
   * the rewrite is a fixed point.
   *
   * Scale note: the store rewrite materializes unaffected ∪ relabeled ∪
-  * new rows and overwrites the table (localCheckpoint first — the
+  * new rows and overwrites the table (an eager
+  * [[graft.operators.Materialize.shared]] pin first — the
   * [[PhashStore]] overwrite-ordering contract). At deployment scale
   * the same merge writes per-component-bucket partitions and rewrites
   * only buckets holding affected or new rows; the single-table
@@ -58,8 +60,8 @@ object ComponentStore {
     * relabel, untouched rows carry over, pairless new docs enter as
     * singletons (component = own id).
     */
-  def mergeBatch(spark: SparkSession, table: String, pairs: DataFrame,
-                 docIds: DataFrame): Unit = {
+  def mergeBatch(table: String, pairs: DataFrame, docIds: DataFrame): Unit = {
+    val spark = pairs.sparkSession
     ensure(spark, table)
     val store = load(spark, table)
     val touched = pairs.select(col("d1").as("doc_id"))

@@ -66,17 +66,17 @@ object PairStore {
     * tomorrow's docs without recomputing yesterday's components"):
     * `newPairs` (same schema as the stored relation) append into the
     * bucketed pair table under the SAME bucket spec, and the stored
-    * closure merges incrementally — the [[ComponentStore.mergeBatch]]
-    * discipline lifted batch-side. New pairs can BRIDGE existing
+    * closure merges incrementally through [[ComponentStore.mergeBatch]]
+    * (the streaming store's own merge). New pairs can BRIDGE existing
     * components, so the merge recomputes components over
     * (new pairs ∪ the stored rows of every component they touch —
     * each stored (doc, label) row IS an edge doc→label, and the label
     * is a member doc of the same component, so minimum labels are
     * preserved) and leaves every untouched component's rows
     * byte-identical. The union-find input is bounded by the new
-    * pairs' component fan-out, never the stored graph, and the
-    * rewrite localCheckpoints before overwriting (the PhashStore
-    * ordering contract).
+    * pairs' component fan-out, never the stored graph. Every pair
+    * endpoint lands in the recomputed components, so the merge adds
+    * no singleton rows.
     *
     * Equivalence (StorageLayoutSpec-pinned): for any split A ⊎ B of a
     * pair relation, save(A); append(B) ≡ save(A ∪ B) on BOTH tables —
@@ -84,9 +84,9 @@ object PairStore {
     * components rewrite both restate the table's catalog bucket spec,
     * [[Bucketed.write]]).
     *
-    * Retry safety (ADVICE r14): the two writes cannot be atomic, so
-    * append is REPLAY-IDEMPOTENT instead — the streaming stores'
-    * fixed-point discipline. The pairs append first dedups against
+    * Retry safety: the two writes cannot be atomic, so append is
+    * REPLAY-IDEMPOTENT instead — the streaming stores' fixed-point
+    * discipline. The pairs append first dedups against
     * the stored relation (left_anti on (d1, d2) — the relation is a
     * set of verified edges, functionally determining its metadata),
     * so a retried batch appends zero duplicate rows; the component
@@ -121,28 +121,9 @@ object PairStore {
     Bucketed.write(fresh, pairsTable(base), pairsLayout, "append")
     // component merge from the FULL newPairs (fixed point: a retry
     // whose pairs all deduped away still heals a lost merge)
-    val store = components(spark, base)
-    val touched = newPairs.select(col("d1").as("doc_id"))
-      .union(newPairs.select(col("d2").as("doc_id"))).distinct()
-    val touchedRoots = store.join(touched, Seq("doc_id"))
-      .select("component").distinct()
-    val affected = store.join(touchedRoots, Seq("component"))
-      .select("doc_id", "component")
-    val edges = newPairs.select(col("d1"), col("d2"))
-      .union(affected.select(col("doc_id").as("d1"),
-        col("component").as("d2")))
-    val comps = TextOps.connectedComponents(edges)
-    // a USING join leads with its key: restore (doc_id, component),
-    // the order the table keeps
-    val unaffected = store.join(touchedRoots, Seq("component"),
-      "left_anti").select("doc_id", "component")
-    val merged = unaffected
-      .unionByName(comps.select("doc_id", "component"))
-      // eager materialization BEFORE the overwrite truncates the
-      // source table the lineage reads (the PhashStore contract)
-      .transform(Materialize.shared)
-    Bucketed.write(merged, componentsTable(base), componentsLayout,
-      "overwrite")
+    ComponentStore.mergeBatch(componentsTable(base), newPairs,
+      newPairs.select(col("d1").as("doc_id"))
+        .union(newPairs.select(col("d2").as("doc_id"))))
   }
 
   /** Compact the append-forever pairs table ([[Bucketed.compact]]

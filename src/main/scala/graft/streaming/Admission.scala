@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -13,12 +13,14 @@ import graft.operators.Materialize
   * audit (`decide`: one micro-batch → admitted rows and quarantine
   * rows) and its store appends (`append`); [[run]] owns the protocol:
   *
-  *  1. every read and write of the batch runs on `batch.sparkSession`.
+  *  1. every read and write of the batch runs on `batch.sparkSession`,
+  *     which `decide` and `append` take from the batch they are given
+  *     (the rule every micro-batch step of this package follows).
   *     Under `foreachBatch` the batch is bound to the stream's clone of
   *     the caller's session, and Spark's write→read coherence holds only
   *     within one session: an audit on another session can read a
   *     store listing from before the previous batch's append;
-  *  2. `decide(session, batch)` audits the batch against the stores;
+  *  2. `decide(batch)` audits the batch against the stores;
   *  3. admitted and quarantined rows are pinned with
   *     [[graft.operators.Materialize.shared]] (an eager checkpoint)
   *     before any write, so every write of the batch sees one decision.
@@ -31,7 +33,7 @@ import graft.operators.Materialize
   *     has a corpus sink), quarantined rows overwrite
   *     `quarantineDir/batch_id=<id>`; readers of the sink roots see
   *     `batch_id` as an ordinary partition column;
-  *  5. `append(session, batch, admitted)` appends the pinned admitted
+  *  5. `append(batch, admitted)` appends the pinned admitted
   *     rows to the gate's stores.
   *
   * At-least-once contract. `foreachBatch` may run a batch again after a
@@ -54,20 +56,19 @@ import graft.operators.Materialize
   */
 final case class Admission(
     corpusDir: Option[String], quarantineDir: String,
-    decide: (SparkSession, DataFrame) => (DataFrame, DataFrame),
-    append: (SparkSession, DataFrame, DataFrame) => Unit) {
+    decide: DataFrame => (DataFrame, DataFrame),
+    append: (DataFrame, DataFrame) => Unit) {
 
   /** One micro-batch through steps 1–5. Returns the pinned (admitted,
     * quarantined) rows.
     */
   def run(batch: DataFrame, batchId: Long): (DataFrame, DataFrame) = {
-    val session = batch.sparkSession
-    val (admitted, quarantined) = decide(session, batch)
+    val (admitted, quarantined) = decide(batch)
     val keep = Materialize.shared(admitted)
     val quar = Materialize.shared(quarantined)
     corpusDir.foreach(BatchStore.overwrite(keep, _, batchId))
     BatchStore.overwrite(quar, quarantineDir, batchId)
-    append(session, batch, keep)
+    append(batch, keep)
     (keep, quar)
   }
 

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
 import graft.sources.{Bucketed, FingerprintStore}
@@ -31,12 +30,11 @@ object CorpusAdmission {
     * (admitted, quarantined) — admitted rows are the batch schema;
     * quarantined rows add (stored_doc, shared_fps, ratio_micro).
     */
-  def admitBatch(spark: SparkSession, batch: DataFrame, storeTable: String,
-                 k: Int, w: Int, maxDf: Long,
-                 ratioMicroMin: Long): (DataFrame, DataFrame) = {
+  def admitBatch(batch: DataFrame, storeTable: String, k: Int, w: Int,
+                 maxDf: Long, ratioMicroMin: Long): (DataFrame, DataFrame) = {
     val distinctBatch = Admission.distinctTexts(batch)
-    val matches = FingerprintStore.auditIncoming(spark, storeTable,
-      distinctBatch, k, w, maxDf, ratioMicroMin)
+    val matches = FingerprintStore.auditIncoming(batch.sparkSession,
+      storeTable, distinctBatch, k, w, maxDf, ratioMicroMin)
     // max overlap, stored_doc tiebreak
     val best = Admission.strongest(matches, col("new_doc"),
       col("ratio_micro").desc, col("stored_doc"))
@@ -56,24 +54,12 @@ object CorpusAdmission {
       storeTable, FingerprintStore.layout, "append")
 
   /** The gate as an [[Admission]]: corpus and quarantine sinks, then
-    * the fingerprint append.
+    * the fingerprint append; stream it with [[Admission.start]].
     */
-  private[graft] def admission(storeTable: String, corpusDir: String,
-                               quarantineDir: String, k: Int, w: Int,
-                               maxDf: Long,
-                               ratioMicroMin: Long): Admission =
+  def admission(storeTable: String, corpusDir: String,
+                quarantineDir: String, k: Int, w: Int, maxDf: Long,
+                ratioMicroMin: Long): Admission =
     Admission(Some(corpusDir), quarantineDir,
-      admitBatch(_, _, storeTable, k, w, maxDf, ratioMicroMin),
-      (_, _, admitted) => appendToStore(admitted, storeTable, k, w))
-
-  /** The streaming admission query: docs stream → per-batch audit →
-    * corpus sink + quarantine sink + store append. Every read and
-    * write runs on the batch's own session.
-    */
-  def start(docs: DataFrame, storeTable: String,
-            corpusDir: String, quarantineDir: String,
-            checkpointDir: String, k: Int, w: Int, maxDf: Long,
-            ratioMicroMin: Long): StreamingQuery =
-    admission(storeTable, corpusDir, quarantineDir, k, w, maxDf,
-      ratioMicroMin).start(docs, checkpointDir)
+      admitBatch(_, storeTable, k, w, maxDf, ratioMicroMin),
+      (_, admitted) => appendToStore(admitted, storeTable, k, w))
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** T14: streaming volume-level CUSUM monitor — the stateful twin of
@@ -36,11 +35,14 @@ object CusumMonitor {
 
   /** One batch: fold this batch's count into the predecessor's sums
     * (zeros before the first row) and write this batch's monitor row.
+    * Empty batches are folded as n = 0, not skipped: a rate collapse to
+    * zero is the strongest possible down-shift evidence and must
+    * advance s_neg. Replay convergence comes from [[BatchStore.fold]],
+    * not from an emptiness guard.
     */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   monitorDir: String, batchId: Long, mu0: Long,
-                   slack: Long, threshold: Long): Unit =
-    BatchStore.fold(spark, monitorDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, monitorDir: String, batchId: Long,
+                   mu0: Long, slack: Long, threshold: Long): Unit =
+    BatchStore.fold(batch.sparkSession, monitorDir, batchId, State) { prev =>
       def sum0(c: String) = coalesce(col(c), lit(0L))
       batch.agg(count(lit(1)).as("n"))
         .join(broadcast(prev.select("s_pos", "s_neg")), lit(true), "left")
@@ -53,17 +55,5 @@ object CusumMonitor {
             .as("s_neg"))
         .withColumn("alarm",
           col("s_pos") > threshold || col("s_neg") > threshold)
-    }
-
-  def start(spark: SparkSession, events: DataFrame, monitorDir: String,
-            checkpointDir: String, mu0: Long, slack: Long,
-            threshold: Long): StreamingQuery =
-    MicroBatches.start(events, checkpointDir) { (batch, batchId) =>
-      // Empty batches are folded as n=0, NOT skipped: a rate collapse
-      // to zero is the strongest possible down-shift evidence and
-      // must advance s_neg. Replay convergence comes from
-      // BatchStore.fold, not from an emptiness guard.
-      processBatch(spark, batch, monitorDir, batchId, mu0, slack,
-        threshold)
     }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
 
@@ -42,9 +41,8 @@ object DriftMonitor {
   /** One batch vs the reference: a single row
     * (n_batch, n_ref, ks_num, ks_micro, alarm).
     */
-  def batchKs(spark: SparkSession, batch: DataFrame, refPath: String,
-              barMicro: Long): DataFrame = {
-    val ref = spark.read.parquet(refPath)
+  def batchKs(batch: DataFrame, refPath: String, barMicro: Long): DataFrame = {
+    val ref = batch.sparkSession.read.parquet(refPath)
     val bcen = batch
       .select(size(TextOps.tokens(col("text"))).cast("long").as("v"))
       .groupBy("v").agg(count(lit(1)).as("cnt"))
@@ -54,16 +52,12 @@ object DriftMonitor {
         (col("ks_micro") >= barMicro).as("alarm"))
   }
 
-  /** The streaming monitor query: docs stream → per-batch KS vs the
-    * reference → one row per batch in `monitorDir/batch_id=<id>`.
+  /** One micro-batch of docs: its KS row vs the reference in
+    * `monitorDir/batch_id=<id>`; an empty batch writes nothing.
     */
-  def start(spark: SparkSession, docs: DataFrame, refPath: String,
-            monitorDir: String, checkpointDir: String,
-            barMicro: Long): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      if (!batch.isEmpty) {
-        BatchStore.overwrite(batchKs(spark, batch, refPath, barMicro),
-          monitorDir, batchId)
-      }
-    }
+  def processBatch(batch: DataFrame, refPath: String, monitorDir: String,
+                   batchId: Long, barMicro: Long): Unit =
+    if (!batch.isEmpty)
+      BatchStore.overwrite(batchKs(batch, refPath, barMicro), monitorDir,
+        batchId)
 }

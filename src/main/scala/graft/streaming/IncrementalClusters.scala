@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Hashing.micro
 import graft.operators.TextOps
@@ -64,20 +63,13 @@ object IncrementalClusters {
   }
 
   /** One micro-batch: derive pairs, append fingerprints, merge
-    * components. Factored from [[start]] so the spec can drive batches
-    * directly.
+    * components.
     */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   fpTable: String, compTable: String, k: Int, w: Int,
-                   ratioMicroMin: Long): Unit = {
+  def processBatch(batch: DataFrame, fpTable: String, compTable: String,
+                   k: Int, w: Int, ratioMicroMin: Long): Unit = {
+    val spark = batch.sparkSession
     val docs = batch.select("doc_id", "text")
     FingerprintStore.ensure(spark, fpTable)
-    // the appends land through the micro-batch's CLONED session while
-    // this read resolves through the parent session, whose relation
-    // cache would otherwise serve the previous batch's file listing —
-    // refresh makes the cross-batch visibility explicit instead of an
-    // accident of what happens to sit in the shared CacheManager
-    spark.catalog.refreshTable(fpTable)
     val batchIds = docs.select("doc_id").distinct()
     // in-batch pairs: the batch twin on the batch alone
     val inBatch = batchTwinPairs(docs, k, w, ratioMicroMin)
@@ -102,17 +94,6 @@ object IncrementalClusters {
       .select(col("stored_doc").as("d1"), col("new_doc").as("d2"))
     val pairs = inBatch.union(vsStore)
     CorpusAdmission.appendToStore(docs, fpTable, k, w)
-    ComponentStore.mergeBatch(spark, compTable, pairs, batchIds)
+    ComponentStore.mergeBatch(compTable, pairs, batchIds)
   }
-
-  /** The streaming query: docs stream → per-batch pair derivation →
-    * fingerprint append + component merge.
-    */
-  def start(spark: SparkSession, docs: DataFrame, fpTable: String,
-            compTable: String, checkpointDir: String, k: Int, w: Int,
-            ratioMicroMin: Long): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, _) =>
-      processBatch(spark, batch, fpTable, compTable, k, w,
-        ratioMicroMin)
-    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
 import graft.sources.{DocStatsStore, FingerprintStore, PairStore,
@@ -10,9 +9,9 @@ import graft.sources.{DocStatsStore, FingerprintStore, PairStore,
 
 /** The composed daily-increment curation pipeline — ingest → admission
   * → pair-store append → component merge → waterfall/corpus-card
-  * refresh, wired end-to-end (VERDICT r15 item 1: every store is
-  * individually proven; THIS is the loop a 100 TB deployment actually
-  * runs, where nobody recomputes).
+  * refresh, wired end-to-end: each store is specified on its own, and
+  * this is the one loop that composes them, so an increment never
+  * recomputes history.
   *
   * One increment ([[runIncrement]]):
   *  1. ADMISSION — [[CorpusAdmission.admitBatch]]: in-batch exact
@@ -116,19 +115,21 @@ object IncrementalCuration {
     (keep.count(), quar.count())
   }
 
-  /** Steps 1–3 as an [[Admission]]. */
-  private def admission(base: String, corpusDir: String,
-                        quarantineDir: String, cfg: Config): Admission =
-    Admission(Some(corpusDir), quarantineDir, (sp, batch) => {
+  /** Steps 1–3 as an [[Admission]]; streamed with [[Admission.start]],
+    * every micro-batch is one increment.
+    */
+  def admission(base: String, corpusDir: String, quarantineDir: String,
+                cfg: Config = Config()): Admission =
+    Admission(Some(corpusDir), quarantineDir, batch => {
+      val sp = batch.sparkSession
       // the clone's relation cache may still pin batch N-1's listing of
       // tables a different driver session wrote between increments
       Seq(fpTable(base), s"${base}_sh", s"${base}_sizes", s"${base}_pairs",
           s"${base}_components", s"${base}_docstats")
         .filter(sp.catalog.tableExists)
         .foreach(sp.catalog.refreshTable)
-      val (admitted0, quarantined0) = CorpusAdmission.admitBatch(sp,
-        batch, fpTable(base), cfg.k, cfg.w, cfg.winnowMaxDf,
-        cfg.ratioMicroMin)
+      val (admitted0, quarantined0) = CorpusAdmission.admitBatch(batch,
+        fpTable(base), cfg.k, cfg.w, cfg.winnowMaxDf, cfg.ratioMicroMin)
       // T30 stage: the eval-decontamination gate on the near-dup
       // survivors. The eval index is STATIC, so this stage is
       // order/replay-invariant by construction (TextOps.evalGatePairs);
@@ -148,7 +149,8 @@ object IncrementalCuration {
             Admission.verdict(admitted0, "doc_id", best, "new_doc")
           (keepEval, quarantined0.unionByName(quarEval))
       }
-    }, (sp, _, keep) => {
+    }, (batch, keep) => {
+      val sp = batch.sparkSession
       CorpusAdmission.appendToStore(keep, fpTable(base), cfg.k, cfg.w)
       val docs = keep.select("doc_id", "text")
       ShingleStore.append(docs, cfg.n, base)
@@ -191,10 +193,4 @@ object IncrementalCuration {
     */
   def card(spark: SparkSession, base: String): DataFrame =
     TextOps.corpusCardFrom(DocStatsStore.load(spark, base))
-
-  /** The streaming form: every micro-batch is one increment. */
-  def start(docs: DataFrame, base: String,
-            corpusDir: String, quarantineDir: String,
-            checkpointDir: String, cfg: Config = Config()): StreamingQuery =
-    admission(base, corpusDir, quarantineDir, cfg).start(docs, checkpointDir)
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.PhashStore
 
@@ -30,15 +29,14 @@ object MediaAdmission {
   /** One micro-batch through the gate. Returns (admitted,
     * quarantined) doc_id relations; quarantined rows carry the match.
     */
-  def admitBatch(spark: SparkSession, batch: DataFrame,
-                 storeTable: String, maxHamming: Int)
-  : (DataFrame, DataFrame) = {
+  def admitBatch(batch: DataFrame, storeTable: String,
+                 maxHamming: Int): (DataFrame, DataFrame) = {
     val bmpIds = batch.filter(col("doc_id") % 2 === 0)
       .select("doc_id")
     // class-level self-exclusion: a stored class whose exemplar is in
     // THIS batch was created by this batch (a replay) — not a dup
-    val matches = PhashStore.auditIncoming(spark, storeTable, batch,
-        maxHamming)
+    val matches = PhashStore.auditIncoming(batch.sparkSession, storeTable,
+        batch, maxHamming)
       .join(bmpIds.select(col("doc_id").as("exemplar")),
         Seq("exemplar"), "left_anti")
     // lowest hamming, then largest stored class, then exemplar id
@@ -50,23 +48,13 @@ object MediaAdmission {
   }
 
   /** The gate as an [[Admission]]: admitted and quarantine sinks, then
-    * the admitted images' classes merged into the store.
+    * the admitted images' classes merged into the store; stream it with
+    * [[Admission.start]].
     */
-  private[graft] def admission(storeTable: String, admittedDir: String,
-                               quarantineDir: String,
-                               maxHamming: Int): Admission =
+  def admission(storeTable: String, admittedDir: String,
+                quarantineDir: String, maxHamming: Int): Admission =
     Admission(Some(admittedDir), quarantineDir,
-      admitBatch(_, _, storeTable, maxHamming),
-      (session, batch, admitted) => PhashStore.mergeAdmitted(session,
+      admitBatch(_, storeTable, maxHamming),
+      (batch, admitted) => PhashStore.mergeAdmitted(batch.sparkSession,
         batch.join(admitted, Seq("doc_id"), "left_semi"), storeTable))
-
-  /** The streaming gate: docs stream → per-batch phash audit →
-    * admitted/quarantine sinks + store merge. Every read and write runs
-    * on the batch's own session.
-    */
-  def start(docs: DataFrame, storeTable: String,
-            admittedDir: String, quarantineDir: String,
-            checkpointDir: String, maxHamming: Int): StreamingQuery =
-    admission(storeTable, admittedDir, quarantineDir, maxHamming)
-      .start(docs, checkpointDir)
 }

@@ -10,12 +10,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{
 /** Streaming observability — the engine-side replacement for the
   * reference's `pg_stat_statements` (SURVEY.md §4.1): a
   * StreamingQueryListener that keeps a bounded ring of per-batch
-  * progress (rows, input rate, batch duration) per query and summarizes
-  * on demand. Attach once per session; costs nothing on the data path
-  * (events arrive on the listener bus).
+  * progress (rows, input rate, batch duration; the last 256 batches)
+  * per query and summarizes on demand. Attach once per session; costs
+  * nothing on the data path (events arrive on the listener bus).
   */
-class Monitoring(maxBatchesPerQuery: Int = 256)
-  extends StreamingQueryListener {
+class Monitoring extends StreamingQueryListener {
+  import Monitoring.MaxBatchesPerQuery
 
   case class BatchStat(batchId: Long, numInputRows: Long,
                        inputRowsPerSecond: Double, durationMs: Long)
@@ -39,7 +39,7 @@ class Monitoring(maxBatchesPerQuery: Int = 256)
           p.inputRowsPerSecond,
           Option(p.durationMs.get("triggerExecution"))
             .map(_.longValue).getOrElse(0L)))
-        while (q.size > maxBatchesPerQuery) q.dequeue()
+        while (q.size > MaxBatchesPerQuery) q.dequeue()
       }
     }
 
@@ -58,10 +58,12 @@ class Monitoring(maxBatchesPerQuery: Int = 256)
 }
 
 object Monitoring {
+
+  private val MaxBatchesPerQuery = 256
+
   /** Attach a fresh monitor to the session's listener bus. */
-  def attach(spark: SparkSession,
-             maxBatchesPerQuery: Int = 256): Monitoring = {
-    val m = new Monitoring(maxBatchesPerQuery)
+  def attach(spark: SparkSession): Monitoring = {
+    val m = new Monitoring
     spark.streams.addListener(m)
     m
   }

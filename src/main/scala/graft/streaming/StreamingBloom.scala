@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.SketchQueries
@@ -38,9 +37,9 @@ object StreamingBloom {
   private val State = StructType.fromDDL("w BIGINT, word BIGINT")
 
   /** One micro-batch of (doc_id, text) rows. */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       prev.unionByName(SketchQueries.bloomWordsOf(keyed(batch).select("key")))
         .groupBy("w").agg(bit_or(col("word")).as("word"))
     }
@@ -59,10 +58,4 @@ object StreamingBloom {
              docs: DataFrame): DataFrame =
     SketchQueries.bloomProbe(words(spark, storeDir), keyed(docs))
       .select("doc_id", "claimed").orderBy("doc_id")
-
-  def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
@@ -38,11 +37,10 @@ object StreamingCalibration {
   private val State = StructType.fromDDL("v BIGINT, cnt BIGINT, n_pass BIGINT")
 
   /** One micro-batch of (doc_id, text, ...) rows. */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long, minTok: Long,
-                   maxTok: Long, ttrMinMicro: Long, topMaxMicro: Long,
-                   minStops: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long,
+                   minTok: Long, maxTok: Long, ttrMinMicro: Long,
+                   topMaxMicro: Long, minStops: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       prev.unionByName(TextOps.scoreCensus(batch, minTok, maxTok,
           ttrMinMicro, topMaxMicro, minStops))
         .groupBy("v")
@@ -58,13 +56,4 @@ object StreamingCalibration {
     */
   def calibration(spark: SparkSession, storeDir: String): DataFrame =
     TextOps.calibrationFromCensus(census(spark, storeDir))
-
-  def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-            checkpointDir: String, minTok: Long, maxTok: Long,
-            ttrMinMicro: Long, topMaxMicro: Long,
-            minStops: Long): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId, minTok, maxTok,
-        ttrMinMicro, topMaxMicro, minStops)
-    }
 }

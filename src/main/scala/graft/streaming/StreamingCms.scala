@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Hashing
@@ -50,9 +49,9 @@ object StreamingCms {
   private val State = StructType.fromDDL("j INT, bucket BIGINT, c BIGINT")
 
   /** One micro-batch of events-shaped rows (anything with user_id). */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       prev.unionByName(counters(batch))
         .groupBy("j", "bucket").agg(sum("c").as("c"))
     }
@@ -85,10 +84,4 @@ object StreamingCms {
         least((0 until Depth).map(j => col(s"c$j")): _*).as("cms_est"))
       .orderBy("user_id")
   }
-
-  def start(spark: SparkSession, events: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(events, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

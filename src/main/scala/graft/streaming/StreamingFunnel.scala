@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.RelationalQueries
@@ -44,9 +43,9 @@ object StreamingFunnel {
     StructType.fromDDL("user_id BIGINT, event_type STRING, ts TIMESTAMP")
 
   /** One micro-batch of events-shaped rows (user_id, event_type, ts). */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       prev.unionByName(batch
           .filter(col("event_type")
             .isin(RelationalQueries.FunnelSteps: _*))
@@ -68,10 +67,4 @@ object StreamingFunnel {
     */
   def funnelLatency(spark: SparkSession, storeDir: String): DataFrame =
     RelationalQueries.funnelLatency(stepEvents(spark, storeDir))
-
-  def start(spark: SparkSession, events: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(events, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.{SketchQueries, TextOps}
@@ -32,14 +31,14 @@ object StreamingHeavyHitters {
   private val State = StructType.fromDDL("token STRING, c BIGINT")
 
   /** One micro-batch of documents-shaped rows (doc_id, text). */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit = {
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit = {
     val bcen = batch
       .select(explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))
       .withColumn("bucket", lit(0L))
     val bsum = SketchQueries.mgStep(bcen, col("bucket"))
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       SketchQueries.mgStep(
         prev.withColumn("bucket", lit(0L))
           .unionByName(bsum.select("bucket", "token", "c"))
@@ -55,10 +54,4 @@ object StreamingHeavyHitters {
   def summary(spark: SparkSession, storeDir: String): DataFrame =
     BatchStore.current(spark, storeDir, State)
       .orderBy(col("c").desc, col("token"))
-
-  def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

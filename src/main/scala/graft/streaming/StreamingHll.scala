@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.SketchQueries
@@ -34,9 +33,9 @@ object StreamingHll {
   private val State = StructType.fromDDL("bucket BIGINT, rho BIGINT")
 
   /** One micro-batch of (user_id) rows. */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       prev.unionByName(SketchQueries.hllRegistersOf(batch))
         .groupBy("bucket").agg(max("rho").as("rho"))
     }
@@ -63,10 +62,4 @@ object StreamingHll {
     if (raw <= 2.5 * m && zeros > 0) m * math.log(m / zeros.toDouble)
     else raw
   }
-
-  def start(spark: SparkSession, events: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(events, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

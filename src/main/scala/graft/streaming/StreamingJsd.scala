@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
@@ -41,9 +40,9 @@ object StreamingJsd {
   private val State = StructType.fromDDL("source STRING, t STRING, cnt BIGINT")
 
   /** One micro-batch of (doc_id, text, source) rows. */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       prev.unionByName(TextOps.sourceTermCensus(batch))
         .groupBy("source", "t").agg(sum("cnt").as("cnt"))
     }
@@ -60,10 +59,4 @@ object StreamingJsd {
           topV: Int): DataFrame =
     TextOps.jsdFromCensus(census(spark, storeDir), topV)
       .orderBy("source_a", "source_b")
-
-  def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Hashing.micro
@@ -47,9 +46,9 @@ object StreamingKcenter {
   /** One batch of (vec_id, embedding) rows. `tau0` is the initial
     * micro-dissimilarity threshold; `k` the center budget.
     */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long, k: Int,
-                   tau0: Long): Unit =
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long,
+                   k: Int, tau0: Long): Unit = {
+    val spark = batch.sparkSession
     BatchStore.fold(spark, storeDir, batchId, State) { prev =>
       val rows = prev.orderBy("cid").collect()
       var centers = rows.map(r =>
@@ -105,6 +104,7 @@ object StreamingKcenter {
       centers.map { case (cid, e) => (cid, e.toSeq, tau) }
         .toDF("cid", "embedding", "tau")
     }
+  }
 
   /** Driver-side micro cosine — the same expression tree as the
     * kernel (dot / (|a|·|b|), doubles from float inputs, floored).
@@ -130,10 +130,4 @@ object StreamingKcenter {
   def centers(spark: SparkSession, storeDir: String): DataFrame =
     BatchStore.current(spark, storeDir, State)
       .select("cid", "tau").orderBy("cid")
-
-  def start(spark: SparkSession, vecs: DataFrame, storeDir: String,
-            checkpointDir: String, k: Int, tau0: Long): StreamingQuery =
-    MicroBatches.start(vecs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId, k, tau0)
-    }
 }

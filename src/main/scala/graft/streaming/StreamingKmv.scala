@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.SketchQueries
@@ -30,9 +29,9 @@ object StreamingKmv {
   private val State = StructType.fromDDL("source STRING, h BIGINT")
 
   /** One micro-batch of (doc_id, text, source) rows. */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       SketchQueries.kmvBottomK(
         prev.unionByName(SketchQueries.kmvHashes(batch)))
     }
@@ -47,10 +46,4 @@ object StreamingKmv {
     */
   def estimates(spark: SparkSession, storeDir: String): DataFrame =
     SketchQueries.kmvEstimates(state(spark, storeDir))
-
-  def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.RelationalQueries
@@ -46,9 +45,9 @@ object StreamingMsprt {
   /** One micro-batch of events rows (event_id, user_id, event_type,
     * ts, value).
     */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       prev.unionByName(RelationalQueries.msprtDailyCensus(batch))
         .groupBy("event_type", "day")
         .agg(sum("dn_a").as("dn_a"), sum("dn_b").as("dn_b"),
@@ -69,10 +68,4 @@ object StreamingMsprt {
     */
   def msprt(spark: SparkSession, storeDir: String): DataFrame =
     RelationalQueries.msprtFromDaily(dailyCensus(spark, storeDir))
-
-  def start(spark: SparkSession, events: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(events, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
@@ -42,9 +41,9 @@ object StreamingPrefix {
     StructType.fromDDL("pk BIGINT, source STRING, n BIGINT, min_doc BIGINT")
 
   /** One micro-batch of documents-shaped rows. */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       prev.unionByName(partial(batch))
         .groupBy("pk", "source")
         .agg(sum("n").as("n"), min("min_doc").as("min_doc"))
@@ -84,10 +83,4 @@ object StreamingPrefix {
       .withColumn("flooded", col("n_seen") >= bar)
       .orderBy("doc_id")
   }
-
-  def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
@@ -62,13 +61,15 @@ object StreamingPsi {
     StructType.fromDDL("source STRING, bucket BIGINT, n_b BIGINT")
 
   /** One micro-batch of (doc_id, text, source) rows. */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit = {
+    val spark = batch.sparkSession
     BatchStore.fold(spark, storeDir, batchId, State) { prev =>
       prev.unionByName(TextOps.sourceBuckets(batch,
           referenceEdges(spark, storeDir)))
         .groupBy("source", "bucket").agg(sum("n_b").as("n_b"))
     }
+  }
 
   /** The stored (source, bucket, n_b) census (latest batch). */
   def buckets(spark: SparkSession, storeDir: String): DataFrame =
@@ -80,10 +81,4 @@ object StreamingPsi {
     */
   def psi(spark: SparkSession, storeDir: String): DataFrame =
     TextOps.psiFromBuckets(buckets(spark, storeDir)).orderBy("source")
-
-  def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.DataFrame
 
 import graft.operators.SketchQueries
 import graft.sources.QuantileStore
@@ -29,8 +28,8 @@ import graft.sources.QuantileStore
 object StreamingQuantiles {
 
   /** One micro-batch: sample, then create-or-merge the store. */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   table: String): Unit = {
+  def processBatch(batch: DataFrame, table: String): Unit = {
+    val spark = batch.sparkSession
     val sample = SketchQueries.qsSample(
       batch.select("event_id", "event_type", "value"))
     if (!spark.catalog.tableExists(table))
@@ -38,10 +37,4 @@ object StreamingQuantiles {
     else
       QuantileStore.merge(spark, sample, table)
   }
-
-  def start(spark: SparkSession, events: DataFrame, table: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(events, checkpointDir) { (batch, _) =>
-      processBatch(spark, batch, table)
-    }
 }

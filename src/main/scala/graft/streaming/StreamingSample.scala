@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
@@ -44,8 +43,9 @@ object StreamingSample {
     * the predecessor), so store size and per-trigger listing stay
     * O(n), not O(total batches).
     */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long, n: Int): Unit = {
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long, n: Int): Unit = {
+    val spark = batch.sparkSession
     BatchStore.fold(spark, storeDir, batchId, State) { prev =>
       TextOps.aesTopN(prev.drop("rank")
         .unionByName(TextOps.aesKeys(batch))
@@ -61,10 +61,4 @@ object StreamingSample {
     */
   def sample(spark: SparkSession, storeDir: String): DataFrame =
     BatchStore.current(spark, storeDir, State).orderBy("rank")
-
-  def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-            checkpointDir: String, n: Int): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId, n)
-    }
 }

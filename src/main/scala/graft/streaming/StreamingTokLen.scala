@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
@@ -35,9 +34,9 @@ object StreamingTokLen {
     StructType.fromDDL("source STRING, len BIGINT, cnt BIGINT")
 
   /** One micro-batch of documents-shaped rows. */
-  def processBatch(spark: SparkSession, batch: DataFrame,
-                   storeDir: String, batchId: Long): Unit =
-    BatchStore.fold(spark, storeDir, batchId, State) { prev =>
+  def processBatch(batch: DataFrame, storeDir: String,
+                   batchId: Long): Unit =
+    BatchStore.fold(batch.sparkSession, storeDir, batchId, State) { prev =>
       prev.unionByName(TextOps.tokenLenPartial(batch))
         .groupBy("source", "len").agg(sum("cnt").as("cnt"))
     }
@@ -52,10 +51,4 @@ object StreamingTokLen {
     */
   def census(spark: SparkSession, storeDir: String): DataFrame =
     TextOps.tokenLenFromCensus(state(spark, storeDir))
-
-  def start(spark: SparkSession, docs: DataFrame, storeDir: String,
-            checkpointDir: String): StreamingQuery =
-    MicroBatches.start(docs, checkpointDir) { (batch, batchId) =>
-      processBatch(spark, batch, storeDir, batchId)
-    }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.{FingerprintStore, GramStore, VectorStore,
   WordGramStore}
@@ -83,11 +82,11 @@ object UnifiedAdmission {
     * micro-batch — the union of the three audits in the unified
     * quarantine schema `(doc_id, signal, matched_id, score)`.
     */
-  def signalMatches(spark: SparkSession, batch: DataFrame,
-                    fpTable: String, gramTable: String, vecPath: String,
-                    cfg: Config,
+  def signalMatches(batch: DataFrame, fpTable: String, gramTable: String,
+                    vecPath: String, cfg: Config,
                     evalGramTable: Option[String] = None,
                     evalFpTable: Option[String] = None): DataFrame = {
+    val spark = batch.sparkSession
     val texts = batch.select("doc_id", "text")
     val winnow = FingerprintStore.auditIncoming(spark, fpTable, texts,
         cfg.winnowK, cfg.winnowW, cfg.winnowMaxDf,
@@ -100,7 +99,7 @@ object UnifiedAdmission {
       .filter(col("n_shared") >= cfg.gramMinShared)
       .select(col("new_doc").as("doc_id"), lit("substring").as("signal"),
         col("stored_doc").as("matched_id"), col("n_shared").as("score"))
-    val (_, vecQuar) = VectorAdmission.auditBatch(spark, vecPath,
+    val (_, vecQuar) = VectorAdmission.auditBatch(vecPath,
       batch.select(col("doc_id").as("vec_id"), col("embedding")),
       cfg.cosMicroMin)
     val vector = vecQuar
@@ -170,13 +169,13 @@ object UnifiedAdmission {
     * quarantined — one `(doc_id, signal, matched_id, score)` row per
     * firing signal).
     */
-  def admitBatch(spark: SparkSession, batch: DataFrame, fpTable: String,
-                 gramTable: String, vecPath: String, cfg: Config,
+  def admitBatch(batch: DataFrame, fpTable: String, gramTable: String,
+                 vecPath: String, cfg: Config,
                  evalGramTable: Option[String] = None,
                  evalFpTable: Option[String] = None)
       : (DataFrame, DataFrame) = {
     val distinctBatch = Admission.distinctTexts(batch)
-    val signals = signalMatches(spark, distinctBatch, fpTable, gramTable,
+    val signals = signalMatches(distinctBatch, fpTable, gramTable,
       vecPath, cfg, evalGramTable, evalFpTable)
     val admitted = distinctBatch.join(
       signals.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
@@ -185,41 +184,24 @@ object UnifiedAdmission {
 
   /** The gate as an [[Admission]]: corpus and quarantine sinks, then
     * the fingerprint, gram and vector appends of one pinned admitted
-    * set, the vector append's drift handed to `onDrift`.
+    * set. Each appending batch's vector drift is surfaced through
+    * `onDrift` (re-clustering itself belongs in a quiesced maintenance
+    * window). Stream it with [[Admission.start]].
     */
-  private[graft] def admission(fpTable: String, gramTable: String,
-                               vecPath: String, corpusDir: String,
-                               quarantineDir: String, cfg: Config,
-                               onDrift: VectorStore.Drift => Unit = _ => (),
-                               evalGramTable: Option[String] = None,
-                               evalFpTable: Option[String] = None)
-  : Admission =
+  def admission(fpTable: String, gramTable: String, vecPath: String,
+                corpusDir: String, quarantineDir: String, cfg: Config,
+                onDrift: VectorStore.Drift => Unit = _ => (),
+                evalGramTable: Option[String] = None,
+                evalFpTable: Option[String] = None): Admission =
     Admission(Some(corpusDir), quarantineDir,
-      admitBatch(_, _, fpTable, gramTable, vecPath, cfg, evalGramTable,
+      admitBatch(_, fpTable, gramTable, vecPath, cfg, evalGramTable,
         evalFpTable),
-      (session, _, admitted) => if (!admitted.isEmpty) {
+      (batch, admitted) => if (!admitted.isEmpty) {
         val texts = admitted.select("doc_id", "text")
         CorpusAdmission.appendToStore(texts, fpTable, cfg.winnowK,
           cfg.winnowW)
         GramStore.append(texts, cfg.gramK, gramTable)
-        onDrift(VectorStore.append(session, vecPath,
+        onDrift(VectorStore.append(batch.sparkSession, vecPath,
           admitted.select(col("doc_id").as("vec_id"), col("embedding"))))
       })
-
-  /** The streaming gate: (doc_id, text, embedding) stream → per-batch
-    * audit → corpus sink + unified quarantine sink + three store
-    * appends. Each appending batch's vector drift is
-    * surfaced through `onDrift` (re-clustering itself belongs in a
-    * quiesced maintenance window). Every read and write runs on the
-    * batch's own session.
-    */
-  def start(docs: DataFrame, fpTable: String,
-            gramTable: String, vecPath: String, corpusDir: String,
-            quarantineDir: String, checkpointDir: String, cfg: Config,
-            onDrift: VectorStore.Drift => Unit = _ => (),
-            evalGramTable: Option[String] = None,
-            evalFpTable: Option[String] = None): StreamingQuery =
-    admission(fpTable, gramTable, vecPath, corpusDir, quarantineDir, cfg,
-      onDrift, evalGramTable, evalFpTable)
-      .start(docs, checkpointDir)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Hashing.micro
 import graft.functions.KmeansAssign.kmeansAssign
@@ -37,8 +36,9 @@ object VectorAdmission {
     * (fresh, quarantined) — fresh rows are (vec_id, embedding);
     * quarantined rows add (stored_vec, cos_micro).
     */
-  def auditBatch(spark: SparkSession, path: String, batch: DataFrame,
+  def auditBatch(path: String, batch: DataFrame,
                  cosMicroMin: Long): (DataFrame, DataFrame) = {
+    val spark = batch.sparkSession
     val meta = VectorStore.readMeta(spark, path)
     val b = batch.dropDuplicates("vec_id")
     val assigned = b.select(col("vec_id").as("new_vec"),
@@ -61,30 +61,18 @@ object VectorAdmission {
     Admission.verdict(b, "vec_id", best, "new_vec")
   }
 
-  /** The gate as an [[Admission]]: quarantine sink, then the store
-    * append with the batch's [[VectorStore.Drift]] handed to `onDrift`.
+  /** The gate as an [[Admission]]: quarantine sink (batch-id-keyed,
+    * overwrite), then the store append with the batch's
+    * [[VectorStore.Drift]] handed to `onDrift` (the hook a deployment
+    * wires to its re-cluster trigger; retraining itself belongs in a
+    * quiesced maintenance window, not mid-stream). Stream it with
+    * [[Admission.start]].
     */
-  private[graft] def admission(path: String, quarantineDir: String,
-                               cosMicroMin: Long,
-                               onDrift: VectorStore.Drift => Unit = _ => ())
-  : Admission =
-    Admission(None, quarantineDir, auditBatch(_, path, _, cosMicroMin),
-      (session, _, fresh) =>
-        if (!fresh.isEmpty) onDrift(VectorStore.append(session, path, fresh)))
-
-  /** The streaming admission query: embeddings stream → per-batch
-    * audit → quarantine sink (batch-id-keyed, overwrite) + store append
-    * with the batch's [[VectorStore.Drift]] handed to `onDrift` (the
-    * hook a deployment wires to its re-cluster trigger; retraining
-    * itself belongs in a quiesced maintenance window, not mid-stream).
-    * Every read and write runs on the batch's own session.
-    */
-  def start(vecs: DataFrame, path: String,
-            quarantineDir: String, checkpointDir: String,
-            cosMicroMin: Long,
-            onDrift: VectorStore.Drift => Unit = _ => ()): StreamingQuery =
-    admission(path, quarantineDir, cosMicroMin, onDrift)
-      .start(vecs, checkpointDir)
+  def admission(path: String, quarantineDir: String, cosMicroMin: Long,
+                onDrift: VectorStore.Drift => Unit = _ => ()): Admission =
+    Admission(None, quarantineDir, auditBatch(path, _, cosMicroMin),
+      (batch, fresh) => if (!fresh.isEmpty)
+        onDrift(VectorStore.append(batch.sparkSession, path, fresh)))
 
   /** Drop duplicate physical rows a crash-replayed append may have
     * left (same vec_id in the same cluster partition) — the vector

@@ -75,7 +75,7 @@ class BatchStoreSpec extends SparkSpec {
       .withColumn("ts",
         org.apache.spark.sql.functions.to_timestamp(
           org.apache.spark.sql.functions.col("ts_s"))).drop("ts_s")
-    StreamingMsprt.processBatch(spark, empty, dir, 0L)
+    StreamingMsprt.processBatch(empty, dir, 0L)
     assert(new java.io.File(s"$dir/batch_id=0").exists,
       "fixture must create the empty partition")
     // pre-fix these threw NullPointerException via head().getLong(0)
@@ -92,46 +92,46 @@ class BatchStoreSpec extends SparkSpec {
     val exposures = Seq.empty[(Long, String)].toDF("user_id", "event_type")
     val vecs = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
     val stores: Seq[(String, String => Unit, Seq[String => DataFrame])] = Seq(
-      ("bloom", StreamingBloom.processBatch(spark, docs, _, 0L),
+      ("bloom", StreamingBloom.processBatch(docs, _, 0L),
         Seq(StreamingBloom.words(spark, _),
           StreamingBloom.claims(spark, _, docs))),
-      ("calibration", StreamingCalibration.processBatch(spark, docs, _, 0L,
+      ("calibration", StreamingCalibration.processBatch(docs, _, 0L,
           5L, 1000L, 300000L, 500000L, 1L),
         Seq(StreamingCalibration.census(spark, _),
           StreamingCalibration.calibration(spark, _))),
-      ("cms", StreamingCms.processBatch(spark, users, _, 0L),
+      ("cms", StreamingCms.processBatch(users, _, 0L),
         Seq(StreamingCms.sketch(spark, _),
           StreamingCms.estimate(spark, _, users))),
-      ("funnel", StreamingFunnel.processBatch(spark, funnelEvents, _, 0L),
+      ("funnel", StreamingFunnel.processBatch(funnelEvents, _, 0L),
         Seq(StreamingFunnel.stepEvents(spark, _),
           StreamingFunnel.funnelLatency(spark, _))),
       ("heavy hitters",
-        StreamingHeavyHitters.processBatch(spark, docs, _, 0L),
+        StreamingHeavyHitters.processBatch(docs, _, 0L),
         Seq(StreamingHeavyHitters.summary(spark, _))),
-      ("hll", StreamingHll.processBatch(spark, users, _, 0L),
+      ("hll", StreamingHll.processBatch(users, _, 0L),
         Seq(StreamingHll.registers(spark, _))),
-      ("jsd", StreamingJsd.processBatch(spark, docs, _, 0L),
+      ("jsd", StreamingJsd.processBatch(docs, _, 0L),
         Seq(StreamingJsd.census(spark, _), StreamingJsd.jsd(spark, _, 8))),
-      ("kcenter", StreamingKcenter.processBatch(spark, vecs, _, 0L, 2,
+      ("kcenter", StreamingKcenter.processBatch(vecs, _, 0L, 2,
           100000L),
         Seq(StreamingKcenter.centers(spark, _))),
-      ("kmv", StreamingKmv.processBatch(spark, docs, _, 0L),
+      ("kmv", StreamingKmv.processBatch(docs, _, 0L),
         Seq(StreamingKmv.state(spark, _), StreamingKmv.estimates(spark, _))),
-      ("prefix", StreamingPrefix.processBatch(spark, docs, _, 0L),
+      ("prefix", StreamingPrefix.processBatch(docs, _, 0L),
         Seq(StreamingPrefix.state(spark, _),
           StreamingPrefix.census(spark, _),
           StreamingPrefix.claims(spark, _, docs, 2L))),
       ("psi", { d =>
           StreamingPsi.initReference(spark, d,
             Seq((1L, "a b c", "s")).toDF("doc_id", "text", "source"))
-          StreamingPsi.processBatch(spark, docs, d, 0L)
+          StreamingPsi.processBatch(docs, d, 0L)
         },
         Seq(StreamingPsi.buckets(spark, _), StreamingPsi.psi(spark, _))),
-      ("sample", StreamingSample.processBatch(spark, docs, _, 0L, 5),
+      ("sample", StreamingSample.processBatch(docs, _, 0L, 5),
         Seq(StreamingSample.sample(spark, _))),
-      ("srm", StreamingSrm.processBatch(spark, exposures, _, 0L),
+      ("srm", StreamingSrm.processBatch(exposures, _, 0L),
         Seq(StreamingSrm.users(spark, _), StreamingSrm.srm(spark, _))),
-      ("token length", StreamingTokLen.processBatch(spark, docs, _, 0L),
+      ("token length", StreamingTokLen.processBatch(docs, _, 0L),
         Seq(StreamingTokLen.state(spark, _),
           StreamingTokLen.census(spark, _))))
     stores.foreach { case (name, write, reads) =>
@@ -147,11 +147,11 @@ class BatchStoreSpec extends SparkSpec {
     // funnel census has one row per step (zero users each, as the batch
     // kernel over zero events) and the HLL estimate is a number
     val funnel = Files.createTempDirectory("graft-bs-empty-funnel").toString
-    StreamingFunnel.processBatch(spark, funnelEvents, funnel, 0L)
+    StreamingFunnel.processBatch(funnelEvents, funnel, 0L)
     assert(StreamingFunnel.funnel(spark, funnel).collect()
       .map(_.getAs[Long]("n_users")).toSeq === Seq(0L, 0L, 0L))
     val hll = Files.createTempDirectory("graft-bs-empty-hll").toString
-    StreamingHll.processBatch(spark, users, hll, 0L)
+    StreamingHll.processBatch(users, hll, 0L)
     assert(StreamingHll.estimate(spark, hll) === 0.0)
   }
 }

@@ -27,9 +27,9 @@ class CorpusAdmissionSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-adm-ckpt").toString
     try {
       val ms = MemoryStream[(Long, String)](spark)
-      val q = CorpusAdmission.start(ms.toDF()
-          .toDF("doc_id", "text"),
-        store, corpusDir, quarantineDir, ckpt, k, w, maxDf, ratioMin)
+      val q = CorpusAdmission.admission(store, corpusDir, quarantineDir,
+          k, w, maxDf, ratioMin)
+        .start(ms.toDF().toDF("doc_id", "text"), ckpt)
       try {
         // batch 1: a copy of the seeded doc + a fresh doc
         ms.addData(
@@ -86,7 +86,7 @@ class CorpusAdmissionSpec extends SparkSpec {
           "and locality sensitive hashing for deduplication")) // fresh
         .toDF("doc_id", "text")
       def decide() = {
-        val (adm, quar) = CorpusAdmission.admitBatch(spark, batch, store,
+        val (adm, quar) = CorpusAdmission.admitBatch(batch, store,
           k, w, maxDf, ratioMin)
         (adm.select("doc_id").collect().map(_.getLong(0)).toSet,
           quar.select("doc_id", "stored_doc").collect()

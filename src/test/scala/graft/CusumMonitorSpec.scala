@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.CusumMonitor
+import graft.streaming.{CusumMonitor, MicroBatches}
 
 /** T14 streaming volume CUSUM: hand-computed two-sided state over a
   * level shift (a small sustained shift accumulates to an alarm a
@@ -38,8 +38,9 @@ class CusumMonitorSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-cusum-mon").toString
     val ckpt = Files.createTempDirectory("graft-cusum-ckpt").toString
     val ms = MemoryStream[(Long, String)](spark)
-    val q = CusumMonitor.start(spark,
-      ms.toDF().toDF("event_id", "event_type"), dir, ckpt, mu0, slack, h)
+    val q = MicroBatches.start(
+        ms.toDF().toDF("event_id", "event_type"), ckpt)(
+      CusumMonitor.processBatch(_, dir, _, mu0, slack, h))
     try {
       volumes.zipWithIndex.foreach { case (v, i) =>
         ms.addData(rows(v, i.toLong): _*); q.processAllAvailable()
@@ -52,8 +53,8 @@ class CusumMonitorSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-cusum-empty").toString
     val empty = rows(0, 0L).toDF("event_id", "event_type")
     // n=0 per batch: s_neg += mu0 - 0 - slack = 8 → 8, 16(ALARM)
-    CusumMonitor.processBatch(spark, empty, dir, 0L, mu0, slack, h)
-    CusumMonitor.processBatch(spark, empty, dir, 1L, mu0, slack, h)
+    CusumMonitor.processBatch(empty, dir, 0L, mu0, slack, h)
+    CusumMonitor.processBatch(empty, dir, 1L, mu0, slack, h)
     assert(monitorRows(dir).toSeq ===
       Seq((0L, 0L, 8L, false), (0L, 0L, 16L, true)))
   }
@@ -62,12 +63,12 @@ class CusumMonitorSpec extends SparkSpec {
     "identical row") {
     val dir = Files.createTempDirectory("graft-cusum-replay").toString
     volumes.zipWithIndex.foreach { case (v, i) =>
-      CusumMonitor.processBatch(spark,
+      CusumMonitor.processBatch(
         rows(v, i.toLong).toDF("event_id", "event_type"), dir,
         i.toLong, mu0, slack, h)
     }
     val once = monitorRows(dir).toSeq
-    CusumMonitor.processBatch(spark,
+    CusumMonitor.processBatch(
       rows(volumes(3), 3L).toDF("event_id", "event_type"), dir, 3L,
       mu0, slack, h)
     assert(monitorRows(dir).toSeq === once)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.TextOps
-import graft.streaming.DriftMonitor
+import graft.streaming.{DriftMonitor, MicroBatches}
 
 /** T9 streaming drift monitor: an in-distribution batch passes quiet,
   * a shifted batch raises the alarm, and the monitor's number equals
@@ -34,9 +34,9 @@ class DriftMonitorSpec extends SparkSpec {
     val monitorDir = Files.createTempDirectory("graft-mon").toString
     val ckpt = Files.createTempDirectory("graft-mon-ckpt").toString
     val ms = MemoryStream[(Long, String)](spark)
-    val q = DriftMonitor.start(spark,
-      ms.toDF().toDF("doc_id", "text"), refPath, monitorDir, ckpt,
-      barMicro = 400000L)
+    val q = MicroBatches.start(ms.toDF().toDF("doc_id", "text"), ckpt)(
+      DriftMonitor.processBatch(_, refPath, monitorDir, _,
+        barMicro = 400000L))
     try {
       // batch 0: drawn from the same length distribution -> quiet
       ms.addData((1 to 30).map(i =>

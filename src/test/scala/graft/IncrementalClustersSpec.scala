@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.TextOps
 import graft.sources.ComponentStore
-import graft.streaming.IncrementalClusters
+import graft.streaming.{IncrementalClusters, MicroBatches}
 
 /** T12 streaming incremental dedup clustering: after N micro-batches
   * the persisted component store equals the D7 batch components over
@@ -47,9 +47,9 @@ class IncrementalClustersSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-incc-ckpt").toString
     try {
       val ms = MemoryStream[(Long, String)](spark)
-      val q = IncrementalClusters.start(spark,
-        ms.toDF().toDF("doc_id", "text"), fpT, compT, ckpt, k, w,
-        ratioMin)
+      val q = MicroBatches.start(ms.toDF().toDF("doc_id", "text"), ckpt)(
+        (batch, _) => IncrementalClusters.processBatch(batch, fpT, compT,
+          k, w, ratioMin))
       try {
         ms.addData((1L, tX), (2L, tY)); q.processAllAvailable()
         ms.addData((3L, tX), (4L, tY)); q.processAllAvailable()
@@ -80,15 +80,15 @@ class IncrementalClustersSpec extends SparkSpec {
     try {
       val b1 = Seq((1L, tX), (2L, tY)).toDF("doc_id", "text")
       val b2 = Seq((3L, tX), (4L, tY)).toDF("doc_id", "text")
-      IncrementalClusters.processBatch(spark, b1, fpT, compT, k, w,
+      IncrementalClusters.processBatch(b1, fpT, compT, k, w,
         ratioMin)
-      IncrementalClusters.processBatch(spark, b2, fpT, compT, k, w,
+      IncrementalClusters.processBatch(b2, fpT, compT, k, w,
         ratioMin)
       val once = ComponentStore.load(spark, compT).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // at-least-once: the SAME batch runs again against a store that
       // already holds its fingerprints and components
-      IncrementalClusters.processBatch(spark, b2, fpT, compT, k, w,
+      IncrementalClusters.processBatch(b2, fpT, compT, k, w,
         ratioMin)
       val twice = ComponentStore.load(spark, compT).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -201,9 +201,8 @@ class IncrementalPipelineSpec extends SparkSpec {
     try {
       IncrementalCuration.init(spark, base2, cfg)
       val ms = MemoryStream[(Long, String, String)](spark)
-      val q = IncrementalCuration.start(
-        ms.toDF().toDF("doc_id", "source", "text"),
-        base2, corpusDir, quarDir, ckpt, cfg)
+      val q = IncrementalCuration.admission(base2, corpusDir, quarDir, cfg)
+        .start(ms.toDF().toDF("doc_id", "source", "text"), ckpt)
       try {
         ms.addData(
           (1L, "web", "alpha beta gamma delta epsilon zeta eta theta " +

@@ -71,8 +71,9 @@ class MaterializeSpec extends SparkSpec {
     try {
       val base = rdds
       val ms = MemoryStream[(Long, String)](spark)
-      val q = CorpusAdmission.start(ms.toDF().toDF("doc_id", "text"),
-        store, corpusDir, quarantineDir, ckpt, k, w, 1000L, 500000L)
+      val q = CorpusAdmission.admission(store, corpusDir, quarantineDir,
+          k, w, 1000L, 500000L)
+        .start(ms.toDF().toDF("doc_id", "text"), ckpt)
       try {
         ms.addData(
           (10L, "the original corpus document about aviation " +

@@ -38,8 +38,9 @@ class MediaAdmissionSpec extends SparkSpec {
     val quarantineDir = Files.createTempDirectory("graft-mquar").toString
     val ckpt = Files.createTempDirectory("graft-madm-ckpt").toString
     val ms = MemoryStream[(Long, String)](spark)
-    val q = MediaAdmission.start(ms.toDF().toDF("doc_id", "text"),
-      store, admittedDir, quarantineDir, ckpt, maxHamming = 3)
+    val q = MediaAdmission.admission(store, admittedDir, quarantineDir,
+        maxHamming = 3)
+      .start(ms.toDF().toDF("doc_id", "text"), ckpt)
     try {
       // batch 0: 3842 = identical image to seeded 2 -> quarantine;
       // 4 = fresh class -> admit; 9 = WAV -> not this gate's traffic

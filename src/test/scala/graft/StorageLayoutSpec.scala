@@ -945,10 +945,10 @@ class StorageLayoutSpec extends SparkSpec {
       val cols = Seq("doc_id", "component")
       ComponentStore.ensure(spark, comp)
       assert(spark.table(comp).columns.toSeq === cols)
-      ComponentStore.mergeBatch(spark, comp, Seq((2L, 3L)).toDF("d1", "d2"),
+      ComponentStore.mergeBatch(comp, Seq((2L, 3L)).toDF("d1", "d2"),
         Seq(2L, 3L, 5L).toDF("doc_id"))
       assert(spark.table(comp).columns.toSeq === cols)
-      ComponentStore.mergeBatch(spark, comp, Seq((3L, 5L)).toDF("d1", "d2"),
+      ComponentStore.mergeBatch(comp, Seq((3L, 5L)).toDF("d1", "d2"),
         Seq(3L, 5L, 7L).toDF("doc_id"))
       assert(spark.table(comp).columns.toSeq === cols)
       assert(ComponentStore.load(spark, comp).collect()

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.SketchQueries
-import graft.streaming.StreamingBloom
+import graft.streaming.{MicroBatches, StreamingBloom}
 
 /** T18 streaming Bloom filter: store ≡ batch filter bit-for-bit after
   * N micro-batches, replay fixed point, empty-store guard, and the
@@ -38,7 +38,7 @@ class StreamingBloomSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-bloom-store").toString
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingBloom.processBatch(spark,
+      StreamingBloom.processBatch(
         rows.toDF("doc_id", "text"), dir, b.toLong)
     }
     val batchWords = SketchQueries.bloomWordsOf(
@@ -54,8 +54,8 @@ class StreamingBloomSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-bloom-st").toString
     val ckpt = Files.createTempDirectory("graft-bloom-ck").toString
     val ms = MemoryStream[(Long, String)](spark)
-    val q = StreamingBloom.start(spark,
-      ms.toDF().toDF("doc_id", "text"), dir, ckpt)
+    val q = MicroBatches.start(ms.toDF().toDF("doc_id", "text"), ckpt)(
+      StreamingBloom.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -65,7 +65,7 @@ class StreamingBloomSpec extends SparkSpec {
     def batch1Rows() = spark.read.parquet(s"$dir/batch_id=1")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingBloom.processBatch(spark,
+    StreamingBloom.processBatch(
       batchRows(1).toDF("doc_id", "text"), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(wordRows(dir) === once)
@@ -76,7 +76,7 @@ class StreamingBloomSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-bloom-cl").toString
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingBloom.processBatch(spark,
+      StreamingBloom.processBatch(
         rows.toDF("doc_id", "text"), dir, b.toLong)
     }
     val seen = batches.flatten.toDF("doc_id", "text")

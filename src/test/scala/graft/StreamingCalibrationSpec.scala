@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
-import graft.streaming.StreamingCalibration
+import graft.streaming.{MicroBatches, StreamingCalibration}
 
 /** T27 streaming quality-gate calibration: store ≡ batch
   * q_score_calibration bit-for-bit after N micro-batches
@@ -59,7 +59,7 @@ class StreamingCalibrationSpec extends SparkSpec {
     "the batch table over the concatenated stream BIT-FOR-BIT") {
     val dir = Files.createTempDirectory("graft-cal-store").toString
     (0 until 3).foreach { b =>
-      StreamingCalibration.processBatch(spark,
+      StreamingCalibration.processBatch(
         batchRows(b).toDF("doc_id", "text", "source"), dir, b.toLong,
         minTok, maxTok, ttrMin, topMax, minStops)
     }
@@ -75,11 +75,11 @@ class StreamingCalibrationSpec extends SparkSpec {
   test("batch-boundary invariance: ONE batch holding the whole " +
     "stream yields the same table as three") {
     val d1 = Files.createTempDirectory("graft-cal-one").toString
-    StreamingCalibration.processBatch(spark, allDocs, d1, 0L, minTok,
+    StreamingCalibration.processBatch(allDocs, d1, 0L, minTok,
       maxTok, ttrMin, topMax, minStops)
     val d3 = Files.createTempDirectory("graft-cal-three").toString
     (0 until 3).foreach { b =>
-      StreamingCalibration.processBatch(spark,
+      StreamingCalibration.processBatch(
         batchRows(b).toDF("doc_id", "text", "source"), d3, b.toLong,
         minTok, maxTok, ttrMin, topMax, minStops)
     }
@@ -91,9 +91,10 @@ class StreamingCalibrationSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-cal-st").toString
     val ckpt = Files.createTempDirectory("graft-cal-ck").toString
     val ms = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingCalibration.start(spark,
-      ms.toDF().toDF("doc_id", "text", "source"), dir, ckpt, minTok,
-      maxTok, ttrMin, topMax, minStops)
+    val q = MicroBatches.start(
+        ms.toDF().toDF("doc_id", "text", "source"), ckpt)(
+      StreamingCalibration.processBatch(_, dir, _, minTok, maxTok, ttrMin,
+        topMax, minStops))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -104,7 +105,7 @@ class StreamingCalibrationSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingCalibration.processBatch(spark,
+    StreamingCalibration.processBatch(
       batchRows(1).toDF("doc_id", "text", "source"), dir, 1L, minTok,
       maxTok, ttrMin, topMax, minStops)
     assert(batch1Rows() === b1Once)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.StreamingCms
+import graft.streaming.{MicroBatches, StreamingCms}
 
 /** T17 streaming count-min sketch: store ≡ batch sketch bit-for-bit
   * after N micro-batches, replay fixed point, empty-store guard, and
@@ -35,7 +35,7 @@ class StreamingCmsSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-cms-store").toString
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingCms.processBatch(spark, rows.toDF("user_id"), dir,
+      StreamingCms.processBatch(rows.toDF("user_id"), dir,
         b.toLong)
     }
     val batchSketch = StreamingCms
@@ -51,8 +51,8 @@ class StreamingCmsSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-cms-st").toString
     val ckpt = Files.createTempDirectory("graft-cms-ck").toString
     val ms = MemoryStream[Long](spark)
-    val q = StreamingCms.start(spark, ms.toDF().toDF("user_id"), dir,
-      ckpt)
+    val q = MicroBatches.start(ms.toDF().toDF("user_id"), ckpt)(
+      StreamingCms.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -66,7 +66,7 @@ class StreamingCmsSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingCms.processBatch(spark,
+    StreamingCms.processBatch(
       batchRows(1).toDF("user_id"), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(sketchRows(dir) === once)
@@ -83,7 +83,7 @@ class StreamingCmsSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-cms-est").toString
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingCms.processBatch(spark, rows.toDF("user_id"), dir,
+      StreamingCms.processBatch(rows.toDF("user_id"), dir,
         b.toLong)
     }
     val truth = batches.flatten.groupBy(identity)

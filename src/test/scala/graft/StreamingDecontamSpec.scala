@@ -110,10 +110,9 @@ class StreamingDecontamSpec extends SparkSpec {
         cfg.winnowK, cfg.winnowW, 0, 0, evalTable)
 
       val ms = MemoryStream[(Long, String, Array[Float])](spark)
-      val q = UnifiedAdmission.start(
-        ms.toDF().toDF("doc_id", "text", "embedding"),
-        fpTable, gramTable, vecPath, corpusDir, quarDir, ckpt, cfg,
-        evalFpTable = Some(evalTable))
+      val q = UnifiedAdmission.admission(fpTable, gramTable, vecPath,
+          corpusDir, quarDir, cfg, evalFpTable = Some(evalTable))
+        .start(ms.toDF().toDF("doc_id", "text", "embedding"), ckpt)
       try {
         ms.addData((100L, contamText, vec(0)), (101L, freshText, vec(1)))
         q.processAllAvailable()

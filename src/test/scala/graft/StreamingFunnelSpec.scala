@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.RelationalQueries
-import graft.streaming.StreamingFunnel
+import graft.streaming.{MicroBatches, StreamingFunnel}
 
 /** T29 streaming funnel: store ≡ batch q_funnel AND q_funnel_latency
   * bit-for-bit after N micro-batches, INCLUDING cross-batch
@@ -72,7 +72,7 @@ class StreamingFunnelSpec extends SparkSpec {
     "out-of-window click excluded") {
     val dir = Files.createTempDirectory("graft-funnel-store").toString
     (0 until 3).foreach { b =>
-      StreamingFunnel.processBatch(spark, toEv(batchRows(b)), dir,
+      StreamingFunnel.processBatch(toEv(batchRows(b)), dir,
         b.toLong)
     }
     val ev = allEvents.select("user_id", "event_type", "ts")
@@ -90,15 +90,15 @@ class StreamingFunnelSpec extends SparkSpec {
   test("batch-boundary invariance + duplicate absorption: one batch " +
     "== three; re-fed duplicate rows change nothing") {
     val d1 = Files.createTempDirectory("graft-funnel-one").toString
-    StreamingFunnel.processBatch(spark, allEvents, d1, 0L)
+    StreamingFunnel.processBatch(allEvents, d1, 0L)
     val d3 = Files.createTempDirectory("graft-funnel-three").toString
     (0 until 3).foreach { b =>
-      StreamingFunnel.processBatch(spark, toEv(batchRows(b)), d3,
+      StreamingFunnel.processBatch(toEv(batchRows(b)), d3,
         b.toLong)
     }
     assert(funnelRows(StreamingFunnel.funnel(spark, d1)) ===
       funnelRows(StreamingFunnel.funnel(spark, d3)))
-    StreamingFunnel.processBatch(spark, allEvents, d3, 3L)
+    StreamingFunnel.processBatch(allEvents, d3, 3L)
     assert(funnelRows(StreamingFunnel.funnel(spark, d1)) ===
       funnelRows(StreamingFunnel.funnel(spark, d3)))
   }
@@ -110,7 +110,8 @@ class StreamingFunnelSpec extends SparkSpec {
     val ms = MemoryStream[(Long, String, String)](spark)
     val stream = ms.toDF().toDF("user_id", "event_type", "ts_s")
       .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
-    val q = StreamingFunnel.start(spark, stream, dir, ckpt)
+    val q = MicroBatches.start(stream, ckpt)(
+      StreamingFunnel.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -121,7 +122,7 @@ class StreamingFunnelSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1),
         r.getTimestamp(2).toString)).sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingFunnel.processBatch(spark, toEv(batchRows(1)), dir, 1L)
+    StreamingFunnel.processBatch(toEv(batchRows(1)), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(funnelRows(StreamingFunnel.funnel(spark, dir)) === once)
     assert(once === funnelRows(RelationalQueries.funnelCensus(

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.StreamingHeavyHitters
+import graft.streaming.{MicroBatches, StreamingHeavyHitters}
 
 /** T15 streaming heavy hitters: cross-batch accumulation a per-batch
   * top-k cannot provide, hand-computed merge arithmetic, and replay
@@ -45,8 +45,8 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-hh-store").toString
     val ckpt = Files.createTempDirectory("graft-hh-ckpt").toString
     val ms = MemoryStream[(Long, String)](spark)
-    val q = StreamingHeavyHitters.start(spark,
-      ms.toDF().toDF("doc_id", "text"), dir, ckpt)
+    val q = MicroBatches.start(ms.toDF().toDF("doc_id", "text"), ckpt)(
+      StreamingHeavyHitters.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchDocs(b): _*); q.processAllAvailable()
@@ -59,7 +59,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     "identical partition (fixed point)") {
     val dir = Files.createTempDirectory("graft-hh-replay").toString
     (0 until 3).foreach { b =>
-      StreamingHeavyHitters.processBatch(spark,
+      StreamingHeavyHitters.processBatch(
         batchDocs(b).toDF("doc_id", "text"), dir, b.toLong)
     }
     val once = storeRows(dir).toSeq
@@ -70,7 +70,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     val b1Once = batch1Rows()
     // replay the middle batch: reads batch 0's state, rewrites batch 1
-    StreamingHeavyHitters.processBatch(spark,
+    StreamingHeavyHitters.processBatch(
       batchDocs(1).toDF("doc_id", "text"), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(b1Once === Seq(("hv", 28L)))
@@ -83,7 +83,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-hh-bound").toString
     val batches = (0 until 3).map(batchDocs)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingHeavyHitters.processBatch(spark,
+      StreamingHeavyHitters.processBatch(
         rows.toDF("doc_id", "text"), dir, b.toLong)
     }
     val nTotal = batches.map(_.size).sum.toLong // 1 token per doc

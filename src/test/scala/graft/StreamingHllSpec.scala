@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.SketchQueries
-import graft.streaming.StreamingHll
+import graft.streaming.{MicroBatches, StreamingHll}
 
 /** T20 streaming HLL: store ≡ batch registers bit-for-bit after N
   * micro-batches (element-wise max semilattice), replay fixed point,
@@ -38,7 +38,7 @@ class StreamingHllSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-hll-store").toString
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingHll.processBatch(spark, rows.toDF("user_id"), dir,
+      StreamingHll.processBatch(rows.toDF("user_id"), dir,
         b.toLong)
     }
     val batchRegs = SketchQueries
@@ -58,8 +58,8 @@ class StreamingHllSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-hll-st").toString
     val ckpt = Files.createTempDirectory("graft-hll-ck").toString
     val ms = MemoryStream[Long](spark)
-    val q = StreamingHll.start(spark, ms.toDF().toDF("user_id"), dir,
-      ckpt)
+    val q = MicroBatches.start(ms.toDF().toDF("user_id"), ckpt)(
+      StreamingHll.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -69,7 +69,7 @@ class StreamingHllSpec extends SparkSpec {
     def batch1Rows() = spark.read.parquet(s"$dir/batch_id=1")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingHll.processBatch(spark, batchRows(1).toDF("user_id"),
+    StreamingHll.processBatch(batchRows(1).toDF("user_id"),
       dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(registerRows(dir) === once)

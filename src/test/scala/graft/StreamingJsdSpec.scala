@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.TextOps
-import graft.streaming.StreamingJsd
+import graft.streaming.{MicroBatches, StreamingJsd}
 
 /** T25 streaming JSD: store ≡ batch q_jsd bit-for-bit after N
   * micro-batches (UNCONDITIONALLY — the top-V cut is a pure function
@@ -55,7 +55,7 @@ class StreamingJsdSpec extends SparkSpec {
     "q_jsd over the concatenated stream BIT-FOR-BIT") {
     val dir = Files.createTempDirectory("graft-jsd-store").toString
     (0 until 3).foreach { b =>
-      StreamingJsd.processBatch(spark,
+      StreamingJsd.processBatch(
         batchRows(b).toDF("doc_id", "text", "source"), dir, b.toLong)
     }
     assert(jsdRows(dir) === batchJsd)
@@ -69,10 +69,10 @@ class StreamingJsdSpec extends SparkSpec {
   test("batch-boundary invariance: ONE batch holding the whole " +
     "stream yields the same serving rows as three") {
     val d1 = Files.createTempDirectory("graft-jsd-one").toString
-    StreamingJsd.processBatch(spark, allDocs, d1, 0L)
+    StreamingJsd.processBatch(allDocs, d1, 0L)
     val d3 = Files.createTempDirectory("graft-jsd-three").toString
     (0 until 3).foreach { b =>
-      StreamingJsd.processBatch(spark,
+      StreamingJsd.processBatch(
         batchRows(b).toDF("doc_id", "text", "source"), d3, b.toLong)
     }
     assert(jsdRows(d1) === jsdRows(d3))
@@ -83,8 +83,9 @@ class StreamingJsdSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-jsd-st").toString
     val ckpt = Files.createTempDirectory("graft-jsd-ck").toString
     val ms = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingJsd.start(spark,
-      ms.toDF().toDF("doc_id", "text", "source"), dir, ckpt)
+    val q = MicroBatches.start(
+        ms.toDF().toDF("doc_id", "text", "source"), ckpt)(
+      StreamingJsd.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -95,7 +96,7 @@ class StreamingJsdSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1),
         r.getLong(2))).sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingJsd.processBatch(spark,
+    StreamingJsd.processBatch(
       batchRows(1).toDF("doc_id", "text", "source"), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(jsdRows(dir) === once)

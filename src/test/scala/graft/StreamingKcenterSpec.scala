@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.StreamingKcenter
+import graft.streaming.{MicroBatches, StreamingKcenter}
 
 /** T16 streaming k-center: hand-computed doubling trajectory, replay
   * fixed point, and the measured coverage invariant on real vectors.
@@ -41,10 +41,10 @@ class StreamingKcenterSpec extends SparkSpec {
   test("hand-computed doubling trajectory: admission, overflow, " +
     "thin in cid order") {
     val dir = Files.createTempDirectory("graft-skc").toString
-    StreamingKcenter.processBatch(spark,
+    StreamingKcenter.processBatch(
       batch0.toDF("vec_id", "embedding"), dir, 0L, k = 2, tau0 = 100000L)
     assert(centerRows(dir).toSeq === Seq((0L, 100000L), (2L, 100000L)))
-    StreamingKcenter.processBatch(spark,
+    StreamingKcenter.processBatch(
       batch1.toDF("vec_id", "embedding"), dir, 1L, k = 2, tau0 = 100000L)
     assert(centerRows(dir).toSeq ===
       Seq((0L, 1600000L), (10L, 1600000L)))
@@ -55,9 +55,8 @@ class StreamingKcenterSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-skc-st").toString
     val ckpt = Files.createTempDirectory("graft-skc-ck").toString
     val ms = MemoryStream[(Long, Seq[Float])](spark)
-    val q = StreamingKcenter.start(spark,
-      ms.toDF().toDF("vec_id", "embedding"), dir, ckpt, k = 2,
-      tau0 = 100000L)
+    val q = MicroBatches.start(ms.toDF().toDF("vec_id", "embedding"), ckpt)(
+      StreamingKcenter.processBatch(_, dir, _, k = 2, tau0 = 100000L))
     try {
       ms.addData(batch0: _*); q.processAllAvailable()
       ms.addData(batch1: _*); q.processAllAvailable()
@@ -66,7 +65,7 @@ class StreamingKcenterSpec extends SparkSpec {
     assert(once === Seq((0L, 1600000L), (10L, 1600000L)))
     // replay the second batch: re-reads batch 0's state, rewrites
     // batch 1's partition identically
-    StreamingKcenter.processBatch(spark,
+    StreamingKcenter.processBatch(
       batch1.toDF("vec_id", "embedding"), dir, 1L, k = 2,
       tau0 = 100000L)
     assert(centerRows(dir).toSeq === once)
@@ -82,7 +81,7 @@ class StreamingKcenterSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val batches = all.sortBy(_._1).grouped(125).toSeq
     batches.zipWithIndex.foreach { case (b, i) =>
-      StreamingKcenter.processBatch(spark,
+      StreamingKcenter.processBatch(
         b.toSeq.map { case (id, e) => (id, e.toSeq) }
           .toDF("vec_id", "embedding"),
         dir, i.toLong, k = 8, tau0 = 50000L)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.SketchQueries
-import graft.streaming.StreamingKmv
+import graft.streaming.{MicroBatches, StreamingKmv}
 
 /** T19 streaming KMV: store ≡ batch bottom-k bit-for-bit after N
   * micro-batches (union + re-take is an exact semilattice), serving
@@ -47,7 +47,7 @@ class StreamingKmvSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-kmv-store").toString
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingKmv.processBatch(spark,
+      StreamingKmv.processBatch(
         rows.toDF("doc_id", "text", "source"), dir, b.toLong)
     }
     val all = batches.flatten.toDF("doc_id", "text", "source")
@@ -76,8 +76,9 @@ class StreamingKmvSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-kmv-st").toString
     val ckpt = Files.createTempDirectory("graft-kmv-ck").toString
     val ms = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingKmv.start(spark,
-      ms.toDF().toDF("doc_id", "text", "source"), dir, ckpt)
+    val q = MicroBatches.start(
+        ms.toDF().toDF("doc_id", "text", "source"), ckpt)(
+      StreamingKmv.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -87,7 +88,7 @@ class StreamingKmvSpec extends SparkSpec {
     def batch1Rows() = spark.read.parquet(s"$dir/batch_id=1")
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingKmv.processBatch(spark,
+    StreamingKmv.processBatch(
       batchRows(1).toDF("doc_id", "text", "source"), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(stateRows(dir) === once)

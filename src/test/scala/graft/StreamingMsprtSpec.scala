@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.RelationalQueries
-import graft.streaming.StreamingMsprt
+import graft.streaming.{MicroBatches, StreamingMsprt}
 
 /** T26 streaming mSPRT: store ≡ batch q_msprt bit-for-bit after N
   * micro-batches (UNCONDITIONALLY — the always-valid statistic is a
@@ -68,7 +68,7 @@ class StreamingMsprtSpec extends SparkSpec {
     "included") {
     val dir = Files.createTempDirectory("graft-msprt-store").toString
     (0 until 3).foreach { b =>
-      StreamingMsprt.processBatch(spark, toEv(batchRows(b)), dir,
+      StreamingMsprt.processBatch(toEv(batchRows(b)), dir,
         b.toLong)
     }
     val streamed = rowsOf(StreamingMsprt.msprt(spark, dir))
@@ -84,10 +84,10 @@ class StreamingMsprtSpec extends SparkSpec {
   test("batch-boundary invariance: ONE batch holding the whole " +
     "stream yields the same readout as three") {
     val d1 = Files.createTempDirectory("graft-msprt-one").toString
-    StreamingMsprt.processBatch(spark, allEvents, d1, 0L)
+    StreamingMsprt.processBatch(allEvents, d1, 0L)
     val d3 = Files.createTempDirectory("graft-msprt-three").toString
     (0 until 3).foreach { b =>
-      StreamingMsprt.processBatch(spark, toEv(batchRows(b)), d3,
+      StreamingMsprt.processBatch(toEv(batchRows(b)), d3,
         b.toLong)
     }
     assert(rowsOf(StreamingMsprt.msprt(spark, d1)) ===
@@ -102,7 +102,8 @@ class StreamingMsprtSpec extends SparkSpec {
     val stream = ms.toDF()
       .toDF("event_id", "user_id", "event_type", "ts_s", "value")
       .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
-    val q = StreamingMsprt.start(spark, stream, dir, ckpt)
+    val q = MicroBatches.start(stream, ckpt)(
+      StreamingMsprt.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -114,7 +115,7 @@ class StreamingMsprtSpec extends SparkSpec {
         r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
         r.getLong(6), r.getLong(7))).sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingMsprt.processBatch(spark, toEv(batchRows(1)), dir, 1L)
+    StreamingMsprt.processBatch(toEv(batchRows(1)), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(rowsOf(StreamingMsprt.msprt(spark, dir)) === once)
     // and the final state matches the batch query

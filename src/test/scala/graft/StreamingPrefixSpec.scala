@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.TextOps
-import graft.streaming.StreamingPrefix
+import graft.streaming.{MicroBatches, StreamingPrefix}
 
 /** T23 streaming duplicate-opener store: census ≡ batch prefixDupCensus
   * bit-for-bit over the concatenated stream, replay fixed point,
@@ -54,7 +54,7 @@ class StreamingPrefixSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-pfx-store").toString
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingPrefix.processBatch(spark,
+      StreamingPrefix.processBatch(
         rows.toDF("doc_id", "text", "source"), dir, b.toLong)
     }
     val streamed = censusRows(dir)
@@ -73,8 +73,9 @@ class StreamingPrefixSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-pfx-st").toString
     val ckpt = Files.createTempDirectory("graft-pfx-ck").toString
     val ms = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingPrefix.start(spark,
-      ms.toDF().toDF("doc_id", "text", "source"), dir, ckpt)
+    val q = MicroBatches.start(
+        ms.toDF().toDF("doc_id", "text", "source"), ckpt)(
+      StreamingPrefix.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -88,7 +89,7 @@ class StreamingPrefixSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3))).sortBy(r => (r._1, r._2)).toSeq
     val b1Once = batch1Rows()
-    StreamingPrefix.processBatch(spark,
+    StreamingPrefix.processBatch(
       batchRows(1).toDF("doc_id", "text", "source"), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(censusRows(dir) === once)

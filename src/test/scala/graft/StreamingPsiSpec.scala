@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.TextOps
-import graft.streaming.StreamingPsi
+import graft.streaming.{MicroBatches, StreamingPsi}
 
 /** T22 streaming PSI: store ≡ batch q_psi bit-for-bit after N
   * micro-batches (when the fixed reference edges equal the batch
@@ -49,7 +49,7 @@ class StreamingPsiSpec extends SparkSpec {
     StreamingPsi.initReference(spark, dir, allDocs)
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingPsi.processBatch(spark,
+      StreamingPsi.processBatch(
         rows.toDF("doc_id", "text", "source"), dir, b.toLong)
     }
     val batchPsi = TextOps.psiDrift(allDocs).orderBy("source")
@@ -71,8 +71,9 @@ class StreamingPsiSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-psi-ck").toString
     StreamingPsi.initReference(spark, dir, allDocs)
     val ms = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingPsi.start(spark,
-      ms.toDF().toDF("doc_id", "text", "source"), dir, ckpt)
+    val q = MicroBatches.start(
+        ms.toDF().toDF("doc_id", "text", "source"), ckpt)(
+      StreamingPsi.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -83,7 +84,7 @@ class StreamingPsiSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingPsi.processBatch(spark,
+    StreamingPsi.processBatch(
       batchRows(1).toDF("doc_id", "text", "source"), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(psiRows(dir) === once)

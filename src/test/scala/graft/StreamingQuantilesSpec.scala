@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.SketchQueries
 import graft.sources.QuantileStore
-import graft.streaming.StreamingQuantiles
+import graft.streaming.{MicroBatches, StreamingQuantiles}
 
 /** T13 streaming mergeable quantile sketch: after N micro-batches the
   * persisted bottom-k store is BIT-IDENTICAL to the direct X64 sketch
@@ -41,8 +41,9 @@ class StreamingQuantilesSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-qs-ckpt").toString
     try {
       val ms = MemoryStream[(Long, String, Double)](spark)
-      val q = StreamingQuantiles.start(spark,
-        ms.toDF().toDF("event_id", "event_type", "value"), table, ckpt)
+      val q = MicroBatches.start(
+          ms.toDF().toDF("event_id", "event_type", "value"), ckpt)(
+        (batch, _) => StreamingQuantiles.processBatch(batch, table))
       try {
         batches.foreach { b =>
           ms.addData(b: _*); q.processAllAvailable()
@@ -70,11 +71,11 @@ class StreamingQuantilesSpec extends SparkSpec {
     val table = "qs_stream_replay_test"
     try {
       batches.foreach { b =>
-        StreamingQuantiles.processBatch(spark,
+        StreamingQuantiles.processBatch(
           b.toDF("event_id", "event_type", "value"), table)
       }
       val once = sampleSet(QuantileStore.load(spark, table))
-      StreamingQuantiles.processBatch(spark,
+      StreamingQuantiles.processBatch(
         batches(1).toDF("event_id", "event_type", "value"), table)
       assert(sampleSet(QuantileStore.load(spark, table)) === once)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")

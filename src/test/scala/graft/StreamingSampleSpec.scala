@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.TextOps
-import graft.streaming.StreamingSample
+import graft.streaming.{MicroBatches, StreamingSample}
 
 /** T21 streaming weighted reservoir: store ≡ batch weighted sample
   * bit-for-bit after N micro-batches (top-n union is an exact
@@ -47,7 +47,7 @@ class StreamingSampleSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-aes-store").toString
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingSample.processBatch(spark,
+      StreamingSample.processBatch(
         rows.toDF("doc_id", "text", "source"), dir, b.toLong, N)
     }
     val all = batches.flatten.toDF("doc_id", "text", "source")
@@ -67,8 +67,9 @@ class StreamingSampleSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-aes-st").toString
     val ckpt = Files.createTempDirectory("graft-aes-ck").toString
     val ms = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingSample.start(spark,
-      ms.toDF().toDF("doc_id", "text", "source"), dir, ckpt, N)
+    val q = MicroBatches.start(
+        ms.toDF().toDF("doc_id", "text", "source"), ckpt)(
+      StreamingSample.processBatch(_, dir, _, N))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -89,7 +90,7 @@ class StreamingSampleSpec extends SparkSpec {
         r.getAs[Long]("toks"), r.getAs[Long]("key_micro")))
       .sorted.toSeq
     val b2Once = batch2Rows()
-    StreamingSample.processBatch(spark,
+    StreamingSample.processBatch(
       batchRows(2).toDF("doc_id", "text", "source"), dir, 2L, N)
     assert(batch2Rows() === b2Once)
     assert(sampleRows(dir) === once)
@@ -100,12 +101,12 @@ class StreamingSampleSpec extends SparkSpec {
     "occupies one reservoir slot, not two") {
     val dir = Files.createTempDirectory("graft-aes-dup").toString
     val rows = batchRows(0)
-    StreamingSample.processBatch(spark,
+    StreamingSample.processBatch(
       rows.toDF("doc_id", "text", "source"), dir, 0L, N)
     // redeliver the SAME rows under a new batch id: reservoir must be
     // unchanged (same docs, same keys, same ranks) — without the
     // cross-batch dedup the duplicates would shadow distinct docs
-    StreamingSample.processBatch(spark,
+    StreamingSample.processBatch(
       rows.toDF("doc_id", "text", "source"), dir, 1L, N)
     val after = sampleRows(dir)
     assert(after.map(_._2).distinct.size === after.size)

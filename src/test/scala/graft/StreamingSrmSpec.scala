@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.RelationalQueries
-import graft.streaming.StreamingSrm
+import graft.streaming.{MicroBatches, StreamingSrm}
 
 /** T28 streaming SRM: store ≡ batch q_srm bit-for-bit after N
   * micro-batches (UNCONDITIONALLY — the check is a pure function of
@@ -53,7 +53,7 @@ class StreamingSrmSpec extends SparkSpec {
     "user counts once; the skewed arm alarms") {
     val dir = Files.createTempDirectory("graft-srm-store").toString
     (0 until 3).foreach { b =>
-      StreamingSrm.processBatch(spark, toEv(batchRows(b)), dir, b.toLong)
+      StreamingSrm.processBatch(toEv(batchRows(b)), dir, b.toLong)
     }
     val streamed = rowsOf(StreamingSrm.srm(spark, dir))
     val batch = rowsOf(RelationalQueries.srmCensus(allEvents))
@@ -73,10 +73,10 @@ class StreamingSrmSpec extends SparkSpec {
   test("batch-boundary invariance: ONE batch holding the whole " +
     "stream yields the same readout as three") {
     val d1 = Files.createTempDirectory("graft-srm-one").toString
-    StreamingSrm.processBatch(spark, allEvents, d1, 0L)
+    StreamingSrm.processBatch(allEvents, d1, 0L)
     val d3 = Files.createTempDirectory("graft-srm-three").toString
     (0 until 3).foreach { b =>
-      StreamingSrm.processBatch(spark, toEv(batchRows(b)), d3, b.toLong)
+      StreamingSrm.processBatch(toEv(batchRows(b)), d3, b.toLong)
     }
     assert(rowsOf(StreamingSrm.srm(spark, d1)) ===
       rowsOf(StreamingSrm.srm(spark, d3)))
@@ -88,7 +88,8 @@ class StreamingSrmSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-srm-ck").toString
     val ms = MemoryStream[(Long, String)](spark)
     val stream = ms.toDF().toDF("user_id", "event_type")
-    val q = StreamingSrm.start(spark, stream, dir, ckpt)
+    val q = MicroBatches.start(stream, ckpt)(
+      StreamingSrm.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -98,7 +99,7 @@ class StreamingSrmSpec extends SparkSpec {
     def batch1Rows() = spark.read.parquet(s"$dir/batch_id=1")
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     val b1Once = batch1Rows()
-    StreamingSrm.processBatch(spark, toEv(batchRows(1)), dir, 1L)
+    StreamingSrm.processBatch(toEv(batchRows(1)), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(rowsOf(StreamingSrm.srm(spark, dir)) === once)
     assert(once === rowsOf(RelationalQueries.srmCensus(allEvents)))

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.TextOps
-import graft.streaming.StreamingTokLen
+import graft.streaming.{MicroBatches, StreamingTokLen}
 
 /** T24 streaming token-length census: census ≡ batch tokenLenCensus
   * bit-for-bit over the concatenated stream, replay fixed point,
@@ -47,7 +47,7 @@ class StreamingTokLenSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-tl-store").toString
     val batches = (0 until 3).map(batchRows)
     batches.zipWithIndex.foreach { case (rows, b) =>
-      StreamingTokLen.processBatch(spark,
+      StreamingTokLen.processBatch(
         rows.toDF("doc_id", "text", "source"), dir, b.toLong)
     }
     val streamed = censusRows(dir)
@@ -62,8 +62,9 @@ class StreamingTokLenSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-tl-st").toString
     val ckpt = Files.createTempDirectory("graft-tl-ck").toString
     val ms = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingTokLen.start(spark,
-      ms.toDF().toDF("doc_id", "text", "source"), dir, ckpt)
+    val q = MicroBatches.start(
+        ms.toDF().toDF("doc_id", "text", "source"), ckpt)(
+      StreamingTokLen.processBatch(_, dir, _))
     try {
       (0 until 3).foreach { b =>
         ms.addData(batchRows(b): _*); q.processAllAvailable()
@@ -75,7 +76,7 @@ class StreamingTokLenSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(r => (r._1, r._2)).toSeq
     val b1Once = batch1Rows()
-    StreamingTokLen.processBatch(spark,
+    StreamingTokLen.processBatch(
       batchRows(1).toDF("doc_id", "text", "source"), dir, 1L)
     assert(batch1Rows() === b1Once)
     assert(censusRows(dir) === once)

@@ -91,9 +91,9 @@ class UnifiedAdmissionSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-uni-ckpt").toString
     try {
       val ms = MemoryStream[(Long, String, Array[Float])](spark)
-      val q = UnifiedAdmission.start(
-        ms.toDF().toDF("doc_id", "text", "embedding"),
-        fpTable, gramTable, vecPath, corpusDir, quarDir, ckpt, cfg)
+      val q = UnifiedAdmission.admission(fpTable, gramTable, vecPath,
+          corpusDir, quarDir, cfg)
+        .start(ms.toDF().toDF("doc_id", "text", "embedding"), ckpt)
       try {
         // batch 1: two fresh docs — admitted, appended to all stores
         ms.addData((9100L, ta, orthVec(0)), (9101L, tb, orthVec(1)))
@@ -178,7 +178,7 @@ class UnifiedAdmissionSpec extends SparkSpec {
         s"article$i about unrelated engineering topic$i details").mkString(" ")
       val batch = Seq((8100L, leak, vec), (8101L, clean, vec))
         .toDF("doc_id", "text", "embedding")
-      val (admitted, quarantined) = UnifiedAdmission.admitBatch(spark,
+      val (admitted, quarantined) = UnifiedAdmission.admitBatch(
         batch, fpTable, gramTable, vecPath, cfg, Some(evalTable))
       assert(admitted.select("doc_id").collect().map(_.getLong(0))
         .toSet === Set(8101L))
@@ -191,7 +191,7 @@ class UnifiedAdmissionSpec extends SparkSpec {
       assert(quar.head._4 >= 700000L,
         "score carries the overlap fraction")
       // without a protected set the same batch sails through
-      val (admAll, quarNone) = UnifiedAdmission.admitBatch(spark, batch,
+      val (admAll, quarNone) = UnifiedAdmission.admitBatch(batch,
         fpTable, gramTable, vecPath, cfg, None)
       assert(admAll.count() === 2L && quarNone.isEmpty,
         "eval_overlap is strictly opt-in")
@@ -227,7 +227,7 @@ class UnifiedAdmissionSpec extends SparkSpec {
           vec),
         (7101L, "spam spam spam spam", vec))
         .toDF("doc_id", "text", "embedding")
-      val (admitted, quarantined) = UnifiedAdmission.admitBatch(spark,
+      val (admitted, quarantined) = UnifiedAdmission.admitBatch(
         batch, fpTable, gramTable, vecPath, qCfg)
       assert(admitted.select("doc_id").collect().map(_.getLong(0))
         .toSet === Set(7100L))
@@ -240,7 +240,7 @@ class UnifiedAdmissionSpec extends SparkSpec {
 
       // the same batch under default (permissive) quality bars sails
       // through — quality is opt-in
-      val (admAll, quarNone) = UnifiedAdmission.admitBatch(spark, batch,
+      val (admAll, quarNone) = UnifiedAdmission.admitBatch(batch,
         fpTable, gramTable, vecPath, UnifiedAdmission.Config(
           winnowRatioMicroMin = 1000001L,
           gramMinShared = Long.MaxValue, cosMicroMin = 1000001L))
@@ -282,9 +282,9 @@ class UnifiedAdmissionSpec extends SparkSpec {
     val batchIds = Set(9300L, 9301L, 9302L)
     try {
       val ms = MemoryStream[(Long, String, Array[Float])](spark)
-      val q = UnifiedAdmission.start(
-        ms.toDF().toDF("doc_id", "text", "embedding"),
-        fpTable, gramTable, vecPath, corpusDir, quarDir, ckpt, cfg)
+      val q = UnifiedAdmission.admission(fpTable, gramTable, vecPath,
+          corpusDir, quarDir, cfg)
+        .start(ms.toDF().toDF("doc_id", "text", "embedding"), ckpt)
       try {
         ms.addData((9300L, ta, orthVec(0)), (9301L, nearTa, orthVec(1)),
           (9302L, tc, orthVec(2)))

@@ -57,10 +57,10 @@ class VectorAdmissionSpec extends SparkSpec {
     val drifts = ArrayBuffer.empty[VectorStore.Drift]
 
     val ms = MemoryStream[(Long, Array[Float])](spark)
-    val q = VectorAdmission.start(
-      ms.toDF().toDF("vec_id", "embedding"), path, quarantineDir, ckpt,
-      cosMicroMin = 900000L,
-      onDrift = d => drifts.synchronized { drifts += d })
+    val q = VectorAdmission.admission(path, quarantineDir,
+        cosMicroMin = 900000L,
+        onDrift = d => drifts.synchronized { drifts += d })
+      .start(ms.toDF().toDF("vec_id", "embedding"), ckpt)
     try {
       // batch 1: a copy of stored vector 0 + a fresh vector
       ms.addData((5000L, stored0), (5001L, orthVec(0)))
@@ -99,7 +99,7 @@ class VectorAdmissionSpec extends SparkSpec {
     val path = Files.createTempDirectory("graft-vadm-prune").toString
     VectorStore.save(emb, path, 10)
     val batch = emb.filter($"vec_id" < 3L).select("vec_id", "embedding")
-    val (_, quarantined) = VectorAdmission.auditBatch(spark, path,
+    val (_, quarantined) = VectorAdmission.auditBatch(path,
       batch.select(($"vec_id" + 7000L).as("vec_id"), $"embedding"),
       cosMicroMin = 900000L)
     val scan = quarantined.queryExecution.executedPlan.collectLeaves()

@@ -6,133 +6,94 @@ import org.apache.spark.sql.catalyst.expressions.{Expression,
   ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-import graft.functions.{CosineSimilarity, Md5Long60, MilliDotProduct,
-  SignLshSignature, WinnowFingerprints}
+import graft.functions.{Kernel, KernelCall, Kernels}
 
-/** SparkSessionExtensions entry point: registers graft's custom
-  * expressions as SQL functions so `spark.sql("SELECT cosine_sim(a, b)")`
-  * works next to the Column API
-  * ([[graft.functions.vector.cosineSim]]).
+/** SparkSessionExtensions entry point: registers graft's kernels as SQL
+  * functions so `spark.sql("SELECT cosine_sim(a, b)")` works next to the
+  * Column API ([[graft.functions.vector.cosineSim]]).
   *
   * Enable with `.config("spark.sql.extensions", "graft.GraftExtensions")`
   * (or the `--conf` equivalent on spark-submit).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions._
 
-  /** Wrong arity must surface as an AnalysisException with the expected
-    * signature (like every built-in function), not as an
-    * IndexOutOfBoundsException from the builder reaching for a missing
-    * child.
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Functions.foreach { case (fn, params) =>
+      ext.injectFunction((
+        FunctionIdentifier(fn.name),
+        new ExpressionInfo(classOf[KernelCall].getName, fn.name),
+        (args: Seq[Expression]) => build(fn, params, args)))
+    }
+}
+
+object GraftExtensions {
+
+  /** A constant INT argument of a SQL function, in `[1, hi]`; `widen`
+    * passes it to the kernel as a long.
     */
-  private def requireArity(name: String, expected: Int,
-                           children: Seq[Expression]): Unit =
-    if (children.length != expected)
+  private case class IntParam(name: String, hi: Int = Int.MaxValue,
+                              widen: Boolean = false)
+
+  /** Every SQL function: its kernel, then its constant arguments, which
+    * follow the column inputs.
+    */
+  private val Functions: Seq[(Kernel, Seq[IntParam])] = Seq(
+    Kernels.CosineSim -> Nil,
+    Kernels.MilliDot -> Nil,
+    Kernels.Md5Long60 -> Nil,
+    Kernels.WinnowFingerprints ->
+      Seq(IntParam("k"), IntParam("w"), IntParam("mod", widen = true)),
+    // 64 planes fill the long; more would silently alias bit 63
+    Kernels.SignLshSig -> Seq(IntParam("nPlanes", 64), IntParam("dims")),
+    Kernels.MilliVec -> Nil,
+    Kernels.MilliUnitVec -> Nil,
+    Kernels.AbsMax -> Nil,
+    Kernels.Int8Codes -> Nil,
+    Kernels.Int8FidParts -> Nil)
+
+  /** The call `fn(args)`, after the checks a built-in makes on outside
+    * input: wrong arity, a non-literal constant and an out-of-range
+    * constant each fail analysis with an `AnalysisException` that names
+    * the function, rather than surfacing later from inside generated
+    * code (an IndexOutOfBounds, an ArrayIndexOutOfBounds, an
+    * ArithmeticException).
+    */
+  private def build(fn: Kernel, params: Seq[IntParam],
+                    args: Seq[Expression]): Expression = {
+    val expected = fn.inputs.length + params.length
+    if (args.length != expected)
       throw new AnalysisException(
         "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
         Map(
-          "functionName" -> s"`$name`",
+          "functionName" -> s"`${fn.name}`",
           "expectedNum" -> expected.toString,
-          "actualNum" -> children.length.toString,
+          "actualNum" -> args.length.toString,
           "docroot" -> "https://spark.apache.org/docs/latest"),
         None)
-
-  /** Out-of-range literal parameters (w ≤ 0, mod ≤ 0, …) must fail
-    * analysis with the range spelled out — not surface later as an
-    * ArrayIndexOutOfBounds/ArithmeticException from inside generated
-    * code.
-    */
-  private def requireRange(name: String, param: String, value: Long,
-                           lo: Long, hi: Long): Unit =
-    if (value < lo || value > hi)
-      throw new AnalysisException(
-        "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE",
-        Map(
-          "sqlExpr" -> s"\"$name\"",
-          "exprName" -> s"`$param`",
-          "valueRange" -> s"[$lo, $hi]",
-          "currentValue" -> value.toString),
+    val (inputs, constants) = args.splitAt(fn.inputs.length)
+    val values = params.zip(constants).map {
+      case (_, Literal(v: Int, IntegerType)) => v
+      case (p, _) => throw new AnalysisException(
+        "NON_FOLDABLE_ARGUMENT",
+        Map("funcName" -> s"`${fn.name}`",
+          "paramName" -> s"`${p.name}`", "paramType" -> "\"INT\""),
         None)
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[Expression]) => {
-        requireArity("cosine_sim", 2, children)
-        CosineSimilarity(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("milli_dot"),
-      new ExpressionInfo(classOf[MilliDotProduct].getName, "milli_dot"),
-      (children: Seq[Expression]) => {
-        requireArity("milli_dot", 2, children)
-        MilliDotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("md5long60"),
-      new ExpressionInfo(classOf[Md5Long60].getName, "md5long60"),
-      (children: Seq[Expression]) => {
-        requireArity("md5long60", 1, children)
-        Md5Long60(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName,
-        "winnow_fingerprints"),
-      (children: Seq[Expression]) => {
-        requireArity("winnow_fingerprints", 4, children)
-        def intLit(i: Int, name: String): Int = children(i) match {
-          case Literal(v: Int, IntegerType) => v
-          case _ => throw new AnalysisException(
-            "NON_FOLDABLE_ARGUMENT",
-            Map("funcName" -> "`winnow_fingerprints`",
-              "paramName" -> s"`$name`", "paramType" -> "\"INT\""),
-            None)
-        }
-        val (k, w, mod) = (intLit(1, "k"), intLit(2, "w"), intLit(3, "mod"))
-        requireRange("winnow_fingerprints", "k", k, 1, Int.MaxValue)
-        requireRange("winnow_fingerprints", "w", w, 1, Int.MaxValue)
-        requireRange("winnow_fingerprints", "mod", mod, 1, Int.MaxValue)
-        WinnowFingerprints(children.head, k, w, mod.toLong)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sign_lsh_sig"),
-      new ExpressionInfo(classOf[SignLshSignature].getName, "sign_lsh_sig"),
-      (children: Seq[Expression]) => {
-        requireArity("sign_lsh_sig", 3, children)
-        def intLit(i: Int, name: String): Int = children(i) match {
-          case Literal(v: Int, IntegerType) => v
-          case _ => throw new AnalysisException(
-            "NON_FOLDABLE_ARGUMENT",
-            Map("funcName" -> "`sign_lsh_sig`",
-              "paramName" -> s"`$name`", "paramType" -> "\"INT\""),
-            None)
-        }
-        val (nPlanes, dims) = (intLit(1, "nPlanes"), intLit(2, "dims"))
-        // 64 planes fill the long; more would silently alias bit 63
-        requireRange("sign_lsh_sig", "nPlanes", nPlanes, 1, 64)
-        requireRange("sign_lsh_sig", "dims", dims, 1, Int.MaxValue)
-        SignLshSignature(children.head, nPlanes, dims)
-      }))
-    // the r15 quantization kernels — same SQL parity as the Column API
-    def unary(name: String, cls: Class[_],
-              mk: Expression => Expression): Unit =
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name),
-        (children: Seq[Expression]) => {
-          requireArity(name, 1, children)
-          mk(children.head)
-        }))
-    unary("milli_vec", classOf[graft.functions.MilliVector],
-      graft.functions.MilliVector(_))
-    unary("milli_unit_vec", classOf[graft.functions.MilliUnitVector],
-      graft.functions.MilliUnitVector(_))
-    unary("abs_max", classOf[graft.functions.AbsMaxComponent],
-      graft.functions.AbsMaxComponent(_))
-    unary("int8_codes", classOf[graft.functions.Int8CodeVector],
-      graft.functions.Int8CodeVector(_))
-    unary("int8_fid_parts", classOf[graft.functions.Int8FidelityParts],
-      graft.functions.Int8FidelityParts(_))
+    }
+    params.zip(values).foreach { case (p, v) =>
+      if (v < 1 || v > p.hi)
+        throw new AnalysisException(
+          "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE",
+          Map(
+            "sqlExpr" -> s"\"${fn.name}\"",
+            "exprName" -> s"`${p.name}`",
+            "valueRange" -> s"[1, ${p.hi}]",
+            "currentValue" -> v.toString),
+          None)
+    }
+    // typed Any, so an INT stays an int: `if` would widen both to long
+    KernelCall(fn.using(params.zip(values).map[Any] {
+      case (p, v) => if (p.widen) v.toLong else v
+    }: _*), inputs)
   }
 }

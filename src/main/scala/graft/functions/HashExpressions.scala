@@ -2,14 +2,15 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression,
-  UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
-
-/** JVM-side kernel shared by interpreted eval and generated code. */
+/** The `md5long60` kernel ([[Kernels.Md5Long60]], behind
+  * [[Hashing.md5Long]]).
+  *
+  * The composable formulation — `conv(substring(md5(x), 1, 15), 16, 10)
+  * .cast(long)` — materializes a 32-char hex string, slices it, and
+  * re-parses it per row; this kernel goes digest bytes → long directly.
+  * Same value, one allocation instead of three string round-trips, on
+  * the path every shingle and token of the dedup family passes through.
+  */
 object HashUtil {
   private val digest = ThreadLocal.withInitial[MessageDigest](() =>
     MessageDigest.getInstance("MD5"))
@@ -30,37 +31,4 @@ object HashUtil {
         ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
     top >>> 4
   }
-}
-
-/** Fused 60-bit md5 hash of a binary input.
-  *
-  * The composable formulation — `conv(substring(md5(x), 1, 15), 16, 10)
-  * .cast(long)` — materializes a 32-char hex string, slices it, and
-  * re-parses it per row; this expression goes digest-bytes → long
-  * directly. Same value, one allocation instead of three string
-  * round-trips, on the path every shingle/token of the dedup family
-  * passes through.
-  */
-case class Md5Long60(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"md5long60 requires binary input, got $t")
-    }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "md5long60"
-
-  override def nullSafeEval(input: Any): Any =
-    HashUtil.md5Long60(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashUtil.md5Long60($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Md5Long60 = copy(child = newChild)
 }

@@ -25,13 +25,11 @@ object Hashing {
     * native `xxhash64` (same 64-bit shape, several times faster, still
     * no UDF) without touching any downstream operator.
     */
-  def md5Long(c: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(Md5Long60(
-      org.apache.spark.sql.GraftSqlBridge.expression(c.cast("binary"))))
+  def md5Long(c: Column): Column = Kernels.Md5Long60(c.cast("binary"))
 
   /** The composable (built-ins only) formulation — identical value,
-    * ~3 string round-trips per row slower than [[Md5Long60]]; kept for
-    * reference and as the parity cross-check in tests.
+    * ~3 string round-trips per row slower than [[HashUtil.md5Long60]];
+    * kept for reference and as the parity cross-check in tests.
     */
   def md5LongComposable(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")

@@ -1,12 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType,
-  StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All language-profile scores in one pass: scoreₗ = Σᵢ wₗᵢ ·
@@ -24,42 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * bit-for-bit (oracle-gated, plus the spec's cross-check against the
   * regex formulation).
   *
-  * Weights/needles ride in as reference objects ([[KmeansAssign]]
-  * precedent): the generated source is identical for any profile set,
-  * so janino caches one compiled class.
+  * Bound as `lang_scores` ([[Kernels.LangScores]]); weights and needles
+  * ride in as `ObjectType` literals, so the generated source is identical
+  * for any profile set and janino caches one compiled class.
   */
-case class LangScores(child: Expression, weights: Array[Array[Long]],
-                      needles: Array[Array[String]])
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"lang_scores requires a string column, got $t")
-    }
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "lang_scores"
-
-  override protected def withNewChildInternal(
-      newChild: Expression): LangScores = copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    LangScores.compute(input.asInstanceOf[UTF8String], weights, needles)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("langWeights", weights, "long[][]")
-    val nRef = ctx.addReferenceObj("langNeedles", needles,
-      "java.lang.String[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.LangScores$$.MODULE$$" +
-        s".compute($c, $wRef, $nRef);")
-  }
-}
-
 object LangScores {
 
   def compute(text: UTF8String, weights: Array[Array[Long]],

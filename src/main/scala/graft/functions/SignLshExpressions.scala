@@ -2,13 +2,8 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** All `nPlanes` sign-LSH hyperplane bits of one embedding, packed into a
   * single long — one fused per-row loop instead of a relational plan.
@@ -17,11 +12,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * (plane, dim, weight) table, aggregate per (vector, plane), aggregate
   * per vector) inflates every row ×(dims × nPlanes) and pays two
   * Exchanges before a single LSH candidate exists. The signature is a
-  * pure function of one row, so it belongs in a projection; following the
-  * [[CosineSimilarity]] / [[WinnowFingerprints]] precedent it is a custom
-  * Catalyst expression with `doGenCode` (a `transform`/`aggregate` HOF
-  * tower over literal plane arrays would be interpreted per element —
-  * the measured-74×-slower shape winnowing already ruled out).
+  * pure function of one row, so it belongs in a projection: the kernel
+  * [[SignLsh.computeSig]], bound as `sign_lsh_sig` ([[Kernels]]). A
+  * `transform`/`aggregate` HOF tower over literal plane arrays would be
+  * interpreted per element, the shape measured 74× slower on the
+  * winnowing path.
   *
   * Bit math (mirrored literally by the DuckDB oracle, which keeps the
   * plane table as injected literals): component quantized to micro units
@@ -31,32 +26,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * could). |v_micro| ≤ ~2²¹ × |w| ≤ 2¹⁰ × 64 dims → |sum| ≤ ~2³⁷.
   * Bit j of the result = (dot with plane j) ≥ 0.
   */
-case class SignLshSignature(child: Expression, nPlanes: Int, dims: Int)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"sign_lsh_sig requires an array<float> column, got $t")
-    }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "sign_lsh_sig"
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SignLshSignature = copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    SignLsh.computeSig(input.asInstanceOf[ArrayData], nPlanes, dims)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SignLsh$$.MODULE$$" +
-        s".computeSig($c, $nPlanes, $dims);")
-}
-
 object SignLsh {
 
   /** Deterministic "random" hyperplane weight in integer milli-units
@@ -111,6 +80,5 @@ object SignLsh {
 
   /** Column-API entry point. */
   def signLshSig(embedding: Column, nPlanes: Int, dims: Int): Column =
-    GraftSqlBridge.column(SignLshSignature(
-      GraftSqlBridge.expression(embedding), nPlanes, dims))
+    Kernels.SignLshSig.using(nPlanes, dims)(embedding)
 }

@@ -4,25 +4,17 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType,
-  StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Tokenization-adjacent codegen kernels (VERDICT r15 item 7 — the
-  * kernel-family discipline folded into the remaining interpreted
-  * higher-order sites): word n-gram shingling, char k-grams, and the
-  * fused chunk-statistics pass. Each is the bit-exact compiled twin of
-  * a `transform(sequence(...), ...)` tower that ran as interpreted
-  * lambda dispatch per element (the [[WinnowFingerprints]] finding:
-  * same shape measured 74× slower than codegen on the winnow path),
-  * property-pinned kernel ≡ expression in TextKernelSpec. The DuckDB
-  * oracles are unaffected — they mirror the expression semantics,
-  * which the kernels reproduce exactly.
+/** Tokenization-adjacent kernels: word n-gram shingling, char k-grams,
+  * and the fused chunk-statistics pass (`word_shingles`, `char_grams`,
+  * `chunk_stats` in [[Kernels]]). Each is the bit-exact compiled twin of
+  * a `transform(sequence(...), ...)` tower, which would run as
+  * interpreted lambda dispatch per element (the same shape measured 74×
+  * slower than codegen on the winnow path); TextKernelSpec pins
+  * kernel ≡ expression. The DuckDB oracles mirror the expression
+  * semantics, which the kernels reproduce exactly.
   *
   * Corpus contract (shared with every text kernel in this package):
   * ASCII text, so UTF-16 units = codepoints = Spark's character
@@ -40,7 +32,8 @@ object TextKernels {
     * semantics); below n tokens the array is empty (the expression's
     * load-bearing guard).
     */
-  def wordShingles(s: String, n: Int): ArrayData = {
+  def wordShingles(text: UTF8String, n: Int): ArrayData = {
+    val s = text.toString
     val len = s.length
     // token starts: position 0 and every position after a space
     var nTok = 1
@@ -75,7 +68,8 @@ object TextKernels {
     * wherever the expression was well-defined (every real name is ≥ k
     * chars; the guard is pinned in TextKernelSpec).
     */
-  def charGrams(s: String, k: Int): ArrayData = {
+  def charGrams(text: UTF8String, k: Int): ArrayData = {
+    val s = text.toString
     val m = s.length - k + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](m)
@@ -112,7 +106,8 @@ object TextKernels {
     * stride + 1 = 1 (SQL integer division truncates toward zero), one
     * empty chunk, 1 token (split -1 tokenizes "" as one empty token).
     */
-  def chunkStats(s: String, chunkLen: Int, stride: Int): ArrayData = {
+  def chunkStats(text: UTF8String, chunkLen: Int, stride: Int): ArrayData = {
+    val s = text.toString
     val len = s.length
     val nc = ((len - 1).toLong / stride) + 1L
     val md = MessageDigest.getInstance("SHA-256")
@@ -135,98 +130,4 @@ object TextKernels {
     }
     new GenericArrayData(out)
   }
-}
-
-/** Word n-gram shingles as a native expression — see
-  * [[TextKernels.wordShingles]].
-  */
-case class WordShingles(child: Expression, n: Int)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"word_shingles requires a string column, got $t")
-    }
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "word_shingles"
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordShingles = copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.wordShingles(input.asInstanceOf[UTF8String].toString, n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$" +
-        s".wordShingles($c.toString(), $n);")
-}
-
-/** Char k-grams as a native expression — see [[TextKernels.charGrams]]. */
-case class CharGrams(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"char_grams requires a string column, got $t")
-    }
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "char_grams"
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CharGrams = copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.charGrams(input.asInstanceOf[UTF8String].toString, k)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$" +
-        s".charGrams($c.toString(), $k);")
-}
-
-/** The fused chunk-statistics expression — see
-  * [[TextKernels.chunkStats]].
-  */
-case class ChunkStats(child: Expression, chunkLen: Int, stride: Int)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"chunk_stats requires a string column, got $t")
-    }
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("chunk_idx", LongType, nullable = false),
-      StructField("chunk_sha", StringType, nullable = false),
-      StructField("chunk_chars", LongType, nullable = false),
-      StructField("chunk_tokens", LongType, nullable = false))),
-    containsNull = false)
-
-  override def prettyName: String = "chunk_stats"
-
-  override protected def withNewChildInternal(
-      newChild: Expression): ChunkStats = copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.chunkStats(input.asInstanceOf[UTF8String].toString,
-      chunkLen, stride)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels$$.MODULE$$" +
-        s".chunkStats($c.toString(), $chunkLen, $stride);")
 }

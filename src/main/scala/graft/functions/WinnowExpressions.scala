@@ -1,59 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType,
-  StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Winnowing fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD'03) as a
-  * native expression: polynomial rolling hash over every k-char gram
-  * (O(1) update per position), minimum of each w-window of gram hashes
-  * via a monotonic deque (amortized O(1) per position — O(n) total),
-  * first-seen-deduplicated.
-  *
-  * Why a custom Catalyst `Expression` (SURVEY.md §7.3 preference order
-  * (b)): the expression-only formulation — nested
-  * `transform(sequence(...), aggregate(sequence(...), ...))` — is a
-  * higher-order function tower, i.e. CodegenFallback with interpreted
-  * lambda dispatch *per character per gram*; measured 37 s for the
-  * sf0.01 corpus. This compiled loop does the identical integer math in
-  * milliseconds and stays inside whole-stage codegen via a static call.
-  *
-  * Semantics are mirrored literally by the DuckDB oracle
-  * (`list_reduce`-based rolling hash): base 31, modulus 2²⁵ (products
-  * stay in int32 range for the oracle), char codes are UTF-16 units =
-  * codepoints on the BMP (the corpus contract is ASCII).
-  */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int, mod: Long)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"winnow_fingerprints requires a string column, got $t")
-    }
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "winnow_fingerprints"
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WinnowFingerprints = copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    WinnowFingerprints.compute(input.asInstanceOf[UTF8String], k, w, mod)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WinnowFingerprints$$.MODULE$$" +
-        s".compute($c, $k, $w, ${mod}L);")
-}
 
 /** All k-gram rolling hashes of a string, in position order (index i =
   * the gram starting at character i) — the UN-winnowed sibling of
@@ -62,45 +10,18 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int, mod: Long)
   * substring iff they share a gram hash, and the array index says
   * where.
   *
-  * Same O(n) rolling update as the winnow kernel (shared math, one
+  * The winnow kernel's O(n) rolling update ([[hashes]], shared: one
   * place to audit); no window-min, no dedup — every position's hash is
   * emitted. The modulus can be far larger than the winnow oracle's 2²⁵
   * because the mirroring DuckDB `list_reduce` seeds its accumulator
   * with `CAST(0 AS BIGINT)`: products stay under 2⁶³ for mod < 2⁵⁷.
   */
-case class GramHashes(child: Expression, k: Int, mod: Long)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"gram_hashes requires a string column, got $t")
-    }
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "gram_hashes"
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GramHashes = copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    GramHashes.compute(input.asInstanceOf[UTF8String], k, mod)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GramHashes$$.MODULE$$" +
-        s".compute($c, $k, ${mod}L);")
-}
-
 object GramHashes {
 
-  /** The shared rolling-hash core: hs(i) = polynomial hash of
-    * s[i, i+k) base 31 mod `mod` — identical update rule to
-    * [[WinnowFingerprints.compute]]'s first phase. Empty array below k
-    * chars.
+  /** The shared rolling-hash core of the gram and winnow kernels:
+    * hs(i) = polynomial hash of s[i, i+k) base 31 mod `mod`, each a
+    * rolling update of its predecessor (drop the outgoing char's power
+    * term, shift, add the incoming char). Empty array below k chars.
     */
   private[functions] def hashes(s: String, k: Int, mod: Long): Array[Long] = {
     val n = s.length
@@ -116,6 +37,8 @@ object GramHashes {
     hs(0) = h
     var i = 1
     while (i < m) {
+      // h, (c·powK)%mod ∈ [0, mod): difference ∈ (-mod, mod), so one
+      // +mod before the final %mod keeps everything non-negative
       h = (h - (s.charAt(i - 1).toLong * powK) % mod + mod) % mod
       h = (h * 31L + s.charAt(i + k - 1).toLong) % mod
       hs(i) = h
@@ -131,45 +54,13 @@ object GramHashes {
 /** Per-document deduplicated gram hashes with their FIRST (1-based)
   * position: array of (h, pos) structs, one per distinct gram hash.
   *
-  * This is [[GramHashes]] with the per-document dedup folded into the
-  * kernel: the (hash, doc) → first-position reduction that would
+  * This is [[GramHashes.compute]] with the per-document dedup folded
+  * into the kernel: the (hash, doc) → first-position reduction that would
   * otherwise be a full shuffle of the ~1-row-per-character gram stream
   * happens map-side, inside the expression, for free — the downstream
   * operator sees only distinct grams per document (≤ one per position,
   * typically far fewer on repetitive text).
   */
-case class GramFirstPos(child: Expression, k: Int, mod: Long)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"gram_first_pos requires a string column, got $t")
-    }
-
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("h", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("pos", LongType,
-        nullable = false))),
-    containsNull = false)
-
-  override def prettyName: String = "gram_first_pos"
-
-  override protected def withNewChildInternal(
-      newChild: Expression): GramFirstPos = copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    GramFirstPos.compute(input.asInstanceOf[UTF8String], k, mod)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GramFirstPos$$.MODULE$$" +
-        s".compute($c, $k, ${mod}L);")
-}
-
 object GramFirstPos {
 
   def compute(text: UTF8String, k: Int, mod: Long): ArrayData = {
@@ -195,12 +86,29 @@ object GramFirstPos {
   }
 }
 
+/** Winnowing fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD'03), the
+  * `winnow_fingerprints` kernel ([[Kernels]]): polynomial rolling hash
+  * over every k-char gram (O(1) update per position), minimum of each
+  * w-window of gram hashes via a monotonic deque (amortized O(1) per
+  * position — O(n) total), first-seen-deduplicated.
+  *
+  * Why a kernel: the expression-only formulation — nested
+  * `transform(sequence(...), aggregate(sequence(...), ...))` — is a
+  * higher-order function tower, i.e. CodegenFallback with interpreted
+  * lambda dispatch *per character per gram*; measured 37 s for the
+  * sf0.01 corpus. This compiled loop does the identical integer math in
+  * milliseconds, called directly from whole-stage codegen.
+  *
+  * Semantics are mirrored literally by the DuckDB oracle
+  * (`list_reduce`-based rolling hash): base 31, modulus 2²⁵ (products
+  * stay in int32 range for the oracle), char codes are UTF-16 units =
+  * codepoints on the BMP (the corpus contract is ASCII).
+  */
 object WinnowFingerprints {
 
   /** True O(n): each gram hash is a rolling update of its predecessor
-    * (drop the outgoing char's power term, shift, add the incoming
-    * char), and each window minimum comes from a monotonic deque (every
-    * index is pushed and popped at most once). The per-position k· and
+    * ([[GramHashes.hashes]]), and each window minimum comes from a
+    * monotonic deque (every index is pushed and popped at most once). The per-position k· and
     * w· rescans of the naive formulation are real CPU at 100 TB of
     * text; the hash values and selected minima are bit-identical to it
     * (property-pinned in WinnowPropertySpec).
@@ -210,29 +118,11 @@ object WinnowFingerprints {
     * equality is on the SET, which explode + ORDER BY restores).
     */
   def compute(text: UTF8String, k: Int, w: Int, mod: Long): ArrayData = {
-    val s = text.toString
-    val n = s.length
-    if (n < k) return new GenericArrayData(Array.empty[Long])
-    val m = n - k + 1
-    // powK = 31^(k-1) mod `mod`: the outgoing char's positional weight
-    var powK = 1L
-    var t = 0
-    while (t < k - 1) { powK = (powK * 31L) % mod; t += 1 }
-    val hs = new Array[Long](m)
-    var h = 0L
-    var j = 0
-    while (j < k) { h = (h * 31L + s.charAt(j).toLong) % mod; j += 1 }
-    hs(0) = h
-    var i = 1
-    while (i < m) {
-      // h, (c·powK)%mod ∈ [0, mod): difference ∈ (-mod, mod), so one
-      // +mod before the final %mod keeps everything non-negative
-      h = (h - (s.charAt(i - 1).toLong * powK) % mod + mod) % mod
-      h = (h * 31L + s.charAt(i + k - 1).toLong) % mod
-      hs(i) = h
-      i += 1
-    }
+    val hs = GramHashes.hashes(text.toString, k, mod)
+    if (hs.isEmpty) return new GenericArrayData(Array.empty[Long])
+    val m = hs.length
     val out = new java.util.LinkedHashSet[java.lang.Long]()
+    var i = 0
     if (m < w) {
       var mn = hs(0)
       i = 1

@@ -200,7 +200,7 @@ object RelationalQueries {
       .select(col("user_id"), col("event_type"), col("ts")))
 
   /** R4's full funnel rollup over any events-shaped frame — factored
-    * (r15) so the T29 streaming store serves the EXACT batch shape
+    * so the T29 streaming store serves the EXACT batch shape
     * from its accumulated event relation (shared code, the
     * T25/T26/T28 discipline).
     */
@@ -1789,17 +1789,16 @@ object RelationalQueries {
   val FuzzyMaxDist = 2
   val FuzzyMaxDf = 500L
 
-  /** Codegen char-trigram kernel (VERDICT r15 item 7 — was the
-    * interpreted `transform(sequence(1, length-2), i => substr(i, 3))`
-    * tower, one lambda dispatch per gram of every name on both join
-    * sides); the kernel adds the below-3-chars empty-array guard the
+  /** Char-trigram kernel ([[graft.functions.TextKernels.charGrams]]) in
+    * place of the interpreted `transform(sequence(1, length-2),
+    * i => substr(i, 3))` tower, which paid one lambda dispatch per gram
+    * of every name on both join sides; the kernel adds the below-3-chars empty-array guard the
     * unguarded expression lacked (its `sequence(1, len-2)` DESCENDS
     * there) — identical output wherever the expression was
     * well-defined, which is every real name (TextKernelSpec pins both).
     */
   private def charGrams3(c: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(graft.functions.CharGrams(
-      org.apache.spark.sql.GraftSqlBridge.expression(c), 3))
+    graft.functions.Kernels.CharGrams.using(3)(c)
 
   def qFuzzyJoin(spark: SparkSession, dir: String): DataFrame =
     fuzzyResolve(Tables.customer(spark, dir)
@@ -3516,7 +3515,7 @@ object RelationalQueries {
     * agrees); argmax by (|S'| DESC, day) row_number — deterministic;
     * means are positive integer floor-divisions; the one double is
     * the normalized magnitude micro(|S'| / (N·T)) with the product
-    * promoted to double BEFORE multiplying (the ADVICE-r11 rule).
+    * promoted to double BEFORE multiplying (so no Long product can overflow).
     * Long headroom: N·cum ≤ N·T, exact to ~10⁴ days × 10¹⁴
     * events/day-sum (N·T < 2⁶³); DuckDB errors identically past it.
     *
@@ -3613,7 +3612,8 @@ object RelationalQueries {
     * are exact integer aggregates; r is ONE micro-floored double tree
     * (m·Σxy − Σx·Σy)/sqrt((m·Σx²−Σx·Σx)·(m·Σy²−Σy·Σy)) with every
     * product's first factor CAST to double BEFORE multiplying (the
-    * ADVICE-r11 rule), zero-variance lags guarded to 0. Integer
+    * product stays double, never an overflowing Long), zero-variance
+    * lags guarded to 0. Integer
     * headroom: Σ x·x products are exact to ~10⁹ events/day on a
     * 30-year series (DuckDB's BIGINT multiply errors past it).
     *
@@ -3711,7 +3711,7 @@ object RelationalQueries {
     * scale) are exact integer aggregates; ρ is ONE micro-floored
     * double tree (n·Σab − Σa·Σb)/sqrt((n·Σa²−Σa·Σa)·(n·Σb²−Σb·Σb))
     * with every product's first factor CAST to double BEFORE
-    * multiplying (the ADVICE-r11 rule — no Long product, no ceiling);
+    * multiplying (no Long product, no ceiling);
     * an all-tied axis zeroes its variance and guards ρ to 0. The
     * doubling cancels in the ratio (numerator and each variance carry
     * the same 4×), so ρ is the standard statistic, not a scaled one.
@@ -3991,7 +3991,7 @@ object RelationalQueries {
     * Exactness: cell counts and marginals exact integers; each cell's
     * chi term is ONE micro-floored double tree ((n − e)²/e with
     * e = (rt·ct as double)/t — the product promotes to double BEFORE
-    * multiplying, the ADVICE r11 overflow rule), and chi² is the
+    * multiplying, so no Long product can overflow), and chi² is the
     * INTEGER sum of the per-cell micro floors — deterministic because
     * no double ever crosses an aggregation boundary (the q_anova_dow
     * rule, achieved here by flooring before summing; the quantization
@@ -4083,8 +4083,8 @@ object RelationalQueries {
     * Exactness: concordant/discordant/tie counts are exact integers
     * off sign products in {−1, 0, 1}; tau-b is ONE micro-floored
     * double tree (C − D)/sqrt(((n0 − tx)·1.0)·(n0 − ty)) — the tie
-    * factors promote to double BEFORE multiplying (the ADVICE r11
-    * rule; n0 ≈ days²/2 so the Long product would hold to ~3·10⁹
+    * factors promote to double BEFORE multiplying (no Long product;
+    * n0 ≈ days²/2 so the Long product would hold to ~3·10⁹
     * days anyway, but the promotion removes the ceiling). Degenerate
     * (all-tied either axis) guards to 0.
     *
@@ -5017,7 +5017,7 @@ object RelationalQueries {
     * documented Long-headroom ceiling, DuckDB errors identically past
     * it); arm means are integer micro floor-divisions; t and df are
     * each ONE micro-floored fixed double tree (Σx promoted to double
-    * BEFORE squaring — the ADVICE-r11 rule) interpolated verbatim into
+    * BEFORE squaring, so no Long square forms) interpolated verbatim into
     * both engines. Degenerate arms (n < 2 either side, or zero pooled
     * standard error — identical constant outcomes) read NULL t and df,
     * and the guard compares the IDENTICAL double both engines compute.
@@ -5207,7 +5207,7 @@ object RelationalQueries {
     val wCum = Window.orderBy("rank")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val naiveThr = multTestThrMicro.head._2
-    // LEFT joins + raise_error, not inner (ADVICE r15): an inner join
+    // LEFT joins + raise_error, not inner: an inner join
     // against the 64-row threshold menu would silently DROP the
     // top-ranked rows of a >64-test family (divisor > 64 matches
     // nothing) and empty the whole readout (b.divisor = f.k matches
@@ -6496,7 +6496,7 @@ object RelationalQueries {
     * unconditionally, Spark under ANSI mode (the Spark 4 default;
     * non-ANSI BIGINT arithmetic wraps silently, so the census REQUIRES
     * `spark.sql.ansi.enabled` up front rather than trusting the
-    * session — ADVICE r15; ScaleOpsSpec pins the overflow throw).
+    * session; ScaleOpsSpec pins the overflow throw).
     *
     * Output per event_type: event counts, distinct users, cents sums,
     * floored cluster-residual masses, the cluster-robust z of the B−A

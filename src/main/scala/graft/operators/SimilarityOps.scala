@@ -9,9 +9,9 @@ import graft.functions.vector.cosineSim
 /** Embedding similarity operators over an `embeddings`-shaped frame
   * (`vec_id: long, embedding: array<float>, label: int`).
   *
-  * The scoring kernel is [[graft.functions.CosineSimilarity]] — a custom
-  * Catalyst expression with `doGenCode` (one fused scalar loop inside
-  * whole-stage codegen). The built-in formulation
+  * The scoring kernel is `cosine_sim`
+  * ([[graft.functions.VectorKernels.cosine]], one fused scalar loop
+  * called from whole-stage codegen). The built-in formulation
   * (`aggregate(zip_with(...))`) is a `CodegenFallback` higher-order
   * function: interpreted lambda dispatch + a temp array per row — the
   * wrong shape for the O(candidate-pairs) hot loop. Both compute the
@@ -300,7 +300,6 @@ object SimilarityOps {
     * recall — at production thresholds the scale config dominates.
     */
   val ScaleLshPlanes = 32
-  val ScaleLshBandBits = 8
 
   /** Expected-bucket-occupancy cap for [[adaptiveBandBits]]: the band
     * width is widened until a band's EXPECTED bucket size n/2ᵇ is at
@@ -336,8 +335,8 @@ object SimilarityOps {
   val LshDims = 64
 
   /** Per-vector packed sign-bit signatures — ONE zero-shuffle projection
-    * through the custom codegen expression
-    * [[graft.functions.SignLshSignature]]. The former relational
+    * through the `sign_lsh_sig` kernel
+    * ([[graft.functions.SignLsh.computeSig]]). The former relational
     * formulation (posexplode → broadcast plane join → two hash
     * aggregations) inflated every row ×(dims·nPlanes) and paid two
     * Exchanges for what is a pure per-row function; at the production
@@ -419,8 +418,8 @@ object SimilarityOps {
     * the whole training trajectory — are bit-identical across engines,
     * partitionings, and retries. Milli (not micro) keeps every derived
     * integer (ssq ≤ dims·S²) exactly representable in doubles through
-    * the score division even at 100× this corpus. One codegen
-    * projection ([[graft.functions.MilliVector]]); the float kernels
+    * the score division even at 100× this corpus. One kernel
+    * projection ([[graft.functions.VectorKernels.milli]]); the float kernels
     * ([[graft.functions.KmeansAssign]] and siblings) quantize by the
     * same floor(v·1000) law inside their loop, so assigning `milliVec`
     * output with [[graft.functions.KmeansAssignMilli]] gives the same
@@ -431,7 +430,7 @@ object SimilarityOps {
 
   /** Nearest-centroid id under a codebook — a zero-shuffle per-row
     * projection through [[graft.functions.KmeansAssign]] (one compiled
-    * loop; the codebook is a reference object, so each training round
+    * loop; the codebook is an `ObjectType` literal, so each training round
     * reuses the same generated class instead of re-planning a
     * dims×centroids literal tree). Ties break toward the lower centroid
     * id, matching the oracle's ORDER BY score DESC, cid.
@@ -1157,7 +1156,7 @@ object SimilarityOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("dot").desc, col("vec_id"))
-    // the fused MilliDotProduct codegen kernel: one exact long dot per
+    // the fused `milli_dot` kernel: one exact long dot per
     // (query, vector) pair of the n×Q truth scan
     emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
@@ -2425,8 +2424,8 @@ object SimilarityOps {
   /** Per-element int8 codes under [[quantizeInt8]]'s law —
     * `floor(v · 127 / amax)` with the per-vector abs-max scale — kept
     * as an ARRAY (cast to float, exact for |code| ≤ 127) so the code
-    * vectors flow through the same codegen'd
-    * [[graft.functions.CosineSimilarity]] kernel as the raw floats.
+    * vectors flow through the same `cosine_sim` kernel as the raw
+    * floats.
     */
   def int8CodeVec(e: Column): Column =
     // fused absmax fold + quantize: one codegen pass
@@ -2445,7 +2444,8 @@ object SimilarityOps {
     * buckets with their exemplars).
     *
     * Exactness: the three integers [Σm·q, Σm², Σq²] come from ONE
-    * codegen pass ([[graft.functions.Int8FidelityParts]]); the
+    * kernel pass ([[graft.functions.VectorKernels.int8FidelityParts]]);
+    * the
     * cosine is one mirrored double tree; bucket edges are integer
     * compares. Zero vectors (Σm² = 0 — nothing to quantize) are
     * excluded by the same guard both engines share.

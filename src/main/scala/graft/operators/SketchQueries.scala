@@ -225,15 +225,11 @@ object SketchQueries {
        |ORDER BY bc.doc_id""".stripMargin
   }
 
-  /** HLL relative standard deviation: 0.02 needs 2^14 registers — the
-    * accuracy/space point a production rollup would pick (±2% on
-    * billions of distincts from a ~16 KB sketch per group).
-    */
-  val HllRsd = 0.02
-
-  /** Register count for the EXPLICIT md5-based HLL (T20's streaming
+  /** Register count for the EXPLICIT md5-based HLL (the streaming HLL's
     * state): m = 256 → rsd ≈ 1.04/√256 = 6.5 %, the smallest register
-    * file that still demonstrates the full estimator pipeline.
+    * file that still demonstrates the full estimator pipeline. A
+    * production rollup would pick rsd 0.02, which needs 2^14 registers
+    * (±2% on billions of distincts from a ~16 KB sketch per group).
     */
   val HllM = 256L
 
@@ -269,8 +265,8 @@ object SketchQueries {
 
   /** X70: register-explicit HLL distinct-count census — the audit
     * form of the sketch [[qHll]] serves (all intermediate register
-    * statistics emitted as columns; since r15 both ids share the
-    * register path and both are fully hash-oracled). Built on the
+    * statistics emitted as columns; both ids share the register path
+    * and both are fully hash-oracled). Built on the
     * T20 register relation ([[hllRegistersGrouped]]), every stage is
     * cross-engine exact: the md5 bucket/rho split is integer, and the
     * raw-HLL denominator Z = Σⱼ 2^(−Mⱼ) is DYADIC — scaled by 2⁵³ it
@@ -369,7 +365,7 @@ object SketchQueries {
     * tables are implementation-specific — DuckDB computes a different
     * estimate for the same set, so the id carried the corpus's one
     * rows-only contract. Serving the portable register sketch instead
-    * (VERDICT r14 item 3) makes the estimate deterministic, identical
+    * makes the estimate deterministic, identical
     * to what the streaming store serves, and fully hash-oracled —
     * and it is the better engineering: batch and streaming now answer
     * distinct-count questions from the SAME sketch definition.
@@ -741,11 +737,10 @@ object SketchQueries {
     * a deployment drops the audit columns and keeps only sketch math.
     */
   def qJoinCard(spark: SparkSession, dir: String): DataFrame = {
-    // fact legs NOT parallelized: r16 repartitioned them against the
-    // single-split argument, but the per-row work (one md5) is scan-
-    // cheap and the added round-robin exchanges measured the query
-    // 3.4 -> 6.2 s in the same-day full-run comparison; the r17 paired
-    // window confirms the rollback (OPTIMIZATION_r17.md §q_join_card)
+    // fact legs NOT parallelized: the per-row work (one md5) is scan-
+    // cheap, and repartitioning them against the single-split argument
+    // measured the query 3.4 -> 6.2 s in a same-day full-run comparison,
+    // confirmed by a paired window (OPTIMIZATION_r17.md §q_join_card)
     val pairs = Seq(
       ("cust",
         Tables.orders(spark, dir).select(col("o_custkey").as("k")),
@@ -792,7 +787,7 @@ object SketchQueries {
   }
 
   /** X65 deployment form: the sketch math only — the exact-
-    * intersection audit join (the measured cost center, BENCH r11)
+    * intersection audit join (the measured cost center)
     * drops once the error regime is accepted; what remains is what a
     * CBO reads at plan time. Output columns are spec-pinned equal to
     * [[joinCardCensus]]'s overlapping columns; the plan is pinned to
@@ -1350,8 +1345,8 @@ object SketchQueries {
        |       THEN 1 ELSE 0 END AS BIGINT) AS use_lc
        |FROM g ORDER BY event_type""".stripMargin
 
-  /** q_hll oracle (VERDICT r14 item 3 — the id's rows-only contract
-    * retired): the shared register CTEs, the [[hllLcTable]] literals
+  /** q_hll oracle (the id is fully hash-oracled, not rows-only): the
+    * shared register CTEs, the [[hllLcTable]] literals
     * as a VALUES relation, and the serving CASE between raw HLL and
     * linear counting.
     */

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Hashing
+import graft.functions.{Hashing, Kernels}
 import graft.functions.Hashing.{md5Long, micro}
 
 /** Text analysis + deduplication operators over a `documents`-shaped frame
@@ -35,9 +35,9 @@ object TextOps {
     * This is the EXPRESSION formulation — an interpreted higher-order
     * tower (lambda dispatch per shingle per token), kept as the
     * readable spec mirror; every corpus-scale consumer routes through
-    * [[textShingles]]'s compiled kernel instead (VERDICT r15 item 7 —
-    * the shingle relation is one row per word of the corpus, the
-    * X16-measured interpreted-per-element shape). TextKernelSpec pins
+    * [[textShingles]]'s compiled kernel instead (the shingle relation
+    * is one row per word of the corpus, the measured interpreted-per-
+    * element shape). TextKernelSpec pins
     * kernel ≡ expression property-style.
     */
   def shingles(toks: Column, n: Int): Column =
@@ -46,15 +46,14 @@ object TextOps {
         i => concat_ws(" ", slice(toks, i, lit(n)))))
       .otherwise(array().cast("array<string>"))
 
-  /** [[shingles]]∘[[tokens]] as ONE codegen kernel
-    * ([[graft.functions.WordShingles]]): shingle j is a single
+  /** [[shingles]]∘[[tokens]] as ONE kernel
+    * ([[graft.functions.TextKernels.wordShingles]]): shingle j is a single
     * substring of the original text (every separator is exactly one
     * space, so joining n consecutive tokens with spaces IS the
     * original span) — no token array, no per-shingle lambda.
     */
   def textShingles(text: Column, n: Int): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(graft.functions.WordShingles(
-      org.apache.spark.sql.GraftSqlBridge.expression(text), n))
+    Kernels.WordShingles.using(n)(text)
 
   /** Ensure a CPU-heavy derivation isn't bottlenecked on scan
     * parallelism: a small hot table often arrives as a single parquet
@@ -159,13 +158,9 @@ object TextOps {
     // (language, needle) — 15 regex passes per row for a substring
     // count; the kernel's indexOf advances are the same non-overlapping
     // left-to-right semantics the oracle's replace trick keeps using
-    val sc = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.LangScores(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("text")),
-        LangProfiles.map(_._2.map(_._1.toLong).toArray).toArray,
-        LangProfiles.map(_._2.map(_._2).toArray).toArray))
     // (element_at is 1-based)
-    val scored = docs.select(col("doc_id"), sc.as("__sc"))
+    val scored = docs
+      .select(col("doc_id"), langScoresOf(col("text")).as("__sc"))
       .select(col("doc_id") +:
         LangProfiles.zipWithIndex.map { case ((l, _), i) =>
           element_at(col("__sc"), i + 1).as(s"score_$l")
@@ -187,11 +182,9 @@ object TextOps {
     * half-split read).
     */
   private def langScoresOf(text: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.LangScores(
-        org.apache.spark.sql.GraftSqlBridge.expression(text),
-        LangProfiles.map(_._2.map(_._1.toLong).toArray).toArray,
-        LangProfiles.map(_._2.map(_._2).toArray).toArray))
+    Kernels.LangScores.using(
+      LangProfiles.map(_._2.map(_._1.toLong).toArray).toArray,
+      LangProfiles.map(_._2.map(_._2).toArray).toArray)(text)
 
   /** Argmax language off a score-array column (declaration-order
     * tie-break — the [[langId]] rule).
@@ -770,7 +763,6 @@ object TextOps {
     *    candidate pair between each pair of replicas.
     */
   val ScaleMinhashBands = 16
-  val ScaleMinhashRows = 8
 
   /** MinHash LSH candidate pairs over pre-hashed shingles, signatures
     * and set sizes attached — the [[Banding]] join. The band hash is a
@@ -1092,20 +1084,17 @@ object TextOps {
 
   /** Overlapping document chunking (LLM training prep): fixed-length
     * character windows every `stride` chars (overlap = chunkLen-stride).
-    * One fused codegen pass per document
-    * ([[graft.functions.ChunkStats]] — the expression tower evaluated
-    * each chunk's substring THREE times through interpreted lambdas:
-    * sha, length, token count; VERDICT r15 item 7) + explode; zero
+    * One fused kernel pass per document
+    * ([[graft.functions.TextKernels.chunkStats]] — the expression tower
+    * evaluated each chunk's substring THREE times through interpreted
+    * lambdas: sha, length, token count) + explode; zero
     * shuffles, and the chunk count derives from exact integer floor
     * division on both engines. TextKernelSpec pins kernel ≡ the
     * expression formulation including the empty-document edge
     * (nc = (0−1) div stride + 1 = 1: one empty chunk, one empty token).
     */
   def chunkDocs(docs: DataFrame, chunkLen: Int, stride: Int): DataFrame = {
-    val chunks = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.ChunkStats(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("text")),
-        chunkLen, stride))
+    val chunks = Kernels.ChunkStats.using(chunkLen, stride)(col("text"))
     docs.select(col("doc_id"), explode(chunks).as("c"))
       .select(col("doc_id"), col("c.chunk_idx").as("chunk_idx"),
         col("c.chunk_sha").as("chunk_sha"),
@@ -1550,17 +1539,14 @@ object TextOps {
   val WinnowMod = 33554432L // 1 << 25
 
   def winnowFingerprints(docs: DataFrame, k: Int, w: Int): DataFrame = {
-    // native expression, not HOFs: a transform/aggregate tower would be
+    // a kernel, not HOFs: a transform/aggregate tower would be
     // interpreted per char per gram (measured 37 s at sf0.01); the
     // compiled loop in [[graft.functions.WinnowFingerprints]] is the
     // same integer math in milliseconds, inside whole-stage codegen
-    val fps = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.WinnowFingerprints(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("text")),
-        k, w, WinnowMod))
+    val fps = Kernels.WinnowFingerprints.using(k, w, WinnowMod)(col("text"))
     // parallelized: the kernel is CPU-dense per row, and a small hot
     // table arrives as one parquet split — the shingleSet discipline
-    // (r16 A/B: q_eval_gate 1.7 s with vs 4.7-5.4 s without)
+    // (A/B: q_eval_gate 1.7 s with vs 4.7-5.4 s without)
     parallelized(docs).select(col("doc_id"),
       explode(fps).as("fingerprint"))
   }
@@ -1598,15 +1584,12 @@ object TextOps {
   /** The (h, doc_id, pos) relation [[substringMatches]] joins: one row
     * per DISTINCT gram per document with its first 1-based position —
     * the per-doc dedup happens INSIDE the kernel
-    * ([[graft.functions.GramFirstPos]]), map-side and free, so the
-    * ~1-row-per-character raw gram stream never reaches a shuffle.
+    * ([[graft.functions.GramFirstPos.compute]]), map-side and free, so
+    * the ~1-row-per-character raw gram stream never reaches a shuffle.
     */
   private[graft] def gramFirstPositions(docs: DataFrame, k: Int,
                                         mod: Long = SubMod): DataFrame = {
-    val gfp = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.GramFirstPos(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("text")),
-        k, mod))
+    val gfp = Kernels.GramFirstPos.using(k, mod)(col("text"))
     // parallelized: one gram per character — the heaviest explode in
     // the family; never leave it on a single-split scan
     parallelized(docs).select(col("doc_id"), explode(gfp).as("u"))
@@ -1717,10 +1700,7 @@ object TextOps {
       .groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= maxDf)
       .select("h")
-    val gh = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.GramHashes(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("text")),
-        k, SubMod))
+    val gh = Kernels.GramHashes.using(k, SubMod)(col("text"))
     val allPos = docs
       .select(col("doc_id"), posexplode(gh).as(Seq("p", "h")))
       .select(col("doc_id"), (col("p") + 1).cast("long").as("pos"),
@@ -1792,10 +1772,7 @@ object TextOps {
       .agg(count(lit(1)).as("df"), min("doc_id").as("owner"))
       .filter(col("df") >= 2 && col("df") <= maxDf)
       .select("h", "owner")
-    val gh = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.GramHashes(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("text")),
-        k, SubMod))
+    val gh = Kernels.GramHashes.using(k, SubMod)(col("text"))
     val allPos = docs
       .select(col("doc_id"), posexplode(gh).as(Seq("p", "h")))
       .select(col("doc_id"), (col("p") + 1).cast("long").as("pos"),
@@ -2068,8 +2045,8 @@ object TextOps {
     // broadcast both eval-side relations: the eval index is benchmark-
     // sized BY DESIGN (curated suites, thousands of docs) at every
     // corpus scale, so the incoming/train side — the side that grows
-    // with the corpus — never shuffles at all (guide §3.1; r16 measured
-    // 2x on q_eval_gate: the SMJ shuffled the full train fingerprint
+    // with the corpus — never shuffles at all (guide §3.1; measured 2x
+    // on q_eval_gate: the SMJ shuffled the full train fingerprint
     // relation to compare it against a broadcastable index).
     // Failure mode (documented, accepted): a deployment whose eval-
     // fingerprint relation outgrew the 8 GB / 512M-row broadcast cap
@@ -3043,7 +3020,7 @@ object TextOps {
     * Exactness: V, T, M2 = Σc² are exact integer aggregates off the
     * per-source token census; K and S are each ONE micro-floored
     * double tree with products promoted to double BEFORE multiplying
-    * (the ADVICE-r11 rule — T² never forms as a Long). Long headroom
+    * (T² never forms as a Long). Long headroom
     * on M2: worst case one type carrying all tokens, exact to
     * T ≈ 3·10⁹ tokens per source (documented ceiling; DuckDB's
     * BIGINT multiply errors identically past it, no silent wrap).
@@ -3986,7 +3963,7 @@ object TextOps {
   }
 
   /** x^(eNum/2^log2den) as a FIXED product of sqrt chains — the
-    * cross-engine-exact dyadic power (VERDICT r14 item 6): IEEE 754
+    * cross-engine-exact dyadic power: IEEE 754
     * requires sqrt and multiply to be correctly rounded, so any
     * composition tree of them is bit-reproducible across engines,
     * while `pow`'s rounding is implementation-defined. Bit j of eNum
@@ -4009,14 +3986,14 @@ object TextOps {
       .reduceLeft((a, b) => s"($a * $b)")
 
   /** [[temperatureMix]] at GENERIC dyadic α = alphaNum/2^alphaLog2Den
-    * (X77, VERDICT r14 item 6): the multilingual sampling rule
+    * (X77): the multilingual sampling rule
     * q_i ∝ p_i^α as a keep-all-of-the-bottleneck plan,
     * rate_i = (t_min/t_i)^(1−α) — at α = ½ this IS [[temperatureMix]].
     * Dyadic α keeps the α=½ exactness argument for every rate: the
     * exponent (1−α) is m/2ⁿ, so the rate is a fixed product of
     * correctly-rounded sqrt chains over ONE exact integer division
     * ([[dyadicPow]]) — no `pow`, whose cross-engine rounding is
-    * unpinned (the reason generic α stayed unoracled through r14).
+    * unpinned (with `pow`, generic α could not be oracled).
     * α = ¼ and ¾ bracket the public mixing defaults (UniMax/mT5-class
     * pipelines run α ≈ 0.3); any k/2ⁿ grid point oracles the same way.
     *

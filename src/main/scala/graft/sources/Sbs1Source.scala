@@ -18,7 +18,8 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader,
   PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream,
+  Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -55,9 +56,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * session that starts the query — no option). Dedup correctness does not
   * depend on the split: the PK dedup is a shuffle on the key columns.
   *
-  * Like the built-in socket source this buffers on the driver
-  * and is NOT fault-tolerant across query restarts (a TCP broadcast is
-  * not replayable — the reference has the identical limitation): use
+  * Restart: a query restarted on its checkpoint resumes from the
+  * committed offset C, and the source learns C from Spark
+  * (`SupportsAdmissionControl.latestOffset(start, limit)`): the first
+  * line it reads in the new run is offset C, so every line received after
+  * the restart is delivered. Lines in flight at a crash are lost, as in
+  * the reference: a TCP broadcast is not replayable, so a batch that was
+  * planned but never committed replans as empty. Like the built-in socket
+  * source this buffers on the driver; use
   * [[graft.streaming.Ingest.backfill]] over archived logs when replay
   * matters, or front the feed with a durable log. Fine for a live
   * ADS-B feed at O(100) msg/s (README.md:48-49).
@@ -117,12 +123,13 @@ case class Sbs1Offset(count: Long) extends Offset {
 
 class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
                            attemptDelayMs: Long, parallelism: Int)
-  extends MicroBatchStream {
+  extends MicroBatchStream with SupportsAdmissionControl {
 
   private val stopped = new AtomicBoolean(false)
-  // lines received but not yet committed; `base` = offset of buffer(0)
+  // lines received but not yet committed; `base` = offset of buffer(0),
+  // -1 until Spark names the offset this run starts from
   private val buffer = ArrayBuffer.empty[String]
-  private var base = 0L
+  private var base = -1L
   @volatile private var socket: Socket = _
   // set exactly once, when the reader thread ends without being stopped
   // (dial budget exhausted, or any other error escaping the dial/read
@@ -197,16 +204,27 @@ class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
 
   override def initialOffset(): Offset = Sbs1Offset(0L)
 
-  override def latestOffset(): Offset = synchronized {
-    checkFailure()
-    Sbs1Offset(base + buffer.length)
-  }
+  /** `start` is where this run resumes: 0 for a fresh query, the
+    * committed offset after a restart. The first call numbers the
+    * buffered lines from it.
+    */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    synchronized {
+      checkFailure()
+      if (base < 0) base = start.asInstanceOf[Sbs1Offset].count
+      Sbs1Offset(base + buffer.length)
+    }
+
+  override def latestOffset(): Offset =
+    latestOffset(initialOffset(), ReadLimit.allAvailable())
 
   override def deserializeOffset(json: String): Offset =
     Sbs1Offset(json.toLong)
 
   /** `min(lines, parallelism)` contiguous partitions in offset order (the
-    * partitioning invariant in [[Sbs1SourceProvider]]'s Scaladoc).
+    * partitioning invariant in [[Sbs1SourceProvider]]'s Scaladoc). A
+    * batch replayed before this run has numbered any line plans empty:
+    * its lines were in flight when the previous run ended.
     */
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
@@ -214,7 +232,8 @@ class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
     val (s, e) = (start.asInstanceOf[Sbs1Offset].count,
       end.asInstanceOf[Sbs1Offset].count)
     val lines = synchronized {
-      buffer.slice((s - base).toInt, (e - base).toInt).toArray
+      if (base < 0) Array.empty[String]
+      else buffer.slice((s - base).toInt, (e - base).toInt).toArray
     }
     val n = math.min(lines.length, parallelism)
     Array.tabulate[InputPartition](n) { i =>
@@ -229,7 +248,7 @@ class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
   override def commit(end: Offset): Unit = synchronized {
     val e = end.asInstanceOf[Sbs1Offset].count
     val drop = (e - base).toInt
-    if (drop > 0) {
+    if (base >= 0 && drop > 0) {
       buffer.dropInPlace(drop)
       base = e
     }

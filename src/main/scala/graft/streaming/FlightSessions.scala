@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 
@@ -73,14 +72,5 @@ object FlightSessions {
       .groupByKey(_.hex_ident)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout())(fn)
-  }
-
-  /** Adapter: parsed ADS-B frame → typed fix stream (positions only). */
-  def fromParsed(parsed: org.apache.spark.sql.DataFrame,
-                 spark: SparkSession): Dataset[Fix] = {
-    import spark.implicits._
-    parsed.filter(col("lat").isNotNull)
-      .select(col("hex_ident"), col("parsed_time"))
-      .as[Fix](Encoders.product[Fix])
   }
 }

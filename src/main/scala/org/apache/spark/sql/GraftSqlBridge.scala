@@ -3,7 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` Column↔Expression conversion for graft's
-  * custom Catalyst expressions (Spark 4 wraps Column around ColumnNode;
+  * own Catalyst expressions (Spark 4 wraps Column around ColumnNode;
   * `classic.ExpressionUtils` is the sanctioned classic-backend path).
   * Lives in `org.apache.spark.sql` solely to satisfy the access scope —
   * the one place this library reaches into Spark internals.

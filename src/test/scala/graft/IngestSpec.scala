@@ -107,6 +107,56 @@ class IngestSpec extends SparkSpec {
     }
   }
 
+  test("a restarted ingest delivers every line sent after the restart") {
+    // run 1 commits 200 lines and stops; run 2 resumes on the same
+    // checkpoint (committed offset 200) and is sent 300 new lines. The
+    // source numbers run 2's first line 200, so all 300 must land; a
+    // source that counted from 0 again would plan only [200, 300) of them
+    val template = Sbs1.sampleLines(7)
+    def lines(from: Int, n: Int): Seq[String] =
+      (from until from + n).map(i => template.replace("4CA2D6", f"A$i%05d"))
+    val server = new ServerSocket(0)
+    val serverThread = new Thread(() => {
+      for (run <- Seq(lines(0, 200), lines(200, 300))) {
+        val sock = server.accept()
+        val out = new PrintWriter(sock.getOutputStream)
+        out.print(run.map(_ + "\n").mkString)
+        out.flush()
+        sock.getInputStream.read() // until the query's source hangs up
+        sock.close()
+      }
+    })
+    serverThread.setDaemon(true)
+    serverThread.start()
+
+    val cfg = Ingest.Config(host = "localhost", port = server.getLocalPort,
+      sinkDir = Files.createTempDirectory("graft-sink-restart").toString,
+      checkpointDir =
+        Files.createTempDirectory("graft-ckpt-restart").toString)
+    def sinkCount(): Long =
+      try spark.read.parquet(cfg.sinkDir).count()
+      catch { case _: Exception => -1L }
+    def run(expected: Long): Unit = {
+      val q = Ingest.start(spark, cfg)
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        while (sinkCount() < expected &&
+            System.currentTimeMillis() < deadline) Thread.sleep(500)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    try {
+      run(200)
+      assert(sinkCount() === 200, "run 1 commits its 200 lines")
+      run(500)
+      val hexes = spark.read.parquet(cfg.sinkDir).collect()
+        .map(_.getAs[String]("hex_ident")).toSeq
+      assert(hexes.length - 200 === 300,
+        "every line sent after the restart reaches the sink")
+      assert(hexes.toSet === (0 until 500).map(i => f"A$i%05d").toSet)
+    } finally server.close()
+  }
+
   test("an unusable port fails the query instead of leaving a dead feed") {
     // `new Socket` rejects port 70000 with IllegalArgumentException, not an
     // IOException: the reader thread must still fail the query

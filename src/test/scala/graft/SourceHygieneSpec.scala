@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.sources.Bucketed` is the only module that writes a bucketed
   * catalog table. And every streaming operator is a batch step started
   * through `MicroBatches.start` or `Admission.start`, and reads its
-  * session from its batch.
+  * session from its batch. And every graft SQL function is a kernel bound
+  * through `graft.functions.KernelCall`: no main source writes codegen by
+  * hand, except the `sbs1_parse` generator in `Sbs1Expressions.scala`.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -26,6 +28,9 @@ class SourceHygieneSpec extends AnyFunSuite {
     "Future\\(", "\\.par\\b").map(_.r)
 
   private val TableWrites = Seq(".bucketBy(", "saveAsTable(")
+
+  private val HandCodegen = Seq("doGenCode", "nullSafeEval",
+    "nullSafeCodeGen", "defineCodeGen", "addReferenceObj")
 
   private val StreamRunners =
     Set("MicroBatches.scala", "Admission.scala", "Ingest.scala")
@@ -74,6 +79,18 @@ class SourceHygieneSpec extends AnyFunSuite {
     val hits = for {
       (f, n, line) <- codeLines(files)
       token <- TableWrites if line.contains(token)
+    } yield s"$f:$n: $token"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("no hand-written codegen outside Sbs1Expressions.scala (comment " +
+      "lines skipped)") {
+    val files =
+      mainSources(_.getFileName.toString != "Sbs1Expressions.scala")
+    assert(files.nonEmpty)
+    val hits = for {
+      (f, n, line) <- codeLines(files)
+      token <- HandCodegen if line.contains(token)
     } yield s"$f:$n: $token"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }

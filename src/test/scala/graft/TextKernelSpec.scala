@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
 
-/** VERDICT r15 item 7 — the tokenization-adjacent codegen kernels
+/** The tokenization-adjacent kernels
   * (`functions/TextExpressions.scala`) pinned bit-for-bit against the
   * interpreted expression towers they replace, over the real corpus AND
   * the degenerate edges (empty text, space runs, below-width inputs).
@@ -85,9 +85,7 @@ class TextKernelSpec extends SparkSpec {
     def towerGrams(c: Column): Column =
       transform(sequence(lit(1), length(c) - 2), i => c.substr(i, lit(3)))
     def kernelGrams(c: Column): Column =
-      org.apache.spark.sql.GraftSqlBridge.column(
-        graft.functions.CharGrams(
-          org.apache.spark.sql.GraftSqlBridge.expression(c), 3))
+      graft.functions.Kernels.CharGrams.using(3)(c)
     val names = graft.sources.Tables.customer(spark, corpus)
       .select(col("c_custkey").as("id"), col("c_name").as("s"))
       .unionByName(Seq((9001L, "abc"), (9002L, "abcd"),

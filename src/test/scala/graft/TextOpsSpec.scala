@@ -689,9 +689,7 @@ class TextOpsSpec extends SparkSpec {
       (0 to s.length - k).map { i =>
         s.substring(i, i + k).foldLeft(0L)((a, c) => (a * 31 + c) % mod)
       }
-    val gh = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.GramHashes(
-        org.apache.spark.sql.GraftSqlBridge.expression($"text"), k, mod))
+    val gh = graft.functions.Kernels.GramHashes.using(k, mod)($"text")
     val out = texts.toDF("doc_id", "text").select($"doc_id", gh.as("hs"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     texts.foreach { case (id, s) => assert(out(id) === naive(s)) }
@@ -699,9 +697,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("gramFirstPos: distinct grams with first positions; codegen parity") {
     val mod = TextOps.SubMod
-    val gfp = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.GramFirstPos(
-        org.apache.spark.sql.GraftSqlBridge.expression($"text"), 4, mod))
+    val gfp = graft.functions.Kernels.GramFirstPos.using(4, mod)($"text")
     val d = docs((1L, "abcdabcdabcd"), (2L, "xy"))
     def run(): Map[Long, Seq[(Long, Long)]] =
       d.select($"doc_id", gfp.as("u")).collect()

@@ -20,7 +20,7 @@ object HashUtil {
     * chars are the first 7.5 digest bytes, i.e. the big-endian first
     * 8 bytes shifted right one nibble.
     */
-  def md5Long60(bytes: Array[Byte]): Long = {
+  def md5long60(bytes: Array[Byte]): Long = {
     val md = digest.get()
     md.reset()
     val d = md.digest(bytes)

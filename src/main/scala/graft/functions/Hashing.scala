@@ -28,7 +28,7 @@ object Hashing {
   def md5Long(c: Column): Column = Kernels.Md5Long60(c.cast("binary"))
 
   /** The composable (built-ins only) formulation — identical value,
-    * ~3 string round-trips per row slower than [[HashUtil.md5Long60]];
+    * ~3 string round-trips per row slower than [[HashUtil.md5long60]];
     * kept for reference and as the parity cross-check in tests.
     */
   def md5LongComposable(c: Column): Column =

@@ -5,25 +5,23 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal,
   RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
   DoubleType, FloatType, LongType, ObjectType, StringType, StructField,
   StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
-/** A graft SQL function: its name, its result type and the column
-  * inputs it accepts. Its entry is the static method of the same name in
-  * [[Kernels]], and [[KernelCall]] binds it.
+/** A graft SQL function: the object that holds its kernel, its name,
+  * its result type and the column inputs it accepts. Its kernel is the
+  * method of `owner` named after the function, and [[KernelCall]] binds
+  * it; [[Kernels]] declares every function.
   *
-  * `constants` follow the column inputs in the entry's argument list
+  * `constants` follow the column inputs in the kernel's argument list
   * (`k`, `w`, plane counts, codebooks); [[using]] supplies them per call.
   * `mayReturnNull` marks a kernel that answers null for a non-null input
   * (`milli_unit_vec` on an all-zero vector).
   */
-final case class Kernel(name: String, dataType: DataType,
-                        inputs: Seq[Kernel.Input],
-                        mayReturnNull: Boolean = false,
-                        constants: Seq[Any] = Nil) {
+final case class Kernel(owner: AnyRef, name: String, dataType: DataType,
+    inputs: Seq[Kernel.Input], mayReturnNull: Boolean = false,
+    constants: Seq[Any] = Nil) {
 
   /** This function with `constants` passed after the column inputs. */
   def using(constants: Any*): Kernel = copy(constants = constants)
@@ -69,17 +67,18 @@ object Kernel {
 
 /** The one binding of a graft function to its kernel, in the shape of
   * Spark's own built-ins: a `RuntimeReplaceable` whose `replacement` is a
-  * `StaticInvoke` of the function's entry in [[Kernels]].
+  * `StaticInvoke` of the function's kernel method.
   *
   * Analysis sees the function under its SQL name, with its own input-type
   * check and message and its own result type. The optimizer swaps in the
   * `StaticInvoke`, which whole-stage codegen compiles to one direct call
-  * of the entry (no `CodegenFallback`) and which calls the same entry by
+  * of the kernel (no `CodegenFallback`) and which calls the same kernel by
   * reflection when codegen is off, so the two paths cannot disagree.
   * `inputTypes` stays empty: no implicit cast is added. A null input gives
-  * a null result. A `StringType` input reaches the entry as the
+  * a null result. A `StringType` input reaches the kernel as the
   * `UTF8String` the row holds, `BinaryType` as `Array[Byte]`, an array as
-  * `ArrayData`.
+  * `ArrayData`. An `owner` is a Scala object; `StaticInvoke` calls the
+  * static forwarder scalac emits for each of its methods.
   */
 case class KernelCall(kernel: Kernel, children: Seq[Expression])
   extends Expression with RuntimeReplaceable {
@@ -106,7 +105,7 @@ case class KernelCall(kernel: Kernel, children: Seq[Expression])
   }
 
   override lazy val replacement: Expression = StaticInvoke(
-    Kernels.getClass, kernel.dataType, kernel.name,
+    kernel.owner.getClass, kernel.dataType, kernel.name,
     children ++ kernel.constants.map(Kernel.literal),
     returnNullable = kernel.mayReturnNull)
 
@@ -118,15 +117,15 @@ case class KernelCall(kernel: Kernel, children: Seq[Expression])
     copy(children = newChildren)
 }
 
-/** Every graft function: its declaration, and its entry, the static
-  * method that [[KernelCall]] invokes. An entry carries its function's
-  * SQL name, so a physical plan names each function it runs
-  * (`static_invoke(graft.functions.Kernels.kmeans_assign(...))`), and it
-  * forwards to the kernel, a plain Scala method that holds the per-row
-  * math once. A new function is a kernel method plus its declaration and
-  * entry here. `GraftExtensions` registers the functions whose constants
-  * SQL can spell (none, or integer literals); the rest take array
-  * constants and are reached through their Column API.
+/** Every graft function's declaration: the object that holds its kernel
+  * method, its SQL name, its result type and its column inputs. The
+  * kernel method carries the function's SQL name, so a physical plan
+  * names each function it runs
+  * (`static_invoke(graft.functions.KmeansAssign.kmeans_assign(...))`).
+  * A new function is a kernel method plus its declaration here.
+  * `GraftExtensions` registers the functions whose constants SQL can
+  * spell (none, or integer literals); the rest take array constants and
+  * are reached through their Column API.
   */
 object Kernels {
   import Kernel.{Bytes, FloatVector, MilliVector, Text}
@@ -136,93 +135,45 @@ object Kernels {
   private def structs(fields: (String, DataType)*) = ArrayType(
     StructType(fields.map { case (n, t) => StructField(n, t, false) }),
     containsNull = false)
-  private type Codebook = Array[Array[Long]]
+  private val Kmeans = graft.functions.KmeansAssign
 
-  val CosineSim =
-    Kernel("cosine_sim", DoubleType, Seq(FloatVector, FloatVector))
-  def cosine_sim(x: ArrayData, y: ArrayData): Double =
-    VectorKernels.cosine(x, y)
-
-  val MilliDot = Kernel("milli_dot", LongType, Seq(FloatVector, FloatVector))
-  def milli_dot(x: ArrayData, y: ArrayData): Long =
-    VectorKernels.milliDot(x, y)
-
-  val MilliVec = Kernel("milli_vec", Longs, Seq(FloatVector))
-  def milli_vec(v: ArrayData): ArrayData = VectorKernels.milli(v)
-
-  val MilliUnitVec =
-    Kernel("milli_unit_vec", Longs, Seq(FloatVector), mayReturnNull = true)
-  def milli_unit_vec(v: ArrayData): ArrayData = VectorKernels.milliUnit(v)
-
-  val AbsMax = Kernel("abs_max", DoubleType, Seq(FloatVector))
-  def abs_max(v: ArrayData): Double = VectorKernels.absMax(v)
-
-  val Int8Codes = Kernel("int8_codes", Longs, Seq(FloatVector))
-  def int8_codes(v: ArrayData): ArrayData = VectorKernels.int8Codes(v)
-
-  val Int8FidParts = Kernel("int8_fid_parts", Longs, Seq(FloatVector))
-  def int8_fid_parts(v: ArrayData): ArrayData =
-    VectorKernels.int8FidelityParts(v)
-
-  val SignLshSig = Kernel("sign_lsh_sig", LongType, Seq(FloatVector))
-  def sign_lsh_sig(v: ArrayData, nPlanes: Int, dims: Int): Long =
-    SignLsh.computeSig(v, nPlanes, dims)
-
-  val KmeansAssign = Kernel("kmeans_assign", LongType, Seq(FloatVector))
-  def kmeans_assign(v: ArrayData, cents: Codebook, norms: Array[Double])
-  : Long = graft.functions.KmeansAssign.compute(v, cents, norms)
-
-  val KmeansScore = Kernel("kmeans_score", LongType, Seq(FloatVector))
-  def kmeans_score(v: ArrayData, cents: Codebook, norms: Array[Double])
-  : Long = graft.functions.KmeansAssign.computeScore(v, cents, norms)
-
-  val KmeansSecond = Kernel("kmeans_second", LongType, Seq(FloatVector))
-  def kmeans_second(v: ArrayData, cents: Codebook, norms: Array[Double])
-  : Long = graft.functions.KmeansAssign.computeSecond(v, cents, norms)
-
-  val KmeansSecondId = Kernel("kmeans_second_id", LongType, Seq(FloatVector))
-  def kmeans_second_id(v: ArrayData, cents: Codebook, norms: Array[Double])
-  : Long = graft.functions.KmeansAssign.computeSecondId(v, cents, norms)
-
-  val KmeansAssignMilli =
-    Kernel("kmeans_assign_milli", LongType, Seq(MilliVector))
-  def kmeans_assign_milli(v: ArrayData, cents: Codebook,
-                          norms: Array[Double]): Long =
-    graft.functions.KmeansAssign.computeMilli(v, cents, norms)
-
-  val Md5Long60 = Kernel("md5long60", LongType, Seq(Bytes))
-  def md5long60(bytes: Array[Byte]): Long = HashUtil.md5Long60(bytes)
-
-  val LangScores = Kernel("lang_scores", Longs, Seq(Text))
-  def lang_scores(text: UTF8String, weights: Array[Array[Long]],
-                  needles: Array[Array[String]]): ArrayData =
-    graft.functions.LangScores.compute(text, weights, needles)
-
-  val WordShingles = Kernel("word_shingles", Strings, Seq(Text))
-  def word_shingles(text: UTF8String, n: Int): ArrayData =
-    TextKernels.wordShingles(text, n)
-
-  val CharGrams = Kernel("char_grams", Strings, Seq(Text))
-  def char_grams(text: UTF8String, k: Int): ArrayData =
-    TextKernels.charGrams(text, k)
-
-  val ChunkStats = Kernel("chunk_stats",
+  val CosineSim = Kernel(VectorKernels, "cosine_sim", DoubleType,
+    Seq(FloatVector, FloatVector))
+  val MilliDot = Kernel(VectorKernels, "milli_dot", LongType,
+    Seq(FloatVector, FloatVector))
+  val MilliVec = Kernel(VectorKernels, "milli_vec", Longs, Seq(FloatVector))
+  val MilliUnitVec = Kernel(VectorKernels, "milli_unit_vec", Longs,
+    Seq(FloatVector), mayReturnNull = true)
+  val AbsMax = Kernel(VectorKernels, "abs_max", DoubleType, Seq(FloatVector))
+  val Int8Codes =
+    Kernel(VectorKernels, "int8_codes", Longs, Seq(FloatVector))
+  val Int8FidParts =
+    Kernel(VectorKernels, "int8_fid_parts", Longs, Seq(FloatVector))
+  val SignLshSig =
+    Kernel(SignLsh, "sign_lsh_sig", LongType, Seq(FloatVector))
+  val KmeansAssign = Kernel(Kmeans, "kmeans_assign", LongType,
+    Seq(FloatVector))
+  val KmeansScore = Kernel(Kmeans, "kmeans_score", LongType,
+    Seq(FloatVector))
+  val KmeansSecond = Kernel(Kmeans, "kmeans_second", LongType,
+    Seq(FloatVector))
+  val KmeansSecondId = Kernel(Kmeans, "kmeans_second_id", LongType,
+    Seq(FloatVector))
+  val KmeansAssignMilli = Kernel(Kmeans, "kmeans_assign_milli", LongType,
+    Seq(MilliVector))
+  val Md5Long60 = Kernel(HashUtil, "md5long60", LongType, Seq(Bytes))
+  val LangScores = Kernel(graft.functions.LangScores, "lang_scores", Longs,
+    Seq(Text))
+  val WordShingles =
+    Kernel(TextKernels, "word_shingles", Strings, Seq(Text))
+  val CharGrams = Kernel(TextKernels, "char_grams", Strings, Seq(Text))
+  val ChunkStats = Kernel(TextKernels, "chunk_stats",
     structs("chunk_idx" -> LongType, "chunk_sha" -> StringType,
       "chunk_chars" -> LongType, "chunk_tokens" -> LongType), Seq(Text))
-  def chunk_stats(text: UTF8String, chunkLen: Int, stride: Int): ArrayData =
-    TextKernels.chunkStats(text, chunkLen, stride)
-
-  val WinnowFingerprints = Kernel("winnow_fingerprints", Longs, Seq(Text))
-  def winnow_fingerprints(text: UTF8String, k: Int, w: Int,
-                          mod: Long): ArrayData =
-    graft.functions.WinnowFingerprints.compute(text, k, w, mod)
-
-  val GramHashes = Kernel("gram_hashes", Longs, Seq(Text))
-  def gram_hashes(text: UTF8String, k: Int, mod: Long): ArrayData =
-    graft.functions.GramHashes.compute(text, k, mod)
-
-  val GramFirstPos = Kernel("gram_first_pos",
+  val WinnowFingerprints = Kernel(graft.functions.WinnowFingerprints,
+    "winnow_fingerprints", Longs, Seq(Text))
+  val GramHashes =
+    Kernel(graft.functions.GramHashes, "gram_hashes", Longs, Seq(Text))
+  val GramFirstPos = Kernel(graft.functions.GramFirstPos, "gram_first_pos",
     structs("h" -> LongType, "pos" -> LongType), Seq(Text))
-  def gram_first_pos(text: UTF8String, k: Int, mod: Long): ArrayData =
-    graft.functions.GramFirstPos.compute(text, k, mod)
 }

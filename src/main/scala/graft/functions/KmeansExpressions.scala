@@ -72,15 +72,15 @@ object KmeansAssign {
   }
 
   /** The nearest centroid's id. */
-  def compute(arr: ArrayData, cents: Array[Array[Long]],
-              sqrts: Array[Double]): Long =
+  def kmeans_assign(arr: ArrayData, cents: Array[Array[Long]],
+                    sqrts: Array[Double]): Long =
     rank(VectorKernels.milliLongs(arr), cents, sqrts, BestId)
 
   /** The nearest centroid's score: the drift signal of a persisted IVF
     * index ([[graft.sources.VectorStore.append]]), which re-trains when
     * new vectors score systematically below the training-time mean.
     */
-  def computeScore(arr: ArrayData, cents: Array[Array[Long]],
+  def kmeans_score(arr: ArrayData, cents: Array[Array[Long]],
                    sqrts: Array[Double]): Long =
     rank(VectorKernels.milliLongs(arr), cents, sqrts, BestScore)
 
@@ -89,8 +89,8 @@ object KmeansAssign {
     * that actually cuts a vector's neighbourhood. -1 for a codebook of
     * fewer than two centroids.
     */
-  def computeSecondId(arr: ArrayData, cents: Array[Array[Long]],
-                      sqrts: Array[Double]): Long =
+  def kmeans_second_id(arr: ArrayData, cents: Array[Array[Long]],
+                       sqrts: Array[Double]): Long =
     if (cents.length < 2) -1L
     else rank(VectorKernels.milliLongs(arr), cents, sqrts, SecondId)
 
@@ -99,17 +99,20 @@ object KmeansAssign {
     * where cluster-blocked operators (SemDeDup, kNN audits) mis-serve
     * it. [[ScoreEmpty]] for a codebook of fewer than two centroids.
     */
-  def computeSecond(arr: ArrayData, cents: Array[Array[Long]],
+  def kmeans_second(arr: ArrayData, cents: Array[Array[Long]],
                     sqrts: Array[Double]): Long =
     if (cents.length < 2) ScoreEmpty
     else rank(VectorKernels.milliLongs(arr), cents, sqrts, SecondScore)
 
   /** The nearest centroid's id for an already-milli `array<bigint>`
     * vector ([[KmeansAssignMilli]]): no milli step, otherwise the same
-    * contract.
+    * contract. The vector is copied out once (`toLongArray`, a memory copy
+    * for the unsafe layout, one unboxing per element for a generic one),
+    * so the dims × centroids inner loop reads a plain array rather than
+    * calling `getLong` per element per centroid.
     */
-  def computeMilli(arr: ArrayData, cents: Array[Array[Long]],
-                   sqrts: Array[Double]): Long =
+  def kmeans_assign_milli(arr: ArrayData, cents: Array[Array[Long]],
+                          sqrts: Array[Double]): Long =
     rank(arr.toLongArray(), cents, sqrts, BestId)
 
   /** The codebook kernel `k` over `embedding`, with the codebook and
@@ -137,25 +140,25 @@ object KmeansAssign {
   * floor-stable at the boundaries).
   */
 object KmeansAssignMilli {
-  /** Column-API entry point: [[KmeansAssign.computeMilli]]. */
+  /** Column-API entry point: [[KmeansAssign.kmeans_assign_milli]]. */
   def kmeansAssignMilli(vm: Column, cents: Array[Array[Long]]): Column =
     KmeansAssign.bind(Kernels.KmeansAssignMilli, vm, cents)
 }
 
 object KmeansScore {
-  /** Column-API entry point: [[KmeansAssign.computeScore]]. */
+  /** Column-API entry point: [[KmeansAssign.kmeans_score]]. */
   def kmeansScore(embedding: Column, cents: Array[Array[Long]]): Column =
     KmeansAssign.bind(Kernels.KmeansScore, embedding, cents)
 }
 
 object KmeansSecond {
-  /** Column-API entry point: [[KmeansAssign.computeSecond]]. */
+  /** Column-API entry point: [[KmeansAssign.kmeans_second]]. */
   def kmeansSecond(embedding: Column, cents: Array[Array[Long]]): Column =
     KmeansAssign.bind(Kernels.KmeansSecond, embedding, cents)
 }
 
 object KmeansSecondId {
-  /** Column-API entry point: [[KmeansAssign.computeSecondId]]. */
+  /** Column-API entry point: [[KmeansAssign.kmeans_second_id]]. */
   def kmeansSecondId(embedding: Column,
                      cents: Array[Array[Long]]): Column =
     KmeansAssign.bind(Kernels.KmeansSecondId, embedding, cents)

@@ -18,14 +18,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * bit-for-bit (oracle-gated, plus the spec's cross-check against the
   * regex formulation).
   *
-  * Bound as `lang_scores` ([[Kernels.LangScores]]); weights and needles
+  * Declared as [[Kernels.LangScores]]; weights and needles
   * ride in as `ObjectType` literals, so the generated source is identical
   * for any profile set and janino caches one compiled class.
   */
 object LangScores {
 
-  def compute(text: UTF8String, weights: Array[Array[Long]],
-              needles: Array[Array[String]]): ArrayData = {
+  def lang_scores(text: UTF8String, weights: Array[Array[Long]],
+                  needles: Array[Array[String]]): ArrayData = {
     val s = text.toString
     val out = new Array[Long](weights.length)
     var l = 0

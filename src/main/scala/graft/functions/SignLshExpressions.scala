@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * per vector) inflates every row ×(dims × nPlanes) and pays two
   * Exchanges before a single LSH candidate exists. The signature is a
   * pure function of one row, so it belongs in a projection: the kernel
-  * [[SignLsh.computeSig]], bound as `sign_lsh_sig` ([[Kernels]]). A
+  * [[SignLsh.sign_lsh_sig]] ([[Kernels]]). A
   * `transform`/`aggregate` HOF tower over literal plane arrays would be
   * interpreted per element, the shape measured 74× slower on the
   * winnowing path.
@@ -60,7 +60,7 @@ object SignLsh {
     * beyond `dims` carry no plane weight and are ignored (the relational
     * formulation's join on the dimension index did the same).
     */
-  def computeSig(arr: ArrayData, nPlanes: Int, dims: Int): Long = {
+  def sign_lsh_sig(arr: ArrayData, nPlanes: Int, dims: Int): Long = {
     val w = matrix(nPlanes, dims)
     val dots = new Array[Long](nPlanes)
     val n = math.min(arr.numElements(), dims)

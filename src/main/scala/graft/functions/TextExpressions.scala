@@ -32,7 +32,7 @@ object TextKernels {
     * semantics); below n tokens the array is empty (the expression's
     * load-bearing guard).
     */
-  def wordShingles(text: UTF8String, n: Int): ArrayData = {
+  def word_shingles(text: UTF8String, n: Int): ArrayData = {
     val s = text.toString
     val len = s.length
     // token starts: position 0 and every position after a space
@@ -68,7 +68,7 @@ object TextKernels {
     * wherever the expression was well-defined (every real name is ≥ k
     * chars; the guard is pinned in TextKernelSpec).
     */
-  def charGrams(text: UTF8String, k: Int): ArrayData = {
+  def char_grams(text: UTF8String, k: Int): ArrayData = {
     val s = text.toString
     val m = s.length - k + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Any])
@@ -106,7 +106,7 @@ object TextKernels {
     * stride + 1 = 1 (SQL integer division truncates toward zero), one
     * empty chunk, 1 token (split -1 tokenizes "" as one empty token).
     */
-  def chunkStats(text: UTF8String, chunkLen: Int, stride: Int): ArrayData = {
+  def chunk_stats(text: UTF8String, chunkLen: Int, stride: Int): ArrayData = {
     val s = text.toString
     val len = s.length
     val nc = ((len - 1).toLong / stride) + 1L

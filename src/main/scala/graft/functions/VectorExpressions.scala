@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.vectorized.ColumnarArray
 
 /** Per-row vector kernels over `array<float>` embeddings, each bound as a
-  * graft function through [[KernelCall]] ([[Kernels]] names them).
+  * graft function through [[KernelCall]] ([[Kernels]] declares them).
   *
   * Why kernels and not built-ins: the built-in way to write each of these
   * is a higher-order function (`aggregate(zip_with(...))`,
@@ -26,15 +28,17 @@ object VectorKernels {
     * as in the fold-based formulation. This is the hot loop of pairwise
     * similarity over the candidate pairs.
     */
-  def cosine(x: ArrayData, y: ArrayData): Double = {
-    val n = math.min(x.numElements(), y.numElements())
+  def cosine_sim(x: ArrayData, y: ArrayData): Double = {
+    val a = rowLayout(x)
+    val b = rowLayout(y)
+    val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
     var i = 0
     while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
+      val xi = a.getFloat(i).toDouble
+      val yi = b.getFloat(i).toDouble
       dot += xi * yi
       na += xi * xi
       nb += yi * yi
@@ -50,16 +54,31 @@ object VectorKernels {
     * component range, and the long accumulator is exact at any
     * dimensionality.
     */
-  def milliDot(x: ArrayData, y: ArrayData): Long = {
-    val n = math.min(x.numElements(), y.numElements())
+  def milli_dot(x: ArrayData, y: ArrayData): Long = {
+    val a = rowLayout(x)
+    val b = rowLayout(y)
+    val n = math.min(a.numElements(), b.numElements())
     var dot = 0L
     var i = 0
     while (i < n) {
-      dot += math.floor(x.getFloat(i).toDouble * 1000.0).toLong *
-        math.floor(y.getFloat(i).toDouble * 1000.0).toLong
+      dot += math.floor(a.getFloat(i).toDouble * 1000.0).toLong *
+        math.floor(b.getFloat(i).toDouble * 1000.0).toLong
       i += 1
     }
     dot
+  }
+
+  /** `arr` as one of the two layouts rows carry (unsafe, or a columnar
+    * batch's array), any other copied once into the unsafe layout. The
+    * pairwise loops are shared by every query's generated code, so their
+    * `getFloat` call sees every class a query passes in: kept to two, the
+    * JIT inlines both, with no per-row copy; a third class made the call
+    * virtual per element, and copying every input out made it slower
+    * still.
+    */
+  private def rowLayout(arr: ArrayData): ArrayData = arr match {
+    case _: UnsafeArrayData | _: ColumnarArray => arr
+    case _ => UnsafeArrayData.fromPrimitiveArray(arr.toFloatArray())
   }
 
   /** floor(v·1000) per component, as a JVM array. */
@@ -78,7 +97,8 @@ object VectorKernels {
     * integer census (dim variance, PCA power iteration, k-means milli
     * vectors).
     */
-  def milli(arr: ArrayData): ArrayData = new GenericArrayData(milliLongs(arr))
+  def milli_vec(arr: ArrayData): ArrayData =
+    new GenericArrayData(milliLongs(arr))
 
   /** Milli components re-normalized to an exact integer milli unit
     * vector, q_d = floor(1000·m_d/√(Σm²)) (the double tree
@@ -86,7 +106,7 @@ object VectorKernels {
     * when the milli vector is all zeros, which is the callers'
     * `ssq > 0` exclusion folded into the result's nullability.
     */
-  def milliUnit(arr: ArrayData): ArrayData = {
+  def milli_unit_vec(arr: ArrayData): ArrayData = {
     val m = milliLongs(arr)
     var ssq = 0L
     var i = 0
@@ -105,7 +125,7 @@ object VectorKernels {
   }
 
   /** Per-vector absolute-max component, the SQ8 quantization scale. */
-  def absMax(arr: ArrayData): Double = {
+  def abs_max(arr: ArrayData): Double = {
     val n = arr.numElements()
     var a = 0.0
     var i = 0
@@ -122,9 +142,9 @@ object VectorKernels {
     * cosine tree measures how much angle int8 quantization costs a
     * vector. One pass, no intermediate arrays.
     */
-  def int8FidelityParts(arr: ArrayData): ArrayData = {
+  def int8_fid_parts(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
-    val amax = absMax(arr)
+    val amax = abs_max(arr)
     var dot = 0L; var sm = 0L; var sq = 0L
     var i = 0
     while (i < n) {
@@ -141,9 +161,9 @@ object VectorKernels {
   /** Int8 absmax codes floor(v·127/amax), all zero on an all-zero vector:
     * the element law of [[graft.operators.SimilarityOps.quantizeInt8]].
     */
-  def int8Codes(arr: ArrayData): ArrayData = {
+  def int8_codes(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
-    val amax = absMax(arr)
+    val amax = abs_max(arr)
     val out = new Array[Long](n)
     if (amax != 0.0) {
       var i = 0

@@ -47,14 +47,14 @@ object GramHashes {
     hs
   }
 
-  def compute(text: UTF8String, k: Int, mod: Long): ArrayData =
+  def gram_hashes(text: UTF8String, k: Int, mod: Long): ArrayData =
     new GenericArrayData(hashes(text.toString, k, mod))
 }
 
 /** Per-document deduplicated gram hashes with their FIRST (1-based)
   * position: array of (h, pos) structs, one per distinct gram hash.
   *
-  * This is [[GramHashes.compute]] with the per-document dedup folded
+  * This is [[GramHashes.gram_hashes]] with the per-document dedup folded
   * into the kernel: the (hash, doc) → first-position reduction that would
   * otherwise be a full shuffle of the ~1-row-per-character gram stream
   * happens map-side, inside the expression, for free — the downstream
@@ -63,7 +63,7 @@ object GramHashes {
   */
 object GramFirstPos {
 
-  def compute(text: UTF8String, k: Int, mod: Long): ArrayData = {
+  def gram_first_pos(text: UTF8String, k: Int, mod: Long): ArrayData = {
     val hs = GramHashes.hashes(text.toString, k, mod)
     // first-seen position per hash; the scan is left-to-right, so
     // first-seen = minimum position
@@ -117,7 +117,8 @@ object WinnowFingerprints {
     * or set-compare; the oracle's `list_distinct` has its own order, so
     * equality is on the SET, which explode + ORDER BY restores).
     */
-  def compute(text: UTF8String, k: Int, w: Int, mod: Long): ArrayData = {
+  def winnow_fingerprints(text: UTF8String, k: Int, w: Int,
+                          mod: Long): ArrayData = {
     val hs = GramHashes.hashes(text.toString, k, mod)
     if (hs.isEmpty) return new GenericArrayData(Array.empty[Long])
     val m = hs.length

@@ -1789,7 +1789,7 @@ object RelationalQueries {
   val FuzzyMaxDist = 2
   val FuzzyMaxDf = 500L
 
-  /** Char-trigram kernel ([[graft.functions.TextKernels.charGrams]]) in
+  /** Char-trigram kernel ([[graft.functions.TextKernels.char_grams]]) in
     * place of the interpreted `transform(sequence(1, length-2),
     * i => substr(i, 3))` tower, which paid one lambda dispatch per gram
     * of every name on both join sides; the kernel adds the below-3-chars empty-array guard the

@@ -10,7 +10,7 @@ import graft.functions.vector.cosineSim
   * (`vec_id: long, embedding: array<float>, label: int`).
   *
   * The scoring kernel is `cosine_sim`
-  * ([[graft.functions.VectorKernels.cosine]], one fused scalar loop
+  * ([[graft.functions.VectorKernels.cosine_sim]], one fused scalar loop
   * called from whole-stage codegen). The built-in formulation
   * (`aggregate(zip_with(...))`) is a `CodegenFallback` higher-order
   * function: interpreted lambda dispatch + a temp array per row — the
@@ -336,7 +336,7 @@ object SimilarityOps {
 
   /** Per-vector packed sign-bit signatures — ONE zero-shuffle projection
     * through the `sign_lsh_sig` kernel
-    * ([[graft.functions.SignLsh.computeSig]]). The former relational
+    * ([[graft.functions.SignLsh.sign_lsh_sig]]). The former relational
     * formulation (posexplode → broadcast plane join → two hash
     * aggregations) inflated every row ×(dims·nPlanes) and paid two
     * Exchanges for what is a pure per-row function; at the production
@@ -419,7 +419,7 @@ object SimilarityOps {
     * partitionings, and retries. Milli (not micro) keeps every derived
     * integer (ssq ≤ dims·S²) exactly representable in doubles through
     * the score division even at 100× this corpus. One kernel
-    * projection ([[graft.functions.VectorKernels.milli]]); the float kernels
+    * projection ([[graft.functions.VectorKernels.milli_vec]]); the float kernels
     * ([[graft.functions.KmeansAssign]] and siblings) quantize by the
     * same floor(v·1000) law inside their loop, so assigning `milliVec`
     * output with [[graft.functions.KmeansAssignMilli]] gives the same
@@ -2444,7 +2444,7 @@ object SimilarityOps {
     * buckets with their exemplars).
     *
     * Exactness: the three integers [Σm·q, Σm², Σq²] come from ONE
-    * kernel pass ([[graft.functions.VectorKernels.int8FidelityParts]]);
+    * kernel pass ([[graft.functions.VectorKernels.int8_fid_parts]]);
     * the
     * cosine is one mirrored double tree; bucket edges are integer
     * compares. Zero vectors (Σm² = 0 — nothing to quantize) are

@@ -47,7 +47,7 @@ object TextOps {
       .otherwise(array().cast("array<string>"))
 
   /** [[shingles]]∘[[tokens]] as ONE kernel
-    * ([[graft.functions.TextKernels.wordShingles]]): shingle j is a single
+    * ([[graft.functions.TextKernels.word_shingles]]): shingle j is a single
     * substring of the original text (every separator is exactly one
     * space, so joining n consecutive tokens with spaces IS the
     * original span) — no token array, no per-shingle lambda.
@@ -1085,7 +1085,7 @@ object TextOps {
   /** Overlapping document chunking (LLM training prep): fixed-length
     * character windows every `stride` chars (overlap = chunkLen-stride).
     * One fused kernel pass per document
-    * ([[graft.functions.TextKernels.chunkStats]] — the expression tower
+    * ([[graft.functions.TextKernels.chunk_stats]] — the expression tower
     * evaluated each chunk's substring THREE times through interpreted
     * lambdas: sha, length, token count) + explode; zero
     * shuffles, and the chunk count derives from exact integer floor
@@ -1584,7 +1584,7 @@ object TextOps {
   /** The (h, doc_id, pos) relation [[substringMatches]] joins: one row
     * per DISTINCT gram per document with its first 1-based position —
     * the per-doc dedup happens INSIDE the kernel
-    * ([[graft.functions.GramFirstPos.compute]]), map-side and free, so
+    * ([[graft.functions.GramFirstPos.gram_first_pos]]), map-side and free, so
     * the ~1-row-per-character raw gram stream never reaches a shuffle.
     */
   private[graft] def gramFirstPositions(docs: DataFrame, k: Int,

@@ -215,8 +215,12 @@ class Sbs1MicroBatchStream(host: String, port: Int, attemptLimit: Int,
       Sbs1Offset(base + buffer.length)
     }
 
+  /** Never called for an admission-controlled stream: numbering lines
+    * without the resumed offset would misnumber a restarted run.
+    */
   override def latestOffset(): Offset =
-    latestOffset(initialOffset(), ReadLimit.allAvailable())
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead")
 
   override def deserializeOffset(json: String): Offset =
     Sbs1Offset(json.toLong)

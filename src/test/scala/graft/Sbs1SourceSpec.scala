@@ -5,6 +5,8 @@ import java.net.ServerSocket
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.connector.read.streaming.{ReadLimit,
+  SupportsAdmissionControl}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.{Sbs1, Sbs1InputPartition, Sbs1Offset, Sbs1Source,
@@ -119,11 +121,14 @@ class Sbs1SourceSpec extends SparkSpec {
       .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
       .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
       .toMicroBatchStream("unused")
+    // a fresh query: Spark asks for the latest offset from the initial one
+    def latestOffset() = stream.asInstanceOf[SupportsAdmissionControl]
+      .latestOffset(stream.initialOffset(), ReadLimit.allAvailable())
     try {
       val deadline = System.currentTimeMillis() + 30000
-      while (stream.latestOffset() != Sbs1Offset(10) &&
+      while (latestOffset() != Sbs1Offset(10) &&
           System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(stream.latestOffset() === Sbs1Offset(10))
+      assert(latestOffset() === Sbs1Offset(10))
       for ((s, e) <- Seq((0, 1), (0, 3), (2, 6), (3, 10), (0, 10), (5, 5))) {
         val parts = stream.planInputPartitions(Sbs1Offset(s), Sbs1Offset(e))
           .map(_.asInstanceOf[Sbs1InputPartition])

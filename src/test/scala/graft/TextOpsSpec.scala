@@ -635,7 +635,7 @@ class TextOpsSpec extends SparkSpec {
         1 + rnd.nextInt(5)).mkString).mkString(" ")) :+
       "that the scheme touched a char " :+ "" :+ "th"
     texts.foreach { s =>
-      val out = graft.functions.LangScores.compute(
+      val out = graft.functions.LangScores.lang_scores(
         UTF8String.fromString(s), weights, needles)
       TextOps.LangProfiles.zipWithIndex.foreach { case ((_, evid), l) =>
         val want = evid.map { case (w, sub) =>

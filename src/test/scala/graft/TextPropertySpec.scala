@@ -115,7 +115,7 @@ class TextPropertySpec extends SparkSpec {
     }
     def rolled(s: String, k: Int, w: Int, mod: Long): Seq[Long] = {
       val out = graft.functions.WinnowFingerprints
-        .compute(UTF8String.fromString(s), k, w, mod)
+        .winnow_fingerprints(UTF8String.fromString(s), k, w, mod)
       (0 until out.numElements()).map(out.getLong(_))
     }
     val genCase = for {
@@ -159,11 +159,11 @@ class TextPropertySpec extends SparkSpec {
     (1 to 200).foreach { seed =>
       val (k, mod, s) = draw(genCase, seed.toLong)
       val u = UTF8String.fromString(s)
-      val gh = graft.functions.GramHashes.compute(u, k, mod)
+      val gh = graft.functions.GramHashes.gram_hashes(u, k, mod)
       val expected = if (s.length < k) Seq.empty else naiveHashes(s, k, mod)
       assert((0 until gh.numElements()).map(gh.getLong(_)) === expected,
         s"gram_hashes k=$k mod=$mod len=${s.length} seed=$seed")
-      val gf = graft.functions.GramFirstPos.compute(u, k, mod)
+      val gf = graft.functions.GramFirstPos.gram_first_pos(u, k, mod)
       val got = (0 until gf.numElements()).map { i =>
         val r = gf.getStruct(i, 2)
         (r.getLong(0), r.getLong(1))
